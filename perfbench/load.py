@@ -13,10 +13,11 @@ A file holds the events due in one `file_ms` slot and lands atomically as
 `<src>/k=<n>/events.parquet` (written under a staging directory, then
 renamed) at the end of its slot; how late it landed is recorded.
 
-Reads go out on a fixed schedule of `read_rate` requests per second over at
-most `conns` connections at a time; each is timed from its due time. Half
-the slots poll `/metrics/event/windows?limit=120`, which is how the first
-response containing each event window is found.
+Reads go out on a fixed schedule over at most `conns` connections at a
+time; each is timed from its due time. `/metrics/event/windows?limit=120`,
+the route on which the first response containing each event window is
+found, is polled WINDOWS_PER_S times a second, so a lag sample is resolved
+to 1 / WINDOWS_PER_S seconds. Every other route is polled once a second.
 
 Usage (driven by run.py): python3 load.py <args.json>; it prints
 `@@ {"t0": ...}` once reading starts, accepts `pass_done` on stdin
@@ -51,11 +52,13 @@ SCHEMA = pa.schema([("event_id", pa.int64()), ("ts", pa.timestamp("us")),
                     ("user_id", pa.int64()), ("event_type", pa.string()),
                     ("value", pa.float64()), ("props", pa.string())])
 WINDOWS_ROUTE = "/metrics/event/windows?limit=120"
+WINDOWS_PER_S = 10
 ROUTES = ["/healthz", "/readyz", "/metrics/event/latest",
           "/metrics/performance/windows?limit=120", "/metrics/overview",
           "/metrics/drift?limit=120", "/metrics/alerts?limit=120"]
-# every other slot polls the windows route; the rest cycle the other routes
-SCHEDULE = [r for route in ROUTES for r in (WINDOWS_ROUTE, route)]
+# one second of reads as (offset in the second, route), in due order
+SCHEDULE = sorted([(i / WINDOWS_PER_S, WINDOWS_ROUTE) for i in range(WINDOWS_PER_S)] +
+                  [((i + 0.5) / len(ROUTES), r) for i, r in enumerate(ROUTES)])
 
 
 def make_events(seed, stream, chunk, first, n, step_us):
@@ -135,12 +138,12 @@ class Closer:
 
 
 class Reader:
-    def __init__(self, port, rate, t0, conns):
-        self.port, self.rate, self.t0 = port, rate, t0
+    def __init__(self, port, t0, conns):
+        self.port, self.t0 = port, t0
         self.lock = threading.Lock()
         self.next = 0
         self.stop_at = None
-        self.reads = []          # (due, sent, done, status, route index)
+        self.reads = []          # (due, sent, done, status, route)
         self.first_seen = {}     # window start -> (time, row)
         self.snapshots = []      # (due, body hash) of windows-route 200s
         self.threads = [threading.Thread(target=self.work, daemon=True)
@@ -153,11 +156,12 @@ class Reader:
             with self.lock:
                 k = self.next
                 self.next += 1
-            due = self.t0 + k / self.rate
+            second, slot = divmod(k, len(SCHEDULE))
+            offset, route = SCHEDULE[slot]
+            due = self.t0 + second + offset
             if self.stop_at is not None and due >= self.stop_at:
                 break
             time.sleep(max(0.0, due - time.time()))
-            route = SCHEDULE[k % len(SCHEDULE)]
             sent = time.time()
             # one connection per request: the JDK server writes headers and
             # body separately, and on a kept-alive connection the client's
@@ -174,7 +178,7 @@ class Reader:
                 conn.close()
             done = time.time()
             with self.lock:
-                self.reads.append((due, sent, done, status, k % len(SCHEDULE)))
+                self.reads.append((due, sent, done, status, route))
             if route == WINDOWS_ROUTE and status == 200:
                 rows = json.loads(body)["windows"]
                 with self.lock:
@@ -242,7 +246,7 @@ def main():
         period = a["trigger_ms"] / 1000
         t0 = (t0 // period + 1) * period + 0.25
         time.sleep(t0 - time.time())
-    reader = Reader(a["port"], a["read_rate"], t0, a["conns"])
+    reader = Reader(a["port"], t0, a["conns"])
     print("@@ " + json.dumps({"t0": t0}), flush=True)
     if a["mode"] == "live":
         out = run_live(a, reader, t0)

@@ -33,12 +33,11 @@ import load  # noqa: E402
 
 # Workload parameters, stamped into every result.
 PARAMS = {
-    "live": {"rate": 1000, "factor": 240, "file_ms": 500, "trigger_ms": 10000,
-             "prefill": 2000, "read_rate": 100, "drain_s": 45},
-    "backfill": {"events_per_second_of_run": 30_000, "span_ms": 100 * 60_000,
-                 "files": 24, "read_rate": 100, "drain_s": 30},
+    "live": {"rate": 1000, "factor": 240, "file_ms": 500, "prefill": 2000, "drain_s": 45},
+    "backfill": {"events_per_second_of_run": 60_000, "span_ms": 100 * 60_000,
+                 "files": 24, "drain_s": 30},
 }
-SETUP = {"events": 4_000, "span_ms": 20 * 60_000, "files": 1, "reps": 2}
+SETUP = {"events": 4_000, "span_ms": 20 * 60_000, "files": 1}
 BASELINE = {"events": 100_000, "span_ms": 100 * 60_000, "files": 8}
 HEAP = "2g"
 # JDK module opens Spark needs outside spark-submit (as in the root build)
@@ -157,14 +156,12 @@ class Proc:
             self.log.close()
 
 
-def pct(xs, q):
-    """Percentile with missing samples (None) ranked above every value;
-    a percentile that lands on one is reported as the largest finite value."""
-    vals = sorted(float("inf") if x is None else x for x in xs)
-    v = float(np.percentile(vals, q, method="linear")) if vals else float("nan")
-    if v == float("inf"):
-        v = max((x for x in vals if x != float("inf")), default=float("nan"))
-    return v
+def pct(xs, q, limit):
+    """Percentile where a missing sample (None) counts as `limit`, a value no
+    observed sample can exceed; with no samples at all it is `limit`."""
+    vals = [limit if x is None else x for x in xs]
+    assert all(x <= limit for x in vals), "a sample exceeds the run's limit"
+    return float(np.percentile(vals, q, method="linear")) if vals else float(limit)
 
 
 def check_outputs(work, jvm, files):
@@ -203,6 +200,18 @@ def check_outputs(work, jvm, files):
             oracle_rows = con.execute(
                 "SELECT window_start_ms, event_type, event_count, user_count FROM o").fetchall()
     return bad, ties, oracle_rows
+
+
+def check_unserved(work):
+    """`backfill`'s unserved pass read the served pass's input, so every
+    table it stored must equal the served one. Returns mismatching rows."""
+    con = duckdb.connect()
+    con.execute("SET threads TO 2")
+    read = lambda d, t: f"read_parquet('{work}/run/{d}/{t}/**/*.parquet', hive_partitioning = false)"
+    return sum(con.execute(f"""SELECT
+        (SELECT count(*) FROM (SELECT * FROM {read('pass', t)} EXCEPT ALL SELECT * FROM {read('out', t)})) +
+        (SELECT count(*) FROM (SELECT * FROM {read('out', t)} EXCEPT ALL SELECT * FROM {read('pass', t)}))
+        """).fetchone()[0] for t in TABLE_END)
 
 
 def files_read(src, rows):
@@ -269,12 +278,12 @@ def run(workload, seed, seconds, trace, work, cp):
                        SETUP["events"], SETUP["span_ms"], SETUP["files"])
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp)
-    # a fixed, pre-touched heap: peak RSS then follows off-heap memory, not GC timing
+    # a fixed, pre-touched heap: the rest of the resident set is the memory
+    # the program holds besides its heap
     jvm = Proc(["java", *ADD_OPENS, f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch",
                 "-Dspark.ui.enabled=false", f"-Djava.io.tmpdir={tmp}", f"-Dspark.local.dir={tmp}",
                 "-cp", cp, "perfbench.Harness", "--work", work, "--mode", workload,
-                "--trace", str(int(trace)), "--cores", str(cores),
-                "--trigger-ms", str(P.get("trigger_ms", 0)), "--setup-reps", str(SETUP["reps"])],
+                "--trace", str(int(trace)), "--cores", str(cores)],
                os.path.join(work, "jvm.log"), work)
     gen = None
     t_start = time.time()
@@ -294,7 +303,11 @@ def run(workload, seed, seconds, trace, work, cp):
         else:
             bf_rows, expect = load.write_backlog(
                 src, seed, 3, P["events_per_second_of_run"] * seconds, P["span_ms"], P["files"])
-        port = jvm.expect(150)["port"]
+            jvm.send("backlog")
+        server = jvm.expect(150)
+        port = server["port"]
+        if workload == "live":
+            P = {**P, "trigger_ms": server["trigger_ms"]}
         phase("set up")
         largs = {"mode": workload, "seed": seed, "work": work, "port": port,
                  "seconds": seconds, "conns": min(2, cores), **P}
@@ -339,11 +352,11 @@ def run(workload, seed, seconds, trace, work, cp):
     if all(files.values()):
         bad, ties, oracle_rows = check_outputs(work, jr, files)
         bad["served_windows"] = check_served(ld["first_seen"], oracle_rows)
+        if workload == "backfill":
+            bad["unserved_pass"] = check_unserved(work)
     else:
         bad, ties = {t: int(not f) for t, f in files.items()}, 0
     phase("checked")
-    ok = (rc == 0 and jr["stopped_between_batches"] and not jr["query_errors"]
-          and not any(bad.values()))
 
     # end-to-end metrics
     go = jr["go_ms"] / 1000
@@ -363,20 +376,27 @@ def run(workload, seed, seconds, trace, work, cp):
     else:
         t0, t1 = go, jr["pass_end_ms"] / 1000
         lags = [(first_seen[w] - go) * 1000 if w in first_seen else None for w in expect]
-        events_per_s = bf_rows / (t1 - t0)
-    ready = min((r[2] for r in reads if r[3] == 200 and load.SCHEDULE[r[4]] ==
-                 load.WINDOWS_ROUTE), default=None)
-    window_reads = [r for r in reads if r[0] >= t0]
-    read_ms = [None if r[3] < 0 else (r[2] - r[0]) * 1000 for r in window_reads]
+        events_per_s = statistics.mean([bf_rows / jr["unserved_pass_s"], bf_rows / (t1 - t0)])
+    ready = min((r[2] for r in reads if r[3] == 200 and r[4] == load.WINDOWS_ROUTE),
+                default=None)
+    # no lag (every sample window closes at or after t0) and no read timed
+    # from its due time (at or after t0) can exceed the time from t0 to the
+    # last response; a window never served or a read never answered counts
+    # as this limit
+    limit_ms = (max((r[2] for r in reads), default=ld["end"]) - t0) * 1000
+    read_ms = [None if r[3] < 0 else (r[2] - r[0]) * 1000 for r in reads if r[0] >= t0]
+    bad["lag_samples"] = int(not lags)
     failed_reads = sum(1 for r in reads if r[3] < 0 or (r[3] != 200 and not (
         r[3] == 503 and (ready is None or r[2] < ready))))
     missing = sum(1 for x in lags if x is None)
+    ok = (rc == 0 and jr["stopped_between_batches"] and not jr["query_errors"]
+          and not any(bad.values()))
     metrics = {
         "setup_s": (statistics.median(jr["setup_s"]), "s"),
         "events_per_s": (events_per_s, "ev/s"),
-        "visible_lag_p50_ms": (pct(lags, 50), "ms"),
-        "visible_lag_p90_ms": (pct(lags, 90), "ms"),
-        "peak_rss_mb": (jr["peak_rss_mb"], "MB"),
+        "visible_lag_p50_ms": (pct(lags, 50, limit_ms), "ms"),
+        "visible_lag_p90_ms": (pct(lags, 90, limit_ms), "ms"),
+        "peak_nonheap_rss_mb": (jr["peak_nonheap_rss_mb"], "MB"),
     }
     attempted = len(reads) + len(lags) + len(bad)
     failed = failed_reads + missing + sum(1 for v in bad.values() if v)
@@ -386,7 +406,7 @@ def run(workload, seed, seconds, trace, work, cp):
              "query_errors": jr["query_errors"],
              "samples": {"windows": len(lags), "missing_windows": missing,
                          "reads": len(read_ms)},
-             "setup_reps_s": jr["setup_s"]}
+             "setup_reps_s": jr["setup_s"], "unserved_pass_s": jr.get("unserved_pass_s")}
     if not trace:
         return ok, attempted, failed, metrics, stamp
 
@@ -422,11 +442,10 @@ def run(workload, seed, seconds, trace, work, cp):
         "serving.refresh_useful_frac": (len(changes) / triggered if triggered else 0.0, "frac"),
         "http.requests": (len(reads), "count"),
         "http.non_200": (sum(1 for r in reads if r[3] != 200), "count"),
-        "http.read_p50_ms": (pct(read_ms, 50), "ms"),
-        "http.read_p95_ms": (pct(read_ms, 95), "ms"),
-        "http.read_p99_ms": (pct(read_ms, 99), "ms"),
+        "http.read_p50_ms": (pct(read_ms, 50, limit_ms), "ms"),
+        "http.read_p95_ms": (pct(read_ms, 95, limit_ms), "ms"),
         "load.gen_late_max_ms": (gen_late, "ms"),
-        "load.read_late_p99_ms": (pct(late, 99), "ms"),
+        "load.read_late_max_ms": (max(late, default=0.0), "ms"),
         "baseline.one_core_events_per_s": (base_rows / jr["baseline_one_core_s"], "ev/s"),
     })
     layers.update({f"traced.{k}": v for k, v in metrics.items()})
@@ -447,7 +466,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--keep", action="store_true", help="keep the run's work directory")
     a = ap.parse_args()
     if not os.path.isfile(os.path.join(ROOT, "build.sbt")) or not os.path.isdir(
             os.path.join(ROOT, "src", "main", "scala", "graft")):
@@ -461,8 +479,7 @@ def main():
         ok, attempted, failed, metrics, info = run(a.workload, a.seed, a.seconds,
                                                    bool(a.trace), work, cp)
     finally:
-        if not a.keep:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
     steal, total = (b - a for a, b in zip(ticks, cpu_ticks()))
     info.update({"git_sha": git_sha(), "source_sha1": stamp, "wall_s": time.time() - t_start,
                  "host_steal_frac": steal / max(total, 1)})

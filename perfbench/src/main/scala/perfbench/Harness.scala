@@ -1,12 +1,16 @@
 package perfbench
 
 import java.io.{BufferedReader, InputStreamReader}
+import java.lang.management.{ManagementFactory, MemoryType}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import java.time.Instant
+import javax.management.{Notification, NotificationEmitter, NotificationListener}
+import javax.management.openmbean.CompositeData
 
 import scala.jdk.CollectionConverters._
 
+import com.sun.management.GarbageCollectionNotificationInfo
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress, Trigger}
 
@@ -21,21 +25,31 @@ import graft.streaming.Pipelines
   * `run.py` and `load.py`.
   *
   * Protocol (stdin commands, `@@ <json>` lines on stdout):
-  *  1. set up `--setup-reps` times on `<work>/setup/src`, then start the
-  *     measured server and print `{"event":"server","port":P}`;
+  *  1. set up [[SetupReps]] times on `<work>/setup/src` (then, for
+  *     `backfill`, on `backlog` run one unserved pass over
+  *     `<work>/run/src` into `<work>/run/pass`), start the measured server
+  *     and print `{"event":"server","port":P,"trigger_ms":T}`;
   *  2. on `go`, start `runAll` on `<work>/run/src` — a processing-time
-  *     trigger of `--trigger-ms` for `live`, `Trigger.AvailableNow` for
+  *     trigger of [[LiveTriggerMs]] for `live`, `Trigger.AvailableNow` for
   *     `backfill` — and print `started` (live) or `pass_done` (backfill);
   *  3. on `stop`, stop each query between batches and write
   *     `<work>/jvm.json`: progress of every batch (rows read, watermark),
-  *     set-up times, peak RSS and, traced, the per-layer counters.
+  *     set-up times, peak memory and, traced, the per-layer counters.
   */
 object Harness {
   val oracleQueries = Map("event_metrics" -> "q_event_agg",
     "session_metrics" -> "q_sessions", "performance_metrics" -> "q_perf")
+  /** Set-ups per run: the first is cold, the second warm. */
+  val SetupReps = 2
+  /** `live`'s processing-time trigger. Shorter triggers keep the four cores
+    * saturated with snapshot refreshes (README follow-up 3). */
+  val LiveTriggerMs = 10000L
+
+  def json(v: Any): String =
+    org.json4s.jackson.Serialization.write(v.asInstanceOf[AnyRef])(org.json4s.DefaultFormats)
 
   def emit(fields: (String, Any)*): Unit = {
-    println("@@ " + Json(fields.toMap))
+    println("@@ " + json(fields.toMap))
     System.out.flush()
   }
 
@@ -49,26 +63,35 @@ object Harness {
     val spark = Engine.sessionBuilder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val setupS = (1 to o("setup-reps").toInt).map { r =>
+    val setupS = (1 to SetupReps).map { r =>
       setUp(spark, s"$work/setup/src", s"$work/setup/out$r")
+    }
+    // backfill measures capacity over two whole passes of the run's backlog,
+    // each from an empty checkpoint: this unserved one and the served one
+    val unservedS = if (live) None else Some {
+      require(in.readLine() == "backlog", "expected backlog")
+      val t0 = System.nanoTime()
+      Pipelines.runAll(spark, s"$work/run/src", s"$work/run/pass").foreach(_.awaitTermination())
+      (System.nanoTime() - t0) / 1e9
     }
 
     val tracer = if (traced) Some(Tracer.attach(spark, cores)) else None
+    val heap = if (traced) Some(HeapAfterGc.install()) else None
     val outDir = s"$work/run/out"
     val server = new MetricsHttpServer(new MetricsStore(spark, outDir))
     val port = server.start()
     val refreshL = server.attachAutoRefresh(spark)
-    emit("event" -> "server", "port" -> port)
+    emit("event" -> "server", "port" -> port, "trigger_ms" -> LiveTriggerMs)
 
     val res = scala.collection.mutable.LinkedHashMap[String, Any](
       "setup_s" -> setupS,
       "oracle_sql" -> oracleQueries.map { case (t, q) => t -> SparkEntry.oracleSql(q) },
       "exact_avg_sql" -> PerformanceTracker.exactAvgSql())
+    unservedS.foreach(s => res("unserved_pass_s") = s)
     require(in.readLine() == "go", "expected go")
     val tGo = System.currentTimeMillis()
     res("go_ms") = tGo
-    val trigger =
-      if (live) Trigger.ProcessingTime(o("trigger-ms").toLong) else Trigger.AvailableNow()
+    val trigger = if (live) Trigger.ProcessingTime(LiveTriggerMs) else Trigger.AvailableNow()
     val qs = Pipelines.runAll(spark, s"$work/run/src", outDir, trigger)
     if (live) emit("event" -> "started")
     else {
@@ -91,13 +114,17 @@ object Harness {
         "trigger_ms" -> p.durationMs.getOrDefault("triggerExecution", 0L).longValue,
         "rows" -> p.numInputRows, "wm_ms" -> watermarkMs(p))
     }
-    res("peak_rss_mb") = peakRssMb()
+    // the heap is fixed and pre-touched, so the rest of the peak resident
+    // set is the memory the program holds besides its heap
+    res("peak_nonheap_rss_mb") = peakRssMb() -
+      ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getCommitted / (1024.0 * 1024.0)
 
     tracer.foreach { t =>
       t.detach(spark)
       val layers = scala.collection.mutable.LinkedHashMap[String, Any]()
       layers ++= t.summary(tGo, tStop)
       layers ++= Tracer.streaming(progress)
+      layers("engine.peak_heap_after_gc_mb") = heap.get.peakBytes / (1024.0 * 1024.0)
       // direct timed reads of the store and the snapshot after the stream stops
       val store = new MetricsStore(spark, outDir)
       layers("store.windows_ms") = medianMs(3)(store.windows(120).collect())
@@ -117,7 +144,7 @@ object Harness {
       res("baseline_one_core_s") = (System.nanoTime() - t0) / 1e9
       one.stop()
     }
-    Files.write(Paths.get(s"$work/jvm.json"), Json(res.toMap).getBytes(UTF_8))
+    Files.write(Paths.get(s"$work/jvm.json"), json(res.toMap).getBytes(UTF_8))
     emit("event" -> "done")
     // everything is written; skip the session's shutdown work
     Runtime.getRuntime.halt(0)
@@ -165,21 +192,31 @@ object Harness {
       .getOrElse(0.0)
 }
 
-/** Minimal JSON writer for the harness's result file. */
-object Json {
-  def apply(v: Any): String = v match {
-    case null | None => "null"
-    case Some(x) => apply(x)
-    case s: String => "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
-    case n: java.lang.Number => n.toString
-    case b: Boolean => b.toString
-    case m: scala.collection.Map[_, _] =>
-      m.map { case (k, x) => apply(k.toString) + ":" + apply(x) }.mkString("{", ",", "}")
-    case xs: Iterable[_] => xs.map(apply).mkString("[", ",", "]")
-    case x => apply(x.toString)
+/** The largest heap in use right after any collection since it was
+  * installed: it moves with what the program holds (state, snapshots,
+  * collected results) and with old-generation garbage not yet reclaimed,
+  * but not with young garbage. */
+final class HeapAfterGc extends NotificationListener {
+  private val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+    .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+  @volatile var peakBytes = 0L
+
+  override def handleNotification(n: Notification, handback: AnyRef): Unit =
+    if (n.getType == GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+      val info = GarbageCollectionNotificationInfo.from(n.getUserData.asInstanceOf[CompositeData])
+      val used = info.getGcInfo.getMemoryUsageAfterGc.asScala
+        .collect { case (pool, u) if heapPools(pool) => u.getUsed }.sum
+      synchronized { peakBytes = peakBytes max used }
+    }
+}
+
+object HeapAfterGc {
+  def install(): HeapAfterGc = {
+    val l = new HeapAfterGc
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.foreach {
+      case e: NotificationEmitter => e.addNotificationListener(l, null, null)
+      case _ =>
+    }
+    l
   }
 }
