@@ -69,17 +69,59 @@ object Engine {
       })
   }
 
+  /** Spark-action thunks that fail as one. Every job started by a
+    * [[submit]]ted thunk, or by the calling thread inside [[run]],
+    * carries this fan-out's job tag (plus the submitting thread's own
+    * tags, so nested fan-outs cancel through). The FIRST failure cancels
+    * every running job with the tag and is the exception rethrown — by
+    * [[await]] at once, whichever future it waits on, and by [[run]]
+    * in place of the cancellation its own job then sees — instead of
+    * waiting, in submission order, on jobs whose result no longer
+    * matters. */
+  final class FanOut(sc: org.apache.spark.SparkContext) {
+    import scala.concurrent.{Await, ExecutionContext, Future, Promise}
+    import scala.concurrent.duration.Duration
+    private val tag = s"graft-fanout-${java.util.UUID.randomUUID}"
+    private val failure = Promise[Nothing]()
+
+    private def withTags[A](tags: Set[String])(body: => A): A = {
+      val prev = sc.getJobTags()
+      sc.clearJobTags(); tags.foreach(sc.addJobTag)
+      try body finally { sc.clearJobTags(); prev.foreach(sc.addJobTag) }
+    }
+
+    private def fail(e: Throwable): Unit =
+      if (failure.tryFailure(e)) sc.cancelJobsWithTag(tag)
+
+    def submit[A](thunk: () => A): Future[A] = {
+      val tags = sc.getJobTags() + tag
+      val f = Future(withTags(tags)(thunk()))(blockingPool)
+      f.failed.foreach(fail)(ExecutionContext.parasitic)
+      f
+    }
+
+    def await[A](f: Future[A]): A =
+      Await.result(Future.firstCompletedOf(Seq(f, failure.future))(
+        ExecutionContext.parasitic), Duration.Inf)
+
+    /** Rethrow the first failure, if any — the caller's checkpoint
+      * between driver-side steps that start no job. */
+    def check(): Unit = failure.future.value.foreach(_.get)
+
+    def run[A](body: => A): A =
+      try withTags(sc.getJobTags() + tag)(body)
+      catch { case e: Throwable => fail(e); check(); throw e }
+  }
+
   /** Run independent Spark-action thunks as CONCURRENT jobs and return
     * their results in input order — identical values to calling each
     * thunk sequentially (the scheduler back-fills executors freed by
     * one job's stragglers with the next job's tasks; actions are only
     * sequential because a driver calls them sequentially, guide §2.6).
-    * Any thunk failure rethrows at the await, like the sequential
-    * form. */
+    * The first thunk failure cancels the others' jobs and rethrows at
+    * once ([[FanOut]]). */
   def inParallel[A](thunks: (() => A)*): Seq[A] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    val fs = thunks.map(th => Future(th())(blockingPool))
-    fs.map(Await.result(_, Duration.Inf))
+    val fan = new FanOut(SparkSession.active.sparkContext)
+    fan.run(thunks.map(fan.submit(_)).map(fan.await(_)))
   }
 }

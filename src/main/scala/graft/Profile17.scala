@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** r17 optimization-round measurement harness (not driver-facing) —
   * phase-level timings inside this round's target queries, in the
-  * Profile16 mold. Arms: `pr` (pagerank internals), `opq`
+  * per-phase profiling mold. Arms: `pr` (pagerank internals), `opq`
   * (opqRecall legs), `annr` (annRecall legs), `hybrid` (hybridIncr
   * tower builds), `curatef` (batch full-funnel stages). */
 object Profile17 {

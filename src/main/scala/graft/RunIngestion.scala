@@ -38,11 +38,11 @@ object RunIngestion {
     val schema = spark.read.parquet(docsPath).schema
     val stream = spark.readStream.schema(schema).parquet(docsPath)
       .select(col("doc_id"), col("text"), col("n_chars"))
-    val q = graft.streaming.CurateIngest.start(
-      stream, s"$outDir/fps", s"$outDir/kept", s"$outDir/chk")
+    val q = graft.streaming.CurateIngest.start(stream, outDir, s"$outDir/chk")
     q.processAllAvailable()
     q.stop()
-    val kept = graft.streaming.CurateIngest.keptState(spark, s"$outDir/kept")
+    val kept = graft.streaming.StoreLayout.Flat.inventory(spark,
+      graft.streaming.Store.Kept, outDir)
     println(s"[ingest] survivors=${kept.count()}")
     // drift over the WHOLE input: the q_shard_drift oracle bound
     // (maxId=600) is a fixture constant, not an operational default —

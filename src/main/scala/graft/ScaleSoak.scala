@@ -172,13 +172,13 @@ object ScaleSoak {
     * sequence, with and without store compaction — the measured
     * substance behind the r9 compaction feature: without it the
     * fingerprint/signature stores grow one partition of small files
-    * per shard and every fpState/sigState read lists and scans
+    * per shard and every fp/sig state read lists and scans
     * O(shards) partitions, so per-shard cost should CLIMB; with
     * `compactEvery` it should stay flat. Reports the mean of the
     * first and last `window` shards for each mode. */
   def ingest(spark: SparkSession, nShards: Int, docsPerShard: Int,
              compactEvery: Option[Long], window: Int = 10): Unit = {
-    import graft.streaming.CurateIngest
+    import graft.streaming.{CurateIngest, Funnel, Store, StoreLayout}
     val tag = compactEvery.fold("raw")(n => s"compact$n")
     val dir = java.nio.file.Files
       .createTempDirectory(s"soak_ingest_$tag").toString
@@ -191,13 +191,9 @@ object ScaleSoak {
           col("id")).as("text"))
         .withColumn("n_chars", length(col("text")).cast("long"))
       val t = time {
-        CurateIngest.writeShardStrict(shard, i.toLong,
-          s"$dir/fps", s"$dir/sigs", s"$dir/kept")
-        compactEvery.foreach { n =>
-          if (i > 0 && i % n == 0)
-            CurateIngest.compactStores(spark, s"$dir/fps", s"$dir/kept",
-              Some(s"$dir/sigs"), upToBatch = i.toLong)
-        }
+        CurateIngest.writeShard(shard, i.toLong, dir, Funnel.strict())
+        StoreLayout.Flat.tick(spark, dir, Seq(Store.Fp, Store.Kept, Store.Sig),
+          i.toLong, compactEvery)
       }
       t
     }
@@ -220,10 +216,11 @@ object ScaleSoak {
   def scrubIngest(spark: SparkSession, nShards: Int = 10,
                   docsPerShard: Long = 50000L,
                   compactEvery: Long = 3L): Unit = {
-    import graft.streaming.ScrubIngest
+    import graft.streaming.{ScrubIngest, Store, StoreLayout}
     val dir = java.nio.file.Files
       .createTempDirectory("soak_scrubingest").toString
     val prefix = "soakscrub"
+    val layout = StoreLayout.Bucketed(prefix)
     Seq("gram").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
     try {
@@ -234,11 +231,8 @@ object ScaleSoak {
             col("doc_id") < (b + 1) * docsPerShard)
         timedSpill(spark, "scrubing", s"shard=$b",
           s"docs=$docsPerShard") {
-          ScrubIngest.writeScrubShardBucketed(shard, b.toLong,
-            s"$dir/grams", s"$dir/out", prefix)
-          if (b > 0 && b % compactEvery == 0)
-            ScrubIngest.compactGramsBucketed(spark, s"$dir/grams",
-              upToBatch = b.toLong, prefix)
+          ScrubIngest.writeShard(shard, b.toLong, dir, layout)
+          layout.tick(spark, dir, Seq(Store.Gram), b.toLong, Some(compactEvery))
         }
       }
       corpus.unpersist()
@@ -246,7 +240,8 @@ object ScaleSoak {
   }
 
   /** r11: per-shard cost of the WHOLE bucketed funnel (6 stages, 4
-    * stores — [[graft.streaming.CurateIngest.writeShardFullStrictBucketed]])
+    * stores — [[graft.streaming.CurateIngest.writeShard]] with
+    * [[graft.streaming.Funnel.full]] on the bucketed layout)
     * as every store grows, with the same flatness claim as
     * [[scrubIngest]] extended to the full composition: scrub probe +
     * fp anti-join + sig collision probe all bucket-aligned, only the
@@ -255,10 +250,11 @@ object ScaleSoak {
   def fullFunnel(spark: SparkSession, nShards: Int = 8,
                  docsPerShard: Long = 50000L,
                  compactEvery: Long = 3L): Unit = {
-    import graft.streaming.{CurateIngest, ScrubIngest}
+    import graft.streaming.{CurateIngest, Funnel, Store, StoreLayout}
     val dir = java.nio.file.Files
       .createTempDirectory("soak_fullfunnel").toString
     val prefix = "soakfull"
+    val layout = StoreLayout.Bucketed(prefix)
     def dropTables(): Unit = Seq("gram", "fp", "sig", "kept").foreach(t =>
       spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
     dropTables()
@@ -267,22 +263,16 @@ object ScaleSoak {
       val bench = graft.dedup.Dedup.shingles(
           corpus.filter(col("doc_id") < 20), 8)
         .select(col("sh")).distinct().localCheckpoint()
+      val funnel = Funnel.full(bench)
       (0 until nShards).foreach { b =>
         val shard = corpus.filter(
           col("doc_id") >= b * docsPerShard &&
             col("doc_id") < (b + 1) * docsPerShard)
         timedSpill(spark, "fullfun", s"shard=$b",
           s"docs=$docsPerShard") {
-          CurateIngest.writeShardFullStrictBucketed(shard, b.toLong,
-            s"$dir/grams", s"$dir/fps", s"$dir/sigs", s"$dir/kept",
-            prefix, bench)
-          if (b > 0 && b % compactEvery == 0) {
-            CurateIngest.compactStoresBucketed(spark, s"$dir/fps",
-              s"$dir/kept", Some(s"$dir/sigs"), upToBatch = b.toLong,
-              tablePrefix = prefix)
-            ScrubIngest.compactGramsBucketed(spark, s"$dir/grams",
-              upToBatch = b.toLong, tablePrefix = prefix)
-          }
+          CurateIngest.writeShard(shard, b.toLong, dir, funnel, layout)
+          layout.tick(spark, dir, funnel.stores :+ Store.Kept, b.toLong,
+            Some(compactEvery))
         }
       }
       corpus.unpersist()
@@ -507,7 +497,7 @@ object ScaleSoak {
   def combinedTok(spark: SparkSession, nShards: Int = 12,
                   docsPerShard: Long = 2000): Unit = {
     import graft.streaming.{ClusterRefresh, CombinedIngest, CurateIngest,
-      QualityRefresh}
+      Funnel, QualityRefresh, Store, StoreLayout}
     import graft.text.SparseIndex
     val corpus = docCorpus(spark, nShards * docsPerShard)
     val shards = (0 until nShards).map { i =>
@@ -527,11 +517,11 @@ object ScaleSoak {
       val dir = freshDir("legacy")
       val ts = shards.zipWithIndex.map { case (b, i) =>
         time {
-          CurateIngest.writeShardStrict(b, i.toLong, s"$dir/fps",
-            s"$dir/sigs", s"$dir/kept")
-          val sigB = CurateIngest.sigBatch(spark, s"$dir/sigs", i.toLong)
+          CurateIngest.writeShard(b, i.toLong, dir, Funnel.strict())
+          val sigB = Store.Sig.batch(spark, dir, i.toLong)
           val pairs = CurateIngest.crossShardNearDupsFromSigs(
-              CurateIngest.sigState(spark, s"$dir/sigs", i.toLong), sigB)
+              StoreLayout.Flat.state(spark, Store.Sig, dir, i.toLong).compact,
+              sigB)
             .unionByName(
               CurateIngest.crossShardNearDupsFromSigs(sigB, sigB))
             .select(col("a_id"), col("b_id"))
@@ -540,7 +530,7 @@ object ScaleSoak {
           QualityRefresh.writeCountsDelta(b, i.toLong, s"$dir/counts",
             s"$dir/dstats")
           SparseIndex.postingsOf(b.select(col("doc_id"), col("text"))
-              .join(CurateIngest.keptBatch(spark, s"$dir/kept", i.toLong),
+              .join(Store.Kept.batch(spark, dir, i.toLong).select(col("doc_id")),
                 Seq("doc_id")))
             .withColumn("batch_id", lit(i.toLong))
             .write.mode("overwrite")
@@ -558,7 +548,7 @@ object ScaleSoak {
 
   /** r12: per-batch wall + spill of the BUCKETED combined topology
     * under growing stores and mid-run bucket compactions, against the
-    * plain combined mode on the same shards — startBucketed was
+    * plain combined mode on the same shards — the bucketed layout was
     * spec-proven (kill+restart equality, zero-Exchange plans) but
     * never soak-measured. Fresh store roots per mode; the interesting
     * signal is the per-shard series shape (flat vs climbing) and the
@@ -589,7 +579,8 @@ object ScaleSoak {
         .createTempDirectory("soak_cbk_bucket").toString
       shards.zipWithIndex.foreach { case (b, i) =>
         timedSpill(spark, "combined", s"shard=$i", "bucketed")(
-          CombinedIngest.processBatchBucketed(b, i.toLong, dirB, prefix,
+          CombinedIngest.processBatch(b, i.toLong, dirB,
+            graft.streaming.StoreLayout.Bucketed(prefix),
             compactEvery = Some(compactEvery)))
       }
       corpus.unpersist()
@@ -1042,7 +1033,7 @@ object ScaleSoak {
   def combinedGopher(spark: SparkSession, nShards: Int = 12,
                      docsPerShard: Long = 2000): Unit = {
     import graft.streaming.{ClusterRefresh, CombinedIngest, CurateIngest,
-      QualityRefresh}
+      Funnel, QualityRefresh, Store, StoreLayout}
     import graft.text.{Repetition, SparseIndex, TextAnalysis}
     val corpus = docCorpus(spark, nShards * docsPerShard)
     val shards = (0 until nShards).map { i =>
@@ -1059,18 +1050,6 @@ object ScaleSoak {
       }
       ts.drop(2).sum / (nShards - 2)
     }
-    // r14: the pin-type A/B under the native repetition leg — the
-    // columnar-cache twin of the (now-default) localCheckpoint pin.
-    // This arm DECIDED the r14 default flip: under the native leg the
-    // columnar read is the bottleneck (14.88 vs 9.57 s/batch).
-    def colRun(): Double = {
-      val dir = freshDir("col")
-      val ts = shards.zipWithIndex.map { case (b, i) =>
-        time(CombinedIngest.processBatch(b, i.toLong, dir,
-          gopherGate = true, repBasePinColumnar = true))
-      }
-      ts.drop(2).sum / (nShards - 2)
-    }
     def legacyRun(): Double = {
       val dir = freshDir("legacy")
       val ts = shards.zipWithIndex.map { case (b, i) =>
@@ -1084,11 +1063,12 @@ object ScaleSoak {
             .join(Repetition.repetitionSignals(b)
               .filter(col("gopher_pass") === 1).select(col("doc_id")),
               Seq("doc_id"), "left_semi")
-          CurateIngest.writeShardStrictGated(gated, i.toLong, s"$dir/fps",
-            s"$dir/sigs", s"$dir/kept")
-          val sigB = CurateIngest.sigBatch(spark, s"$dir/sigs", i.toLong)
+          CurateIngest.writeShard(b, i.toLong, dir,
+            Funnel.strict(_ => gated))
+          val sigB = Store.Sig.batch(spark, dir, i.toLong)
           val pairs = CurateIngest.crossShardNearDupsFromSigs(
-              CurateIngest.sigState(spark, s"$dir/sigs", i.toLong), sigB)
+              StoreLayout.Flat.state(spark, Store.Sig, dir, i.toLong).compact,
+              sigB)
             .unionByName(
               CurateIngest.crossShardNearDupsFromSigs(sigB, sigB))
             .select(col("a_id"), col("b_id")).distinct()
@@ -1100,7 +1080,7 @@ object ScaleSoak {
             s"$dir/counts", s"$dir/dstats")
           graft.streaming.DriftMonitor.writeDriftDelta(b, tokens, signals,
             i.toLong, s"$dir/drift", s"$dir/counts", s"$dir/dstats")
-          tokens.join(CurateIngest.keptBatch(spark, s"$dir/kept", i.toLong),
+          tokens.join(Store.Kept.batch(spark, dir, i.toLong).select(col("doc_id")),
               Seq("doc_id"))
             .withColumn("batch_id", lit(i.toLong))
             .write.mode("overwrite")
@@ -1110,11 +1090,9 @@ object ScaleSoak {
       }
       ts.drop(2).sum / (nShards - 2)
     }
-    val s1 = sharedRun(); val c1 = colRun(); val l1 = legacyRun()
-    val s2 = sharedRun(); val c2 = colRun(); val l2 = legacyRun()
+    val s1 = sharedRun(); val l1 = legacyRun()
+    val s2 = sharedRun(); val l2 = legacyRun()
     report("combGoph", s"docs=$docsPerShard", "shared", math.min(s1, s2))
-    report("combGoph", s"docs=$docsPerShard", "sharedcol",
-      math.min(c1, c2))
     report("combGoph", s"docs=$docsPerShard", "twoscan", math.min(l1, l2))
     corpus.unpersist()
   }
@@ -1134,8 +1112,9 @@ object ScaleSoak {
     * expectation into a measured number for SCALING.md. */
   def gramSidecar(spark: SparkSession, nStoreShards: Int = 4,
                   docsPerShard: Long = 50000L, buckets: Int = 32): Unit = {
-    import graft.streaming.ScrubIngest
+    import graft.streaming.{ScrubIngest, Store, StoreLayout}
     val prefix = "soaksidecar"
+    val layout = StoreLayout.Bucketed(prefix, buckets)
     spark.sql(s"DROP TABLE IF EXISTS ${prefix}_gram")
     try {
       val corpus = docCorpus(spark, (nStoreShards + 1) * docsPerShard)
@@ -1144,10 +1123,8 @@ object ScaleSoak {
       (0 until nStoreShards).foreach { b =>
         val shard = corpus.filter(col("doc_id") >= b * docsPerShard &&
           col("doc_id") < (b + 1) * docsPerShard)
-        ScrubIngest.writeScrubShardBucketed(shard, b.toLong,
-          s"$dir/grams", s"$dir/out", prefix)
-        ScrubIngest.compactGramsBucketed(spark, s"$dir/grams",
-          upToBatch = b.toLong + 1, prefix, buckets)
+        ScrubIngest.writeShard(shard, b.toLong, dir, layout)
+        layout.compact(spark, dir, Seq(Store.Gram), upToBatch = b.toLong + 1)
       }
       // the arriving shard's gram profile
       val next = corpus.filter(

@@ -88,7 +88,7 @@ object SpanScrub {
 
   /** One shard scrubbed against the accumulated gram-fingerprint store
     * — the ExactSubstr operation made INCREMENTAL, the byte-level
-    * sibling of [[graft.streaming.CurateIngest.ingestShard]]'s doc-level
+    * sibling of [[graft.streaming.Funnel.fresh]]'s doc-level
     * anti-join. Every shard gram already present in the store is a cut
     * (its first occurrence lives in an earlier shard); within the
     * shard, later occurrences of novel grams are cut by the usual
@@ -142,10 +142,9 @@ object SpanScrub {
   }
 
   /** [[scrubShard]] against a SPLIT store — (bucketed compacted gram
-    * table, recent deltas), the
-    * [[graft.streaming.CurateIngest.freshAgainstSplitStores]] shape for
-    * the scrub store, with two gram-store-specific deviations, both
-    * soak-measured (SCALING.md "incremental scrub soak"):
+    * table, recent deltas), the bucketed [[graft.streaming.Funnel.fresh]]
+    * shape for the scrub store, with two gram-store-specific deviations,
+    * both soak-measured (SCALING.md "incremental scrub soak"):
     *
     *  - The delta side is NOT broadcast. Unlike the doc-count-sized
     *    fingerprint deltas, a gram delta is corpus-BYTES-sized (~740
@@ -203,32 +202,17 @@ object SpanScrub {
   /** The id-ordered incremental scrub as one deterministic loop — the
     * q_scrub_incr engine side, hash-matched against [[spanScrubSql]]
     * (the flat batch oracle: incrementality must be invisible in the
-    * output). Shards are doc_id ranges like
-    * [[graft.streaming.CurateIngest.incrCurate]]'s. */
+    * output). Shards and the lazily accumulated gram store are
+    * [[graft.streaming.ShardLoop]]'s; the unbounded-shard production
+    * form is the disk-backed store ([[graft.streaming.ScrubIngest]]). */
   def incrScrub(docs: DataFrame, shardSize: Long = 150,
                 maxId: Long = 600, k: Int = 40): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nShards = ((maxId + shardSize - 1) / shardSize).toInt
-    var store = Seq.empty[Long].toDF("gram")
-    var outs = List.empty[DataFrame]
-    for (i <- 0 until nShards) {
-      val shard = docs.filter(col("doc_id") >= i * shardSize &&
-        col("doc_id") < (i + 1) * shardSize && col("doc_id") < maxId)
-      val (scrubbed, novel) = scrubShard(shard, store, k)
-      outs = outs :+ scrubbed
-      // LAZY store accumulation (r17): `novel` is a cheap filter over
-      // the shard's PINNED `marked` frame, and the store is consumed
-      // exactly once per later shard (the membership join), so a
-      // per-shard union-checkpoint was a pure materialization barrier
-      // — the loop is job-latency-bound, not data-bound. The union
-      // plan grows with the loop's CONSTANT shard count (these query
-      // loops are doc_id-bounded); the unbounded-shard production form
-      // is the disk-backed store ([[graft.streaming.ScrubIngest]]),
-      // which reads a compacted table, not a union chain.
-      store = store.unionByName(novel)
+    import graft.streaming.{ShardLoop, ShardOut, Store}
+    ShardLoop.run(docs, shardSize, maxId, Seq(Store.Gram)) { (shard, _, stores) =>
+      val (scrubbed, novel) = scrubShard(shard, stores(Store.Gram).compact, k)
+      ShardOut(() => scrubbed,
+        scala.collection.immutable.ListMap(Store.Gram -> novel))
     }
-    outs.reduce(_ unionByName _)
   }
 
   /** Shared tail: first-occurrence window over the gram key (string or

@@ -31,7 +31,7 @@ import graft.dedup.Clusters
   * `batch_id=` partition with overwrite semantics. Batch b reads the
   * snapshot of the latest batch < b, so a crash-replayed batch sees
   * exactly the state it saw the first time and rewrites exactly its
-  * own partition ([[CurateIngest]]'s fpState contract). The snapshot
+  * own partition ([[StoreLayout.state]]'s pre-batch contract). The snapshot
   * table is pair-graph-node-sized — docs that appear in at least one
   * candidate pair — not corpus-sized. Old snapshots are
   * superseded-and-droppable; [[compactSnapshots]] keeps the latest. */
@@ -52,14 +52,10 @@ object ClusterRefresh {
     * the audit/rebuild trail (the refresh itself never re-reads it). */
   def writePairDelta(batchPairs: DataFrame, batchId: Long,
                      pairsPath: String): Unit =
-    batchPairs
+    Stores.writeBatch(batchPairs
       .select(least(col("a_id"), col("b_id")).as("a_id"),
         greatest(col("a_id"), col("b_id")).as("b_id"))
-      .filter(col("a_id") =!= col("b_id")).distinct()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(pairsPath)
+      .filter(col("a_id") =!= col("b_id")).distinct(), batchId, pairsPath)
 
   /** The accumulated pair-delta trail through the pinned schema — the
     * schema-safe read path for the audit/rebuild uses the deltas
@@ -94,13 +90,9 @@ object ClusterRefresh {
                    pairsPath: String, labelsPath: String): Unit = {
     val spark = batchPairs.sparkSession
     writePairDelta(batchPairs, batchId, pairsPath)
-    Clusters.refreshClusters(
+    Stores.writeBatch(Clusters.refreshClusters(
         labelState(spark, labelsPath, batchId),
-        batchPairs.select(col("a_id"), col("b_id")))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(labelsPath)
+        batchPairs.select(col("a_id"), col("b_id"))), batchId, labelsPath)
   }
 
   /** Drop snapshots superseded by the latest one strictly below

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types._
 
 import graft.text.SparseIndex
 
@@ -38,57 +37,29 @@ import graft.text.SparseIndex
   * trail doubles as the labels store's rebuild path.
   *
   * Compaction tick: every `compactEvery` batches ALL stores compact in
-  * the same foreachBatch — ingestion stores fold to their clustered
-  * partition, counts fold under the folded_hi watermark, superseded
-  * label snapshots drop, postings fold to a token-clustered partition
-  * — so the combined tree stays bounded at O(compactEvery) partitions
-  * per store, the single-leg contract preserved under composition. */
+  * the same foreachBatch — ingestion stores and postings fold per the
+  * [[StoreLayout]] (a clustered partition, or their bucket tables),
+  * counts fold under the folded_hi watermark, superseded label
+  * snapshots drop — so the combined tree stays bounded at
+  * O(compactEvery) partitions per store, the single-leg contract
+  * preserved under composition.
+  *
+  * Under [[StoreLayout.Bucketed]] (the 100 TB deployment shape) every
+  * per-shard store join reads a metastore bucket table on its exact join
+  * keys (`fingerprint`, `(band, bkey)`, `doc_id`, `token`) with no
+  * store-side exchange (plan-asserted in CombinedIngestSpec), and the
+  * cluster leg's detection probes the bucketed signature table the same
+  * way — table side bucket-aligned, recent-delta side broadcast-sized. */
 object CombinedIngest {
 
-  private val postingsSchema = StructType(Seq(
-    StructField("doc_id", LongType), StructField("token", StringType),
-    StructField("tf", LongType), StructField("dl", IntegerType),
-    StructField("batch_id", LongType)))
+  /** The searchable BM25 read model over everything kept so far: the
+    * postings inventory (deduped, absorbing the compaction crash window)
+    * + the kept store as the doc inventory. */
+  def bm25Index(spark: SparkSession, root: String,
+                layout: StoreLayout = StoreLayout.Flat): SparseIndex.Index =
+    SparseIndex.fromStore(layout.inventory(spark, Store.Postings, root),
+      layout.inventory(spark, Store.Kept, root).select(col("doc_id")))
 
-  /** The searchable BM25 read model over everything kept so far:
-    * postings store (full-row dedup absorbs the compaction crash
-    * window, like [[CurateIngest.keptState]]) + the kept store as the
-    * doc inventory. */
-  def bm25Index(spark: SparkSession, root: String): SparseIndex.Index =
-    SparseIndex.fromStore(
-      Stores.readStore(spark, s"$root/postings", postingsSchema)
-        .drop("batch_id").dropDuplicates("doc_id", "token"),
-      CurateIngest.keptState(spark, s"$root/kept").select(col("doc_id")))
-
-  /** Postings partitions < upToBatch folded into one token-clustered
-    * `batch_id=-1` partition — postings rows are unique per
-    * (doc_id, token), so the distinct-merge is set-semantics and the
-    * crash window degrades to duplicates [[bm25Index]] absorbs. */
-  private def compactPostings(spark: SparkSession, path: String,
-                              upToBatch: Long, nFiles: Int = 32): Unit = {
-    val folded = Stores.readStore(spark, path, postingsSchema)
-      .filter(col("batch_id") < upToBatch)
-      .drop("batch_id").distinct()
-      .withColumn("batch_id", lit(-1L))
-      .repartition(nFiles, col("token"))
-      .sortWithinPartitions(col("token"))
-      .localCheckpoint() // pin BEFORE overwriting a partition we read
-    folded.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(path)
-    Stores.dropBatchPartitions(spark, path, upToBatch)
-  }
-
-  /** One micro-batch through all four legs (+ the compaction tick).
-    *
-    * The batch is tokenized ONCE: the `(doc_id, token, tf, dl)` frame
-    * ([[SparseIndex.postingsOf]]) plus the per-doc gate signals derived
-    * from it ([[graft.text.TextAnalysis.docSignals]]) feed the curation
-    * gate, the classifier counts AND the postings — the three legs that
-    * each used to re-scan the batch's text (measured per-batch delta in
-    * SCALING.md). The only remaining text pass is the strict leg's
-    * shingle/MinHash signature of post-gate survivors, which is the
-    * signature store's write unit, not a tokenization. */
   /** The curation-gate frame for one batch: the heuristic gate over
     * the shared signals, optionally intersected with the Gopher
     * repetition gate ([[CurateIngest.gateShardGopher]]'s rule — the
@@ -101,7 +72,15 @@ object CombinedIngest {
     * zero-shuffle projection since r13) never pays for docs the
     * quality/language gate already rejected (the intersection is
     * unchanged — gopher only ever removes docs from the
-    * heuristic-gate set). */
+    * heuristic-gate set).
+    *
+    * `gopherQualityStops = Some(stopList)` additionally gates on the
+    * NON-repetition Gopher Table A1 rules
+    * ([[graft.text.GopherQuality]]) — shape heuristics riding the SAME
+    * positional frame (zero extra scans, zero shuffle: the signals are
+    * per-doc array arithmetic), restricted to heuristic-gate survivors
+    * like the repetition leg. The stop list is the one per-corpus knob
+    * (GopherQuality.DefaultStopWords is the published set). */
   private def gateOf(signals: DataFrame, repBase: Option[DataFrame],
                      minQualityPm: Long, langs: Seq[String],
                      gopherGate: Boolean,
@@ -129,25 +108,16 @@ object CombinedIngest {
     *
     * The positional frame is pinned with `localCheckpoint` (row
     * objects), not the columnar cache — a verdict that has FLIPPED
-    * once and is therefore kept as a measured knob: the r12
-    * `combinedgopher` A/B chose `persist` when the repetition leg was
-    * the exploded relational form (columnar 32.0 vs lchk 34.3 s/batch),
-    * but under the r14 native run-stats leg the same A/B measures
-    * lchk 9.57 vs columnar 14.88 s/batch — rebuilding 600-element
-    * string arrays from the compressed columnar cache per row now
-    * costs more than the row-object pin, because the consumers got
+    * once: the r12 `combinedgopher` A/B chose `persist` when the
+    * repetition leg was the exploded relational form (columnar 32.0 vs
+    * lchk 34.3 s/batch), but under the r14 native run-stats leg the same
+    * A/B measures lchk 9.57 vs columnar 14.88 s/batch — rebuilding
+    * 600-element string arrays from the compressed columnar cache per
+    * row costs more than the row-object pin, because the consumers got
     * ~10× cheaper and the cache READ became the bottleneck (SCALING.md
-    * r14 `combinedgopher`). The frame is micro-batch-sized (trigger-
-    * bounded), so the row-object pin is not a memory hazard; the
-    * caller ([[processBatch]]/[[processBatchBucketed]]) unpersists it
-    * after the batch's legs have all written.
-    *
-    * `pinColumnar = true` pins with the columnar cache instead — the
-    * losing arm, kept runnable so the trade-off stays re-measurable as
-    * the consumers' plan shapes evolve (ScaleSoak `combinedgopher`
-    * runs both arms). */
-  private def sharedFrames(batch: DataFrame, gopherGate: Boolean,
-                           pinColumnar: Boolean = false)
+    * r14 `combinedgopher`). The frame is micro-batch-sized
+    * (trigger-bounded), so the row-object pin is not a memory hazard. */
+  private def sharedFrames(batch: DataFrame, gopherGate: Boolean)
       : (DataFrame, Option[DataFrame]) =
     if (!gopherGate)
       (SparseIndex.postingsOf(batch.select(col("doc_id"), col("text")))
@@ -160,34 +130,29 @@ object CombinedIngest {
       // cache build + narrow legs; ScaleSoak repdiag4, SCALING.md r14).
       // The batch is trigger-bounded, so the exchange is micro-batch-
       // sized; batch entry points keep the upward-only gate.
-      val pb0 = graft.text.Repetition.positionalBase(batch,
-        forceSpread = true)
-      val pb = if (pinColumnar) pb0.persist() else pb0.localCheckpoint()
+      val pb = graft.text.Repetition.positionalBase(batch,
+        forceSpread = true).localCheckpoint()
       (SparseIndex.postingsFromBase(pb).localCheckpoint(), Some(pb))
     }
 
-  /** `gopherQualityStops = Some(stopList)` additionally gates on the
-    * NON-repetition Gopher Table A1 rules
-    * ([[graft.text.GopherQuality]]) — shape heuristics riding the SAME
-    * positional frame as the repetition gate (zero extra scans, zero
-    * shuffle: the signals are per-doc array arithmetic), restricted to
-    * heuristic-gate survivors like the repetition leg. The stop list
-    * is the one per-corpus knob (GopherQuality.DefaultStopWords is the
-    * published set). */
-  /** Dolma-ordered anonymization on the combined topology
-    * ([[graft.text.CorpusStats.piiMask]]): masks the batch BEFORE the
-    * shared tokenization, so every derived artifact — postings tokens,
-    * signatures, fingerprints, kept text, drift rows — sees masked
-    * text and no persisted store ever holds a raw email/IP/phone.
-    * Codegen'd projection, zero shuffle. */
-  private def anonBatch(batch: DataFrame, anonymize: Boolean): DataFrame =
-    if (!anonymize) batch
-    else batch.select(col("doc_id"),
-        graft.text.CorpusStats.piiMask(col("text")).as("text"))
-      // n_chars describes the text the stores will actually hold
-      .withColumn("n_chars", length(col("text")).cast("long"))
-
+  /** One micro-batch through all five legs (+ the compaction tick).
+    *
+    * The batch is tokenized ONCE: the `(doc_id, token, tf, dl)` frame
+    * ([[SparseIndex.postingsOf]]) plus the per-doc gate signals derived
+    * from it ([[graft.text.TextAnalysis.docSignals]]) feed the curation
+    * gate, the classifier counts AND the postings — the three legs that
+    * each used to re-scan the batch's text (measured per-batch delta in
+    * SCALING.md). The only remaining text pass is the strict leg's
+    * shingle/MinHash signature of post-gate survivors, which is the
+    * signature store's write unit, not a tokenization.
+    *
+    * `anonymize` masks the batch BEFORE the shared tokenization
+    * ([[Funnel.anonymized]], Dolma ordering), so every derived artifact
+    * — postings tokens, signatures, fingerprints, kept text, drift rows
+    * — sees masked text and no persisted store ever holds a raw
+    * email/IP/phone. */
   def processBatch(batch: DataFrame, batchId: Long, root: String,
+                   layout: StoreLayout = StoreLayout.Flat,
                    minQualityPm: Long = 600,
                    langs: Seq[String] = Seq("en", "de"),
                    minEstJaccard: Double = 0.5,
@@ -195,36 +160,33 @@ object CombinedIngest {
                    sigRetentionBatches: Option[Long] = None,
                    gopherGate: Boolean = false,
                    gopherQualityStops: Option[Seq[String]] = None,
-                   anonymize: Boolean = false,
-                   repBasePinColumnar: Boolean = false): Unit = {
+                   anonymize: Boolean = false): Unit = {
     val spark = batch.sparkSession
-    val b = anonBatch(batch, anonymize)
+    val b = Funnel.anonymized(batch, anonymize)
     // THE one tokenization of this batch, pinned; every leg derives
     val (tokens, repBase) =
-      sharedFrames(b, gopherGate || gopherQualityStops.nonEmpty,
-        repBasePinColumnar)
+      sharedFrames(b, gopherGate || gopherQualityStops.nonEmpty)
     val signals = graft.text.TextAnalysis.docSignals(b, tokens)
       .localCheckpoint()
     // leg 1 — strict curation: fps/sigs/kept land in partition batchId
-    CurateIngest.writeShardStrictGated(
-      gateOf(signals, repBase, minQualityPm, langs, gopherGate,
-        gopherQualityStops),
-      batchId, s"$root/fps", s"$root/sigs", s"$root/kept", minEstJaccard)
+    val gated = gateOf(signals, repBase, minQualityPm, langs, gopherGate,
+      gopherQualityStops)
+    CurateIngest.writeShard(b, batchId, root,
+      Funnel.strict(_ => gated, minEstJaccard), layout)
     // leg 2 — cluster refresh over this batch's near-dup pairs:
-    // history signatures (strictly pre-batch) probed against the
-    // batch's own just-written sig partition, UNION the batch's
-    // self-probe — a self-probe IS minhashCandidates over the batch
-    // ([[CurateIngest.deferredClusters]]'s contract), and without it
-    // an intra-batch pair (A≈B arriving together; dropsBest silently
-    // drops one) would never reach the pairs/labels stores, so a later
-    // chain through the dropped doc would under-merge. Both reads are
-    // deterministic under replay.
-    val sigBatch = CurateIngest.sigBatch(spark, s"$root/sigs", batchId)
-    val pairs = CurateIngest.crossShardNearDupsFromSigs(
-        CurateIngest.sigState(spark, s"$root/sigs", batchId),
-        sigBatch, minEstJaccard)
-      .unionByName(CurateIngest.crossShardNearDupsFromSigs(
-        sigBatch, sigBatch, minEstJaccard))
+    // history signatures (strictly pre-batch: each side of the layout)
+    // probed against the batch's own just-written sig partition, UNION
+    // the batch's self-probe — a self-probe IS minhashCandidates over
+    // the batch ([[CurateIngest.deferredClusters]]'s contract), and
+    // without it an intra-batch pair (A≈B arriving together; dropsBest
+    // silently drops one) would never reach the pairs/labels stores, so
+    // a later chain through the dropped doc would under-merge. All reads
+    // are deterministic under replay.
+    val sigBatch = Store.Sig.batch(spark, root, batchId)
+    val history = layout.state(spark, Store.Sig, root, batchId)
+    val pairs = (history.compact +: history.delta.toSeq :+ sigBatch)
+      .map(CurateIngest.crossShardNearDupsFromSigs(_, sigBatch, minEstJaccard))
+      .reduce(_ unionByName _)
       .select(col("a_id"), col("b_id")).distinct()
     ClusterRefresh.refreshBatch(pairs, batchId, s"$root/pairs",
       s"$root/labels")
@@ -242,33 +204,24 @@ object CombinedIngest {
     // leg 4 — BM25 postings of the batch's KEPT docs: the shared frame
     // restricted to the survivors (tf/dl are per-doc, so the
     // restriction equals tokenizing only the kept docs)
-    tokens
-      .join(CurateIngest.keptBatch(spark, s"$root/kept", batchId),
-        Seq("doc_id"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$root/postings")
+    Stores.writeBatch(tokens.join(
+        Store.Kept.batch(spark, root, batchId).select(col("doc_id")),
+        Seq("doc_id")),
+      batchId, Store.Postings.path(root))
     // compaction tick — every store together
-    compactEvery.foreach { n =>
-      if (batchId > 0 && batchId % n == 0) {
-        CurateIngest.compactStores(spark, s"$root/fps", s"$root/kept",
-          Some(s"$root/sigs"), upToBatch = batchId,
-          sigRetentionBatches = sigRetentionBatches)
-        QualityRefresh.compactCounts(spark, s"$root/counts",
-          s"$root/dstats", upToBatch = batchId)
-        ClusterRefresh.compactSnapshots(spark, s"$root/labels",
-          upToBatch = batchId)
-        compactPostings(spark, s"$root/postings", upToBatch = batchId)
-      }
+    if (layout.tick(spark, root,
+        Seq(Store.Fp, Store.Kept, Store.Sig, Store.Postings), batchId,
+        compactEvery, sigRetentionBatches)) {
+      QualityRefresh.compactCounts(spark, s"$root/counts",
+        s"$root/dstats", upToBatch = batchId)
+      ClusterRefresh.compactSnapshots(spark, s"$root/labels",
+        upToBatch = batchId)
     }
-    // drop the batch's columnar positional cache (every leg has
-    // written; CacheManager entries are not GC-reclaimed)
-    repBase.foreach(_.unpersist())
   }
 
   /** The wired topology. */
   def start(docStream: DataFrame, root: String, checkpoint: String,
+            layout: StoreLayout = StoreLayout.Flat,
             minQualityPm: Long = 600,
             langs: Seq[String] = Seq("en", "de"),
             minEstJaccard: Double = 0.5,
@@ -280,153 +233,9 @@ object CombinedIngest {
     docStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, root, minQualityPm, langs,
+        processBatch(batch, batchId, root, layout, minQualityPm, langs,
           minEstJaccard, compactEvery, sigRetentionBatches, gopherGate,
           gopherQualityStops, anonymize)
-      }
-      .start()
-
-  // ---------------------------- bucketed combined mode (100 TB shape)
-
-  private val postingsTableSchema = StructType(
-    postingsSchema.fields.toSeq.filterNot(_.name == "batch_id"))
-
-  /** [[bm25Index]] under bucketed compaction: the token-bucketed
-    * postings table ∪ recent deltas, deduped (absorbs the compaction
-    * crash window), with the bucketed kept store as the inventory. */
-  def bm25IndexBucketed(spark: SparkSession, root: String,
-                        tablePrefix: String): SparseIndex.Index =
-    SparseIndex.fromStore(
-      CurateIngest.tableOrEmpty(spark, s"${tablePrefix}_postings",
-          postingsTableSchema)
-        .unionByName(
-          Stores.readStore(spark, s"$root/postings", postingsSchema)
-            .filter(col("batch_id") >= 0).drop("batch_id"))
-        .dropDuplicates("doc_id", "token"),
-      CurateIngest.keptStateBucketed(spark, s"$root/kept", tablePrefix)
-        .select(col("doc_id")))
-
-  /** Postings deltas (and, on migration, a plain `batch_id=-1`
-    * sentinel) folded into the `<prefix>_postings` metastore table,
-    * bucketed + sorted by `token` — one file per bucket, so the df
-    * rollup and term probes read a token-clustered layout. Same crash
-    * contract as [[CurateIngest.compactStoresBucketed]]: set-semantics
-    * reads absorb the window between table write and delta delete. */
-  private def compactPostingsBucketed(spark: SparkSession, path: String,
-                                      upToBatch: Long, tablePrefix: String,
-                                      buckets: Int = 32): Unit = {
-    CurateIngest.tableOrEmpty(spark, s"${tablePrefix}_postings",
-        postingsTableSchema)
-      .unionByName(Stores.readStore(spark, path, postingsSchema)
-        .filter(col("batch_id") < upToBatch).drop("batch_id"))
-      .dropDuplicates("doc_id", "token")
-      .repartition(buckets, col("token"))
-      .sortWithinPartitions(col("token"))
-      .localCheckpoint() // pin BEFORE overwriting a table we just read
-      .write.mode("overwrite")
-      .bucketBy(buckets, "token").sortBy("token")
-      .format("parquet").saveAsTable(s"${tablePrefix}_postings")
-    Stores.dropBatchPartitions(spark, path, upToBatch)
-    Stores.dropCompactedPartition(spark, path)
-  }
-
-  /** [[processBatch]] under BUCKETED store compaction — the 100 TB
-    * deployment shape: every per-shard store join reads a metastore
-    * bucket table on its exact join keys (`fingerprint`, `(band,
-    * bkey)`, `doc_id`, `token`) with no store-side exchange
-    * (plan-asserted in CombinedIngestSpec), and the cluster leg's
-    * detection probes the bucketed signature table the same way —
-    * compacted side bucket-aligned, recent-delta side broadcast-sized,
-    * self-probe for intra-batch pairs. Same shared-tokenization
-    * discipline and replay contract as [[processBatch]]. */
-  def processBatchBucketed(batch: DataFrame, batchId: Long, root: String,
-                           tablePrefix: String,
-                           minQualityPm: Long = 600,
-                           langs: Seq[String] = Seq("en", "de"),
-                           minEstJaccard: Double = 0.5,
-                           compactEvery: Option[Long] = None,
-                           sigRetentionBatches: Option[Long] = None,
-                           gopherGate: Boolean = false,
-                           gopherQualityStops: Option[Seq[String]] = None,
-                           anonymize: Boolean = false)
-      : Unit = {
-    val spark = batch.sparkSession
-    val b = anonBatch(batch, anonymize)
-    val (tokens, repBase) =
-      sharedFrames(b, gopherGate || gopherQualityStops.nonEmpty)
-    val signals = graft.text.TextAnalysis.docSignals(b, tokens)
-      .localCheckpoint()
-    // leg 1 — strict curation against the split (bucketed ∪ delta) stores
-    CurateIngest.writeShardStrictBucketedGated(
-      gateOf(signals, repBase, minQualityPm, langs, gopherGate,
-        gopherQualityStops),
-      batchId, s"$root/fps", s"$root/sigs", s"$root/kept", tablePrefix,
-      minEstJaccard)
-    // leg 2 — detection over the split history: bucketed table side
-    // joins bucket-aligned, delta side is small, self-probe unchanged
-    val (sigC, sigD) = CurateIngest.sigStateSplit(spark, s"$root/sigs",
-      tablePrefix, batchId)
-    val sigBatch = CurateIngest.sigBatch(spark, s"$root/sigs", batchId)
-    val pairs = CurateIngest.crossShardNearDupsFromSigs(sigC, sigBatch,
-        minEstJaccard)
-      .unionByName(CurateIngest.crossShardNearDupsFromSigs(sigD, sigBatch,
-        minEstJaccard))
-      .unionByName(CurateIngest.crossShardNearDupsFromSigs(sigBatch,
-        sigBatch, minEstJaccard))
-      .select(col("a_id"), col("b_id")).distinct()
-    ClusterRefresh.refreshBatch(pairs, batchId, s"$root/pairs",
-      s"$root/labels")
-    // legs 3+4+5 — identical to the plain mode (counts are a fold
-    // store, postings deltas land per batch and compact to the token
-    // table, drift rows ride the shared signals)
-    val (cls, dstats) = graft.text.QualityModel.classCountsFromTokens(
-      tokens, signals, minQualityPm)
-    QualityRefresh.writeCountsDeltaFrom(cls, dstats, batchId,
-      s"$root/counts", s"$root/dstats")
-    DriftMonitor.writeDriftDelta(b, tokens, signals, batchId,
-      s"$root/drift", s"$root/counts", s"$root/dstats", minQualityPm)
-    tokens
-      .join(CurateIngest.keptBatch(spark, s"$root/kept", batchId),
-        Seq("doc_id"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$root/postings")
-    compactEvery.foreach { n =>
-      if (batchId > 0 && batchId % n == 0) {
-        CurateIngest.compactStoresBucketed(spark, s"$root/fps",
-          s"$root/kept", Some(s"$root/sigs"), upToBatch = batchId,
-          tablePrefix = tablePrefix,
-          sigRetentionBatches = sigRetentionBatches)
-        QualityRefresh.compactCounts(spark, s"$root/counts",
-          s"$root/dstats", upToBatch = batchId)
-        ClusterRefresh.compactSnapshots(spark, s"$root/labels",
-          upToBatch = batchId)
-        compactPostingsBucketed(spark, s"$root/postings",
-          upToBatch = batchId, tablePrefix = tablePrefix)
-      }
-    }
-    repBase.foreach(_.unpersist())
-  }
-
-  /** The wired bucketed topology. */
-  def startBucketed(docStream: DataFrame, root: String, checkpoint: String,
-                    tablePrefix: String,
-                    minQualityPm: Long = 600,
-                    langs: Seq[String] = Seq("en", "de"),
-                    minEstJaccard: Double = 0.5,
-                    compactEvery: Option[Long] = None,
-                    sigRetentionBatches: Option[Long] = None,
-                    gopherGate: Boolean = false,
-                    gopherQualityStops: Option[Seq[String]] = None,
-                    anonymize: Boolean = false)
-      : StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatchBucketed(batch, batchId, root, tablePrefix,
-          minQualityPm, langs, minEstJaccard, compactEvery,
-          sigRetentionBatches, gopherGate, gopherQualityStops, anonymize)
       }
       .start()
 }

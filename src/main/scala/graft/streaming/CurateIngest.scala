@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.dedup.Clusters
 import graft.text.TextAnalysis
 
 /** Streaming leg of the curation pipeline: corpus ingestion one shard
@@ -25,7 +24,8 @@ import graft.text.TextAnalysis
   *      against the accumulated fingerprint STORE (all GATED docs of
   *      earlier shards) — first arrival wins, later copies drop.
   *   4. near dedup, intra-shard: MinHash→LSH→CC, keep the
-  *      highest-quality member per cluster ([[Clusters.dropsBest]]).
+  *      highest-quality member per cluster
+  *      ([[graft.dedup.Clusters.dropsBest]]).
   *   5. the shard's gated fingerprints append to the store; survivors
   *      append to the curated output. Both writes land in their own
   *      `batch_id=` partition with overwrite semantics, so a
@@ -105,102 +105,17 @@ object CurateIngest {
         col("lang_pred").isin(langs: _*))
       .withColumn("fingerprint", md5(col("text")))
 
-  /** One shard through stages 1-4 against the given fingerprint store.
-    * Returns (survivors, this shard's gated fingerprints to append).
-    * `fresh` is materialized before near-dup for the same reason
-    * [[graft.text.Curate.curateDocs]] materializes its stage boundary:
-    * dropsBest consumes its input three times. */
-  /** Stages 2-3 (intra-shard keep-min, store anti-join) over an
-    * already-gated shard, as one un-materialized plan — the probe
-    * surface for the scale gate (the fingerprint-keyed anti-join is
-    * the only place shard and store meet, and it must stay a hash
-    * join on the 16-byte key). */
-  private[graft] def freshAgainstStore(gated: DataFrame,
-                                       fpStore: DataFrame): DataFrame = {
-    val wFp = Window.partitionBy(col("fingerprint")).orderBy(col("doc_id"))
-    gated
-      .withColumn("__rn", row_number().over(wFp))
-      .filter(col("__rn") === 1).drop("__rn")
-      .join(fpStore.select(col("fingerprint")).distinct(),
-        Seq("fingerprint"), "left_anti")
-  }
-
-  def ingestShard(shard: DataFrame, fpStore: DataFrame,
-                  minQualityPm: Long = 600,
-                  langs: Seq[String] = Seq("en", "de"))
-      : (DataFrame, DataFrame) = {
-    val (keptThunk, fps) = ingestShardDeferred(shard, fpStore,
-      minQualityPm, langs)
-    (keptThunk(), fps)
-  }
-
-  /** [[ingestShard]] with the survivor tail deferred as a thunk — the
-    * same split as [[ingestShardStrictGatedDeferred]]: the fps the
-    * next shard's store needs come straight from the gated shard, so
-    * the fresh checkpoint + keep-best clustering (eager bounded CC
-    * actions) can run on a background thread while the loop advances. */
-  private[graft] def ingestShardDeferred(shard: DataFrame,
-                                         fpStore: DataFrame,
-                                         minQualityPm: Long = 600,
-                                         langs: Seq[String] = Seq("en", "de"))
-      : (() => DataFrame, DataFrame) = {
-    // gate ONCE: the 7 scoring regexes are the measured dominant cost
-    // of this stage (the Clusters.dropsBest rescore lesson), and both
-    // the survivor chain and the fps append read the gated shard
-    val gated = gateShard(shard, minQualityPm, langs).localCheckpoint()
-    val keptThunk = () => {
-      val fresh = freshAgainstStore(gated, fpStore).localCheckpoint()
-      fresh
-        .join(Clusters.dropsBest(fresh), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("lang_pred"), col("quality_pm"),
-          col("n_chars"))
-    }
-    (keptThunk, gated.select(col("fingerprint")).distinct())
-  }
-
   /** The whole id-ordered ingestion as one deterministic loop — the
-    * q_curate_incr engine side. Shards are doc_id ranges of width
-    * `shardSize` below `maxId` (bounded so the loop length is a
+    * q_curate_incr engine side ([[ShardLoop]]; shards are doc_id ranges
+    * of width `shardSize` below `maxId`, bounded so the loop length is a
     * constant, like q_incr_dedup's fixed split). Hash-matches
     * [[graft.text.Curate.incrCurateSql]]. */
   def incrCurate(docs: DataFrame, shardSize: Long = 150,
                  maxId: Long = 600, minQualityPm: Long = 600,
-                 langs: Seq[String] = Seq("en", "de")): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nShards = ((maxId + shardSize - 1) / shardSize).toInt
-    var store = Seq.empty[String].toDF("fingerprint")
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // dedicated pool, not the global ForkJoinPool: these thunks BLOCK
-    // on Spark actions, and #cores of them would starve every other
-    // user of the global pool (r17, ADVICE)
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Engine.blockingPool
-    var outs = List.empty[Future[DataFrame]]
-    for (i <- 0 until nShards) {
-      val shard = docs.filter(col("doc_id") >= i * shardSize &&
-        col("doc_id") < (i + 1) * shardSize && col("doc_id") < maxId)
-      val (keptThunk, fps) = ingestShardDeferred(shard, store,
-        minQualityPm, langs)
-      // survivor tail overlaps the next shard's store work (§2.6;
-      // same split as the strict loops). In-flight tails are capped by
-      // awaiting the tail from two shards back — bounds thread count at
-      // any nShards and surfaces a failed shard within two iterations
-      // instead of at the terminal await (r17, ADVICE).
-      outs = outs :+ Future(keptThunk().withColumn("shard_id", lit(i.toLong)))
-      if (outs.size >= 2) Await.result(outs(outs.size - 2), Duration.Inf)
-      // LAZY store accumulation (r17): `fps` is a shard-sized distinct
-      // over the PINNED gated frame, and the store's one consumer per
-      // shard is a duplicate-immune anti-join — the global
-      // distinct+checkpoint bought nothing but a barrier in a
-      // job-latency-bound loop (union depth = the loop's constant
-      // shard count; the unbounded form is the disk-backed store).
-      store = store.unionByName(fps)
-    }
-    outs.map(Await.result(_, Duration.Inf)).reduce(_ unionByName _)
+                 langs: Seq[String] = Seq("en", "de")): DataFrame =
+    loop(docs, shardSize, maxId, Funnel.exact(gateShard(_, minQualityPm, langs)))
       .select(col("doc_id"), col("shard_id"), col("lang_pred"),
         col("quality_pm"), col("n_chars"))
-  }
 
   /** The strict ingestion as one deterministic loop — q_curate_strict's
     * engine side. The same order-cancellation that makes [[incrCurate]]
@@ -213,60 +128,25 @@ object CurateIngest {
   def incrCurateStrict(docs: DataFrame, shardSize: Long = 150,
                        maxId: Long = 600, minQualityPm: Long = 600,
                        langs: Seq[String] = Seq("en", "de"),
-                       minEstJaccard: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nShards = ((maxId + shardSize - 1) / shardSize).toInt
-    var fpStore = Seq.empty[String].toDF("fingerprint")
-    var sigStore: DataFrame = null
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // dedicated pool + bounded in-flight tails — see [[incrCurate]]
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Engine.blockingPool
-    var outs = List.empty[Future[DataFrame]]
-    for (i <- 0 until nShards) {
-      val shard = docs.filter(col("doc_id") >= i * shardSize &&
-        col("doc_id") < (i + 1) * shardSize && col("doc_id") < maxId)
-      val store = if (sigStore == null)
-        sigBands(docs.limit(0).select(col("doc_id"), col("text"))) else sigStore
-      val (keptThunk, fps, sigs) = ingestShardStrictGatedDeferred(
-        gateShard(shard, minQualityPm, langs), fpStore, store, minEstJaccard)
-      // survivor tail on a background thread: shard i's keep-best
-      // clustering (eager bounded CC actions) overlaps shard i+1's
-      // store-bound stages — the stores below never read it (§2.6)
-      outs = outs :+ Future(keptThunk().withColumn("shard_id", lit(i.toLong)))
-      if (outs.size >= 2) Await.result(outs(outs.size - 2), Duration.Inf)
-      // LAZY store accumulation (r17): fps/sigs are cheap projections
-      // over the shard's PINNED gated/fresh frames, each store has one
-      // duplicate-immune consumer per shard (fp: anti-join; sig:
-      // banded collision probe), and the loop is job-latency-bound —
-      // the per-shard union-checkpoints were pure barriers (union
-      // depth = the constant shard count; unbounded form = the
-      // disk-backed stores).
-      fpStore = fpStore.unionByName(fps)
-      sigStore = if (sigStore == null) sigs else sigStore.unionByName(sigs)
-    }
-    outs.map(Await.result(_, Duration.Inf)).reduce(_ unionByName _)
+                       minEstJaccard: Double = 0.5): DataFrame =
+    loop(docs, shardSize, maxId,
+        Funnel.strict(gateShard(_, minQualityPm, langs), minEstJaccard))
       .select(col("doc_id"), col("shard_id"), col("lang_pred"),
         col("quality_pm"), col("n_chars"))
-  }
+
+  private def loop(docs: DataFrame, shardSize: Long, maxId: Long,
+                   funnel: Funnel): DataFrame =
+    ShardLoop.run(docs, shardSize, maxId, funnel.stores) { (shard, i, stores) =>
+      val out = Funnel.step(shard, funnel, stores)
+      out.copy(kept = () => out.kept().withColumn("shard_id", lit(i.toLong)))
+    }
 
   /** The FULL 6-stage funnel ([[graft.text.Curate.curateFull]]'s
-    * recipe) as one id-ordered incremental loop — every cross-shard
-    * stage running against its own accumulated store:
-    *
-    *   0. span scrub vs the gram-fp store
-    *      ([[graft.dedup.SpanScrub.scrubShard]]) — repeated bytes cut
-    *      against everything seen so far, never re-sorting history;
-    *   1-2. quality/language gate on the SCRUBBED text (FineWeb
-    *      ordering — boilerplate removed before it can inflate or
-    *      mask the quality signal);
-    *   3. first-wins exact dedup vs the fingerprint store;
-    *   4. strict cross-shard near-dedup vs the signature store
-    *      (tombstones, no retraction) + within-shard keep-best;
-    *   5. benchmark-contamination gate vs the STATIC benchmark gram
-    *      set (a real benchmark is external and never scrubbed, so
-    *      the bench side is a fixed input, shard-local to apply).
+    * recipe, [[Funnel.full]]) as one id-ordered incremental loop — every
+    * cross-shard stage running against its own accumulated store; the
+    * benchmark-contamination gate runs against the STATIC benchmark gram
+    * set (a real benchmark is external and never scrubbed, so the bench
+    * side is a fixed input, shard-local to apply).
     *
     * q_curate_full_incr hash-matches this loop against the flat
     * [[graft.text.Curate.curateFullStrictIncrSql]] twin: the scrub
@@ -284,537 +164,75 @@ object CurateIngest {
                            maxContamPm: Long = 800,
                            gopherGate: Boolean = false,
                            anonymize: Boolean = false): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val nShards = ((maxId + shardSize - 1) / shardSize).toInt
-    // static external-benchmark gram set (raw text, the curateFull
-    // contract), broadcast into every shard's stage 5
-    val bench = graft.dedup.Dedup.shingles(
-        docs.filter(col("doc_id") < benchMaxId && col("doc_id") < maxId), n)
-      .select(col("sh")).distinct().localCheckpoint()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    // dedicated pool + bounded in-flight tails — see [[incrCurate]]
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Engine.blockingPool
-    // LAZY store accumulation (r17, replacing the r16 cross-iteration
-    // store futures): every store row is a cheap projection over a
-    // frame the shard already PINS (novel ← the scrub's `marked`
-    // checkpoint, fps ← the gated checkpoint, sigs ← the fresh
-    // checkpoint), and each store has exactly one duplicate-immune
-    // consumer per shard (gram: membership left join; fp: anti-join;
-    // sig: banded collision probe). In a loop measured job-latency-
-    // bound (~50 jobs/shard), the per-shard union-checkpoints were
-    // pure barriers — dropping them removes 3 jobs + 1 await per
-    // shard. Union depth = the loop's constant shard count; the
-    // unbounded-shard production form is the disk-backed store.
-    var gramStore = Seq.empty[Long].toDF("gram")
-    var fpStore = Seq.empty[String].toDF("fingerprint")
-    var sigStore: DataFrame = null
-    var outs = List.empty[Future[DataFrame]]
-    for (i <- 0 until nShards) {
-      val shard0 = docs.filter(col("doc_id") >= i * shardSize &&
-        col("doc_id") < (i + 1) * shardSize && col("doc_id") < maxId)
-      // Dolma ordering: the anonymize stage masks the ARRIVING text
-      // before any store-bound artifact (gram fps, fingerprints,
-      // signatures, kept text) derives from it
-      val shard = if (!anonymize) shard0
-        else shard0.select(col("doc_id"),
-          graft.text.CorpusStats.piiMask(col("text")).as("text"))
-      val (scrubbed0, novel) =
-        graft.dedup.SpanScrub.scrubShard(shard, gramStore)
-      val scrubbed = scrubbed0
-        .select(col("doc_id"), col("text_clean").as("text"),
-          length(col("text_clean")).cast("long").as("n_chars"))
-        .localCheckpoint()
-      // gopher on: the repetition rules gate beside quality/lang, on
-      // the SCRUBBED text ([[gateShardGopher]] — the 7th FineWeb stage
-      // on the incremental path; q_curate_full_incr_gopher's subject)
-      val gated = if (gopherGate)
-        gateShardGopher(scrubbed, minQualityPm, langs)
-      else gateShard(scrubbed, minQualityPm, langs)
-      val store = if (sigStore == null)
-        sigBands(docs.limit(0).select(col("doc_id"), col("text"))) else sigStore
-      val (keptThunk, fps, sigs) = ingestShardStrictGatedDeferred(
-        gated, fpStore, store, minEstJaccard)
-      // survivor tail (near-dedup checkpoint + keep-best CC + the
-      // shard-local contamination gate) on a background thread: the
-      // stores the next shard depends on never read it, so shard i's
-      // CC latencies overlap shard i+1's store-bound stages (§2.6)
-      outs = outs :+ Future {
-        val kept = keptThunk()
-        kept.join(
-          contaminatedIds(kept, scrubbed, bench, n, benchMaxId, maxContamPm),
-          Seq("doc_id"), "left_anti")
-      }
-      if (outs.size >= 2) Await.result(outs(outs.size - 2), Duration.Inf)
-      gramStore = gramStore.unionByName(novel)
-      fpStore = fpStore.unionByName(fps)
-      sigStore = if (sigStore == null) sigs else sigStore.unionByName(sigs)
-    }
-    outs.map(Await.result(_, Duration.Inf)).reduce(_ unionByName _)
-      .select(col("doc_id"), col("lang_pred"), col("quality_pm"),
-        col("n_chars"))
+    // the bench gram set (raw text, the curateFull contract) is pinned
+    // on the first shard, after the loop's shard-count guard
+    lazy val funnel = Funnel.full(
+      graft.dedup.Dedup.shingles(
+          docs.filter(col("doc_id") < benchMaxId && col("doc_id") < maxId), n)
+        .select(col("sh")).distinct().localCheckpoint(),
+      minQualityPm, langs, minEstJaccard, n, benchMaxId, maxContamPm,
+      gopherGate, anonymize)
+    ShardLoop.run(docs, shardSize, maxId,
+        Seq(Store.Gram, Store.Fp, Store.Sig)) { (shard, _, stores) =>
+      Funnel.step(shard, funnel, stores)
+    }.select(col("doc_id"), col("lang_pred"), col("quality_pm"),
+      col("n_chars"))
   }
 
   /** Stage 5 of the full funnel, shard-local: ids of this shard's
     * survivors whose distinct char n-gram overlap with the static
     * benchmark gram set reaches `maxContamPm` per-mille
-    * ([[graft.text.Curate.curateFull]]'s gate over one shard; bench
-    * stand-ins — id < benchMaxId — pass through on their merits). */
+    * ([[graft.text.Curate.curateFull]]'s gate over one shard). */
   private[streaming] def contaminatedIds(kept: DataFrame,
                                          scrubbed: DataFrame,
-                                         bench: DataFrame, n: Int,
-                                         benchMaxId: Long,
-                                         maxContamPm: Long): DataFrame =
+                                         c: Contamination): DataFrame =
     graft.dedup.Dedup.shingles(
-        kept.join(scrubbed.select(col("doc_id"), col("text")), "doc_id"), n)
-      .filter(col("doc_id") >= benchMaxId)
-      .join(broadcast(bench.withColumn("__hit", lit(1))), Seq("sh"), "left")
+        kept.join(scrubbed.select(col("doc_id"), col("text")), "doc_id"), c.n)
+      .filter(col("doc_id") >= c.benchMaxId)
+      .join(broadcast(c.bench.withColumn("__hit", lit(1))), Seq("sh"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tot"), count(col("__hit")).as("n_shared"))
-      .filter(col("n_shared") * lit(1000L) >= col("n_tot") * lit(maxContamPm))
+      .filter(col("n_shared") * lit(1000L) >= col("n_tot") * lit(c.maxContamPm))
       .select("doc_id")
 
   // ------------------------------------------------ disk-backed stream
 
-  import org.apache.spark.sql.types._
-
-  private val fpSchema = StructType(Seq(
-    StructField("fingerprint", StringType),
-    StructField("batch_id", LongType)))
-  private val keptSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("lang_pred", StringType),
-    StructField("quality_pm", LongType),
-    StructField("n_chars", LongType),
-    StructField("batch_id", LongType)))
-
-  /** @see [[Stores.readStore]] — the shared empty-store / remote-path
-    * read discipline (a silently-empty read here would disable
-    * cross-shard dedup, the worst failure mode this store has). */
-  private def readStore(spark: SparkSession, path: String,
-                        schema: StructType): DataFrame =
-    Stores.readStore(spark, path, schema)
-
-  /** The accumulated fingerprint store as of (strictly before) `batch`:
-    * reading only earlier partitions makes a crash-replayed batch see
-    * exactly the store it saw the first time — bit-equal replay. */
-  def fpState(spark: SparkSession, storePath: String,
-              beforeBatch: Long): DataFrame =
-    readStore(spark, storePath, fpSchema)
-      .filter(col("batch_id") < beforeBatch)
-      .select(col("fingerprint")).distinct()
-
-  /** Curated survivors accumulated so far. Full-row dedup is identity
-    * on a healthy store (doc_id is unique by construction) and absorbs
-    * the one degraded state [[compactStores]] can leave behind — a
-    * crash after the compacted partition lands but before the source
-    * partitions are deleted duplicates rows verbatim. */
-  def keptState(spark: SparkSession, keptPath: String): DataFrame =
-    readStore(spark, keptPath, keptSchema)
-      .select(col("doc_id"), col("lang_pred"), col("quality_pm"),
-        col("n_chars"))
-      .dropDuplicates("doc_id")
-
-  /** One micro-batch: ingest against the pre-batch store, then write
-    * survivors and fingerprints each into their own batch_id
-    * partition (dynamic overwrite → replay idempotent). ingestShard's
-    * internal materialization pins the store read BEFORE this batch's
-    * append lands (both outputs root at checkpointed frames), so the
-    * two writes can't see their own output. */
-  def writeShard(batch: DataFrame, batchId: Long, storePath: String,
-                 keptPath: String, minQualityPm: Long = 600,
-                 langs: Seq[String] = Seq("en", "de")): Unit = {
+  /** One micro-batch: the funnel against the pre-batch stores under
+    * `root` ([[Store.dir]] each), then every store append and the
+    * survivors land in their own `batch_id` partition. Every store read
+    * is pinned strictly before the batch, so a crash-replayed batch
+    * rewrites each partition with identical content and the writes can
+    * never see their own output. */
+  def writeShard(batch: DataFrame, batchId: Long, root: String,
+                 funnel: Funnel = Funnel.exact(),
+                 layout: StoreLayout = StoreLayout.Flat): Unit = {
     val spark = batch.sparkSession
-    val (kept, fps) =
-      ingestShard(batch, fpState(spark, storePath, batchId),
-        minQualityPm, langs)
-    fps.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storePath)
-    kept.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(keptPath)
+    val out = Funnel.step(batch, funnel, funnel.stores
+      .map(s => s -> layout.state(spark, s, root, batchId)).toMap)
+    out.appends.foreach { case (s, df) =>
+      Stores.writeBatch(df, batchId, s.path(root)) }
+    Stores.writeBatch(out.kept(), batchId, Store.Kept.path(root))
   }
 
-  /** The wired pipeline: a document stream curated shard-at-a-time.
-    * `compactEvery = Some(n)` folds [[compactStores]] into the loop:
-    * every n-th batch compacts everything STRICTLY BELOW itself
-    * (`upToBatch = batchId` — the current batch is the only one
-    * foreachBatch can ever replay, and it is never compacted while
-    * in flight), bounding the store tree at n+1 partitions. */
-  def start(docStream: DataFrame, storePath: String, keptPath: String,
-            checkpoint: String, minQualityPm: Long = 600,
-            langs: Seq[String] = Seq("en", "de"),
-            compactEvery: Option[Long] = None): StreamingQuery =
+  /** The wired pipeline: a document stream curated shard-at-a-time
+    * through `funnel`, its stores under `root` in `layout`, compacting
+    * every `compactEvery` batches ([[StoreLayout.tick]]; the store tree
+    * stays bounded at n+1 partitions). `sigRetentionBatches` is the
+    * signature store's re-admission policy ([[StoreLayout.compact]]). */
+  def start(docStream: DataFrame, root: String, checkpoint: String,
+            funnel: Funnel = Funnel.exact(),
+            layout: StoreLayout = StoreLayout.Flat,
+            compactEvery: Option[Long] = None,
+            sigRetentionBatches: Option[Long] = None): StreamingQuery =
     docStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeShard(batch, batchId, storePath, keptPath, minQualityPm, langs)
-        compactEvery.foreach { n =>
-          if (batchId > 0 && batchId % n == 0)
-            compactStores(batch.sparkSession, storePath, keptPath, None,
-              upToBatch = batchId)
-        }
+        writeShard(batch, batchId, root, funnel, layout)
+        layout.tick(batch.sparkSession, root, funnel.stores :+ Store.Kept,
+          batchId, compactEvery, sigRetentionBatches)
+        ()
       }
       .start()
-
-  private val sigSchema = StructType(
-    StructField("doc_id", LongType) +:
-      StructField("band", IntegerType) +:
-      StructField("bkey", StringType) +:
-      (0 until graft.dedup.Dedup.numHashes)
-        .map(i => StructField(s"h$i", LongType)) :+
-      StructField("batch_id", LongType))
-
-  /** The accumulated signature store (tombstones included) as of
-    * strictly before `batch` — same pre-batch pinning as [[fpState]]. */
-  def sigState(spark: SparkSession, sigPath: String,
-               beforeBatch: Long): DataFrame =
-    readStore(spark, sigPath, sigSchema)
-      .filter(col("batch_id") < beforeBatch)
-      .drop("batch_id")
-
-  /** One batch's own signature rows (its single partition) — what the
-    * combined topology's cluster leg pairs against [[sigState]]
-    * history for the live deferred-pair detection. */
-  def sigBatch(spark: SparkSession, sigPath: String,
-               batchId: Long): DataFrame =
-    readStore(spark, sigPath, sigSchema)
-      .filter(col("batch_id") === batchId).drop("batch_id")
-
-  /** One batch's kept survivor ids (its single partition). */
-  def keptBatch(spark: SparkSession, keptPath: String,
-                batchId: Long): DataFrame =
-    readStore(spark, keptPath, keptSchema)
-      .filter(col("batch_id") === batchId).select(col("doc_id"))
-
-  /** [[writeShard]]'s strict sibling: one more batch_id-overwrite
-    * store (the signature/tombstone table) rides along. */
-  def writeShardStrict(batch: DataFrame, batchId: Long, storePath: String,
-                       sigPath: String, keptPath: String,
-                       minQualityPm: Long = 600,
-                       langs: Seq[String] = Seq("en", "de"),
-                       minEstJaccard: Double = 0.5): Unit =
-    writeShardStrictGated(gateShard(batch, minQualityPm, langs), batchId,
-      storePath, sigPath, keptPath, minEstJaccard)
-
-  /** [[writeShardStrict]] over an already-gated shard
-    * ([[gateFromSignals]]) — the combined topology's shared-tokenization
-    * write path. */
-  def writeShardStrictGated(gated: DataFrame, batchId: Long,
-                            storePath: String, sigPath: String,
-                            keptPath: String,
-                            minEstJaccard: Double = 0.5): Unit = {
-    val spark = gated.sparkSession
-    val (kept, fps, sigs) = ingestShardStrictGated(gated,
-      fpState(spark, storePath, batchId), sigState(spark, sigPath, batchId),
-      minEstJaccard)
-    fps.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storePath)
-    sigs.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(sigPath)
-    kept.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(keptPath)
-  }
-
-  /** The strict pipeline: enforced cross-shard near-dedup. Same
-    * `compactEvery` contract as [[start]], with the signature store
-    * compacting alongside (`sigRetentionBatches` per
-    * [[compactStores]]). */
-  def startStrict(docStream: DataFrame, storePath: String, sigPath: String,
-                  keptPath: String, checkpoint: String,
-                  minQualityPm: Long = 600,
-                  langs: Seq[String] = Seq("en", "de"),
-                  minEstJaccard: Double = 0.5,
-                  compactEvery: Option[Long] = None,
-                  sigRetentionBatches: Option[Long] = None): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeShardStrict(batch, batchId, storePath, sigPath, keptPath,
-          minQualityPm, langs, minEstJaccard)
-        compactEvery.foreach { n =>
-          if (batchId > 0 && batchId % n == 0)
-            compactStores(batch.sparkSession, storePath, keptPath,
-              Some(sigPath), upToBatch = batchId,
-              sigRetentionBatches = sigRetentionBatches)
-        }
-      }
-      .start()
-
-  /** One micro-batch of the FULL funnel ([[incrCurateFullStrict]]'s
-    * stages, [[writeShardStrict]]'s write discipline): scrub the
-    * arriving shard against the gram store, run the strict gated
-    * ingest over the SCRUBBED text, apply the contamination gate, then
-    * land novel grams / fingerprints / signatures / survivors each in
-    * their own batch_id partition. Every store read is pre-batch
-    * pinned, so a crash-replay rewrites all four partitions with
-    * identical content. Note the store appends (grams, fps, sigs) are
-    * PRE-contamination, exactly like the loop: a contaminated doc
-    * still owns its spans and tombstones. */
-  def writeShardFullStrict(batch: DataFrame, batchId: Long,
-                           gramPath: String, fpPath: String,
-                           sigPath: String, keptPath: String,
-                           bench: DataFrame, minQualityPm: Long = 600,
-                           langs: Seq[String] = Seq("en", "de"),
-                           minEstJaccard: Double = 0.5, n: Int = 8,
-                           benchMaxId: Long = 20,
-                           maxContamPm: Long = 800,
-                           gopherGate: Boolean = false,
-                           anonymize: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val (scrubbed0, novel0) = graft.dedup.SpanScrub.scrubShard(
-      anonBatch(batch, anonymize),
-      ScrubIngest.gramState(spark, gramPath, batchId))
-    val scrubbed = scrubbed0
-      .select(col("doc_id"), col("text_clean").as("text"),
-        length(col("text_clean")).cast("long").as("n_chars"))
-      .localCheckpoint()
-    val novel = novel0.localCheckpoint()
-    val gated = if (gopherGate)
-      gateShardGopher(scrubbed, minQualityPm, langs)
-    else gateShard(scrubbed, minQualityPm, langs)
-    val (kept0, fps, sigs) = ingestShardStrictGated(gated,
-      fpState(spark, fpPath, batchId), sigState(spark, sigPath, batchId),
-      minEstJaccard)
-    val kept = kept0.join(
-      contaminatedIds(kept0, scrubbed, bench, n, benchMaxId, maxContamPm),
-      Seq("doc_id"), "left_anti")
-    Seq((novel, gramPath), (fps, fpPath), (sigs, sigPath),
-        (kept, keptPath)).foreach { case (df, path) =>
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(path)
-    }
-  }
-
-  /** The Dolma-ordered anonymization stage on the ingest path
-    * ([[graft.text.CorpusStats.piiMask]]): masks the arriving batch's
-    * text BEFORE the scrub/fingerprint/signature/kept artifacts derive
-    * from it, so raw emails/IPs/phones never land in any persisted
-    * store. Codegen'd projection, zero shuffle, batch-sized. */
-  private def anonBatch(batch: DataFrame, anonymize: Boolean): DataFrame = {
-    val b = batch.select(col("doc_id"), col("text"))
-    if (!anonymize) b
-    else b.select(col("doc_id"),
-      graft.text.CorpusStats.piiMask(col("text")).as("text"))
-  }
-
-  /** The FULL-funnel pipeline: one document stream through all six
-    * stages against all four stores. `bench` is the STATIC external
-    * benchmark gram set (one `sh` column — compute it once from the
-    * raw benchmark docs and pin it; a real benchmark never arrives on
-    * the stream). Compaction folds the three doc-level stores via
-    * [[compactStores]] and the gram store via
-    * [[ScrubIngest.compactGrams]] on the same tick. */
-  def startFullStrict(docStream: DataFrame, gramPath: String,
-                      fpPath: String, sigPath: String, keptPath: String,
-                      checkpoint: String, bench: DataFrame,
-                      minQualityPm: Long = 600,
-                      langs: Seq[String] = Seq("en", "de"),
-                      minEstJaccard: Double = 0.5, n: Int = 8,
-                      benchMaxId: Long = 20, maxContamPm: Long = 800,
-                      compactEvery: Option[Long] = None,
-                      gopherGate: Boolean = false,
-                      anonymize: Boolean = false): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeShardFullStrict(batch, batchId, gramPath, fpPath, sigPath,
-          keptPath, bench, minQualityPm, langs, minEstJaccard, n,
-          benchMaxId, maxContamPm, gopherGate, anonymize)
-        compactEvery.foreach { c =>
-          if (batchId > 0 && batchId % c == 0) {
-            compactStores(batch.sparkSession, fpPath, keptPath,
-              Some(sigPath), upToBatch = batchId)
-            ScrubIngest.compactGrams(batch.sparkSession, gramPath,
-              upToBatch = batchId)
-          }
-        }
-      }
-      .start()
-
-  /** [[writeShardFullStrict]] with every store join bucket-aligned —
-    * the 100 TB deployment shape for the whole funnel: the gram probe
-    * streams the `<prefix>_gram` bucket table sort-free
-    * ([[graft.dedup.SpanScrub.scrubShardSplit]]), the fp anti-join and
-    * sig collision probe read their bucket tables with no store-side
-    * exchange ([[ingestShardStrictSplitGated]]), and only the arriving
-    * shard ever shuffles. */
-  def writeShardFullStrictBucketed(batch: DataFrame, batchId: Long,
-                                   gramPath: String, fpPath: String,
-                                   sigPath: String, keptPath: String,
-                                   tablePrefix: String, bench: DataFrame,
-                                   minQualityPm: Long = 600,
-                                   langs: Seq[String] = Seq("en", "de"),
-                                   minEstJaccard: Double = 0.5, n: Int = 8,
-                                   benchMaxId: Long = 20,
-                                   maxContamPm: Long = 800,
-                                   gopherGate: Boolean = false,
-                                   anonymize: Boolean = false): Unit = {
-    val spark = batch.sparkSession
-    val (gC, gD) = ScrubIngest.gramStateSplit(spark, gramPath,
-      tablePrefix, batchId)
-    val (scrubbed0, novel0) = graft.dedup.SpanScrub.scrubShardSplit(
-      anonBatch(batch, anonymize), gC, gD)
-    val scrubbed = scrubbed0
-      .select(col("doc_id"), col("text_clean").as("text"),
-        length(col("text_clean")).cast("long").as("n_chars"))
-      .localCheckpoint()
-    val novel = novel0.localCheckpoint()
-    val (fpC, fpD) = fpStateSplit(spark, fpPath, tablePrefix, batchId)
-    val (sigC, sigD) = sigStateSplit(spark, sigPath, tablePrefix, batchId)
-    val gated = if (gopherGate)
-      gateShardGopher(scrubbed, minQualityPm, langs)
-    else gateShard(scrubbed, minQualityPm, langs)
-    val (kept0, fps, sigs) = ingestShardStrictSplitGated(
-      gated, fpC, fpD, sigC, sigD, minEstJaccard)
-    val kept = kept0.join(
-      contaminatedIds(kept0, scrubbed, bench, n, benchMaxId, maxContamPm),
-      Seq("doc_id"), "left_anti")
-    Seq((novel, gramPath), (fps, fpPath), (sigs, sigPath),
-        (kept, keptPath)).foreach { case (df, path) =>
-      df.withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(path)
-    }
-  }
-
-  /** [[startFullStrict]] on the bucketed store family: the gram store
-    * compacts by APPEND to its bucket table, the doc-level stores via
-    * [[compactStoresBucketed]], on the same tick. */
-  def startFullStrictBucketed(docStream: DataFrame, gramPath: String,
-                              fpPath: String, sigPath: String,
-                              keptPath: String, checkpoint: String,
-                              tablePrefix: String, bench: DataFrame,
-                              minQualityPm: Long = 600,
-                              langs: Seq[String] = Seq("en", "de"),
-                              minEstJaccard: Double = 0.5, n: Int = 8,
-                              benchMaxId: Long = 20,
-                              maxContamPm: Long = 800,
-                              compactEvery: Long = 4L,
-                              gopherGate: Boolean = false,
-                              anonymize: Boolean = false): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeShardFullStrictBucketed(batch, batchId, gramPath, fpPath,
-          sigPath, keptPath, tablePrefix, bench, minQualityPm, langs,
-          minEstJaccard, n, benchMaxId, maxContamPm, gopherGate, anonymize)
-        if (batchId > 0 && batchId % compactEvery == 0) {
-          compactStoresBucketed(batch.sparkSession, fpPath, keptPath,
-            Some(sigPath), upToBatch = batchId, tablePrefix = tablePrefix)
-          ScrubIngest.compactGramsBucketed(batch.sparkSession, gramPath,
-            upToBatch = batchId, tablePrefix = tablePrefix)
-        }
-      }
-      .start()
-
-  // ------------------------------------------------- store compaction
-
-  /** The compacted partition's id: strictly below every real batch id,
-    * so `batch_id < beforeBatch` keeps including compacted rows in
-    * every [[fpState]]/[[sigState]] read without special-casing. */
-  val CompactedBatchId: Long = -1L
-
-  private def dropBatchPartitions(spark: SparkSession, path: String,
-                                  upToBatch: Long): Unit =
-    Stores.dropBatchPartitions(spark, path, upToBatch)
-
-  /** Merge one store's `batch_id < upToBatch` partitions into the
-    * single [[CompactedBatchId]] partition: distinct over the data
-    * columns (so a rerun after a crash mid-compaction — new partition
-    * written, old ones not yet deleted — collapses the duplicates
-    * instead of compounding them), hash-clustered into `nFiles` files
-    * on `clusterKey` and sorted by `sortKeys` within each, so the
-    * per-shard store join scans large sorted runs with row-group
-    * min/max pruning instead of O(shards) small files. Write first,
-    * delete after: every intermediate state is readable (fp/sig reads
-    * are distinct- or set-semantics; [[keptState]] dedups rows). */
-  private def compactOne(spark: SparkSession, path: String,
-                         schema: StructType, upToBatch: Long, nFiles: Int,
-                         clusterKey: String, sortKeys: Seq[String],
-                         extraFilter: DataFrame => DataFrame): Unit = {
-    val old = extraFilter(readStore(spark, path, schema)
-      .filter(col("batch_id") < upToBatch))
-    val compacted = old.drop("batch_id").distinct()
-      .withColumn("batch_id", lit(CompactedBatchId))
-      .repartition(nFiles, col(clusterKey))
-      .sortWithinPartitions(sortKeys.map(col): _*)
-      .localCheckpoint() // pin BEFORE overwriting a partition we read
-    compacted.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(path)
-    dropBatchPartitions(spark, path, upToBatch)
-  }
-
-  /** [[sigSchema]] plus the provenance column compaction adds: the
-    * row's ORIGINAL batch id survives re-compaction inside the data
-    * file (the partition column is overwritten to [[CompactedBatchId]]),
-    * which is what a retention policy has to filter on. Absent in
-    * pre-compaction files → reads as null → coalesced to batch_id. */
-  private val sigSchemaExt = StructType(
-    sigSchema.fields.toSeq.filterNot(_.name == "batch_id") ++
-      Seq(StructField("src_batch", LongType),
-        StructField("batch_id", LongType)))
-
-  /** Compact the ingestion stores' shard-per-partition layout — the
-    * 100 TB operational requirement the append-only loop creates:
-    * without it the fingerprint/signature trees grow one partition of
-    * small files per shard FOREVER, and every [[fpState]]/[[sigState]]
-    * read lists and scans O(shards) partitions. After
-    * `compactStores(upToBatch = B)` the tree is ONE clustered, sorted
-    * partition (`batch_id=-1`) plus the partitions ≥ B.
-    *
-    * Replay equivalence (the correctness contract): only batches ≥ B
-    * may ever replay (foreachBatch re-runs at most the last
-    * uncommitted batch, so calling this with `upToBatch = currentBatch`
-    * from inside batch `currentBatch` is always safe), and for those
-    * every store read is bit-equal — `batch_id < beforeBatch` selects
-    * {compacted ∪ [B, beforeBatch)} = the same row set as before,
-    * because compaction is a distinct-merge that never crosses the
-    * `upToBatch` boundary. Crash-safety: the compacted partition lands
-    * before the source partitions are deleted, and every read of these
-    * stores is set-semantics (fp/sig joins deduplicate; [[keptState]]
-    * drops duplicate rows), so a crash between the two steps degrades
-    * to duplicates a rerun collapses — never to loss.
-    *
-    * `sigRetentionBatches` is the documented re-admission policy knob:
-    * when set, signature rows (survivors AND tombstones) whose source
-    * batch is older than `upToBatch - n` are dropped at compaction, so
-    * a near-copy of a document last seen more than n shards ago is
-    * re-admitted. Fingerprints are always retained — the exact-dedup
-    * store costs 16 bytes per seen doc and must stay global. */
-  def compactStores(spark: SparkSession, storePath: String, keptPath: String,
-                    sigPath: Option[String], upToBatch: Long,
-                    nFiles: Int = 32,
-                    sigRetentionBatches: Option[Long] = None): Unit = {
-    compactOne(spark, storePath, fpSchema, upToBatch, nFiles,
-      "fingerprint", Seq("fingerprint"), identity)
-    compactOne(spark, keptPath, keptSchema, upToBatch, nFiles,
-      "doc_id", Seq("doc_id"), identity)
-    sigPath.foreach { sp =>
-      compactOne(spark, sp, sigSchemaExt, upToBatch, nFiles,
-        "bkey", Seq("band", "bkey"),
-        df => {
-          val withSrc = df.withColumn("src_batch",
-            coalesce(col("src_batch"), col("batch_id")))
-          sigRetentionBatches.fold(withSrc)(n =>
-            withSrc.filter(col("src_batch") >= upToBatch - n))
-        })
-    }
-  }
 
   /** Cross-shard near-dup pairs computed ENTIRELY from persisted
     * banded signatures — the store-probing detection read. Signatures,
@@ -934,91 +352,6 @@ object CurateIngest {
         (0 until numHashes).map(i => col(s"h$i")): _*)
   }
 
-  /** [[ingestShard]] plus ENFORCED cross-shard near-dedup — the
-    * FineWeb operational mode: a newcomer that near-matches ANY
-    * previously seen document (survivor or not) is dropped, first
-    * arrival wins, emitted survivors never retract. Tombstones make
-    * the drop transitive: the signature store accumulates every
-    * post-exact-dedup doc, so a chain A≈B≈C arriving over three
-    * shards keeps only A (B drops against A, C drops against B's
-    * tombstone even when C≉A). The one divergence from a global batch
-    * CC — a newcomer bridging two already-emitted clusters cannot
-    * retroactively merge them — is the no-retraction policy itself,
-    * spec-pinned, with [[crossShardNearDups]] as the detection read
-    * for exactly those pairs.
-    *
-    * Scale shape: the store join is banded (4 keyed rows per seen doc,
-    * collide-only pairs), est-jaccard verification reads the 16-hash
-    * signatures riding those rows — the shard's text is never joined
-    * against the store.
-    *
-    * Returns (kept, gated fingerprints, this shard's signature rows to
-    * append). */
-  def ingestShardStrict(shard: DataFrame, fpStore: DataFrame,
-                        sigStore: DataFrame, minQualityPm: Long = 600,
-                        langs: Seq[String] = Seq("en", "de"),
-                        minEstJaccard: Double = 0.5)
-      : (DataFrame, DataFrame, DataFrame) =
-    ingestShardStrictGated(gateShard(shard, minQualityPm, langs),
-      fpStore, sigStore, minEstJaccard)
-
-  /** [[ingestShardStrict]] over an ALREADY-GATED shard (a
-    * [[gateFromSignals]] frame) — the shared-tokenization entry: the
-    * combined topology computes the gate once from its token frame and
-    * hands the result straight to stages 2-5. */
-  def ingestShardStrictGated(gated0: DataFrame, fpStore: DataFrame,
-                             sigStore: DataFrame,
-                             minEstJaccard: Double = 0.5)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (keptThunk, fps, sigs) =
-      ingestShardStrictGatedDeferred(gated0, fpStore, sigStore, minEstJaccard)
-    (keptThunk(), fps, sigs)
-  }
-
-  /** [[ingestShardStrictGated]] with the survivor tail DEFERRED: the
-    * `kept` pipeline (near-dedup'd shard checkpoint + keep-best
-    * clustering, whose CC path runs eager bounded driver actions) is
-    * returned as a thunk instead of a built frame. The stores the NEXT
-    * shard depends on (fps, sigs) never read that tail, so a loop can
-    * fire the thunk on a background thread and move straight on to
-    * shard i+1 — the per-shard CC latencies of the whole run then
-    * overlap instead of summing (guide §2.6; the r16 job-count
-    * profile put the kept tail at ~1.3 s of each shard's ~2.9 s).
-    * Calling the thunk is exactly the old inline construction —
-    * [[ingestShardStrictGated]] delegates here, so the two entries
-    * cannot diverge. */
-  private[graft] def ingestShardStrictGatedDeferred(
-      gated0: DataFrame, fpStore: DataFrame, sigStore: DataFrame,
-      minEstJaccard: Double = 0.5)
-      : (() => DataFrame, DataFrame, DataFrame) = {
-    import graft.dedup.Dedup.numHashes
-    val gated = gated0.localCheckpoint()
-    val fresh = freshAgainstStore(gated, fpStore).localCheckpoint()
-    // NOT pinned: sigBands is a narrow map over the pinned `fresh`
-    // (native minhash_sigs + posexplode, zero exchanges), so its two
-    // consumers (the store-collision probe here and the caller's sig
-    // store append) re-run a cheap shard-sized map instead of paying a
-    // materialization barrier per shard (r16: the loop families are
-    // job-latency-bound, ~50 jobs/shard measured)
-    val newBands = sigBands(fresh)
-    val keptThunk = () => {
-      val matches = (0 until numHashes)
-        .map(i => when(col(s"n.h$i") === col(s"o.h$i"), 1).otherwise(0))
-        .reduce(_ + _)
-      val dropIds = newBands.as("n")
-        .join(sigStore.as("o"),
-          col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey"))
-        .filter(round(matches.cast("double") / numHashes, 4) >= minEstJaccard)
-        .select(col("n.doc_id")).distinct()
-      val freshNd = fresh.join(dropIds, Seq("doc_id"), "left_anti")
-        .localCheckpoint()
-      freshNd
-        .join(Clusters.dropsBest(freshNd), Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("lang_pred"), col("quality_pm"),
-          col("n_chars"))
-    }
-    (keptThunk, gated.select(col("fingerprint")).distinct(), newBands)
-  }
 
   /** Ingestion-side drift monitoring: PSI of the post-gate LANGUAGE
     * MIX between consecutive shards — "shard 3 suddenly skews German"
@@ -1213,350 +546,6 @@ object CurateIngest {
        |FROM lagd WHERE prev_ppm IS NOT NULL
        |GROUP BY 1""".stripMargin
 
-  // ------------------------------------ bucketed compacted stores
-
-  /** Schemas of the metastore-bucketed compacted tables (the
-    * batch_id partition column is gone — the table IS the fold; sig
-    * rows keep their [[compactStores]] `src_batch` provenance for the
-    * retention policy). */
-  private val fpTableSchema = StructType(Seq(
-    StructField("fingerprint", StringType)))
-  private val keptTableSchema = StructType(
-    keptSchema.fields.toSeq.filterNot(_.name == "batch_id"))
-  private val sigTableSchema = StructType(
-    sigSchema.fields.toSeq.filterNot(_.name == "batch_id") :+
-      StructField("src_batch", LongType))
-
-  private[streaming] def tableOrEmpty(spark: SparkSession, name: String,
-                                      schema: StructType): DataFrame =
-    if (spark.catalog.tableExists(name)) spark.table(name)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  /** The bucketed readers see {bucket table ∪ `batch_id >= 0` deltas}
-    * ONLY — a plain-compaction `batch_id=-1` sentinel partition is
-    * invisible to them, so opening a plain-compacted store under the
-    * bucketed pipeline would silently lose all previously-folded state
-    * and re-admit its duplicates. Fail fast instead; the migration is
-    * one [[compactStoresBucketed]] run, which folds the sentinel rows
-    * into the bucket tables and deletes the sentinel. */
-  private def requireMigrated(spark: SparkSession, path: String,
-                              tablePrefix: String): Unit =
-    require(!Stores.hasCompactedPartition(spark, path),
-      s"$path has a plain-compacted batch_id=-1 partition that the " +
-        s"bucketed readers (tablePrefix=$tablePrefix) would not see — " +
-        "run compactStoresBucketed once to migrate it into the bucket " +
-        "tables before ingesting")
-
-  /** The split fingerprint state under bucketed compaction:
-    * (compacted bucket-table side, recent path-delta side). The
-    * compacted side carries `HashPartitioning(fingerprint, buckets)`
-    * from the metastore bucket spec, so the per-shard anti-join needs
-    * NO store-side exchange (plan-asserted); the delta side is at most
-    * `compactEvery` shard-sized partitions and broadcasts. */
-  def fpStateSplit(spark: SparkSession, storePath: String,
-                   tablePrefix: String, beforeBatch: Long)
-      : (DataFrame, DataFrame) = {
-    requireMigrated(spark, storePath, tablePrefix)
-    (tableOrEmpty(spark, s"${tablePrefix}_fp", fpTableSchema),
-      readStore(spark, storePath, fpSchema)
-        .filter(col("batch_id") >= 0 && col("batch_id") < beforeBatch)
-        .select(col("fingerprint")))
-  }
-
-  /** The split signature state: (bucketed `(band, bkey)` table side —
-    * the band join's keys exactly, so the collision probe co-locates
-    * with zero store-side exchange — and the broadcastable recent
-    * deltas). */
-  def sigStateSplit(spark: SparkSession, sigPath: String,
-                    tablePrefix: String, beforeBatch: Long)
-      : (DataFrame, DataFrame) = {
-    requireMigrated(spark, sigPath, tablePrefix)
-    (tableOrEmpty(spark, s"${tablePrefix}_sig", sigTableSchema)
-      .drop("src_batch"),
-      readStore(spark, sigPath, sigSchema)
-        .filter(col("batch_id") >= 0 && col("batch_id") < beforeBatch)
-        .drop("batch_id"))
-  }
-
-  /** Curated survivors under bucketed compaction: table ∪ recent
-    * deltas, deduped (absorbs the crash window between table write and
-    * partition delete — [[keptState]]'s contract). */
-  def keptStateBucketed(spark: SparkSession, keptPath: String,
-                        tablePrefix: String): DataFrame = {
-    requireMigrated(spark, keptPath, tablePrefix)
-    tableOrEmpty(spark, s"${tablePrefix}_kept", keptTableSchema)
-      .unionByName(readStore(spark, keptPath, keptSchema)
-        .filter(col("batch_id") >= 0)
-        .select(col("doc_id"), col("lang_pred"), col("quality_pm"),
-          col("n_chars")))
-      .dropDuplicates("doc_id")
-  }
-
-  /** [[freshAgainstStore]] against a split store: the big compacted
-    * side joins bucket-aligned (no store-side exchange — the shard
-    * side alone shuffles into the bucket layout), the small delta
-    * side broadcasts. Anti-joins are set-semantics, so neither side
-    * needs a distinct. */
-  private[graft] def freshAgainstSplitStores(gated: DataFrame,
-                                             fpCompact: DataFrame,
-                                             fpDelta: DataFrame): DataFrame = {
-    val wFp = Window.partitionBy(col("fingerprint")).orderBy(col("doc_id"))
-    gated
-      .withColumn("__rn", row_number().over(wFp))
-      .filter(col("__rn") === 1).drop("__rn")
-      .join(fpCompact.select(col("fingerprint")), Seq("fingerprint"),
-        "left_anti")
-      .join(broadcast(fpDelta.select(col("fingerprint"))),
-        Seq("fingerprint"), "left_anti")
-  }
-
-  /** [[ingestShard]] against the split (bucketed ∪ delta) store. */
-  def ingestShardSplit(shard: DataFrame, fpCompact: DataFrame,
-                       fpDelta: DataFrame, minQualityPm: Long = 600,
-                       langs: Seq[String] = Seq("en", "de"))
-      : (DataFrame, DataFrame) = {
-    val gated = gateShard(shard, minQualityPm, langs).localCheckpoint()
-    val fresh = freshAgainstSplitStores(gated, fpCompact, fpDelta)
-      .localCheckpoint()
-    val kept = fresh
-      .join(Clusters.dropsBest(fresh), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("lang_pred"), col("quality_pm"),
-        col("n_chars"))
-    (kept, gated.select(col("fingerprint")).distinct())
-  }
-
-  /** The strict leg's store probe against a split store: band-key
-    * collision ids, computed once against the bucketed signature
-    * table (co-located on the join keys, store side exchange-free —
-    * the plan-gate surface) and once against the broadcast recent
-    * deltas. A join distributes over the union, so the id set is
-    * identical to [[ingestShardStrict]]'s single-store form. */
-  private[graft] def sigCollisionIds(newBands: DataFrame,
-                                     sigCompact: DataFrame,
-                                     sigDelta: DataFrame,
-                                     minEstJaccard: Double): DataFrame = {
-    import graft.dedup.Dedup.numHashes
-    val matches = (0 until numHashes)
-      .map(i => when(col(s"n.h$i") === col(s"o.h$i"), 1).otherwise(0))
-      .reduce(_ + _)
-    def collide(store: DataFrame): DataFrame =
-      newBands.as("n")
-        .join(store.as("o"),
-          col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey"))
-        .filter(round(matches.cast("double") / numHashes, 4) >= minEstJaccard)
-        .select(col("n.doc_id"))
-    collide(sigCompact)
-      .unionByName(collide(broadcast(sigDelta))).distinct()
-  }
-
-  /** [[ingestShardStrict]] against split stores: exact-dedup
-    * anti-join and banded collision probe both split into
-    * bucket-aligned + broadcast-delta halves. */
-  def ingestShardStrictSplit(shard: DataFrame, fpCompact: DataFrame,
-                             fpDelta: DataFrame, sigCompact: DataFrame,
-                             sigDelta: DataFrame, minQualityPm: Long = 600,
-                             langs: Seq[String] = Seq("en", "de"),
-                             minEstJaccard: Double = 0.5)
-      : (DataFrame, DataFrame, DataFrame) =
-    ingestShardStrictSplitGated(gateShard(shard, minQualityPm, langs),
-      fpCompact, fpDelta, sigCompact, sigDelta, minEstJaccard)
-
-  /** [[ingestShardStrictSplit]] over an already-gated shard
-    * ([[gateFromSignals]]) — the bucketed combined topology's
-    * shared-tokenization entry. */
-  def ingestShardStrictSplitGated(gated0: DataFrame, fpCompact: DataFrame,
-                                  fpDelta: DataFrame, sigCompact: DataFrame,
-                                  sigDelta: DataFrame,
-                                  minEstJaccard: Double = 0.5)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val gated = gated0.localCheckpoint()
-    val fresh = freshAgainstSplitStores(gated, fpCompact, fpDelta)
-      .localCheckpoint()
-    val newBands = sigBands(fresh).localCheckpoint()
-    val dropIds = sigCollisionIds(newBands, sigCompact, sigDelta,
-      minEstJaccard)
-    val freshNd = fresh.join(dropIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val kept = freshNd
-      .join(Clusters.dropsBest(freshNd), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("lang_pred"), col("quality_pm"),
-        col("n_chars"))
-    (kept, gated.select(col("fingerprint")).distinct(), newBands)
-  }
-
-  /** [[compactStores]] writing metastore-backed BUCKETED tables
-    * instead of a clustered `batch_id=-1` partition — the exchange
-    * the plain compaction leaves behind (the store side of every
-    * per-shard join reshuffles per shard) is paid ONCE here at write
-    * time: `<prefix>_fp` bucketed by `fingerprint`, `<prefix>_sig` by
-    * `(band, bkey)`, `<prefix>_kept` by `doc_id`, each pre-hashed
-    * into exactly `buckets` files so subsequent joins read the bucket
-    * layout directly ([[graft.operators.Bucketing]]'s zero-exchange
-    * contract, plan-asserted in CurateStreamSpec).
-    *
-    * Crash contract unchanged from [[compactStores]]: the table lands
-    * before the source partitions are deleted, every read is
-    * set-semantics, so the crash window degrades to absorbed
-    * duplicates; a rerun reads {table ∪ leftover deltas}, distincts,
-    * and rewrites the same table. */
-  def compactStoresBucketed(spark: SparkSession, storePath: String,
-                            keptPath: String, sigPath: Option[String],
-                            upToBatch: Long, tablePrefix: String,
-                            buckets: Int = 32,
-                            sigRetentionBatches: Option[Long] = None): Unit = {
-    def writeBucketed(df: DataFrame, table: String, keys: Seq[String]): Unit =
-      // repartition on the bucket keys first: Spark's bucket hash is
-      // the same Murmur3 as the shuffle hash, so each task holds
-      // exactly one bucket -> one file per bucket, sorted
-      df.repartition(buckets, keys.map(col): _*)
-        .sortWithinPartitions(keys.map(col): _*)
-        // pin BEFORE overwriting a table we just read
-        .localCheckpoint()
-        .write.mode("overwrite")
-        .bucketBy(buckets, keys.head, keys.tail: _*)
-        .sortBy(keys.head, keys.tail: _*)
-        .format("parquet").saveAsTable(table)
-
-    // `batch_id=-1` sentinel partitions (a PLAIN-compacted store being
-    // migrated to the bucketed pipeline) fold in alongside the deltas —
-    // set semantics absorb them — and the sentinel is deleted with the
-    // folded deltas, after which the split readers' fail-fast admits
-    // the store.
-    val fpAll = tableOrEmpty(spark, s"${tablePrefix}_fp", fpTableSchema)
-      .unionByName(readStore(spark, storePath, fpSchema)
-        .filter(col("batch_id") < upToBatch)
-        .select(col("fingerprint")))
-      .distinct()
-    writeBucketed(fpAll, s"${tablePrefix}_fp", Seq("fingerprint"))
-    Stores.dropBatchPartitions(spark, storePath, upToBatch)
-    Stores.dropCompactedPartition(spark, storePath)
-
-    val keptAll = tableOrEmpty(spark, s"${tablePrefix}_kept", keptTableSchema)
-      .unionByName(readStore(spark, keptPath, keptSchema)
-        .filter(col("batch_id") < upToBatch)
-        .select(col("doc_id"), col("lang_pred"), col("quality_pm"),
-          col("n_chars")))
-      .dropDuplicates("doc_id")
-    writeBucketed(keptAll, s"${tablePrefix}_kept", Seq("doc_id"))
-    Stores.dropBatchPartitions(spark, keptPath, upToBatch)
-    Stores.dropCompactedPartition(spark, keptPath)
-
-    sigPath.foreach { sp =>
-      // read with the src_batch provenance column: a sentinel's rows
-      // carry their ORIGINAL source batch (compactOne wrote it), and
-      // stamping them batch_id=-1 instead would make the retention
-      // filter evict freshly-migrated tombstones
-      val sigAll0 = tableOrEmpty(spark, s"${tablePrefix}_sig", sigTableSchema)
-        .unionByName(readStore(spark, sp, sigSchemaExt)
-          .filter(col("batch_id") < upToBatch)
-          .withColumn("src_batch",
-            coalesce(col("src_batch"), col("batch_id")))
-          .drop("batch_id"))
-        .distinct()
-      val sigAll = sigRetentionBatches.fold(sigAll0)(n =>
-        sigAll0.filter(col("src_batch") >= upToBatch - n))
-      writeBucketed(sigAll, s"${tablePrefix}_sig", Seq("band", "bkey"))
-      Stores.dropBatchPartitions(spark, sp, upToBatch)
-      Stores.dropCompactedPartition(spark, sp)
-    }
-  }
-
-  /** [[writeShard]] under bucketed compaction: state comes from the
-    * split readers, deltas land exactly as before. */
-  def writeShardBucketed(batch: DataFrame, batchId: Long, storePath: String,
-                         keptPath: String, tablePrefix: String,
-                         minQualityPm: Long = 600,
-                         langs: Seq[String] = Seq("en", "de")): Unit = {
-    val spark = batch.sparkSession
-    val (fpC, fpD) = fpStateSplit(spark, storePath, tablePrefix, batchId)
-    val (kept, fps) = ingestShardSplit(batch, fpC, fpD, minQualityPm, langs)
-    fps.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storePath)
-    kept.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(keptPath)
-  }
-
-  /** [[writeShardStrict]] under bucketed compaction. */
-  def writeShardStrictBucketed(batch: DataFrame, batchId: Long,
-                               storePath: String, sigPath: String,
-                               keptPath: String, tablePrefix: String,
-                               minQualityPm: Long = 600,
-                               langs: Seq[String] = Seq("en", "de"),
-                               minEstJaccard: Double = 0.5): Unit =
-    writeShardStrictBucketedGated(gateShard(batch, minQualityPm, langs),
-      batchId, storePath, sigPath, keptPath, tablePrefix, minEstJaccard)
-
-  /** [[writeShardStrictBucketed]] over an already-gated shard
-    * ([[gateFromSignals]]). */
-  def writeShardStrictBucketedGated(gated: DataFrame, batchId: Long,
-                                    storePath: String, sigPath: String,
-                                    keptPath: String, tablePrefix: String,
-                                    minEstJaccard: Double = 0.5): Unit = {
-    val spark = gated.sparkSession
-    val (fpC, fpD) = fpStateSplit(spark, storePath, tablePrefix, batchId)
-    val (sigC, sigD) = sigStateSplit(spark, sigPath, tablePrefix, batchId)
-    val (kept, fps, sigs) = ingestShardStrictSplitGated(gated, fpC, fpD,
-      sigC, sigD, minEstJaccard)
-    fps.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(storePath)
-    sigs.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(sigPath)
-    kept.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(keptPath)
-  }
-
-  /** The default pipeline with bucketed store compaction ([[start]]'s
-    * sibling, fp/kept stores only). */
-  def startBucketed(docStream: DataFrame, storePath: String,
-                    keptPath: String, checkpoint: String,
-                    tablePrefix: String, minQualityPm: Long = 600,
-                    langs: Seq[String] = Seq("en", "de"),
-                    compactEvery: Long = 4L): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeShardBucketed(batch, batchId, storePath, keptPath,
-          tablePrefix, minQualityPm, langs)
-        if (batchId > 0 && batchId % compactEvery == 0)
-          compactStoresBucketed(batch.sparkSession, storePath, keptPath,
-            None, upToBatch = batchId, tablePrefix = tablePrefix)
-      }
-      .start()
-
-  /** The strict pipeline with bucketed store compaction — the 100 TB
-    * deployment shape: per-shard joins against the accumulated stores
-    * pay no store-side exchange once compaction has run. */
-  def startStrictBucketed(docStream: DataFrame, storePath: String,
-                          sigPath: String, keptPath: String,
-                          checkpoint: String, tablePrefix: String,
-                          minQualityPm: Long = 600,
-                          langs: Seq[String] = Seq("en", "de"),
-                          minEstJaccard: Double = 0.5,
-                          compactEvery: Long = 4L,
-                          sigRetentionBatches: Option[Long] = None)
-      : StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeShardStrictBucketed(batch, batchId, storePath, sigPath,
-          keptPath, tablePrefix, minQualityPm, langs, minEstJaccard)
-        if (batchId > 0 && batchId % compactEvery == 0)
-          compactStoresBucketed(batch.sparkSession, storePath, keptPath,
-            Some(sigPath), upToBatch = batchId, tablePrefix = tablePrefix,
-            sigRetentionBatches = sigRetentionBatches)
-      }
-      .start()
 
   /** DuckDB twin of [[crossShardNearDups]] over the id-range split the
     * q_cross_shard_dups query uses: candidates over the bounded union,

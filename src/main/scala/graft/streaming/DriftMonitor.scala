@@ -123,16 +123,12 @@ object DriftMonitor {
                             gen: Long, weights: DataFrame, prior: Long,
                             bounds: Seq[Long]): Unit = {
     import spark.implicits._
-    weights.select(lit(ModelAxis).as("axis"),
+    Stores.writeBatch(weights.select(lit(ModelAxis).as("axis"),
         col("token").as("key"), col("w_u").as("cnt"))
       .unionByName(Seq((PriorAxis, "p", prior)).toDF("axis", "key", "cnt"))
       .unionByName(bounds.zipWithIndex
         .map { case (b, i) => (BoundsAxis, i.toString, b) }
-        .toDF("axis", "key", "cnt"))
-      .withColumn("batch_id", lit(sentinelId(gen)))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(driftPath)
+        .toDF("axis", "key", "cnt")), sentinelId(gen), driftPath)
   }
 
   /** The explicit RE-BASELINE operator action: freeze a new scorer
@@ -251,15 +247,10 @@ object DriftMonitor {
           }
         }
     }
-    score.fold(lang) { case (s, g) =>
-      lang.unionByName(s)
-        .unionByName(Seq((GenAxis, g.toString, g)).toDF("axis", "key", "cnt"))
-    }
-      .select(col("axis"), col("key"), col("cnt"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(driftPath)
+    Stores.writeBatch(score.fold(lang) { case (s, g) =>
+        lang.unionByName(s)
+          .unionByName(Seq((GenAxis, g.toString, g)).toDF("axis", "key", "cnt"))
+      }.select(col("axis"), col("key"), col("cnt")), batchId, driftPath)
   }
 
   /** PSI of each batch against its predecessor on one axis, straight

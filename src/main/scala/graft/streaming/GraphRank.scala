@@ -39,14 +39,10 @@ object GraphRank {
     * this batch's (c, s, w) edge-weight delta, written to its own
     * batch_id partition. Replay-idempotent by partition overwrite. */
   def writeEdgeDelta(batchPairs: DataFrame, batchId: Long,
-                     statePath: String): Unit = {
-    batchPairs
-      .groupBy(col("c"), col("s")).agg(count(lit(1)).as("w"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(statePath)
-  }
+                     statePath: String): Unit =
+    Stores.writeBatch(batchPairs
+      .groupBy(col("c"), col("s")).agg(count(lit(1)).as("w")),
+      batchId, statePath)
 
   /** The accumulated edge aggregate: per-pair sum over every delta
     * partition — equal to [[PageRank.weightedPairs]] over the full

@@ -29,9 +29,13 @@ object Pipelines {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     // file stream source needs a directory: stream the sf dir, glob-match
-    // the events file
+    // the events file at any depth. Recursive lookup (no partition
+    // inference) reads plain subdirectories too, and a `k=<n>` directory
+    // landing after start cannot add a partition column the schema fixed
+    // at start lacks (which failed every query with `Invalid batch`).
     val raw = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
+      .option("recursiveFileLookup", "true")
       .parquet(dir)
     // same two physical shapes as Tables.events: legacy nanos-as-long
     // and the regenerated corpus's TIMESTAMP(MICROS) (read as NTZ)

@@ -76,16 +76,10 @@ object QualityRefresh {
   def writeCountsDeltaFrom(cls: DataFrame, dstats: DataFrame,
                            batchId: Long, countsPath: String,
                            dstatsPath: String): Unit = {
-    cls.withColumn("folded_hi", lit(null).cast(LongType))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(countsPath)
-    dstats.withColumn("folded_hi", lit(null).cast(LongType))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dstatsPath)
+    Stores.writeBatch(cls.withColumn("folded_hi", lit(null).cast(LongType)),
+      batchId, countsPath)
+    Stores.writeBatch(dstats.withColumn("folded_hi", lit(null).cast(LongType)),
+      batchId, dstatsPath)
   }
 
   /** The model over everything seen so far: per-token sums across all
@@ -141,11 +135,8 @@ object QualityRefresh {
       .groupBy(col("token"))
       .agg(sum(col("pc")).as("pc"), sum(col("nc")).as("nc"))
       .withColumn("folded_hi", lit(upCnt))
-      .withColumn("batch_id", lit(CompactedId))
       .localCheckpoint() // pin BEFORE overwriting a partition we read
-    cls.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(countsPath)
+    Stores.writeBatch(cls, CompactedId, countsPath)
     val upD = math.max(upToBatch,
       watermark(spark, dstatsPath, dstatsSchema))
     val d = liveStore(spark, dstatsPath, dstatsSchema)
@@ -153,18 +144,15 @@ object QualityRefresh {
       .agg(coalesce(sum(col("p_docs")), lit(0L)).as("p_docs"),
         coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"))
       .withColumn("folded_hi", lit(upD))
-      .withColumn("batch_id", lit(CompactedId))
       .localCheckpoint()
-    d.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(dstatsPath)
+    Stores.writeBatch(d, CompactedId, dstatsPath)
   }
 
   /** Fold the `batch_id < upToBatch` delta partitions into one
     * `batch_id=-1` partition — counts are monoids, so the sum-merge is
     * lossless and [[modelState]] reads the identical totals before and
     * after (spec-asserted). Same replay contract as
-    * [[CurateIngest.compactStores]]: only batches ≥ upToBatch can
+    * [[StoreLayout.compact]]: only batches ≥ upToBatch can
     * replay, and their reads select the same summed row set.
     *
     * Crash-safety differs from the set-semantics ingest stores, whose

@@ -27,8 +27,10 @@ import org.apache.spark.sql.types._
   * for the 100 TB curation mandate: a corpus that arrives shard-by-shard
   * never re-scrubs history, and the store — one 8-byte row per distinct
   * corpus gram, the engine's largest store by construction — compacts
-  * to a gram-clustered layout so the per-shard probe join is the only
-  * corpus-scale contact and only the arriving shard shuffles.
+  * to a gram-clustered layout ([[StoreLayout]]; under
+  * [[StoreLayout.Bucketed]] a gram-bucketed table folded by append) so
+  * the per-shard probe join is the only corpus-scale contact and only
+  * the arriving shard shuffles.
   *
   * Equality contract (spec-pinned): with shards arriving in doc_id
   * order, the streamed output equals [[graft.dedup.SpanScrub.incrScrub]]
@@ -39,11 +41,6 @@ import org.apache.spark.sql.types._
   */
 object ScrubIngest {
 
-  import Stores.readStore
-
-  private val gramSchema = StructType(Seq(
-    StructField("gram", LongType),
-    StructField("batch_id", LongType)))
   private val outSchema = StructType(Seq(
     StructField("doc_id", LongType),
     StructField("n_cut_spans", IntegerType),
@@ -51,225 +48,39 @@ object ScrubIngest {
     StructField("text_clean", StringType),
     StructField("batch_id", LongType)))
 
-  /** The accumulated gram store as of (strictly before) `batch` —
-    * compacted `batch_id = -1` rows included, the [[CurateIngest.fpState]]
-    * pre-batch pinning. */
-  def gramState(spark: SparkSession, gramPath: String,
-                beforeBatch: Long = Long.MaxValue): DataFrame =
-    readStore(spark, gramPath, gramSchema)
-      .filter(col("batch_id") < beforeBatch)
-      .select(col("gram"))
-
-  /** Scrubbed documents accumulated so far. */
-  def scrubbedState(spark: SparkSession, outPath: String): DataFrame =
-    readStore(spark, outPath, outSchema).drop("batch_id")
+  /** Scrubbed documents accumulated so far (`<root>/out`). */
+  def scrubbedState(spark: SparkSession, root: String): DataFrame =
+    Stores.readStore(spark, s"$root/out", outSchema).drop("batch_id")
 
   /** One micro-batch: scrub against the pre-batch gram store, then
     * write the novel grams and the scrubbed docs each into their own
-    * batch_id partition. Both outputs are pinned (localCheckpoint)
-    * before either write lands, so neither can observe its own
-    * append; a crash-replay rewrites both partitions with identical
-    * content. */
-  def writeScrubShard(batch: DataFrame, batchId: Long, gramPath: String,
-                      outPath: String, k: Int = 40): Unit = {
-    val spark = batch.sparkSession
-    val (scrubbed0, novel0) = graft.dedup.SpanScrub.scrubShard(
-      batch.select(col("doc_id"), col("text")),
-      gramState(spark, gramPath, batchId), k)
-    val scrubbed = scrubbed0.localCheckpoint()
-    val novel = novel0.localCheckpoint()
-    novel.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(gramPath)
-    scrubbed.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outPath)
-  }
-
-  /** Fold the gram store's shard-per-partition layout into one
-    * `batch_id = -1` partition, distinct and clustered by gram — the
-    * [[CurateIngest.compactStores]] move for the scrub store. The
-    * output store is append-only per batch and needs no folding. */
-  def compactGrams(spark: SparkSession, gramPath: String,
-                   upToBatch: Long = Long.MaxValue,
-                   nFiles: Int = 8): Unit = {
-    val old = readStore(spark, gramPath, gramSchema)
-      .filter(col("batch_id") < upToBatch)
-    val compacted = old.drop("batch_id").distinct()
-      .withColumn("batch_id", lit(-1L))
-      .repartition(nFiles, col("gram"))
-      .sortWithinPartitions(col("gram"))
-      .localCheckpoint() // pin BEFORE overwriting a partition we read
-    compacted.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(gramPath)
-    Stores.dropBatchPartitions(spark, gramPath, upToBatch)
+    * batch_id partition. Both outputs root at the scrub's pinned store
+    * probe, and the gram read stops strictly below the batch, so neither
+    * can observe its own append; a crash-replay rewrites both partitions
+    * with identical content. */
+  def writeShard(batch: DataFrame, batchId: Long, root: String,
+                 layout: StoreLayout = StoreLayout.Flat,
+                 k: Int = 40): Unit = {
+    val (scrubbed, novel) = Funnel.scrub(batch.select(col("doc_id"), col("text")),
+      layout.state(batch.sparkSession, Store.Gram, root, batchId), k)
+    Stores.writeBatch(novel, batchId, Store.Gram.path(root))
+    Stores.writeBatch(scrubbed, batchId, s"$root/out")
   }
 
   /** The wired pipeline: a document stream span-scrubbed
-    * shard-at-a-time. `compactEvery = Some(n)` folds [[compactGrams]]
-    * into the loop every n-th batch (strictly-below-self bound, the
-    * [[CurateIngest.start]] rule: the in-flight batch is never
-    * compacted). */
-  def start(docStream: DataFrame, gramPath: String, outPath: String,
-            checkpoint: String, k: Int = 40,
+    * shard-at-a-time, the gram store under `root` in `layout`, folded
+    * every `compactEvery` batches ([[StoreLayout.tick]]). The output
+    * store is append-only per batch and needs no folding. */
+  def start(docStream: DataFrame, root: String, checkpoint: String,
+            layout: StoreLayout = StoreLayout.Flat, k: Int = 40,
             compactEvery: Option[Long] = None): StreamingQuery =
     docStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeScrubShard(batch, batchId, gramPath, outPath, k)
-        compactEvery.foreach { n =>
-          if (batchId > 0 && batchId % n == 0)
-            compactGrams(batch.sparkSession, gramPath, upToBatch = batchId)
-        }
-      }
-      .start()
-
-  // ------------------------------------ bucketed compacted gram store
-
-  private val gramTableSchema = StructType(Seq(StructField("gram", LongType)))
-
-  /** The bucketed readers see {bucket table ∪ `batch_id >= 0` deltas}
-    * only — the [[CurateIngest.fpStateSplit]] fail-fast on a plain
-    * `batch_id=-1` sentinel, for the same reason: silently invisible
-    * folded grams would re-admit every span they guard. */
-  def gramStateSplit(spark: SparkSession, gramPath: String,
-                     tablePrefix: String, beforeBatch: Long)
-      : (DataFrame, DataFrame) = {
-    require(!Stores.hasCompactedPartition(spark, gramPath),
-      s"$gramPath has a plain-compacted batch_id=-1 partition the " +
-        s"bucketed readers (tablePrefix=$tablePrefix) would not see — " +
-        "run compactGramsBucketed once to migrate it")
-    (CurateIngest.tableOrEmpty(spark, s"${tablePrefix}_gram",
-      gramTableSchema),
-      readStore(spark, gramPath, gramSchema)
-        .filter(col("batch_id") >= 0 && col("batch_id") < beforeBatch)
-        .select(col("gram")))
-  }
-
-  /** [[compactGrams]] folding into a metastore table BUCKETED by
-    * `gram`, by APPEND — never rewriting the table. The first soak of
-    * a rewrite-the-world fold (read table ∪ deltas, distinct, write)
-    * showed the tick cost growing linearly with the store and its
-    * `distinct` entering the spill regime by the third tick (74 → 79
-    * → 146 s, 62 GB spill — SCALING.md); cumulatively that fold is
-    * O(corpus²/compactEvery). Appending only the un-folded delta
-    * partitions is delta-sized forever, and it is CORRECT because
-    * novel grams are disjoint from everything earlier BY CONSTRUCTION
-    * (each batch anti-joins the full pre-batch store), so the table is
-    * a disjoint union; the crash window (append landed, partition
-    * delete didn't) degrades to duplicate rows on replay, which every
-    * probe tolerates (inner-join + (doc_id, i) dedup / anti-join).
-    * Appends leave multiple files per bucket — hash partitioning (the
-    * exchange-free probe) survives, per-bucket sortedness does not,
-    * which is why the probe is a shuffled-hash join, not an SMJ
-    * ([[graft.dedup.SpanScrub.scrubShardSplit]]). A plain `batch_id=-1`
-    * sentinel (migration from [[compactGrams]]) folds in alongside the
-    * deltas and is deleted. */
-  def compactGramsBucketed(spark: SparkSession, gramPath: String,
-                           upToBatch: Long, tablePrefix: String,
-                           buckets: Int = 32,
-                           maxFilesPerBucket: Int = 16): Unit = {
-    // batch partitions still on disk are exactly the un-folded ones
-    // (folded partitions are deleted below); distinct is fold-sized,
-    // absorbing replay duplicates and sentinel/table overlap
-    val deltas = readStore(spark, gramPath, gramSchema)
-      .filter(col("batch_id") < upToBatch)
-      .select(col("gram")).distinct()
-      .repartition(buckets, col("gram"))
-      .localCheckpoint() // pin BEFORE deleting partitions we read
-    deltas.write.mode("append")
-      .bucketBy(buckets, "gram")
-      .format("parquet").saveAsTable(s"${tablePrefix}_gram")
-    Stores.dropBatchPartitions(spark, gramPath, upToBatch)
-    Stores.dropCompactedPartition(spark, gramPath)
-    // FILE HYGIENE: appends accumulate one file set per tick forever —
-    // at thousands of ticks the per-shard store stream pays O(ticks)
-    // file opens per bucket. When the table crosses the threshold,
-    // rewrite it once into one file per bucket (the hash layout — and
-    // with it the exchange-free probe — survives; per-bucket
-    // sortedness is not restored because the probe is a shuffled-hash
-    // join that never needed it). Cost is one full-store rewrite,
-    // amortized over the ~maxFilesPerBucket ticks that led to it.
-    // Crash contract matches [[graft.streaming.CurateIngest
-    // .compactStoresBucketed]]'s table overwrite: the replacement set
-    // is pinned (localCheckpoint) before the table it came from is
-    // overwritten.
-    if (tableDataFiles(spark, s"${tablePrefix}_gram") >
-        buckets.toLong * maxFilesPerBucket)
-      rewriteGramTable(spark, tablePrefix, buckets)
-  }
-
-  /** Number of data files currently backing a metastore table (0 when
-    * it does not exist yet — no tick has run). */
-  private[graft] def tableDataFiles(spark: SparkSession,
-                                    table: String): Long = {
-    if (!spark.catalog.tableExists(table)) return 0L
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val loc = spark.sessionState.catalog.getTableMetadata(ident).location
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else fs.listStatus(p).count { st =>
-      val n = st.getPath.getName
-      st.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.toLong
-  }
-
-  /** The hygiene rewrite: fold the gram table to exactly one file per
-    * bucket. distinct() absorbs the duplicate rows the append-mode
-    * crash window can leave behind (which the probes tolerate but a
-    * fold may as well collapse). */
-  private[graft] def rewriteGramTable(spark: SparkSession,
-                                          tablePrefix: String,
-                                          buckets: Int): Unit =
-    spark.table(s"${tablePrefix}_gram")
-      .distinct()
-      .repartition(buckets, col("gram"))
-      .localCheckpoint() // pin BEFORE overwriting the table we read
-      .write.mode("overwrite")
-      .bucketBy(buckets, "gram")
-      .format("parquet").saveAsTable(s"${tablePrefix}_gram")
-
-  /** [[writeScrubShard]] under bucketed compaction: the probe joins
-    * the bucketed gram table bucket-aligned, the recent deltas
-    * broadcast. */
-  def writeScrubShardBucketed(batch: DataFrame, batchId: Long,
-                              gramPath: String, outPath: String,
-                              tablePrefix: String, k: Int = 40): Unit = {
-    val spark = batch.sparkSession
-    val (gC, gD) = gramStateSplit(spark, gramPath, tablePrefix, batchId)
-    val (scrubbed0, novel0) = graft.dedup.SpanScrub.scrubShardSplit(
-      batch.select(col("doc_id"), col("text")), gC, gD, k)
-    val scrubbed = scrubbed0.localCheckpoint()
-    val novel = novel0.localCheckpoint()
-    novel.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(gramPath)
-    scrubbed.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(outPath)
-  }
-
-  /** [[start]] on the bucketed store family. */
-  def startBucketed(docStream: DataFrame, gramPath: String,
-                    outPath: String, checkpoint: String,
-                    tablePrefix: String, k: Int = 40,
-                    compactEvery: Long = 4L,
-                    buckets: Int = 32,
-                    maxFilesPerBucket: Int = 16): StreamingQuery =
-    docStream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeScrubShardBucketed(batch, batchId, gramPath, outPath,
-          tablePrefix, k)
-        if (batchId > 0 && batchId % compactEvery == 0)
-          compactGramsBucketed(batch.sparkSession, gramPath,
-            upToBatch = batchId, tablePrefix, buckets, maxFilesPerBucket)
+        writeShard(batch, batchId, root, layout, k)
+        layout.tick(batch.sparkSession, root, Seq(Store.Gram), batchId,
+          compactEvery)
+        ()
       }
       .start()
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
 
 /** Shared read discipline for the batch_id-partitioned state stores
@@ -28,6 +29,16 @@ private[streaming] object Stores {
         .emptyRDD[org.apache.spark.sql.Row], schema)
     else spark.read.schema(schema).parquet(path)
   }
+
+  /** Land `df` as the `batch_id = batchId` partition of `path` with
+    * dynamic overwrite: every other partition is untouched and a
+    * crash-replayed batch rewrites exactly its own partition — the
+    * idempotence contract of every batch-partitioned store. */
+  def writeBatch(df: DataFrame, batchId: Long, path: String): Unit =
+    df.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id").parquet(path)
 
   /** Batch-id partition directories of `path` with `0 <= id < upToBatch`
     * (non-numeric or sentinel dirs untouched), oldest first. */

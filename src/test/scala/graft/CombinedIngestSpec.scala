@@ -4,7 +4,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{ClusterRefresh, CombinedIngest, CurateIngest, QualityRefresh}
+import graft.streaming.{ClusterRefresh, CombinedIngest, CurateIngest, Funnel,
+  QualityRefresh, Store, StoreSides}
+import graft.streaming.StoreLayout.{Bucketed, Flat}
 
 /** The one-stream multi-leg soak: curation, cluster refresh, quality
   * model and BM25 index appends all share one file stream's
@@ -253,8 +255,8 @@ class CombinedIngestSpec extends AnyFunSuite {
     assert(q2.exception.isEmpty, s"golden stream died: ${q2.exception}")
 
     // ---- store-for-store: interrupted == golden
-    val kept1 = keptSet(CurateIngest.keptState(spark, s"$r1/kept"))
-    assert(kept1 == keptSet(CurateIngest.keptState(spark, s"$r2/kept")))
+    val kept1 = keptSet(Flat.inventory(spark, Store.Kept, r1))
+    assert(kept1 == keptSet(Flat.inventory(spark, Store.Kept, r2)))
     val labels1 = labelsOf(ClusterRefresh.latestLabels(spark, s"$r1/labels"))
     assert(labels1 ==
       labelsOf(ClusterRefresh.latestLabels(spark, s"$r2/labels")))
@@ -295,7 +297,7 @@ class CombinedIngestSpec extends AnyFunSuite {
     // BM25: the store-backed index scores the kept corpus exactly as
     // the flat batch scorer does
     val keptDocs = allDocs.join(
-      CurateIngest.keptState(spark, s"$r1/kept").select("doc_id"),
+      Flat.inventory(spark, Store.Kept, r1).select("doc_id"),
       Seq("doc_id"))
     val batchBm25 = graft.text.CorpusStats.bm25(keptDocs)
       .as[(Long, Double, Int)].collect().toSeq
@@ -526,40 +528,12 @@ class CombinedIngestSpec extends AnyFunSuite {
         DocEv(20L, boiler, boiler.length.toLong))
       q.processAllAvailable()
       assert(q.exception.isEmpty, s"stream died: ${q.exception}")
-      assert(keptSet(CurateIngest.keptState(spark, s"$root/kept")) ==
+      assert(keptSet(Flat.inventory(spark, Store.Kept, root)) ==
         Set(10L))
       // the gate ran BEFORE the signature store: no tombstone either
-      assert(CurateIngest.sigState(spark, s"$root/sigs", 99L)
+      assert(Flat.state(spark, Store.Sig, root, 99L).compact
         .select("doc_id").as[Long].collect().toSet == Set(10L))
     } finally q.stop()
-  }
-
-  test("repBase pin type is semantics-free: localCheckpoint pin writes byte-identical stores") {
-    // the pin A/B knob (ScaleSoak combinedgopher re-runs both arms
-    // under the r13 narrow leg) must never change results — only cost
-    val work = java.nio.file.Files.createTempDirectory("pintype").toString
-    val mk = (id: Long, t: String) => DocEv(id, t, t.length.toLong)
-    val clean = (0 until 30)
-      .map(i => f"the w$i%02da a x$i%02db").mkString(" ")
-    val boiler = "the cat and the dog " * 40 // passes quality, fails Gopher
-    // same shape as clean (gate-passing), distinct words
-    val clean2 = (0 until 30)
-      .map(i => f"the y$i%02dc a z$i%02dd").mkString(" ")
-    val batch = Seq(mk(10L, clean), mk(20L, boiler), mk(30L, clean2))
-    def run(pinColumnar: Boolean): (Set[Long], Set[(Long, String, Long)]) = {
-      val root = s"$work/${if (pinColumnar) "col" else "lchk"}"
-      CombinedIngest.processBatch(batch.toDF(), 0L, root,
-        gopherGate = true, repBasePinColumnar = pinColumnar)
-      (keptSet(CurateIngest.keptState(spark, s"$root/kept")),
-        spark.read.parquet(s"$root/postings")
-          .select("doc_id", "token", "tf")
-          .as[(Long, String, Long)].collect().toSet)
-    }
-    val (keptCol, postCol) = run(pinColumnar = true)
-    val (keptLchk, postLchk) = run(pinColumnar = false)
-    assert(keptCol == Set(10L, 30L), s"gate broke: $keptCol")
-    assert(keptLchk == keptCol && postLchk == postCol,
-      "pin type changed the topology's outputs")
   }
 
   test("gopher-quality-gated topology: a bullet-formatted quality-passing doc never reaches the stores") {
@@ -587,10 +561,10 @@ class CombinedIngestSpec extends AnyFunSuite {
         DocEv(20L, listy, listy.length.toLong))
       q.processAllAvailable()
       assert(q.exception.isEmpty, s"stream died: ${q.exception}")
-      assert(keptSet(CurateIngest.keptState(spark, s"$root/kept")) ==
+      assert(keptSet(Flat.inventory(spark, Store.Kept, root)) ==
         Set(10L))
       // gated BEFORE the signature store — no tombstone either
-      assert(CurateIngest.sigState(spark, s"$root/sigs", 99L)
+      assert(Flat.state(spark, Store.Sig, root, 99L).compact
         .select("doc_id").as[Long].collect().toSet == Set(10L))
       // …while the plain heuristic gate would have admitted it
       val d = Seq(10L -> clean, 20L -> listy).toDF("doc_id", "text")
@@ -605,8 +579,9 @@ class CombinedIngestSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val work = java.nio.file.Files.createTempDirectory("combinedbkt").toString
     val src = writeShardFiles(work)
-    def start(root: String, prefix: String) = CombinedIngest.startBucketed(
-      shardStream(src), root, s"$root/chk", prefix, compactEvery = Some(2L))
+    def start(root: String, prefix: String) = CombinedIngest.start(
+      shardStream(src), root, s"$root/chk", Bucketed(prefix),
+      compactEvery = Some(2L))
     val r1 = s"$work/r1"; val px1 = "cbm1"
     val r2 = s"$work/r2"; val px2 = "cbm2"
     try {
@@ -632,9 +607,9 @@ class CombinedIngestSpec extends AnyFunSuite {
       assert(!new java.io.File(s"$r2/postings/batch_id=0").exists)
       // ---- interrupted == golden, and == the batch twins
       val kept1 = keptSet(
-        CurateIngest.keptStateBucketed(spark, s"$r1/kept", px1))
+        Bucketed(px1).inventory(spark, Store.Kept, r1))
       assert(kept1 == keptSet(
-        CurateIngest.keptStateBucketed(spark, s"$r2/kept", px2)))
+        Bucketed(px2).inventory(spark, Store.Kept, r2)))
       assert(kept1 == keptSet(CurateIngest.incrCurateStrict(allDocs,
         maxId = 900L)))
       val labels1 = labelsOf(ClusterRefresh.latestLabels(spark, s"$r1/labels"))
@@ -653,11 +628,11 @@ class CombinedIngestSpec extends AnyFunSuite {
         .select("doc_id", "nb_score_micro").as[(Long, Long)].collect().toMap)
       // BM25 bucketed read model == the flat batch scorer on kept docs
       val search1 = graft.text.SparseIndex.search(
-        CombinedIngest.bm25IndexBucketed(spark, r1, px1),
+        CombinedIngest.bm25Index(spark, r1, Bucketed(px1)),
         Seq("spark", "join", "window", "hash"))
         .as[(Long, Double, Int)].collect().toSeq
       val keptDocs = allDocs.join(
-        CurateIngest.keptStateBucketed(spark, s"$r1/kept", px1)
+        Bucketed(px1).inventory(spark, Store.Kept, r1)
           .select("doc_id"), Seq("doc_id"))
       val batchBm25 = graft.text.CorpusStats.bm25(keptDocs)
         .as[(Long, Double, Int)].collect().toSeq
@@ -687,18 +662,18 @@ class CombinedIngestSpec extends AnyFunSuite {
           next.select($"doc_id", $"text")).localCheckpoint()
         val gated = CurateIngest.gateFromSignals(
           graft.text.TextAnalysis.docSignals(next, tokens)).localCheckpoint()
-        val (fpC, fpD) = CurateIngest.fpStateSplit(spark, s"$r2/fps", px2, 6L)
-        val probe = CurateIngest.freshAgainstSplitStores(gated, fpC, fpD)
+        val StoreSides(fpC, Some(fpD)) = Bucketed(px2).state(spark, Store.Fp, r2, 6L)
+        val probe = Funnel.fresh(gated,
+          StoreSides(fpC, Some(fpD)))
         probe.queryExecution.toRdd.count() // EXECUTED, not planned
         bucketedNoExchange(probe.queryExecution.executedPlan.collect {
           case j: SortMergeJoinExec if j.joinType.sql == "LEFT ANTI" =>
             j.right
         }, "fp anti-join")
-        val (sigC, sigD) = CurateIngest.sigStateSplit(spark, s"$r2/sigs",
-          px2, 6L)
+        val StoreSides(sigC, Some(sigD)) = Bucketed(px2).state(spark, Store.Sig, r2, 6L)
         val bands = CurateIngest.sigBands(gated.select($"doc_id", $"text"))
           .localCheckpoint()
-        val probe2 = CurateIngest.sigCollisionIds(bands, sigC, sigD, 0.5)
+        val probe2 = Funnel.collisions(bands, StoreSides(sigC, Some(sigD)), 0.5)
         probe2.queryExecution.toRdd.count()
         bucketedNoExchange(probe2.queryExecution.executedPlan.collect {
           case j: SortMergeJoinExec if j.joinType.sql == "INNER" => j.right

@@ -4,7 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.CurateIngest
+import graft.streaming.{CurateIngest, Funnel, Store, StoreSides}
+import graft.streaming.StoreLayout.{Bucketed, Flat}
 
 case class DocEv(doc_id: Long, text: String, n_chars: Long)
 
@@ -65,12 +66,11 @@ class CurateStreamSpec extends AnyFunSuite {
       DocEv(180L, bodyC, 0L))
       .map(e => e.copy(n_chars = e.text.length.toLong))
     val ms = MemoryStream[DocEv]
-    val q = CurateIngest.start(ms.toDF(), s"$dir/fps", s"$dir/kept",
-      s"$dir/chk")
+    val q = CurateIngest.start(ms.toDF(), dir, s"$dir/chk")
     try {
       ms.addData(shard0: _*); q.processAllAvailable()
       ms.addData(shard1: _*); q.processAllAvailable()
-      val streamed = keptSet(CurateIngest.keptState(spark, s"$dir/kept"))
+      val streamed = keptSet(Flat.inventory(spark, Store.Kept, dir))
       assert(streamed == Set(10L, 20L, 180L), s"streamed $streamed")
       // the loop over the same id-ordered shards agrees row-for-row
       val loop = CurateIngest.incrCurate(
@@ -80,8 +80,8 @@ class CurateStreamSpec extends AnyFunSuite {
       // crash-replay batch 1: its partitions rewrite with identical
       // content — fpState(beforeBatch) pins the pre-batch store view
       CurateIngest.writeShard(
-        shard1.toDF(), batchId = 1L, s"$dir/fps", s"$dir/kept")
-      val replayed = keptSet(CurateIngest.keptState(spark, s"$dir/kept"))
+        shard1.toDF(), batchId = 1L, dir)
+      val replayed = keptSet(Flat.inventory(spark, Store.Kept, dir))
       assert(replayed == streamed, "replay changed the survivors")
     } finally q.stop()
   }
@@ -90,8 +90,7 @@ class CurateStreamSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("curaterestart").toString
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[DocEv]
-    def start() = CurateIngest.start(ms.toDF(), s"$dir/fps", s"$dir/kept",
-      s"$dir/chk")
+    def start() = CurateIngest.start(ms.toDF(), dir, s"$dir/chk")
     val mk = (id: Long, t: String) => DocEv(id, t, t.length.toLong)
     val q1 = start()
     try {
@@ -104,7 +103,7 @@ class CurateStreamSpec extends AnyFunSuite {
     try {
       ms.addData(mk(170L, bodyB), mk(180L, bodyC))
       q2.processAllAvailable()
-      val kept = CurateIngest.keptState(spark, s"$dir/kept")
+      val kept = Flat.inventory(spark, Store.Kept, dir)
         .select("doc_id").as[Long].collect().toList
       assert(kept.sorted == List(10L, 20L, 180L),
         s"loss or duplication across restart: $kept")
@@ -116,8 +115,7 @@ class CurateStreamSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("curateempty").toString
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[DocEv]
-    val q = CurateIngest.start(ms.toDF(), s"$dir/fps", s"$dir/kept",
-      s"$dir/chk")
+    val q = CurateIngest.start(ms.toDF(), dir, s"$dir/chk")
     try {
       // batch 0: everything fails the language gate → empty partitions
       ms.addData(DocEv(1L, "el la que el la que", 19L))
@@ -127,7 +125,7 @@ class CurateStreamSpec extends AnyFunSuite {
       ms.addData(DocEv(10L, bodyA, bodyA.length.toLong))
       q.processAllAvailable()
       assert(q.exception.isEmpty, s"stream died: ${q.exception}")
-      assert(keptSet(CurateIngest.keptState(spark, s"$dir/kept")) ==
+      assert(keptSet(Flat.inventory(spark, Store.Kept, dir)) ==
         Set(10L))
     } finally q.stop()
   }
@@ -297,9 +295,8 @@ class CurateStreamSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("fullfunnel").toString
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[DocEv]
-    def start() = CurateIngest.startFullStrict(ms.toDF(), s"$dir/grams",
-      s"$dir/fps", s"$dir/sigs", s"$dir/kept", s"$dir/chk", bench,
-      maxContamPm = 700, compactEvery = Some(2L))
+    def start() = CurateIngest.start(ms.toDF(), dir, s"$dir/chk",
+      Funnel.full(bench, maxContamPm = 700), compactEvery = Some(2L))
     val q1 = start()
     try {
       shards.take(2).foreach { s => ms.addData(s: _*); q1.processAllAvailable() }
@@ -308,17 +305,16 @@ class CurateStreamSpec extends AnyFunSuite {
     try {
       shards.drop(2).foreach { s => ms.addData(s: _*); q2.processAllAvailable() }
       assert(q2.exception.isEmpty, s"stream died: ${q2.exception}")
-      val streamed = keptSet(CurateIngest.keptState(spark, s"$dir/kept"))
+      val streamed = keptSet(Flat.inventory(spark, Store.Kept, dir))
       val loop = keptSet(CurateIngest.incrCurateFullStrict(all,
         maxContamPm = 700))
       assert(streamed == loop && streamed == Set(1L, 10L, 170L, 470L),
         s"streamed $streamed vs loop $loop")
       // crash-replay of the LAST batch: all four partitions rewrite
       // with identical content (every store read is pre-batch pinned)
-      CurateIngest.writeShardFullStrict(shards(3).toDF(), batchId = 3L,
-        s"$dir/grams", s"$dir/fps", s"$dir/sigs", s"$dir/kept", bench,
-        maxContamPm = 700)
-      val replayed = keptSet(CurateIngest.keptState(spark, s"$dir/kept"))
+      CurateIngest.writeShard(shards(3).toDF(), batchId = 3L, dir,
+        Funnel.full(bench, maxContamPm = 700))
+      val replayed = keptSet(Flat.inventory(spark, Store.Kept, dir))
       assert(replayed == streamed, "replay changed the survivors")
       // the gram compaction tick fired mid-stream
       assert(spark.read.parquet(s"$dir/grams")
@@ -331,10 +327,8 @@ class CurateStreamSpec extends AnyFunSuite {
     val bdir = java.nio.file.Files.createTempDirectory("fullfunnelb").toString
     val prefix = "cifb"
     val ms2 = MemoryStream[DocEv]
-    def startB() = CurateIngest.startFullStrictBucketed(ms2.toDF(),
-      s"$bdir/grams", s"$bdir/fps", s"$bdir/sigs", s"$bdir/kept",
-      s"$bdir/chk", prefix, bench, maxContamPm = 700,
-      compactEvery = 2L)
+    def startB() = CurateIngest.start(ms2.toDF(), bdir, s"$bdir/chk",
+      Funnel.full(bench, maxContamPm = 700), Bucketed(prefix), compactEvery = Some(2L))
     val b1 = startB()
     try {
       shards.take(2).foreach { s => ms2.addData(s: _*); b1.processAllAvailable() }
@@ -344,7 +338,7 @@ class CurateStreamSpec extends AnyFunSuite {
       shards.drop(2).foreach { s => ms2.addData(s: _*); b2.processAllAvailable() }
       assert(b2.exception.isEmpty, s"bucketed stream died: ${b2.exception}")
       val streamedB = keptSet(
-        CurateIngest.keptStateBucketed(spark, s"$bdir/kept", prefix))
+        Bucketed(prefix).inventory(spark, Store.Kept, bdir))
       assert(streamedB == Set(1L, 10L, 170L, 470L), s"bucketed $streamedB")
       assert(spark.catalog.tableExists(s"${prefix}_gram") &&
         spark.catalog.tableExists(s"${prefix}_fp"), "bucket tables missing")
@@ -383,31 +377,29 @@ class CurateStreamSpec extends AnyFunSuite {
     // plain stream with the gate on: the doc never reaches the stores
     val dir = java.nio.file.Files.createTempDirectory("gopherfull").toString
     val ms = MemoryStream[DocEv]
-    val q = CurateIngest.startFullStrict(ms.toDF(), s"$dir/grams",
-      s"$dir/fps", s"$dir/sigs", s"$dir/kept", s"$dir/chk", bench,
-      gopherGate = true)
+    val q = CurateIngest.start(ms.toDF(), dir, s"$dir/chk",
+      Funnel.full(bench, gopherGate = true))
     try {
       shards.foreach { s => ms.addData(s: _*); q.processAllAvailable() }
       assert(q.exception.isEmpty, s"stream died: ${q.exception}")
-      assert(keptSet(CurateIngest.keptState(spark, s"$dir/kept")) ==
+      assert(keptSet(Flat.inventory(spark, Store.Kept, dir)) ==
         Set(10L, 170L))
       // gated BEFORE the signature store: no tombstone for the
       // boilerplate either
-      assert(CurateIngest.sigState(spark, s"$dir/sigs", 99L)
+      assert(Flat.state(spark, Store.Sig, dir, 99L).compact
         .select("doc_id").as[Long].collect().toSet == Set(10L, 170L))
     } finally q.stop()
     // bucketed stream, same planting
     val bdir = java.nio.file.Files.createTempDirectory("gopherfullb").toString
     val prefix = "gfb"
     val ms2 = MemoryStream[DocEv]
-    val qb = CurateIngest.startFullStrictBucketed(ms2.toDF(),
-      s"$bdir/grams", s"$bdir/fps", s"$bdir/sigs", s"$bdir/kept",
-      s"$bdir/chk", prefix, bench, compactEvery = 1L, gopherGate = true)
+    val qb = CurateIngest.start(ms2.toDF(), bdir, s"$bdir/chk",
+      Funnel.full(bench, gopherGate = true), Bucketed(prefix), compactEvery = Some(1L))
     try {
       shards.foreach { s => ms2.addData(s: _*); qb.processAllAvailable() }
       assert(qb.exception.isEmpty, s"bucketed stream died: ${qb.exception}")
       assert(keptSet(
-        CurateIngest.keptStateBucketed(spark, s"$bdir/kept", prefix)) ==
+        Bucketed(prefix).inventory(spark, Store.Kept, bdir)) ==
         Set(10L, 170L))
     } finally {
       qb.stop()
@@ -462,13 +454,12 @@ class CurateStreamSpec extends AnyFunSuite {
     // string columns carry a PII fragment
     val dir = java.nio.file.Files.createTempDirectory("anonfull").toString
     val ms = MemoryStream[DocEv]
-    val q = CurateIngest.startFullStrict(ms.toDF(), s"$dir/grams",
-      s"$dir/fps", s"$dir/sigs", s"$dir/kept", s"$dir/chk", bench,
-      anonymize = true)
+    val q = CurateIngest.start(ms.toDF(), dir, s"$dir/chk",
+      Funnel.full(bench, anonymize = true))
     try {
       shards.foreach { s => ms.addData(s: _*); q.processAllAvailable() }
       assert(q.exception.isEmpty, s"stream died: ${q.exception}")
-      assert(keptSet(CurateIngest.keptState(spark, s"$dir/kept")) ==
+      assert(keptSet(Flat.inventory(spark, Store.Kept, dir)) ==
         Set(10L, 170L))
       assertCleanStores(Seq(s"$dir/grams", s"$dir/fps", s"$dir/sigs",
         s"$dir/kept"))
@@ -485,8 +476,8 @@ class CurateStreamSpec extends AnyFunSuite {
     // raw email fragment DO land in the stores
     val cdir = java.nio.file.Files.createTempDirectory("anonctrl").toString
     val msc = MemoryStream[DocEv]
-    val qc = CurateIngest.startFullStrict(msc.toDF(), s"$cdir/grams",
-      s"$cdir/fps", s"$cdir/sigs", s"$cdir/kept", s"$cdir/chk", bench)
+    val qc = CurateIngest.start(msc.toDF(), cdir, s"$cdir/chk",
+      Funnel.full(bench))
     try {
       shards.foreach { s => msc.addData(s: _*); qc.processAllAvailable() }
       val fpsC = spark.read.parquet(s"$cdir/fps")
@@ -499,14 +490,13 @@ class CurateStreamSpec extends AnyFunSuite {
     val bdir = java.nio.file.Files.createTempDirectory("anonfullb").toString
     val prefix = "anb"
     val ms2 = MemoryStream[DocEv]
-    val qb = CurateIngest.startFullStrictBucketed(ms2.toDF(),
-      s"$bdir/grams", s"$bdir/fps", s"$bdir/sigs", s"$bdir/kept",
-      s"$bdir/chk", prefix, bench, compactEvery = 1L, anonymize = true)
+    val qb = CurateIngest.start(ms2.toDF(), bdir, s"$bdir/chk",
+      Funnel.full(bench, anonymize = true), Bucketed(prefix), compactEvery = Some(1L))
     try {
       shards.foreach { s => ms2.addData(s: _*); qb.processAllAvailable() }
       assert(qb.exception.isEmpty, s"bucketed stream died: ${qb.exception}")
       assert(keptSet(
-        CurateIngest.keptStateBucketed(spark, s"$bdir/kept", prefix)) ==
+        Bucketed(prefix).inventory(spark, Store.Kept, bdir)) ==
         Set(10L, 170L))
       assertCleanStores(Seq(s"$bdir/grams", s"$bdir/fps", s"$bdir/sigs",
         s"$bdir/kept"))
@@ -568,25 +558,23 @@ class CurateStreamSpec extends AnyFunSuite {
     val c = base + "zzz qqq 11111 88888 99999" // ≈ b
     val mk = (id: Long, t: String) => DocEv(id, t, t.length.toLong)
     val ms = MemoryStream[DocEv]
-    val q = CurateIngest.startStrict(ms.toDF(), s"$dir/fps", s"$dir/sigs",
-      s"$dir/kept", s"$dir/chk")
+    val q = CurateIngest.start(ms.toDF(), dir, s"$dir/chk", Funnel.strict())
     try {
       ms.addData(mk(10L, a)); q.processAllAvailable()
       ms.addData(mk(170L, b)); q.processAllAvailable()
       // distinct doc in a later shard is untouched
       ms.addData(mk(470L, bodyD)); q.processAllAvailable()
       assert(q.exception.isEmpty, s"stream died: ${q.exception}")
-      val kept = keptSet(CurateIngest.keptState(spark, s"$dir/kept"))
+      val kept = keptSet(Flat.inventory(spark, Store.Kept, dir))
       assert(kept == Set(10L, 470L), s"cross-shard near-dup kept: $kept")
       // the DROPPED doc's signature rows are in the store — tombstones,
       // not just survivors
-      val sigs = CurateIngest.sigState(spark, s"$dir/sigs", Long.MaxValue)
+      val sigs = Flat.state(spark, Store.Sig, dir, Long.MaxValue).compact
         .select("doc_id").as[Long].collect().toSet
       assert(sigs.contains(170L), s"tombstone missing: $sigs")
       // no retraction: a replayed batch leaves the survivors unchanged
-      CurateIngest.writeShardStrict(Seq(mk(170L, b)).toDF(), 1L,
-        s"$dir/fps", s"$dir/sigs", s"$dir/kept")
-      assert(keptSet(CurateIngest.keptState(spark, s"$dir/kept")) == kept)
+      CurateIngest.writeShard(Seq(mk(170L, b)).toDF(), 1L, dir, Funnel.strict())
+      assert(keptSet(Flat.inventory(spark, Store.Kept, dir)) == kept)
     } finally q.stop()
     // transitivity through the tombstone, pinned at function level: a
     // signature store holding ONLY the dropped doc B still kills C —
@@ -595,9 +583,9 @@ class CurateStreamSpec extends AnyFunSuite {
     // out-of-order arrival or a borderline banding miss can, and the
     // store must already carry the tombstone when it does
     val sigB = CurateIngest.sigBands(docs((170L, b)))
-    val (keptC, _, _) = CurateIngest.ingestShardStrict(
-      docs((320L, c)), docs((0L, "")).select(md5(col("text"))
-        .as("fingerprint")).limit(0), sigB)
+    val keptC = Funnel.step(docs((320L, c)), Funnel.strict(),
+      Map(Store.Fp -> StoreSides(docs((0L, "")).select(md5(col("text"))
+        .as("fingerprint")).limit(0)), Store.Sig -> StoreSides(sigB))).kept()
     assert(keptSet(keptC).isEmpty,
       "near-copy of a TOMBSTONED doc must drop")
   }
@@ -616,17 +604,16 @@ class CurateStreamSpec extends AnyFunSuite {
       val dir = java.nio.file.Files.createTempDirectory("curatecompact").toString
       implicit val ctx = spark.sqlContext
       val ms = MemoryStream[DocEv]
-      val q = CurateIngest.startStrict(ms.toDF(), s"$dir/fps", s"$dir/sigs",
-        s"$dir/kept", s"$dir/chk", compactEvery = compactEvery)
+      val q = CurateIngest.start(ms.toDF(), dir, s"$dir/chk", Funnel.strict(), compactEvery = compactEvery)
       try {
         shards.foreach { s => ms.addData(s: _*); q.processAllAvailable() }
         assert(q.exception.isEmpty, s"stream died: ${q.exception}")
       } finally q.stop()
       (dir,
-        keptSet(CurateIngest.keptState(spark, s"$dir/kept")),
-        CurateIngest.fpState(spark, s"$dir/fps", Long.MaxValue)
+        keptSet(Flat.inventory(spark, Store.Kept, dir)),
+        Flat.state(spark, Store.Fp, dir, Long.MaxValue).compact
           .as[String].collect().toSet,
-        CurateIngest.sigState(spark, s"$dir/sigs", Long.MaxValue)
+        Flat.state(spark, Store.Sig, dir, Long.MaxValue).compact
           .select("doc_id").as[Long].collect().toSet)
     }
     val (dirC, keptC, fpsC, sigsC) = run(compactEvery = Some(1L))
@@ -645,16 +632,14 @@ class CurateStreamSpec extends AnyFunSuite {
     // a crash-replayed LAST batch (the only replayable one) is still a
     // no-op against the compacted stores
     implicit val ctx = spark.sqlContext
-    CurateIngest.writeShardStrict(shards.last.toDF(), shards.size - 1L,
-      s"$dirC/fps", s"$dirC/sigs", s"$dirC/kept")
-    assert(keptSet(CurateIngest.keptState(spark, s"$dirC/kept")) == keptC,
+    CurateIngest.writeShard(shards.last.toDF(), shards.size - 1L, dirC, Funnel.strict())
+    assert(keptSet(Flat.inventory(spark, Store.Kept, dirC)) == keptC,
       "replay after compaction changed the survivors")
     // compaction is idempotent: re-running it (the crash-recovery
     // instruction) changes nothing
-    CurateIngest.compactStores(spark, s"$dirC/fps", s"$dirC/kept",
-      Some(s"$dirC/sigs"), upToBatch = shards.size - 1L)
-    assert(keptSet(CurateIngest.keptState(spark, s"$dirC/kept")) == keptC)
-    assert(CurateIngest.fpState(spark, s"$dirC/fps", Long.MaxValue)
+    Flat.compact(spark, dirC, Seq(Store.Fp, Store.Kept, Store.Sig), upToBatch = shards.size - 1L)
+    assert(keptSet(Flat.inventory(spark, Store.Kept, dirC)) == keptC)
+    assert(Flat.state(spark, Store.Fp, dirC, Long.MaxValue).compact
       .as[String].collect().toSet == fpsC)
   }
 
@@ -668,21 +653,18 @@ class CurateStreamSpec extends AnyFunSuite {
     // batches 0-2: a arrives, then two unrelated shards
     Seq(Seq(mk(10L, a)), Seq(mk(170L, bodyB)), Seq(mk(320L, bodyC)))
       .zipWithIndex.foreach { case (s, i) =>
-        CurateIngest.writeShardStrict(s.toDF(), i.toLong,
-          s"$dir/fps", s"$dir/sigs", s"$dir/kept")
+        CurateIngest.writeShard(s.toDF(), i.toLong, dir, Funnel.strict())
       }
     // compact at batch 3 with a 2-batch signature window: a's signature
     // rows (src_batch 0 < 3 - 2) age out; fingerprints never do
-    CurateIngest.compactStores(spark, s"$dir/fps", s"$dir/kept",
-      Some(s"$dir/sigs"), upToBatch = 3L, sigRetentionBatches = Some(2L))
-    assert(CurateIngest.sigState(spark, s"$dir/sigs", Long.MaxValue)
+    Flat.compact(spark, dir, Seq(Store.Fp, Store.Kept, Store.Sig), upToBatch = 3L, sigRetentionBatches = Some(2L))
+    assert(Flat.state(spark, Store.Sig, dir, Long.MaxValue).compact
       .select("doc_id").as[Long].collect().toSet == Set(170L, 320L),
       "aged signature rows must drop at compaction")
     // the near-copy of the aged-out doc is re-admitted (documented
     // policy); an EXACT copy still drops (fingerprints are forever)
-    CurateIngest.writeShardStrict(Seq(mk(470L, b), mk(480L, a)).toDF(), 3L,
-      s"$dir/fps", s"$dir/sigs", s"$dir/kept")
-    val kept = keptSet(CurateIngest.keptState(spark, s"$dir/kept"))
+    CurateIngest.writeShard(Seq(mk(470L, b), mk(480L, a)).toDF(), 3L, dir, Funnel.strict())
+    val kept = keptSet(Flat.inventory(spark, Store.Kept, dir))
     assert(kept == Set(10L, 170L, 320L, 470L),
       s"retention semantics broken: $kept")
   }
@@ -744,9 +726,8 @@ class CurateStreamSpec extends AnyFunSuite {
         mk(470L, "many rivers run to the ocean where the tide turns and the boats drift home " * 4),
         mk(480L, "seven stars glow in the night sky while the owl hunts over the silent wood " * 4)))
     val ms = MemoryStream[DocEv]
-    val q = CurateIngest.startStrictBucketed(ms.toDF(), s"$dir/fps",
-      s"$dir/sigs", s"$dir/kept", s"$dir/chk", prefix,
-      compactEvery = 2L) // compaction fires mid-stream at batch 2
+    val q = CurateIngest.start(ms.toDF(), dir, s"$dir/chk", Funnel.strict(),
+      Bucketed(prefix), compactEvery = Some(2L)) // compaction fires mid-stream at batch 2
     try {
       shards.foreach { s => ms.addData(s: _*); q.processAllAvailable() }
       assert(q.exception.isEmpty, s"stream died: ${q.exception}")
@@ -756,7 +737,7 @@ class CurateStreamSpec extends AnyFunSuite {
       assert(!new java.io.File(s"$dir/fps/batch_id=0").exists)
       // streamed result == the deterministic strict loop (same shards)
       val streamed = keptSet(
-        CurateIngest.keptStateBucketed(spark, s"$dir/kept", prefix))
+        Bucketed(prefix).inventory(spark, Store.Kept, dir))
       val loop = keptSet(CurateIngest.incrCurateStrict(
         docs(shards.flatten.map(e => (e.doc_id, e.text)): _*)))
       assert(streamed == loop && streamed == Set(10L, 20L, 180L, 340L,
@@ -777,22 +758,21 @@ class CurateStreamSpec extends AnyFunSuite {
                 .nonEmpty
           }, s"$what: no exchange-free bucketed store side in\n${sides.mkString("\n---\n")}")
         val next = docs((500L, bodyD + " five hundred"))
-        val (fpC, fpD) = CurateIngest.fpStateSplit(spark, s"$dir/fps",
-          prefix, 4L)
-        val probe = CurateIngest.freshAgainstSplitStores(
-          CurateIngest.gateShard(next), fpC, fpD)
+        val StoreSides(fpC, Some(fpD)) = Bucketed(prefix).state(spark, Store.Fp, dir, 4L)
+        val probe = Funnel.fresh(
+          CurateIngest.gateShard(next),
+          StoreSides(fpC, Some(fpD)))
         probe.queryExecution.toRdd.count() // EXECUTED, not planned
         storeSideBucketedNoExchange(
           probe.queryExecution.executedPlan.collect {
             case j: SortMergeJoinExec if j.joinType.sql == "LEFT ANTI" =>
               j.right
           }, "fp anti-join")
-        val (sigC, sigD) = CurateIngest.sigStateSplit(spark, s"$dir/sigs",
-          prefix, 4L)
+        val StoreSides(sigC, Some(sigD)) = Bucketed(prefix).state(spark, Store.Sig, dir, 4L)
         val bands = CurateIngest.sigBands(
           CurateIngest.gateShard(next).select($"doc_id", $"text"))
           .localCheckpoint()
-        val probe2 = CurateIngest.sigCollisionIds(bands, sigC, sigD, 0.5)
+        val probe2 = Funnel.collisions(bands, StoreSides(sigC, Some(sigD)), 0.5)
         probe2.queryExecution.toRdd.count()
         storeSideBucketedNoExchange(
           probe2.queryExecution.executedPlan.collect {
@@ -817,40 +797,36 @@ class CurateStreamSpec extends AnyFunSuite {
     val aNear = base + "zzz qqq 11111 22222 99999" // ≈ a → strict drop
     // plain strict ingestion of two shards, then PLAIN compaction —
     // all folded state now lives in batch_id=-1 sentinel partitions
-    CurateIngest.writeShardStrict(docs((10L, a), (20L, bodyB)), 0L,
-      s"$dir/fps", s"$dir/sigs", s"$dir/kept")
-    CurateIngest.writeShardStrict(docs((170L, bodyB), (180L, bodyC)), 1L,
-      s"$dir/fps", s"$dir/sigs", s"$dir/kept")
-    CurateIngest.compactStores(spark, s"$dir/fps", s"$dir/kept",
-      Some(s"$dir/sigs"), upToBatch = 2L)
+    CurateIngest.writeShard(docs((10L, a), (20L, bodyB)), 0L, dir, Funnel.strict())
+    CurateIngest.writeShard(docs((170L, bodyB), (180L, bodyC)), 1L, dir, Funnel.strict())
+    Flat.compact(spark, dir, Seq(Store.Fp, Store.Kept, Store.Sig), upToBatch = 2L)
     assert(new java.io.File(s"$dir/fps/batch_id=-1").exists)
     try {
       // the bucketed readers cannot see the sentinel — silently losing
       // the folded state would re-admit its duplicates, so they refuse
       intercept[IllegalArgumentException] {
-        CurateIngest.fpStateSplit(spark, s"$dir/fps", prefix, 2L)
+        Bucketed(prefix).state(spark, Store.Fp, dir, 2L)
       }
       intercept[IllegalArgumentException] {
-        CurateIngest.sigStateSplit(spark, s"$dir/sigs", prefix, 2L)
+        Bucketed(prefix).state(spark, Store.Sig, dir, 2L)
       }
       intercept[IllegalArgumentException] {
-        CurateIngest.keptStateBucketed(spark, s"$dir/kept", prefix)
+        Bucketed(prefix).inventory(spark, Store.Kept, dir)
       }
       // the migration: ONE bucketed compaction folds the sentinel rows
       // into the bucket tables and deletes the sentinels
-      CurateIngest.compactStoresBucketed(spark, s"$dir/fps", s"$dir/kept",
-        Some(s"$dir/sigs"), upToBatch = 2L, tablePrefix = prefix)
+      Bucketed(prefix).compact(spark, dir,
+        Seq(Store.Fp, Store.Kept, Store.Sig), upToBatch = 2L)
       assert(!new java.io.File(s"$dir/fps/batch_id=-1").exists &&
         !new java.io.File(s"$dir/sigs/batch_id=-1").exists &&
         !new java.io.File(s"$dir/kept/batch_id=-1").exists)
       // migrated state is live: the next bucketed shard still drops an
       // exact copy (fp store) and a near copy (sig store) of migrated
       // docs, and the kept read model carries the pre-migration docs
-      CurateIngest.writeShardStrictBucketed(
-        docs((330L, bodyB), (340L, aNear), (350L, bodyD)), 2L,
-        s"$dir/fps", s"$dir/sigs", s"$dir/kept", prefix)
+      CurateIngest.writeShard(
+        docs((330L, bodyB), (340L, aNear), (350L, bodyD)), 2L, dir, Funnel.strict(), Bucketed(prefix))
       val kept = keptSet(
-        CurateIngest.keptStateBucketed(spark, s"$dir/kept", prefix))
+        Bucketed(prefix).inventory(spark, Store.Kept, dir))
       assert(kept == Set(10L, 20L, 180L, 350L), s"kept $kept")
     } finally Seq("fp", "sig", "kept").foreach(k =>
       spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$k"))

@@ -309,7 +309,7 @@ class ScaleProbeSpec extends AnyFunSuite {
 
   test("ingestion at 10×: store anti-join keys on the fingerprint, planted dups drop",
       ScaleProbe) {
-    import graft.streaming.CurateIngest
+    import graft.streaming.{CurateIngest, Funnel, Store, StoreSides}
     // gate open (floor 0, observed langs): the probe tests the join
     // shapes at volume, not gate policy — that's CurateSpec's job
     val langs = docs10x.limit(1)
@@ -323,8 +323,8 @@ class ScaleProbeSpec extends AnyFunSuite {
       .unionByName(docs10x.filter(col("doc_id") < 100)
         .select((col("doc_id") + 60000).as("doc_id"), col("text"),
           col("n_chars")))
-    val fresh = CurateIngest.freshAgainstStore(
-      CurateIngest.gateShard(shard, 0L, langs), store)
+    val fresh = Funnel.fresh(
+      CurateIngest.gateShard(shard, 0L, langs), StoreSides(store))
     val plan = ranPlan(fresh)
     assertShapes(plan, "freshAgainstStore")
     // shard and store meet ONLY on the 16-byte fingerprint key
@@ -332,7 +332,9 @@ class ScaleProbeSpec extends AnyFunSuite {
       s"store anti-join missing:\n${plan.take(4000)}")
     assert(plan.contains("fingerprint"),
       s"anti-join should key on fingerprint:\n${plan.take(4000)}")
-    val (kept, fps) = CurateIngest.ingestShard(shard, store, 0L, langs)
+    val out = Funnel.step(shard, Funnel.exact(CurateIngest.gateShard(_, 0L, langs)),
+      Map(Store.Fp -> StoreSides(store)))
+    val (kept, fps) = (out.kept(), out.appends(Store.Fp))
     val keptIds = kept.select("doc_id").as[Long].collect()
     assert(!keptIds.exists(_ >= 60000L),
       "exact copies of stored docs must drop first-wins")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.dedup.SpanScrub
-import graft.streaming.ScrubIngest
+import graft.streaming.{ScrubIngest, Store, StoreLayout, StoreSides}
 
 /** Incremental ExactSubstr: the shard-looped / streamed span scrub
   * must be indistinguishable from the flat batch scrub when shards
@@ -59,19 +59,18 @@ class ScrubStreamSpec extends AnyFunSuite {
       Seq(mk(170L, novel("gamma") + " " + boiler)),
       Seq(mk(320L, boiler + " " + novel("delta"))))
     val ms = MemoryStream[DocEv]
-    val q = ScrubIngest.start(ms.toDF(), s"$dir/grams", s"$dir/out",
-      s"$dir/chk", compactEvery = Some(2L))
+    val q = ScrubIngest.start(ms.toDF(), dir, s"$dir/chk",
+      compactEvery = Some(2L))
     try {
       shards.foreach { s => ms.addData(s: _*); q.processAllAvailable() }
-      val streamed = ScrubIngest.scrubbedState(spark, s"$dir/out")
+      val streamed = ScrubIngest.scrubbedState(spark, dir)
         .orderBy("doc_id").collect().toSeq
       val all = docs(shards.flatten.map(e => (e.doc_id, e.text)): _*)
       assert(streamed == fullScrub(all), "streamed != batch scrub")
       // crash-replay the last batch: partitions rewrite identically
       // (gramState(beforeBatch) pins the pre-batch store view)
-      ScrubIngest.writeScrubShard(shards(2).toDF(), batchId = 2L,
-        s"$dir/grams", s"$dir/out")
-      val replayed = ScrubIngest.scrubbedState(spark, s"$dir/out")
+      ScrubIngest.writeShard(shards(2).toDF(), batchId = 2L, dir)
+      val replayed = ScrubIngest.scrubbedState(spark, dir)
         .orderBy("doc_id").collect().toSeq
       assert(replayed == streamed, "replay changed the output")
       // the compaction tick actually folded: one sentinel partition
@@ -94,15 +93,15 @@ class ScrubStreamSpec extends AnyFunSuite {
       Seq(mk(320L, boiler + " " + novel("delta"))), // post-compaction cut
       Seq(mk(470L, novel("epsilon"))))
     val ms = MemoryStream[DocEv]
-    val q = ScrubIngest.startBucketed(ms.toDF(), s"$dir/grams",
-      s"$dir/out", s"$dir/chk", prefix, compactEvery = 2L)
+    val q = ScrubIngest.start(ms.toDF(), dir, s"$dir/chk",
+      StoreLayout.Bucketed(prefix), compactEvery = Some(2L))
     try {
       shards.foreach { s => ms.addData(s: _*); q.processAllAvailable() }
       assert(q.exception.isEmpty, s"stream died: ${q.exception}")
       // compaction ran mid-stream: table exists, folded partitions gone
       assert(spark.catalog.tableExists(s"${prefix}_gram"))
       assert(!new java.io.File(s"$dir/grams/batch_id=0").exists)
-      val streamed = ScrubIngest.scrubbedState(spark, s"$dir/out")
+      val streamed = ScrubIngest.scrubbedState(spark, dir)
         .orderBy("doc_id").collect().toSeq
       val all = docs(shards.flatten.map(e => (e.doc_id, e.text)): _*)
       assert(streamed == fullScrub(all), "bucketed streamed != batch")
@@ -118,8 +117,8 @@ class ScrubStreamSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
-        val (gC, gD) = ScrubIngest.gramStateSplit(spark, s"$dir/grams",
-          prefix, 4L)
+        val StoreSides(gC, Some(gD)) = StoreLayout.Bucketed(prefix)
+          .state(spark, Store.Gram, dir, 4L)
         // the exact frame scrubShardSplit pins behind its checkpoint
         val probe = SpanScrub.storeProbe(
           SpanScrub.fpGrams(docs((500L, novel("zeta") + " " + boiler)), 40),
@@ -164,12 +163,11 @@ class ScrubStreamSpec extends AnyFunSuite {
       val counts = seeds.indices.map { b =>
         val shard = all.filter(col("doc_id") >= b * 150L &&
           col("doc_id") < (b + 1) * 150L)
-        ScrubIngest.writeScrubShardBucketed(shard, b.toLong,
-          s"$d/grams", s"$d/out", px)
+        val layout = StoreLayout.Bucketed(px, buckets, maxFiles)
+        ScrubIngest.writeShard(shard, b.toLong, d, layout)
         if (b > 0)
-          ScrubIngest.compactGramsBucketed(spark, s"$d/grams",
-            upToBatch = b.toLong, px, buckets, maxFiles)
-        ScrubIngest.tableDataFiles(spark, s"${px}_gram")
+          layout.compact(spark, d, Seq(Store.Gram), upToBatch = b.toLong)
+        StoreLayout.tableDataFiles(spark, s"${px}_gram")
       }
       (d, counts)
     }
@@ -189,13 +187,14 @@ class ScrubStreamSpec extends AnyFunSuite {
         s"hygiene unbounded: $hygCounts")
       // the fold lost nothing: gram content identical to the control
       def gramSet(d: String, px: String): Set[Long] = {
-        val (gC, gD) = ScrubIngest.gramStateSplit(spark, s"$d/grams", px, 99L)
+        val StoreSides(gC, Some(gD)) =
+          StoreLayout.Bucketed(px).state(spark, Store.Gram, d, 99L)
         gC.unionByName(gD).select("gram").as[Long].collect().toSet
       }
       assert(gramSet(hd, prefix) == gramSet(cd, ctl),
         "hygiene rewrite changed the gram store")
       // and the scrub output is still the flat batch answer
-      assert(ScrubIngest.scrubbedState(spark, s"$hd/out")
+      assert(ScrubIngest.scrubbedState(spark, hd)
         .orderBy("doc_id").collect().toSeq == fullScrub(all))
       // probe plan after the rewrite: still a shuffled-hash join over
       // an exchange-free, sort-free bucketed scan
@@ -204,8 +203,8 @@ class ScrubStreamSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       try {
-        val (gC, gD) = ScrubIngest.gramStateSplit(spark, s"$hd/grams",
-          prefix, 99L)
+        val StoreSides(gC, Some(gD)) = StoreLayout.Bucketed(prefix)
+          .state(spark, Store.Gram, hd, 99L)
         val probe = SpanScrub.storeProbe(
           SpanScrub.fpGrams(docs((900L, novel("eta") + " " + boiler)), 40),
           gC, gD)
@@ -235,8 +234,7 @@ class ScrubStreamSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("scrubshort").toString
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[DocEv]
-    val q = ScrubIngest.start(ms.toDF(), s"$dir/grams", s"$dir/out",
-      s"$dir/chk")
+    val q = ScrubIngest.start(ms.toDF(), dir, s"$dir/chk")
     try {
       ms.addData(DocEv(10L, "tiny", 4L), DocEv(20L, "also tiny", 9L))
       q.processAllAvailable()
@@ -244,7 +242,7 @@ class ScrubStreamSpec extends AnyFunSuite {
       ms.addData(DocEv(30L, t30, t30.length.toLong))
       q.processAllAvailable()
       assert(q.exception.isEmpty, s"stream died: ${q.exception}")
-      val out = ScrubIngest.scrubbedState(spark, s"$dir/out")
+      val out = ScrubIngest.scrubbedState(spark, dir)
         .orderBy("doc_id").collect().toSeq
       assert(out.map(_.getLong(0)) == Seq(10L, 20L, 30L))
       assert(out.forall(_.getAs[Long]("cut_chars") == 0L))
@@ -264,8 +262,7 @@ class ScrubStreamSpec extends AnyFunSuite {
     implicit val ctx = spark.sqlContext
     val mk = (id: Long, t: String) => DocEv(id, t, t.length.toLong)
     val ms = MemoryStream[DocEv]
-    def start() = ScrubIngest.start(ms.toDF(), s"$dir/grams", s"$dir/out",
-      s"$dir/chk")
+    def start() = ScrubIngest.start(ms.toDF(), dir, s"$dir/chk")
     val q1 = start()
     try {
       ms.addData(mk(10L, novel("alpha") + " " + boiler))
@@ -275,7 +272,7 @@ class ScrubStreamSpec extends AnyFunSuite {
     try {
       ms.addData(mk(170L, novel("gamma") + " " + boiler))
       q2.processAllAvailable()
-      val out = ScrubIngest.scrubbedState(spark, s"$dir/out")
+      val out = ScrubIngest.scrubbedState(spark, dir)
         .orderBy("doc_id").collect().toSeq
       val batch = fullScrub(docs(
         (10L, novel("alpha") + " " + boiler),

@@ -147,4 +147,45 @@ class StreamingSpec extends AnyFunSuite {
         "stream-static join must not create a state store")
     } finally q.stop()
   }
+
+  /** One events file at `path`: the file source globs on the file name,
+    * so the single part file is moved into place. */
+  private def writeEvents(path: java.nio.file.Path, ids: Range): Unit = {
+    val tmp = java.nio.file.Files.createTempDirectory("evpart").resolve("out")
+    ids.map(i => (i.toLong, new Timestamp(base + i * 10L), i % 7L, "view", 1.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+      .coalesce(1).write.parquet(tmp.toString)
+    val part = java.nio.file.Files.list(tmp)
+      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+    java.nio.file.Files.createDirectories(path.getParent)
+    java.nio.file.Files.move(part, path)
+  }
+
+  /** Rows the events file stream over `dir` delivers: everything there
+    * at start, then whatever `landLater` adds. */
+  private def fileStreamRows(dir: java.nio.file.Path)(landLater: => Unit): Long = {
+    n += 1; val name = s"events_file_$n"
+    val q = Pipelines.eventsFileStream(spark, dir.toString)
+      .writeStream.format("memory").queryName(name).start()
+    try {
+      q.processAllAvailable()
+      landLater
+      q.processAllAvailable()
+    } finally q.stop()
+    spark.table(name).count()
+  }
+
+  test("eventsFileStream reads events files in plain subdirectories") {
+    val dir = java.nio.file.Files.createTempDirectory("evsub")
+    writeEvents(dir.resolve("events.parquet"), 0 until 10)
+    writeEvents(dir.resolve("sub/events.parquet"), 10 until 1010)
+    assert(fileStreamRows(dir)(()) == 1010L)
+  }
+
+  test("eventsFileStream: a k=<n> directory landing after start is read, not fatal") {
+    val dir = java.nio.file.Files.createTempDirectory("evlate")
+    writeEvents(dir.resolve("events.parquet"), 0 until 10)
+    assert(fileStreamRows(dir)(
+      writeEvents(dir.resolve("k=1/events.parquet"), 10 until 1010)) == 1010L)
+  }
 }
