@@ -63,20 +63,15 @@ object Bench {
     // whole run to poison all samples of any query. Each pass's
     // per-query times go to stderr so a regression can be attributed to
     // one pass (burst) vs all passes (real).
-    def timeAll(pass: Int, nPasses: Int): Seq[(String, Double)] = {
-      val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
+    def timeAll(pass: Int, nPasses: Int): (Seq[(String, Double)], Seq[String]) = {
+      val ordered = SparkEntry.queries.keys.toSeq.sorted
       val off = ordered.size * pass / nPasses
-      val seq = ordered.drop(off) ++ ordered.take(off)
-      seq.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] pass=$pass $name%-22s $dt%.3f")
-        name -> dt
-      }
+      timeQueries(ordered.drop(off) ++ ordered.take(off)) { name =>
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      } { (name, r) => r match {
+        case Right(dt) => System.err.println(f"[bench] pass=$pass $name%-22s $dt%.3f")
+        case Left(e) => System.err.println(s"[bench] pass=$pass $name failed: ${e.getMessage}")
+      }}
     }
     val nPasses = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(3)
     // -------- host sentinel (r16, VERDICT r15 #2). Two rounds of
@@ -117,9 +112,11 @@ object Bench {
       sentinels += s
       System.err.println(f"[bench] sentinel pre-pass=$p $s%.3f")
       val r = timeAll(p, nPasses)
-      System.err.println(f"[bench] pass=$p total=${r.map(_._2).sum}%.2f")
+      System.err.println(f"[bench] pass=$p total=${r._1.map(_._2).sum}%.2f")
       r
     }
+    val (perQuery, failed) = overPasses(byPass)
+    val failedSet = failed.toSet
     // closing sample: brackets the final pass so a stall in pass N-1
     // shows on at least one side
     sentinels += sentinel()
@@ -131,15 +128,15 @@ object Bench {
     // ONE pass was hit by a burst (environment), slow in EVERY pass
     // changed plan or data (real). Without them a drift needs a rerun
     // to attribute.
-    val perQuery = byPass.flatten
-      .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy(_._1)
     val results = perQuery.map { case (k, ts) => k -> ts.min }
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
       .mkString("{", ",", "}")
     val passesJson = perQuery.map { case (k, ts) =>
       "\"" + k + "\":[" + ts.map(t => f"$t%.3f").mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val passTotals = byPass.map(r => f"${r.map(_._2).sum}%.2f").mkString("[", ",", "]")
+    val passTotals = byPass.map(r =>
+      f"${r._1.filterNot(q => failedSet(q._1)).map(_._2).sum}%.2f").mkString("[", ",", "]")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     // The harness that archives stdout keeps only its LAST 2000 chars,
     // and ~140 query names alone exceed that — a full per-query JSON on
@@ -219,14 +216,14 @@ object Bench {
     // exact truncation this split-artifact design exists to survive
     val normJson = normJsonOf(flagged)
     val normJsonTop = normJsonOf(flagged.take(8))
-    val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$normJson,"sentinel":$sentinelJson,"queries":$qs,"passes":$passesJson,"pass_totals":$passTotals,"sf":"$sfDir"}"""
+    val fullJson = f"""{"metric":"total","value":$total%.3f,"unit":"sec",$normJson,"sentinel":$sentinelJson,"failed":$failedJson,"queries":$qs,"passes":$passesJson,"pass_totals":$passTotals,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (fullJson + "\n").getBytes("UTF-8"))
     catch { case e: Throwable =>
       System.err.println(s"[bench] full artifact write failed: ${e.getMessage}")
     }
     val slowestFirst = results.sortBy { case (_, v) => (-v, "") }
-    val header = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","pass_totals":$passTotals,"sentinel":$sentinelJson,$normJsonTop,"full":"$fullPath","queries_total":${results.size},"""
+    val header = f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir","pass_totals":$passTotals,"sentinel":$sentinelJson,$normJsonTop,"full":"$fullPath","failed":$failedJson,"queries_total":${results.size},"""
     val budget = 1950 - header.length - 60 // room for the closing fields
     val picked = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     var used = 0
@@ -240,5 +237,35 @@ object Bench {
     println(header +
       s""""queries_omitted":${results.size - picked.size},"queries":$qsTop}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  /** Per-query pass times, by name, from each pass's (timed, failed)
+    * outcome. A query that threw in ANY pass is only reported as failed
+    * and is left out of every timing figure — the minimum, the totals and
+    * the drift flags — because its partial time would read as a speedup. */
+  def overPasses(byPass: Seq[(Seq[(String, Double)], Seq[String])])
+  : (Seq[(String, Seq[Double])], Seq[String]) = {
+    val failed = byPass.flatMap(_._2).distinct.sorted
+    val perQuery = byPass.flatMap(_._1).filterNot(r => failed.contains(r._1))
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toSeq.sortBy(_._1)
+    (perQuery, failed)
+  }
+
+  /** Time `run` once per query, in order. A query that throws records
+    * NO time — a crash must never read as a speedup — only its name, in
+    * the failed list. `report` sees each outcome as it lands. */
+  def timeQueries(names: Seq[String])(run: String => Unit)(
+      report: (String, Either[Throwable, Double]) => Unit)
+  : (Seq[(String, Double)], Seq[String]) = {
+    val outcomes = names.map { name =>
+      val t0 = System.nanoTime()
+      val r = try { run(name); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Left(e) }
+      report(name, r)
+      name -> r
+    }
+    (outcomes.collect { case (n, Right(dt)) => n -> dt },
+     outcomes.collect { case (n, Left(_)) => n })
   }
 }

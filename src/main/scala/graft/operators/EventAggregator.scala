@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Tumbling-window event aggregation.
@@ -12,12 +12,16 @@ import org.apache.spark.sql.functions._
   * Spark-first notes:
   *  - `window()` + groupBy gives partial/final HashAggregate around a
   *    single hash Exchange on (window, event_type) — the minimal shuffle.
-  *  - `countDistinct` stays exact (the reference's e2e asserts exact
-  *    values); [[aggregateApprox]] is the 100 TB variant (HLL++, no
-  *    Expand, mergeable partials).
-  *  - Works unchanged on a streaming DataFrame (append mode after
-  *    `withWatermark`); window bounds are emitted as epoch millis so
-  *    batch results hash-compare cleanly against the DuckDB oracle.
+  *  - The exact distinct count is `size(collect_set(user_id))`, not
+  *    `countDistinct`: it is an ordinary (non-distinct) aggregate, so the
+  *    SAME definition runs as a batch query and as a streaming append
+  *    aggregate after `withWatermark` (Spark's streaming aggregation
+  *    rejects distinct aggregates). Its state is the user-id set per
+  *    group, the same state the reference's exact distinct holds.
+  *    [[aggregateApprox]] is the bounded-state variant (HLL++, mergeable
+  *    partials).
+  *  - Window bounds are emitted as epoch millis so batch results
+  *    hash-compare cleanly against the DuckDB oracle.
   */
 object EventAggregator {
   /** Allowed-type filter set; reference keeps 4 of its event types
@@ -28,21 +32,11 @@ object EventAggregator {
                 timeCol: String = "ts",
                 windowDuration: String = "60 seconds",
                 allowed: Seq[String] = defaultAllowed): DataFrame =
-    events
-      .filter(col("event_type").isin(allowed: _*))
-      .groupBy(window(col(timeCol), windowDuration), col("event_type"))
-      .agg(
-        count(col("event_type")).as("event_count"),
-        countDistinct(col("user_id")).as("user_count"))
-      .select(
-        unix_millis(col("window.start")).as("window_start_ms"),
-        unix_millis(col("window.end")).as("window_end_ms"),
-        col("event_type"),
-        col("event_count"),
-        col("user_count"))
+    byWindowAndType(events, timeCol, windowDuration, allowed,
+      size(collect_set(col("user_id"))).cast("long"))
 
-  /** Scale-out variant: HLL++ distinct (relative error `rsd`) — avoids the
-    * exact-distinct shuffle of full user_id sets per group at 100 TB. */
+  /** Scale-out variant: HLL++ distinct (relative error `rsd`) — avoids
+    * holding full user_id sets per group at 100 TB. */
   def aggregateApprox(events: DataFrame,
                       timeCol: String = "ts",
                       windowDuration: String = "60 seconds",
@@ -53,12 +47,18 @@ object EventAggregator {
     // × partial aggregates that is GBs of short-lived buffers and the GC
     // cost dwarfs the aggregation itself. Tighten only with group counts
     // in mind.
+    byWindowAndType(events, timeCol, windowDuration, allowed,
+      approx_count_distinct(col("user_id"), rsd))
+
+  private def byWindowAndType(events: DataFrame, timeCol: String,
+                              windowDuration: String, allowed: Seq[String],
+                              userCount: Column): DataFrame =
     events
       .filter(col("event_type").isin(allowed: _*))
       .groupBy(window(col(timeCol), windowDuration), col("event_type"))
       .agg(
         count(col("event_type")).as("event_count"),
-        approx_count_distinct(col("user_id"), rsd).as("user_count"))
+        userCount.as("user_count"))
       .select(
         unix_millis(col("window.start")).as("window_start_ms"),
         unix_millis(col("window.end")).as("window_end_ms"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Tumbling-window numeric metrics (avg + exact p95) per category.
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * holding every value per group is not acceptable.
   *
   * The average is FIXED-POINT: each value quantizes to 1e-4 once
-  * (deterministic per row), the sum is an exact BIGINT, and only the
-  * final mean divides. A plain `round(avg(double), 4)` is NOT
+  * (deterministic per row), the sum is an exact BIGINT, and the mean
+  * rounds in integer arithmetic before one final division. A plain `round(avg(double), 4)` is NOT
   * hash-stable across engines — partial-aggregation order shifts the
   * last ulp, and at sf0.1 one group of ~8k landed exactly on a 4 dp
   * half boundary (57.09875) and rounded differently in Spark and
@@ -25,33 +25,33 @@ import org.apache.spark.sql.functions._
   */
 object PerformanceTracker {
 
-  /** Deterministic 4 dp mean: quantize → exact integer sum → divide. */
-  def exactAvg(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    round(sum(round(c * 10000).cast("long")).cast("double") /
-      (count(c) * 10000L).cast("double"), 4)
+  /** Deterministic 4 dp mean: quantize → exact integer sum → round the
+    * exact rational mean half away from zero in integer arithmetic →
+    * one final division. Rounding a double quotient instead lets an
+    * exact 4 dp half (1506.33965) land on either neighbour. */
+  def exactAvg(c: Column): Column = {
+    val s = sum(round(c * 10000).cast("long"))
+    val n = count(c)
+    val units = call_function("div", abs(s) * 2 + n, n * 2)
+    when(s < 0, -units).otherwise(units).cast("double") / 10000.0
+  }
 
-  /** The DuckDB twin of [[exactAvg]] over a `value` expression. */
-  def exactAvgSql(expr: String = "value"): String =
-    s"round(CAST(sum(CAST(round($expr * 10000) AS BIGINT)) AS DOUBLE) / (count($expr) * 10000.0), 4)"
+  /** The DuckDB twin of [[exactAvg]] over a `value` expression: the same
+    * integer expression, so both engines agree on every sign. */
+  def exactAvgSql(expr: String = "value"): String = {
+    val s = s"sum(CAST(round($expr * 10000) AS BIGINT))"
+    val units = s"((2 * abs($s) + count($expr)) // (2 * count($expr)))"
+    s"CAST(CASE WHEN $s < 0 THEN -$units ELSE $units END AS DOUBLE) / 10000.0"
+  }
+
   def metrics(events: DataFrame,
               timeCol: String = "ts",
               windowDuration: String = "300 seconds",
               valueCol: String = "value",
-              categoryCol: Option[org.apache.spark.sql.Column] = None): DataFrame =
-    events
-      .filter(col(valueCol).isNotNull)
-      .withColumn("category",
-        categoryCol.getOrElse(Categorizer.categorize(col("event_type"))))
-      .groupBy(window(col(timeCol), windowDuration), col("category"))
-      .agg(
-        exactAvg(col(valueCol)).as("avg_value"),
-        round(percentile(col(valueCol), lit(0.95)), 4).as("p95_value"))
-      .select(
-        unix_millis(col("window.start")).as("window_start_ms"),
-        unix_millis(col("window.end")).as("window_end_ms"),
-        col("category"),
-        col("avg_value"),
-        col("p95_value"))
+              categoryCol: Option[Column] = None): DataFrame =
+    byWindowAndCategory(events, timeCol, windowDuration, valueCol,
+      categoryCol.getOrElse(Categorizer.categorize(col("event_type"))),
+      round(percentile(col(valueCol), lit(0.95)), 4))
 
   /** Scale-out variant: approximate percentile, bounded state per group. */
   def metricsApprox(events: DataFrame,
@@ -59,13 +59,21 @@ object PerformanceTracker {
                     windowDuration: String = "300 seconds",
                     valueCol: String = "value",
                     accuracy: Int = 10000): DataFrame =
+    byWindowAndCategory(events, timeCol, windowDuration, valueCol,
+      Categorizer.categorize(col("event_type")),
+      percentile_approx(col(valueCol), lit(0.95), lit(accuracy)))
+
+  private def byWindowAndCategory(events: DataFrame, timeCol: String,
+                                  windowDuration: String, valueCol: String,
+                                  category: Column,
+                                  p95: Column): DataFrame =
     events
       .filter(col(valueCol).isNotNull)
-      .withColumn("category", Categorizer.categorize(col("event_type")))
+      .withColumn("category", category)
       .groupBy(window(col(timeCol), windowDuration), col("category"))
       .agg(
         exactAvg(col(valueCol)).as("avg_value"),
-        percentile_approx(col(valueCol), lit(0.95), lit(accuracy)).as("p95_value"))
+        p95.as("p95_value"))
       .select(
         unix_millis(col("window.start")).as("window_start_ms"),
         unix_millis(col("window.end")).as("window_end_ms"),

@@ -1,11 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Size}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, CollectSet, Count, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.types.IntegerType
 
-/** Opt-in optimizer rule: rewrite exact COUNT(DISTINCT x) into
-  * HyperLogLog++ when `spark.graft.approxDistinct=true`.
+/** Opt-in optimizer rule: rewrite exact COUNT(DISTINCT x), and its
+  * streaming-safe form `size(collect_set(x))` (the exact distinct of
+  * [[graft.operators.EventAggregator.aggregate]]), into HyperLogLog++
+  * when `spark.graft.approxDistinct=true`.
   *
   * The 100 TB "approx switch" (SURVEY §7.4) as a planner concern rather
   * than a query-code concern: the same dashboards/pipelines run
@@ -28,5 +32,9 @@ case class ApproxDistinctRewrite() extends Rule[LogicalPlan] {
         ae.copy(
           aggregateFunction = HyperLogLogPlusPlus(c.children.head),
           isDistinct = false)
+      // Size is an int: keep the type its parent expressions were
+      // resolved against
+      case Size(ae @ AggregateExpression(cs: CollectSet, _, false, None, _), _) =>
+        Cast(ae.copy(aggregateFunction = HyperLogLogPlusPlus(cs.child)), IntegerType)
     }
 }

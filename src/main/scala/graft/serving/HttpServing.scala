@@ -171,20 +171,27 @@ class MetricsHttpServer(store: MetricsStore, port: Int = 0,
   def stop(): Unit = if (server != null) server.stop(0)
 
   // -- live refresh: the cache-apply analog ----------------------------
-  private lazy val refresher =
-    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
+  // One refresh thread with room for ONE pending refresh; a submit while
+  // one is pending is dropped. `refresh()` always rebuilds from the
+  // current table state, so the pending refresh (which starts after every
+  // dropped request arrived) serves them all: last-write-wins, and a
+  // burst of progress events costs at most two refreshes.
+  private lazy val refresher = new java.util.concurrent.ThreadPoolExecutor(
+    1, 1, 0L, java.util.concurrent.TimeUnit.MILLISECONDS,
+    new java.util.concurrent.ArrayBlockingQueue[Runnable](1),
+    (r: Runnable) => {
       val t = new Thread(r, "metrics-http-refresh"); t.setDaemon(true); t
-    })
+    },
+    new java.util.concurrent.ThreadPoolExecutor.DiscardPolicy)
 
   /** Attach a listener that refreshes the snapshot after every
     * micro-batch of `queryName` — the reference's stream→Redis apply
-    * loop, expressed as progress-driven snapshot rebuilds. The refresh
-    * runs on a dedicated thread (never on the listener bus: refresh is
-    * bounded Spark work, and a slow refresh must drop behind, not
-    * stall every query's progress events); a single-thread executor
-    * makes overlapping triggers queue, and `refresh()` always rebuilds
-    * from the current table state so the queue collapses to
-    * last-write-wins. */
+    * loop, expressed as progress-driven snapshot rebuilds. No-data
+    * batches count too: in append mode they are where the watermark
+    * closes windows. The refresh runs on the dedicated refresh thread
+    * (never on the listener bus: refresh is bounded Spark work, and a
+    * slow refresh must drop behind, not stall every query's progress
+    * events); requests arriving during a refresh coalesce into one. */
   def attachAutoRefresh(spark: org.apache.spark.sql.SparkSession,
                         queryName: String = "event_metrics")
   : org.apache.spark.sql.streaming.StreamingQueryListener = {
@@ -194,8 +201,7 @@ class MetricsHttpServer(store: MetricsStore, port: Int = 0,
           e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(
           e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == queryName && e.progress.numInputRows > 0)
-          submitRefresh()
+        if (e.progress.name == queryName) submitRefresh()
       // also refresh when any query terminates: with a run-to-complete
       // trigger (AvailableNow) the single progress event can race the
       // sink's very first commit — the empty-dir read is swallowed and
@@ -206,11 +212,9 @@ class MetricsHttpServer(store: MetricsStore, port: Int = 0,
           e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         submitRefresh()
       private def submitRefresh(): Unit =
-        refresher.submit(new Runnable {
-          override def run(): Unit =
-            try refresh()
-            catch { case _: Throwable => () } // table mid-write: a later event refreshes
-        })
+        refresher.execute(() =>
+          try refresh()
+          catch { case _: Throwable => () }) // table mid-write: a later event refreshes
     }
     spark.streams.addListener(l)
     l

@@ -8,9 +8,12 @@ import graft.operators.{EventAggregator, PerformanceTracker, SessionTracker}
 /** Streaming topology: the Spark analog of the reference's
   * JobCoordinator (services/processing/src/core/job_coordinator.py:11-86).
   *
-  * The three aggregation pipelines reuse the SAME batch transforms
+  * The three aggregation pipelines ARE the batch transforms
   * (graft.operators.*) — windowed groupBy code is batch/stream agnostic
   * in Spark; streaming adds only a watermark (W4) and an output sink.
+  * Exact distinct users included: [[EventAggregator.aggregate]] counts
+  * them with `size(collect_set(...))`, a non-distinct aggregate that
+  * the built-in streaming append aggregation accepts.
   * They run as three independent StreamingQueries sharing one source
   * definition (W9 — the idiomatic-Spark replacement for Flink's
   * StatementSet: per-query checkpoints, independent restart/backfill).
@@ -46,12 +49,13 @@ object Pipelines {
     }
   }
 
-  /** Exact distinct-user counts (custom state op — Spark's built-in
-    * streaming agg can't do exact distinct; see [[ExactEventMetrics]]). */
+  /** Exact distinct-user counts: the batch [[EventAggregator.aggregate]]
+    * behind a watermark. */
   def eventMetrics(events: DataFrame,
                    watermark: String = "10 seconds",
                    windowMs: Long = 60000L): DataFrame =
-    ExactEventMetrics(events, watermark, windowMs).toDF()
+    EventAggregator.aggregate(events.withWatermark("ts", watermark),
+      windowDuration = s"$windowMs milliseconds")
 
   /** Scale-path variant: HLL distinct, built-in streaming agg, bounded
     * state per group. */
@@ -129,22 +133,6 @@ object Pipelines {
     part.write.mode("overwrite").partitionBy("batch_id").parquet(datePath)
   }
 
-  /** Storage sink (S5 analog): write each micro-batch to a parquet
-    * table partitioned by UTC date of the window start and sorted within
-    * partitions on the MergeTree-style sort key — date partition pruning
-    * then mirrors ClickHouse range reads (SURVEY §4 storage layout).
-    * Batch replays after crash are absorbed by [[writeStorageBatch]]'s
-    * partition-overwrite idempotence (exactly-once table contents). */
-  def startStorageSink(df: DataFrame, path: String, checkpoint: String,
-                       sortKey: Seq[String]): StreamingQuery =
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeStorageBatch(batch, batchId, path, sortKey)
-      }
-      .start()
-
   /** Processing-time mode (P11/W5): the reference's non-production runs
     * swap the event-time column for Flink's `PROCTIME()`
     * (event_source.py:58-59; jobs switch on app_environment). Spark
@@ -158,9 +146,8 @@ object Pipelines {
   def withProcTime(events: DataFrame, timeCol: String = "ts"): DataFrame =
     events.withColumn(timeCol, current_timestamp())
 
-  /** Proc-time event metrics: the reference's dev-mode aggregation.
-    * Uses the HLL distinct variant — streaming-safe built-in agg; the
-    * exact-distinct state op stays the event-time production path. */
+  /** Proc-time event metrics: the reference's dev-mode aggregation,
+    * on the HLL distinct variant (bounded state per group). */
   def procTimeMetrics(events: DataFrame, window: String = "60 seconds"): DataFrame =
     eventMetricsApprox(withProcTime(events), watermark = "0 seconds", window = window)
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.operators.{Categorizer, PerformanceTracker, SessionTracker}
+import graft.operators.{Categorizer, EventAggregator, PerformanceTracker, SessionTracker}
 
 /** The reference's three queries on their NATIVE wire schema
   * (SURVEY §2.10, production window sizes): takes the output of
@@ -25,14 +25,12 @@ object ReferencePipelines {
       .withColumn("ts", col("event_time"))
       .withWatermark("ts", watermark)
 
-  /** Q1: tumble 60 s × event_type, count + EXACT distinct users.
-    * (ExactEventMetrics applies the watermark itself — don't pre-apply,
-    * Spark disallows redefining a watermark.) */
+  /** Q1: tumble 60 s × event_type, count + EXACT distinct users. */
   def eventMetrics(decoded: DataFrame,
                    watermark: String = "10 seconds",
                    windowMs: Long = 60000L): DataFrame =
-    ExactEventMetrics(decoded.withColumn("ts", col("event_time")),
-      watermark, windowMs, allowedTypes).toDF()
+    EventAggregator.aggregate(withEventTimeAs(decoded, watermark),
+      windowDuration = s"$windowMs milliseconds", allowed = allowedTypes)
 
   /** Q2: session gap 1800 s keyed (session_id, user_id), page_views
     * only, MAX(device_category) from the UA rules. */

@@ -58,9 +58,9 @@ object Curate {
     // OPTIMIZATION_r17.md); this form keeps the single stage-boundary
     // checkpoint — the near-dedup stage consumes the exact survivors
     // several times (shingles, quality join, final anti-join), the
-    // standard curation-pipeline shape. A/B at sf0.1 (Profile17
-    // md5ab, warmed): window 1.85 s, semi-join 1.68, this 1.56 —
-    // outputs bit-equal by exceptAll both ways.
+    // standard curation-pipeline shape. A/B at sf0.1 (r17 md5ab
+    // harness, warmed; OPTIMIZATION_r17.md): window 1.85 s, semi-join
+    // 1.68, this 1.56 — outputs bit-equal by exceptAll both ways.
     val cols = scored.columns
     val exact = gated
       .groupBy(md5(col("text")).as("__h"))

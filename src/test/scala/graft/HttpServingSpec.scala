@@ -127,4 +127,53 @@ class HttpServingSpec extends AnyFunSuite {
       server.stop()
     }
   }
+
+  test("auto-refresh coalesces: a burst of progress events runs at most 2 refreshes") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    val gate = new CountDownLatch(1)
+    val refreshes = new AtomicInteger
+    // a slow, counting store: every refresh blocks until the burst is over
+    val store = new MetricsStore(spark, "/nonexistent-metrics-store") {
+      override def windows(limit: Int): org.apache.spark.sql.DataFrame = {
+        refreshes.incrementAndGet()
+        gate.await(60, TimeUnit.SECONDS)
+        spark.range(1).toDF("window_start_ms")
+      }
+    }
+    val server = new MetricsHttpServer(store)
+    val qName = "refresh_burst"
+    val listener = server.attachAutoRefresh(spark, qName)
+    // registered after the server's listener, so the bus has handed it
+    // every event this one has seen
+    val progressSeen = new AtomicInteger
+    val counter = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        if (e.progress.name == qName) progressSeen.incrementAndGet()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(counter)
+    implicit val ctx = spark.sqlContext
+    import spark.implicits._
+    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
+    val q = ms.toDF().writeStream.format("memory").queryName(qName).start()
+    try {
+      (1 to 8).foreach { i => ms.addData(i.toLong); q.processAllAvailable() }
+      val deadline = System.currentTimeMillis() + 30000
+      while (progressSeen.get < 8 && System.currentTimeMillis() < deadline)
+        Thread.sleep(50)
+      assert(progressSeen.get >= 8)
+      gate.countDown()
+      Thread.sleep(2000) // let any queued refresh run
+      assert(refreshes.get >= 1 && refreshes.get <= 2,
+        s"${refreshes.get} refreshes for ${progressSeen.get} progress events")
+    } finally {
+      gate.countDown()
+      server.detachAutoRefresh(spark, listener)
+      spark.streams.removeListener(counter)
+      q.stop()
+    }
+  }
 }

@@ -77,6 +77,30 @@ class OperatorSpec extends AnyFunSuite {
     assert(got.head._3 == 480.0) // exact interpolating percentile, rounded 4dp
   }
 
+  test("exact average rounds a 4 dp half away from zero, exactly") {
+    val base = 1700000000000L
+    def avg(vs: Double*): Double =
+      vs.zipWithIndex.map { case (v, i) =>
+        (i.toLong, base + i * 1000L, 1L, "view", v)
+      }.toDF("event_id", "tms", "user_id", "event_type", "value")
+        .withColumn("ts", timestamp_millis($"tms"))
+        .transform(PerformanceTracker.metrics(_))
+        .select("avg_value").as[Double].head()
+    // the oracle twin is the same integer expression (DuckDB `//` is
+    // Spark `div`: both truncate)
+    def avgSql(vs: Double*): Double =
+      spark.sql(s"SELECT ${PerformanceTracker.exactAvgSql().replace(" // ", " div ")} " +
+        s"FROM VALUES ${vs.map(v => s"(CAST($v AS DOUBLE))").mkString(", ")} AS t(value)")
+        .as[Double].head()
+    // exact mean 1506.33965: its nearest double lies just below the half
+    Seq(Seq(1506.33, 1506.3493) -> 1506.3397, Seq(-1506.33, -1506.3493) -> -1506.3397,
+        Seq(-3.0, -3.0) -> -3.0, Seq(-0.0001, -0.0002) -> -0.0002).foreach {
+      case (vs, want) =>
+        assert(avg(vs: _*) == want, s"exactAvg($vs)")
+        assert(avgSql(vs: _*) == want, s"exactAvgSql($vs)")
+    }
+  }
+
   test("all declared queries run on sf0.001 and return rows") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val n = fn(spark, sf).count()

@@ -91,6 +91,26 @@ class StreamingSpec extends AnyFunSuite {
       ("purchase", 1L, 1L), ("signup", 1L, 1L)))
   }
 
+  test("streaming event_metrics equals the batch aggregate: rows and schema") {
+    val events = Seq(
+      ev(1, 0, 1, "view"), ev(2, 1000, 2, "view"), ev(3, 1500, 1, "view"),
+      ev(4, 2000, 1, "click"), ev(5, 4999, 3, "purchase"),
+      ev(6, 5000, 3, "view"), ev(7, 6000, 3, "view"), ev(8, 7000, 4, "signup"),
+      ev(9, 8000, 5, "error"))
+    val streamed = run(events,
+      df => Pipelines.eventMetrics(df, watermark = "1 seconds", windowMs = 5000L))
+    val batch = graft.operators.EventAggregator.aggregate(
+      events.map(e => (e.event_id, e.ts, e.user_id, e.event_type, e.value))
+        .toDF("event_id", "ts", "user_id", "event_type", "value"),
+      windowDuration = "5 seconds")
+    assert(streamed.schema == batch.schema)
+    assert(streamed.schema("user_count").dataType ==
+      org.apache.spark.sql.types.LongType)
+    val got = streamed.collect().toSeq.map(_.toSeq).sortBy(_.toString)
+    val want = batch.collect().toSeq.map(_.toSeq).sortBy(_.toString)
+    assert(got.nonEmpty && got == want)
+  }
+
   test("wire decode: lenient JSON drops malformed, projects nested fields") {
     val good = """{"event":{"id":"e1","type":"page_view"},"user":{"id":"u1"},
       |"context":{"session_id":"s1"},"metrics":{"load_time":250},
