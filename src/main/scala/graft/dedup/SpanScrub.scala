@@ -31,9 +31,9 @@ import org.apache.spark.sql.functions._
   * occurrence list must reach one window partition. That skew is
   * linear, not quadratic — the hot task sorts (gram, doc_id, i)
   * triples, ~24 B/occurrence — and measured benign at 1M docs with a
-  * 100%-planted 60-char boilerplate prefix (`ScaleSoak scrubskew`,
-  * SCALING.md r16: boiler/organic = 1.12× wall, 1.06× shuffle, no
-  * straggler death). The same table shows the batch form's ABSOLUTE
+  * 100%-planted 60-char boilerplate prefix (SCALING.md r16
+  * "scrubskew: the ExactSubstr hot-gram skew table": boiler/organic =
+  * 1.12× wall, 1.06× shuffle, no straggler death). The same table shows the batch form's ABSOLUTE
   * cost honestly: at 1M docs the per-position frame is in the
   * external-sort spill regime (~39 GB shuffle, ~56 GB disk spill,
   * ~6.4 min/M docs steady) — linear in corpus positions and it

@@ -287,9 +287,10 @@ case class MinhashSigs(child: Expression, n: Int, b1: Long, b2: Long,
   * `aggregate(array_sort(transform(sequence(...), …)), …)` HOF fold,
   * whose higher-order functions are CodegenFallback and evaluate
   * INTERPRETED per array element (a named_struct allocation + lambda
-  * rebinding per gram: measured ~0.3 ms/doc at 60 words — ScaleSoak
-  * repwidediag, SCALING.md r14), with a tight JVM loop: build the
-  * sliding grams once, `Arrays.sort` them, one run-length sweep.
+  * rebinding per gram: measured ~0.3 ms/doc at 60 words — SCALING.md
+  * r14 "repwidediag: de-confounding pin type × width"), with a tight
+  * JVM loop: build the sliding grams once, `Arrays.sort` them, one
+  * run-length sweep.
   *
   * Semantics are bit-identical to the HOF fold (equality-pinned in
   * CorpusOpsSpec; the DuckDB oracle of q_rep_signals is unchanged):
@@ -429,18 +430,20 @@ case class GramRunStats(child: Expression, n: Int)
   * token, ready to explode straight into a postings frame with no
   * groupBy and no interpreted higher-order functions.
   *
-  * The third arm of the tf-frame A/B (`ScaleSoak tfnative`): r13
-  * measured the lambda-bound HOF run-length form
-  * ([[graft.text.SparseIndex.tfFromWs]]) losing 1.8× to relational
-  * explode → groupBy — but that compared INTERPRETED HOFs against
-  * codegen'd aggregation; this is the same sort+sweep as a tight JVM
-  * loop (the [[GramRunStats]] pattern), so the loss's ~10×
-  * interpretation tax is gone while the explode stays collapsed to
-  * distinct-token fan-out and the map-side combine disappears.
+  * The third arm of the tf-frame A/B (SCALING.md r15 "Native tf
+  * frame: the r13 verdict flips"): r13 measured a lambda-bound HOF
+  * run-length form losing 1.8× to relational explode → groupBy
+  * (SCALING.md r13 "Narrow tf frame: measured NEGATIVE") — but that
+  * compared INTERPRETED HOFs against codegen'd aggregation; this is
+  * the same sort+sweep as a tight JVM loop (the [[GramRunStats]]
+  * pattern), so the loss's ~10× interpretation tax is gone while the
+  * explode stays collapsed to distinct-token fan-out and the map-side
+  * combine disappears.
   *
-  * Semantics equal [[graft.text.SparseIndex.tfFromWs]]'s pairs (and
-  * therefore the relational groupBy): empty array → empty array
-  * (explodes to no rows — token-less docs vanish from postings);
+  * Semantics equal the relational explode → groupBy
+  * ([[graft.text.SparseIndex.tokenizeRelational]]), one (token, tf)
+  * pair per distinct token: empty array → empty array (explodes to
+  * no rows — token-less docs vanish from postings);
   * null input → null (same); tf is the run length as a Long. NULL
   * ELEMENTS are dropped and break runs for n >= 2 (the [[GramBuild]]
   * public-API contract; no in-repo producer emits them). Output order

@@ -63,16 +63,18 @@ object LabelProp {
       if (broadcastLabels) broadcast(df) else df
     for (r <- 1 to iters) {
       // argmax by (sw DESC, label ASC) as a partial-aggregable
-      // max(struct(sw, -label)) instead of a row_number window: the
+      // max(struct(sw, ~label)) instead of a row_number window: the
       // map side combines the (dst, label) candidate rows before the
-      // exchange and no sort runs (labels are non-negative nation keys,
-      // so the negation is order-exact; r17, guide §2.3/§4).
+      // exchange and no sort runs (r17, guide §2.3/§4). `~label`
+      // (= -label - 1) reverses the order of EVERY long; `-label` did
+      // not, since -Long.MinValue overflows back to Long.MinValue.
       val fresh = edges
         .join(lab(labels.select(col("node").as("src"), col("label"))), "src")
         .groupBy(col("dst"), col("label")).agg(sum(col("w")).as("sw"))
         .groupBy(col("dst"))
-        .agg(max(struct(col("sw"), (-col("label")).as("nl"))).as("best"))
-        .select(col("dst"), (-col("best.nl")).as("label"))
+        .agg(max(struct(col("sw"), bitwise_not(col("label")).as("nl")))
+          .as("best"))
+        .select(col("dst"), bitwise_not(col("best.nl")).as("label"))
         .join(lab(labels.select(col("node").as("dst"))), Seq("dst"), "left_anti")
         .select(col("dst").as("node"), col("label"),
           lit(r.toLong).as("round"))

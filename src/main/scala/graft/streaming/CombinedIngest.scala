@@ -127,7 +127,8 @@ object CombinedIngest {
       // skew was actually observed (a range-contiguous shard arriving
       // as 4/32 non-empty partitions — the partition-COUNT gate can't
       // see it — measured ~1.9× the fold wall and ~4× through the
-      // cache build + narrow legs; ScaleSoak repdiag4, SCALING.md r14).
+      // cache build + narrow legs; SCALING.md r14 "repdiag4: the
+      // positional-frame skew table").
       // The batch is trigger-bounded, so the exchange is micro-batch-
       // sized; batch entry points keep the upward-only gate.
       val pb = graft.text.Repetition.positionalBase(batch,

@@ -32,7 +32,17 @@ import org.apache.spark.sql.functions.col
   *    in flight at any shard count.
   *  - Fail-fast: tails and the loop's own jobs form one
   *    [[graft.Engine.FanOut]] — the first failure cancels the rest and is
-  *    rethrown at once, not at the terminal await. */
+  *    rethrown at once, not at the terminal await.
+  *
+  * Not a ShardLoop (2026-10-19): [[graft.dedup.Clusters.incrClusters]]
+  * stays a hand-driven fold. Its shards are candidate-PAIR ranges
+  * (`greatest(a_id, b_id) div shardSize`), not `doc_id` ranges; each
+  * step REPLACES the one label state rather than appending to stores
+  * and emitting a survivor tail; and its result is the last state, not
+  * a union of tails. Forcing it through [[run]] would need a store that
+  * is overwritten and a tail that is discarded — a second loop shape
+  * behind this one's signature (SCALING.md "q_incr_clusters stays a
+  * fold"). */
 object ShardLoop {
 
   /** Upper bound on shards per loop: the lazy store unions grow the plan

@@ -83,9 +83,10 @@ object Repetition {
     // frame is EXCHANGE-FREE narrow work (the r13 fold, GopherQuality's
     // array arithmetic), so input skew — a one-file micro-batch, a
     // range-contiguous shard (4/32 non-empty partitions, ~1.9× fold
-    // wall; ScaleSoak repdiag4, SCALING.md r14) — would ride through to
-    // every consumer with nothing left to spread it. But the exchange
-    // must only fire when it can help: repartitioning DOWN would
+    // wall; SCALING.md r14 "repdiag4: the positional-frame skew
+    // table") — would ride through to every consumer with nothing
+    // left to spread it. But the exchange must only fire when it can
+    // help: repartitioning DOWN would
     // replace size-bounded (~128 MB) file splits with corpus/cores
     // tasks — an unbounded-task-size hazard at 100 TB — and on an
     // already-wide, already-balanced input it is a full-text shuffle
@@ -117,7 +118,7 @@ object Repetition {
     * pure overhead — worse, it was the operator's one memory-unbounded
     * term (at 10M docs the ~5 KB/doc row-object materialization
     * GC-killed the JVM while the unpinned fold streams at O(row);
-    * ScaleSoak repdeep, SCALING.md r14). CollapseProject does NOT
+    * SCALING.md r14 "repdeep, first attempt"). CollapseProject does NOT
     * inline the regex into the per-family folds (ws is referenced by
     * every rule family, and non-cheap multiply-referenced aliases are
     * kept as their own Project — plan-asserted in CorpusOpsSpec), so
@@ -147,8 +148,8 @@ object Repetition {
     * `aggregate` HOF formulation ([[signalsFromBaseHof]], kept as the
     * equality twin) evaluated INTERPRETED per gram (HOFs are
     * CodegenFallback; a named_struct allocation per element — measured
-    * ~0.3 ms/doc, the dominant cost of the whole operator; ScaleSoak
-    * repwidediag, SCALING.md r14). */
+    * ~0.3 ms/doc, the dominant cost of the whole operator; SCALING.md
+    * r14 "repwidediag: de-confounding pin type × width"). */
   def signalsFromBase(base: DataFrame): DataFrame = {
     import graft.functions.TextFunctions.gram_run_stats
     val fams =

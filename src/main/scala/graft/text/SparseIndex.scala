@@ -41,14 +41,15 @@ object SparseIndex {
     * run-length form ([[tokenizeNative]]): the [[graft.functions.TokenTfs]]
     * sort+sweep emits one (token, tf) struct per distinct token, so
     * postings are born collapsed — no groupBy, no map-side-combine
-    * hash table, no aggregate at all. The r15 `ScaleSoak tfnative`
-    * A/B: native 3.8 s / ZERO spill at 1M docs vs relational 11.4 s
-    * with 13.7 GB memory + 1.5 GB disk spill (the combine hash table
-    * is the spill source — the very thing the r13 verdict credited
-    * with collapsing the exchange) vs the interpreted HOF 11.6 s. The
-    * r13 tfnarrow loss was the HOF interpretation tax, not the
-    * run-length idea. At 100 TB the postings build is now a pure map
-    * over file splits with bounded memory. [[tokenizeRelational]] is
+    * hash table, no aggregate at all. The r15 tf-frame A/B (SCALING.md
+    * "Native tf frame: the r13 verdict flips"): native 3.8 s / ZERO
+    * spill at 1M docs vs relational 11.4 s with 13.7 GB memory + 1.5 GB
+    * disk spill (the combine hash table is the spill source — the very
+    * thing the r13 verdict credited with collapsing the exchange) vs
+    * the interpreted HOF 11.6 s. The r13 HOF form's loss (SCALING.md
+    * "Narrow tf frame: measured NEGATIVE") was the interpretation tax,
+    * not the run-length idea. At 100 TB the postings build is now a
+    * pure map over file splits with bounded memory. [[tokenizeRelational]] is
     * the equality-pinned A/B twin (SparseIndexSpec). */
   private def tokenize(docs: DataFrame): DataFrame = tokenizeNative(docs)
 
@@ -69,65 +70,15 @@ object SparseIndex {
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
   }
 
-  /** Run-length encode the sorted token array per row: boundaries are
-    * the positions where the sorted array changes value, each run's
-    * tf is the gap to the next boundary. `sequence(1, 0)` is a
-    * DESCENDING array in Spark (the repo-wide short-doc trap), so the
-    * empty-doc case is guarded before any sequence is built; an empty
-    * pair array explodes to no rows, preserving the old contract that
-    * token-less documents vanish from the postings.
-    *
-    * MEASURED NEGATIVE — kept as the A/B twin, not used in
-    * production: `ScaleSoak tfnarrow` times this form ~1.8× slower
-    * than [[tokenize]]'s relational explode at 1M docs (see the
-    * [[tokenize]] scaladoc and SCALING.md r13). The equality pin in
-    * SparseIndexSpec keeps it honest.
-    *
-    * `withWs` must carry a `ws` array column; every OTHER column
-    * passes through onto the exploded rows (so per-doc labels ride
-    * along without a join). Column names `dl`, `pairs`, `p` are
-    * produced internally and must not be among the passthroughs.
-    * Output: passthroughs + (token, tf, dl).
-    *
-    * The sorted array and the boundary list are bound as LAMBDA
-    * variables (`transform(array(x), s -> …)[0]`, the repo's
-    * lambda-bind idiom) rather than projected columns: CollapseProject
-    * inlines a projected column into every lambda body that references
-    * it, and an `element_at(s, i)` whose `s` re-evaluates
-    * `array_sort(ws)` PER ELEMENT turns O(L log L) into O(L² log L) —
-    * measured 350× slower at 1M docs before the bind (SCALING.md
-    * r13). */
-  def tfFromWs(withWs: DataFrame): DataFrame = {
-    val keep = withWs.columns.filterNot(_ == "ws").map(col).toSeq
-    val pairs = expr(
-      """transform(array(array_sort(ws)), s ->
-        |  CASE WHEN size(s) = 0 THEN array()
-        |  ELSE transform(array(
-        |      filter(sequence(1, size(s)), i ->
-        |        i = 1 OR element_at(s, i) <> element_at(s, i - 1))), bnd ->
-        |    zip_with(
-        |      bnd,
-        |      concat(slice(bnd, 2, size(bnd) - 1), array(size(s) + 1)),
-        |      (a, b) -> named_struct(
-        |        'token', element_at(s, a),
-        |        'tf', CAST(b - a AS BIGINT))))[0]
-        |  END)[0]""".stripMargin)
-    withWs
-      .select(keep :+ size(col("ws")).as("dl") :+ pairs.as("pairs"): _*)
-      .select(keep :+ col("dl") :+ explode(col("pairs")).as("p"): _*)
-      .select(keep :+ col("p.token").as("token") :+ col("p.tf").as("tf")
-        :+ col("dl"): _*)
-  }
-
-
   /** The native [[graft.functions.TokenTfs]] run-length tokenization —
-    * PRODUCTION since r15 (see [[tokenize]] for the A/B verdict): same
-    * sort+sweep as the HOF [[tfFromWs]] but as a tight JVM loop, so
-    * the ~10× interpretation tax that made the r13 A/B a 1.8× loss is
-    * gone. The explode fans out to DISTINCT tokens only and there is
-    * no map-side-combine hash table and no groupBy exchange — postings
+    * PRODUCTION since r15 (see [[tokenize]] for the A/B verdict): the
+    * sort+sweep the r13 higher-order-function form interpreted, as a
+    * tight JVM loop, so the ~10× interpretation tax that made the r13
+    * A/B a 1.8× loss is gone. The explode fans out to DISTINCT tokens
+    * only and there is no map-side-combine hash table and no groupBy
+    * exchange — postings
     * are born collapsed. Equality-pinned against [[tokenizeRelational]]
-    * in SparseIndexSpec; A/B'd in `ScaleSoak tfnative`. */
+    * in SparseIndexSpec; A/B'd in SCALING.md "Native tf frame". */
   private[graft] def tokenizeNative(docs: DataFrame): DataFrame = {
     val wArr = expr("regexp_extract_all(text, '\\\\S+', 0)")
     graft.Tables.spread(docs)

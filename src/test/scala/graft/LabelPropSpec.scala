@@ -56,6 +56,16 @@ class LabelPropSpec extends AnyFunSuite {
       ("s:100", 10L, 1L)), s"got $got")
   }
 
+  test("the label-ASC tie-break holds at Long.MinValue (no negation overflow)") {
+    val edges = Seq(("a", "x", 1L), ("b", "x", 1L)).toDF("src", "dst", "w")
+    val seeds = Seq(("a", Long.MinValue, 0L), ("b", 0L, 0L))
+      .toDF("node", "label", "round")
+    val got = LabelProp.labelsFromEdges(edges, seeds, iters = 1)
+      .filter(col("node") === "x").select("label").as[Long].collect().toSeq
+    // x ties at weight 1 between Long.MinValue and 0 → the smaller label
+    assert(got == Seq(Long.MinValue), s"got $got")
+  }
+
   test("embedDrift: parity-dependent distribution → large PSI, balanced → zero") {
     // shifted: even ids cluster at e1, odd at e2 → halves disagree
     val shifted = (0L until 64L).map { i =>

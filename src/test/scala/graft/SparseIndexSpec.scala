@@ -85,42 +85,10 @@ class SparseIndexSpec extends AnyFunSuite {
     assert(grown.docIds.count() == once.docIds.count() + 1)
   }
 
-  test("tfFromWs (the measured-negative narrow twin) equals the production relational tf; its executed plan has zero Exchange") {
-    import org.apache.spark.sql.functions._
-    // adversarial shapes: heavy repeats, singletons, unicode tokens,
-    // an empty doc (must vanish), a one-token doc
-    val rows = (0L until 200L).map { i =>
-      val t = (i % 5) match {
-        case 0 => "a a a b b c"
-        case 1 => (0 until 30).map(j => s"w${(i + j) % 7}").mkString(" ")
-        case 2 => ""
-        case 3 => "solo"
-        case _ => s"héllo wörld héllo $i zz zz zz"
-      }
-      (i, t)
-    }
-    val work = java.nio.file.Files.createTempDirectory("narrowtf").toString
-    rows.toDF("doc_id", "text").write.parquet(s"$work/d")
-    val d = spark.read.parquet(s"$work/d")
-    val narrow = SparseIndex.tfFromWs(d.select(col("doc_id"),
-        expr("regexp_extract_all(text, '\\\\S+', 0)").as("ws")))
-      .select("doc_id", "token", "tf", "dl")
-    val relational = SparseIndex.tokenizeRelational(d)
-    assert(narrow.columns.toSeq == relational.columns.toSeq)
-    assert(narrow.collect().toSet == relational.collect().toSet)
-    // the empty doc produced no rows in either form
-    assert(narrow.filter(col("doc_id") === 2L).count() == 0)
-    // zero Exchange: the twin's tf never leaves the row (its loss is
-    // CPU, not network — the SCALING.md r13 tfnarrow verdict)
-    narrow.queryExecution.toRdd.count()
-    val plan = narrow.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==").head
-    assert(!plan.contains("Exchange"), s"narrow tf twin shuffled:\n$plan")
-  }
-
   test("tokenizeNative (the r15 native run-length arm) equals the production relational tf; zero Exchange, zero HashAggregate") {
     import org.apache.spark.sql.functions._
-    // same adversarial shapes as the HOF-twin pin, plus null text
+    // adversarial shapes: heavy repeats, singletons, unicode tokens,
+    // an empty doc (must vanish), a one-token doc, null text
     val rows = (0L until 200L).map { i =>
       val t = (i % 6) match {
         case 0 => "a a a b b c"
