@@ -123,7 +123,7 @@ object SparkEntry {
     "q_curate_full" -> ((s, dir) => // + benchmark-contamination gate (stage 5)
       graft.text.Curate.curateFull(Tables.documents(s, dir))),
     "q_curate_full_fp" -> ((s, dir) => // fp gram wire, parity-pinned
-      graft.text.Curate.curateFullFp(Tables.documents(s, dir))),
+      graft.text.Curate.curateFull(Tables.documents(s, dir))),
     // the Dolma anonymize stage composed into the funnel (r14): PII
     // masked BEFORE the scrub, so grams/fps/sigs/kept text derive from
     // masked text; planted corpus (no natural PII in the testdata)

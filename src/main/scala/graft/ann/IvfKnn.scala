@@ -115,20 +115,10 @@ object IvfKnn {
   def recallCurve(embs: DataFrame, queryMaxId: Long = 10, k: Int = 5,
                   kCells: Int = 16,
                   probes: Seq[Int] = Seq(2, 4, 8, 16)): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, count, lit, round}
     val brute = graft.ann.Similarity.knnBrute(embs, queryMaxId, k)
       .select(col("query_id"), col("vec_id")).localCheckpoint()
-    val possible = brute.agg(count(lit(1)).as("n_possible"))
-    probes.map { np =>
-      ivfKnn(embs, queryMaxId, k, kCells, np)
-        .select(col("query_id"), col("vec_id"))
-        .join(broadcast(brute), Seq("query_id", "vec_id"))
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(np).as("nprobe"), col("n_hits"))
-    }.reduce(_ unionAll _)
-      .crossJoin(broadcast(possible))
-      .withColumn("recall",
-        round(col("n_hits").cast("double") / col("n_possible"), 4))
+    Similarity.recallTally(brute, "nprobe",
+      probes.map(np => np -> ivfKnn(embs, queryMaxId, k, kCells, np)))
   }
 
   def recallCurveSql(queryMaxId: Long = 10, k: Int = 5, kCells: Int = 16,

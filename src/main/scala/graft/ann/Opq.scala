@@ -188,24 +188,12 @@ object Opq {
         .select(col("query_id"), col("vec_id")).localCheckpoint(),
       () => adcScored(embs, m, k, iters, queryMaxId).localCheckpoint(),
       () => adcScored(permute(embs, m), m, k, iters, queryMaxId))
-    val possible = brute.agg(count(lit(1)).as("n_possible"))
     val refined = Pq.exactRerank(embs, topkOf(plain, refine * topK),
         queryMaxId, topK)
-      .select(col("query_id"), col("vec_id"))
-    val rows = Seq(
+    Similarity.recallTally(brute, "cfg", Seq(
       s"opq_k$k" -> topkOf(opq, topK),
       s"pq_k$k" -> topkOf(plain, topK),
-      s"pq_k${k}_r$refine" -> refined)
-      .map { case (label, df) =>
-        df.join(broadcast(brute), Seq("query_id", "vec_id"))
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(label).as("cfg"), col("n_hits"))
-      } :+ brute.agg(count(lit(1)).as("n_hits"))
-      .select(lit("exhaustive").as("cfg"), col("n_hits"))
-    rows.reduce(_ unionAll _)
-      .crossJoin(broadcast(possible))
-      .withColumn("recall",
-        round(col("n_hits").cast("double") / col("n_possible"), 4))
+      s"pq_k${k}_r$refine" -> refined), exhaustive = true)
   }
 
   /** DuckDB twin of [[opqRecall]]: the permuted frame as a `pemb` CTE

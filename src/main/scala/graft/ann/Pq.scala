@@ -660,24 +660,12 @@ object Pq {
         .select(col("query_id"), col("vec_id")).localCheckpoint(),
       () => ivfPqResRanked(embs, queryMaxId, kCells, nprobe, m, k,
         iters).localCheckpoint()) // ranked: consumed once per refine budget
-    val possible = brute.agg(count(lit(1)).as("n_possible"))
-    val cells = Seq(1, refine).map { r =>
+    Similarity.recallTally(brute, "cfg", Seq(1, refine).map { r =>
       s"ivfpq_res_r$r" -> exactRerank(embs,
         ranked.filter(col("arank") <= topK * r)
           .select(col("query_id"), col("vec_id")),
         queryMaxId, topK)
-    }
-    val rows = cells.map { case (label, df) =>
-      df.select(col("query_id"), col("vec_id"))
-        .join(broadcast(brute), Seq("query_id", "vec_id"))
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(label).as("cfg"), col("n_hits"))
-    } :+ brute.agg(count(lit(1)).as("n_hits"))
-      .select(lit("exhaustive").as("cfg"), col("n_hits"))
-    rows.reduce(_ unionAll _)
-      .crossJoin(broadcast(possible))
-      .withColumn("recall",
-        round(col("n_hits").cast("double") / col("n_possible"), 4))
+    }, exhaustive = true)
   }
 
   /** DuckDB twin of [[ivfPqResRefineRecall]]: one self-contained
@@ -755,21 +743,18 @@ object Pq {
     // §2.6, r17). subs/rawQ stay config-independent and shared across
     // all 6 cells (the "consumed >1×" rule; each cell only swaps its
     // codebook in).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Engine.blockingPool
-    val fPool = Future(trainPool(embs, m, maxP))
-    val fBrute = Future(Similarity.knnBrute(embs, queryMaxId, topK)
-      .select(col("query_id"), col("vec_id")).localCheckpoint())
-    val fSubs = Future(subvectors(embs, m).localCheckpoint())
-    val fRawQ = Future(subvectorsRaw(embs, m)
-      .filter(col("vec_id") < queryMaxId).localCheckpoint())
-    val pool = Await.result(fPool, Duration.Inf)
-    val brute = Await.result(fBrute, Duration.Inf)
-    val subs = Await.result(fSubs, Duration.Inf)
-    val rawQ = Await.result(fRawQ, Duration.Inf)
-    val possible = brute.agg(count(lit(1)).as("n_possible"))
-    val rows = curveCfgs.map { case (k, iters, label) =>
+    val fan = new graft.Engine.FanOut(spark.sparkContext)
+    val (pool, brute, subs, rawQ) = fan.run {
+      val fPool = fan.submit(() => trainPool(embs, m, maxP))
+      val fBrute = fan.submit(() => Similarity.knnBrute(embs, queryMaxId, topK)
+        .select(col("query_id"), col("vec_id")).localCheckpoint())
+      val fSubs = fan.submit(() => subvectors(embs, m).localCheckpoint())
+      val fRawQ = fan.submit(() => subvectorsRaw(embs, m)
+        .filter(col("vec_id") < queryMaxId).localCheckpoint())
+      (fan.await(fPool), fan.await(fBrute), fan.await(fSubs),
+        fan.await(fRawQ))
+    }
+    Similarity.recallTally(brute, "cfg", curveCfgs.map { case (k, iters, label) =>
       val centsL = codebooksSampledLocal(embs, m, k, iters, Some(pool))
       val cb = centsL.toDF("sub", "cid", "cvec")
       val centsArr = Array.tabulate(m)(s =>
@@ -786,22 +771,13 @@ object Pq {
           Similarity.dotHof(col("cvec"), col("cvec")).as("cn"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("ascore").desc, col("vec_id"))
-      codes.join(broadcast(dt), Seq("sub", "code"))
+      label -> codes.join(broadcast(dt), Seq("sub", "code"))
         .filter(col("vec_id") =!= col("query_id"))
         .groupBy(col("query_id"), col("vec_id"))
         .agg(lookupScore(adc = true).as("ascore"))
         .withColumn("rank", row_number().over(w).cast("int"))
         .filter(col("rank") <= topK)
-        .select(col("query_id"), col("vec_id"))
-        .join(broadcast(brute), Seq("query_id", "vec_id"))
-        .agg(count(lit(1)).as("n_hits"))
-        .select(lit(label).as("cfg"), col("n_hits"))
-    } :+ brute.agg(count(lit(1)).as("n_hits"))
-      .select(lit("exhaustive").as("cfg"), col("n_hits"))
-    rows.reduce(_ unionAll _)
-      .crossJoin(broadcast(possible))
-      .withColumn("recall",
-        round(col("n_hits").cast("double") / col("n_possible"), 4))
+    }, exhaustive = true)
   }
 
   private def d2Sql(a: String, b: String): String =

@@ -304,21 +304,20 @@ object Similarity {
     // truth, the PQ train+encode chain, and the LSH signature build
     // are mutually independent — materialized as concurrent jobs
     // (guide §2.6, r17)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Engine.blockingPool
-    val fBrute = Future(knnBrute(embs, queryMaxId, k)
-      .select(col("query_id"), col("vec_id")).localCheckpoint())
-    val fPq = Future {
-      val cb = Pq.codebooks(embs).localCheckpoint()
-      (cb, Pq.encodeWith(embs, cb, Pq.defaultM).localCheckpoint())
+    val fan = new graft.Engine.FanOut(embs.sparkSession.sparkContext)
+    val (brute, pqCb, pqCodes, lshSig) = fan.run {
+      val fBrute = fan.submit(() => knnBrute(embs, queryMaxId, k)
+        .select(col("query_id"), col("vec_id")).localCheckpoint())
+      val fPq = fan.submit { () =>
+        val cb = Pq.codebooks(embs).localCheckpoint()
+        (cb, Pq.encodeWith(embs, cb, Pq.defaultM).localCheckpoint())
+      }
+      val fLsh = fan.submit(() =>
+        withLshBandSignatures(embs, 64, 12, 6).localCheckpoint())
+      val (cb, codes) = fan.await(fPq)
+      (fan.await(fBrute), cb, codes, fan.await(fLsh))
     }
-    val fLsh = Future(withLshBandSignatures(embs, 64, 12, 6).localCheckpoint())
-    val brute = Await.result(fBrute, Duration.Inf)
-    val (pqCb, pqCodes) = Await.result(fPq, Duration.Inf)
-    val lshSig = Await.result(fLsh, Duration.Inf)
-    val possible = brute.agg(count(lit(1)).as("n_possible"))
-    Seq(
+    recallTally(brute, "method", Seq(
       "ivf" -> IvfKnn.ivfKnn(embs, queryMaxId, k),
       "ivfpq" -> Pq.ivfPqKnnWith(embs, pqCb, pqCodes, queryMaxId, k),
       "ivfpq_adc" -> Pq.ivfPqKnnAdcWith(embs, pqCb, pqCodes, queryMaxId, k),
@@ -326,15 +325,29 @@ object Similarity {
       "lsh_mp" -> lshSearch(embs, lshSig, queryMaxId, k, 1, 6),
       "pq" -> Pq.pqKnnWith(embs, pqCb, pqCodes, queryMaxId, k),
       "pq_adc" -> Pq.pqKnnAdcWith(embs, pqCb, pqCodes, queryMaxId, k),
-      "quant" -> Quantize.quantKnn(embs, queryMaxId, k))
-      .map { case (m, df) =>
-        df.select(col("query_id"), col("vec_id"))
-          .join(broadcast(brute), Seq("query_id", "vec_id"))
-          .agg(count(lit(1)).as("n_hits"))
-          .select(lit(m).as("method"), col("n_hits"))
-      }
-      .reduce(_.unionAll(_))
-      .crossJoin(broadcast(possible))
+      "quant" -> Quantize.quantKnn(embs, queryMaxId, k)))
+  }
+
+  /** The recall@k tally every recall gate shares: per labelled result,
+    * its (query_id, vec_id) rows hit against the brute top-k (`n_hits`,
+    * brute set broadcast), the brute size (`n_possible`) and the 4 dp
+    * `recall`, one row per label under `labelCol`. `exhaustive` adds
+    * the brute set's own row — the curve's 1.0 anchor. Pinning `brute`
+    * is the caller's: it feeds every hit join plus `n_possible`. */
+  private[graft] def recallTally(brute: DataFrame, labelCol: String,
+                                 results: Seq[(Any, DataFrame)],
+                                 exhaustive: Boolean = false): DataFrame = {
+    val hits = results.map { case (label, df) =>
+      df.select(col("query_id"), col("vec_id"))
+        .join(broadcast(brute), Seq("query_id", "vec_id"))
+        .agg(count(lit(1)).as("n_hits"))
+        .select(lit(label).as(labelCol), col("n_hits"))
+    }
+    val anchor = if (!exhaustive) Nil
+      else Seq(brute.agg(count(lit(1)).as("n_hits"))
+        .select(lit("exhaustive").as(labelCol), col("n_hits")))
+    (hits ++ anchor).reduce(_ unionAll _)
+      .crossJoin(broadcast(brute.agg(count(lit(1)).as("n_possible"))))
       .withColumn("recall",
         round(col("n_hits").cast("double") / col("n_possible"), 4))
   }

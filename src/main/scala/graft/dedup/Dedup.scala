@@ -274,6 +274,28 @@ object Dedup {
       .groupBy("doc_id").agg(count(lit(1)).as("n_shared"))
   }
 
+  /** The benchmark gram set the curation funnels gate against: the
+    * distinct char `n`-grams of the (raw) benchmark docs. */
+  private[graft] def benchGrams(bench: DataFrame, n: Int): DataFrame =
+    shingles(bench, n).select(col("sh")).distinct()
+
+  /** The curation funnels' contamination gate: ids (≥ `benchMaxId`) of
+    * `docs` whose distinct char `n`-grams overlap the [[benchGrams]] set
+    * `bench` in at least `maxContamPm` per-mille — integer arithmetic,
+    * so both engines compare exactly. The bench set is broadcast and
+    * shared/total counts come from ONE aggregation over a left-join
+    * mark, not two shuffles. */
+  private[graft] def contaminatedIds(docs: DataFrame, bench: DataFrame,
+                                     n: Int, benchMaxId: Long,
+                                     maxContamPm: Long): DataFrame =
+    shingles(docs, n)
+      .filter(col("doc_id") >= benchMaxId)
+      .join(broadcast(bench.withColumn("__hit", lit(1))), Seq("sh"), "left")
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_tot"), count(col("__hit")).as("n_shared"))
+      .filter(col("n_shared") * lit(1000L) >= col("n_tot") * lit(maxContamPm))
+      .select("doc_id")
+
   def contaminationSql(n: Int = 8, benchMaxId: Long = 20): String =
     s"""WITH sh AS (${shinglesSql(n)}),
        |bench AS (SELECT DISTINCT sh FROM sh WHERE doc_id < $benchMaxId)

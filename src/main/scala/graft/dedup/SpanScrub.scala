@@ -76,6 +76,13 @@ object SpanScrub {
     scrubByGram(base, fpGrams(base, k), k)
   }
 
+  /** A scrub output as a corpus for the downstream stages: (doc_id,
+    * text, n_chars) with the cleaned text under `text` and `n_chars`
+    * recounted from it. */
+  private[graft] def scrubbedDocs(scrub: DataFrame): DataFrame =
+    scrub.select(col("doc_id"), col("text_clean").as("text"),
+      length(col("text_clean")).cast("long").as("n_chars"))
+
   /** Per-position 63-bit rolling-hash grams: (doc_id, i, gram) with i
     * 1-based like the exact variant's substr positions. */
   private[graft] def fpGrams(base: DataFrame, k: Int): DataFrame =

@@ -183,52 +183,25 @@ object Audio {
     media.mapPartitions(_.flatMap(AudioFpCodec.of))
   }
 
-  /** Near-duplicate audio candidate pairs, banded exactly like
-    * [[Multimodal.phashPairs]]: 63 bits → 7 bands of 9 bits, candidate
+  /** Near-duplicate audio candidate pairs through
+    * [[Multimodal.hammingPairs]]: 63 bits → 7 bands of 9 bits, candidate
     * when ANY band matches, exact hamming gates survivors. With
     * maxHamming < nBands the banding is EXACT (pigeonhole: h flipped
     * bits break at most h bands). Scale shape: band-key equi-join over
     * collisions only, never media × media — unrelated fingerprints
     * collide on a 9-bit band with p ≈ 2⁻⁹. */
   def audioPairs(media: Dataset[MediaRow], maxHamming: Int = 6,
-                 nBands: Int = 7): DataFrame = {
-    val bandBits = AudioFpCodec.Bits / nBands
-    val mask = (1L << bandBits) - 1
-    // decode-once barrier, same reason as Video.videoPairs: the
-    // self-join otherwise re-runs the RIFF walk + energy pass per side
-    val fp = audioFp(media).toDF().localCheckpoint()
-    val bands = fp.select(col("doc_id"), col("afp"),
-      posexplode(array((0 until nBands).map(b =>
-        shiftright(col("afp"), b * bandBits).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "bval")))
-    val a = bands.select(col("doc_id").as("a_id"), col("afp").as("fa"),
-      col("band"), col("bval"))
-    val b = bands.select(col("doc_id").as("b_id"), col("afp").as("fb"),
-      col("band"), col("bval"))
-    a.join(b, Seq("band", "bval"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        expr("bit_count(fa ^ fb)").cast("int").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+                 nBands: Int = 7): DataFrame =
+    Multimodal.hammingPairs(audioFp(media).toDF(), "afp", AudioFpCodec.Bits,
+      maxHamming, nBands)
 
   /** The oracle-checked audio PAIR demo: the corpus plus an exact WAV
     * copy of every 20th doc (MUST pair at hamming 0) and a 5-char-tail
     * drift of every (20k+5)th doc (shifts every frame boundary — MUST
     * be rejected). Planted ids via [[Multimodal.plantedIdOffset]], so
     * they stay disjoint from real doc_ids at any scale factor. */
-  def plantedAudioPairs(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
-    val d = docs.select(col("doc_id"), col("text"))
-    val off = Multimodal.plantedIdOffset(docs)
-    val copies = d.filter(col("doc_id") % 20 === 0)
-      .select((col("doc_id") + off).as("doc_id"), col("text"))
-    val drifted = d.filter(col("doc_id") % 20 === 5)
-      .select((col("doc_id") + 2 * off).as("doc_id"),
-        concat(col("text"), lit(" tail")).as("text"))
-    audioPairs(synthesizeWav(d.unionAll(copies).unionAll(drifted)),
-      maxHamming)
-  }
+  def plantedAudioPairs(docs: DataFrame, maxHamming: Int = 6): DataFrame =
+    audioPairs(synthesizeWav(Multimodal.plantedCorpus(docs)), maxHamming)
 
   /** The energy-grid fingerprint CTE chain (reads `documents`, ends in
     * `afpt(doc_id, afp)`): ascii() replay of [[AudioFpCodec]] — sample

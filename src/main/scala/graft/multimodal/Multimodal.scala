@@ -343,7 +343,14 @@ object Multimodal {
     * every cell boundary — measured hamming ≥19, MUST be rejected).
     * The surviving pairs are exactly the exact copies, in both
     * engines. */
-  def plantedPhashPairs(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
+  def plantedPhashPairs(docs: DataFrame, maxHamming: Int = 6): DataFrame =
+    phashPairs(synthesizeMedia(plantedCorpus(docs)), maxHamming)
+
+  /** The planted-pair corpus every medium's PAIR demo synthesizes from:
+    * (doc_id, text) of `docs` plus an exact copy of every 20th doc and
+    * a 5-char-tail drift of every (20k+5)th, at ids offset by one and
+    * two [[plantedIdOffset]]s. */
+  private[graft] def plantedCorpus(docs: DataFrame): DataFrame = {
     val d = docs.select(col("doc_id"), col("text"))
     val off = plantedIdOffset(docs)
     val copies = d.filter(col("doc_id") % 20 === 0)
@@ -351,8 +358,7 @@ object Multimodal {
     val drifted = d.filter(col("doc_id") % 20 === 5)
       .select((col("doc_id") + 2 * off).as("doc_id"),
         concat(col("text"), lit(" tail")).as("text"))
-    phashPairs(synthesizeMedia(d.unionAll(copies).unionAll(drifted)),
-      maxHamming)
+    d.unionAll(copies).unionAll(drifted)
   }
 
   /** Planted-id offset guaranteed disjoint from real doc_ids at ANY
@@ -384,24 +390,39 @@ object Multimodal {
     * prepend a coarse grid-quantile key to sparsify further — the
     * same knob MinHash banding exposes). */
   def phashPairs(media: Dataset[MediaRow], maxHamming: Int = 6,
-                 nBands: Int = 7): DataFrame = {
-    val bandBits = PHashCodec.Bits / nBands
+                 nBands: Int = 7): DataFrame =
+    hammingPairs(phash(media).toDF(), "phash", PHashCodec.Bits, maxHamming,
+      nBands)
+
+  /** The banded Hamming self-join behind every medium's pair operator
+    * ([[phashPairs]], [[Audio.audioPairs]], [[Video.videoPairs]]):
+    * `fp` holds (doc_id, `fpCol`) with a `bits`-bit fingerprint, split
+    * into `nBands` bands of bits/nBands bits; a pair is a candidate
+    * when ANY band matches, and the exact hamming distance gates it.
+    * Output: (a_id, b_id, hamming), a_id < b_id.
+    *
+    * `fp` is pinned first (decode once): without it Catalyst plans two
+    * full decode subtrees for the self-join (no ReusedExchange across
+    * the alias boundary — verified on the executed plan), i.e. the
+    * corpus decodes twice. Fingerprint once, pair from the stored
+    * hashes — the shape a 100 TB corpus needs anyway (the fp table is
+    * what you'd persist). */
+  private[graft] def hammingPairs(fp: DataFrame, fpCol: String, bits: Int,
+                                  maxHamming: Int, nBands: Int): DataFrame = {
+    val bandBits = bits / nBands
     val mask = (1L << bandBits) - 1
-    // decode-once barrier, same reason as Video.videoPairs: the
-    // self-join otherwise re-runs the pixel decode + dHash per side
-    val ph = phash(media).toDF().localCheckpoint()
-    val bands = ph.select(col("doc_id"), col("phash"),
+    val bands = fp.localCheckpoint().select(col("doc_id"), col(fpCol),
       posexplode(array((0 until nBands).map(b =>
-        shiftright(col("phash"), b * bandBits).bitwiseAND(lit(mask))): _*))
+        shiftright(col(fpCol), b * bandBits).bitwiseAND(lit(mask))): _*))
         .as(Seq("band", "bval")))
-    val a = bands.select(col("doc_id").as("a_id"), col("phash").as("pa"),
+    val a = bands.select(col("doc_id").as("a_id"), col(fpCol).as("fa"),
       col("band"), col("bval"))
-    val b = bands.select(col("doc_id").as("b_id"), col("phash").as("pb"),
+    val b = bands.select(col("doc_id").as("b_id"), col(fpCol).as("fb"),
       col("band"), col("bval"))
     a.join(b, Seq("band", "bval"))
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
-        expr("bit_count(pa ^ pb)").cast("int").as("hamming"))
+        expr("bit_count(fa ^ fb)").cast("int").as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
   }

@@ -496,36 +496,14 @@ object Video {
     })
   }
 
-  /** Near-duplicate video candidate pairs, banded exactly like
-    * [[Audio.audioPairs]]: 63 bits → 7 bands of 9 bits, candidate when
-    * ANY band matches, exact hamming gates survivors (pigeonhole-exact
-    * for maxHamming < nBands). Never media × media. */
+  /** Near-duplicate video candidate pairs through
+    * [[Multimodal.hammingPairs]]: 63 bits → 7 bands of 9 bits, candidate
+    * when ANY band matches, exact hamming gates survivors
+    * (pigeonhole-exact for maxHamming < nBands). Never media × media. */
   def videoPairs(media: Dataset[MediaRow], maxHamming: Int = 6,
-                 nBands: Int = 7): DataFrame = {
-    val bandBits = VideoFpCodec.Bits / nBands
-    val mask = (1L << bandBits) - 1
-    // materialize the 16-byte-per-doc fingerprint table BEFORE the
-    // self-join: without it Catalyst plans two full decode subtrees
-    // (no ReusedExchange across the alias boundary — verified on the
-    // executed plan), i.e. the corpus LZW-decodes twice. Fingerprint
-    // once, pair from the stored hashes — the shape a 100 TB corpus
-    // needs anyway (the fp table is what you'd persist).
-    val fp = videoFp(media).toDF().localCheckpoint()
-    val bands = fp.select(col("doc_id"), col("vfp"),
-      posexplode(array((0 until nBands).map(b =>
-        shiftright(col("vfp"), b * bandBits).bitwiseAND(lit(mask))): _*))
-        .as(Seq("band", "bval")))
-    val a = bands.select(col("doc_id").as("a_id"), col("vfp").as("fa"),
-      col("band"), col("bval"))
-    val b = bands.select(col("doc_id").as("b_id"), col("vfp").as("fb"),
-      col("band"), col("bval"))
-    a.join(b, Seq("band", "bval"))
-      .filter(col("a_id") < col("b_id"))
-      .select(col("a_id"), col("b_id"),
-        expr("bit_count(fa ^ fb)").cast("int").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
+                 nBands: Int = 7): DataFrame =
+    Multimodal.hammingPairs(videoFp(media).toDF(), "vfp", VideoFpCodec.Bits,
+      maxHamming, nBands)
 
   /** The oracle-checked video PAIR demo, mirroring
     * [[Audio.plantedAudioPairs]]: every 20th doc gets an exact copy
@@ -539,17 +517,8 @@ object Video {
     * bits structurally (measured at sf0.01: hamming 0 = exactly the 25
     * planted copies, ≤2 adds a ~25-pair near tail, ≥3 grows into the
     * hundreds), and 2 < nBands keeps the banding pigeonhole-exact. */
-  def plantedVideoPairs(docs: DataFrame, maxHamming: Int = 2): DataFrame = {
-    val d = docs.select(col("doc_id"), col("text"))
-    val off = Multimodal.plantedIdOffset(docs)
-    val copies = d.filter(col("doc_id") % 20 === 0)
-      .select((col("doc_id") + off).as("doc_id"), col("text"))
-    val drifted = d.filter(col("doc_id") % 20 === 5)
-      .select((col("doc_id") + 2 * off).as("doc_id"),
-        concat(col("text"), lit(" tail")).as("text"))
-    videoPairs(synthesizePixelGif(d.unionAll(copies).unionAll(drifted)),
-      maxHamming)
-  }
+  def plantedVideoPairs(docs: DataFrame, maxHamming: Int = 2): DataFrame =
+    videoPairs(synthesizePixelGif(Multimodal.plantedCorpus(docs)), maxHamming)
 
   /** The slot-grid fingerprint CTE chain (reads `documents`, ends in
     * `vfpt(doc_id, vfp)`): the pixel rule replayed per (slot, row) —

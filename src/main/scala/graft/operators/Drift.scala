@@ -90,8 +90,11 @@ object Drift {
     * window are explicit 0-ppm rows (dense grid), so a type
     * disappearing IS a drift signal, not a missing row. */
   def windowMixDrift(events: DataFrame, windowMs: Long = 60000L): DataFrame =
-    mixDriftOfCounts(
-      events.select(
+    mixDriftOfCounts(windowCounts(events, windowMs))
+
+  /** (window_start_ms, event_type, cnt) per tumbling window, pinned. */
+  private def windowCounts(events: DataFrame, windowMs: Long): DataFrame =
+    events.select(
         expr(s"(unix_millis(ts) div $windowMs) * $windowMs").as("window_start_ms"),
         col("event_type"))
       .groupBy(col("window_start_ms"), col("event_type"))
@@ -101,7 +104,7 @@ object Drift {
       // branch (wins, types, join). In the streaming shape this table
       // IS the materialized sink — see MetricsStore.mixDrift, which
       // passes the stored table and skips this
-      .localCheckpoint())
+      .localCheckpoint()
 
   /** The drift computation over an already-windowed count table
     * (window_start_ms, event_type, cnt) — shared by the batch query
@@ -137,18 +140,31 @@ object Drift {
     * per-type mix table is the drill-down. Post-aggregate arithmetic
     * over the #windows·#types grid; at scale this reads the stored
     * metric table ([[MetricsStore.mixDrift]] path), never the stream. */
-  def windowPsi(events: DataFrame, windowMs: Long = 60000L): DataFrame = {
+  def windowPsi(events: DataFrame, windowMs: Long = 60000L): DataFrame =
+    psiOfCounts(windowCounts(events, windowMs), "window_start_ms", "n_types")
+
+  /** PSI of each window's key mix against the previous window's, over a
+    * (window_start_ms, event_type, cnt) count table: the
+    * [[mixDriftOfCounts]] dense grid and lag, each key contributing
+    * (p − q)·ln(p/q) on ppm shares, each clamped to ≥ 1 ppm inside the
+    * log (a key absent from one side scores against 1 ppm, not ln 0).
+    * One row per window
+    * that has a predecessor — the window under `axis`, `psi` at 4 dp,
+    * and the grid's key count under `nName`. Every windowed PSI in the
+    * repo (events, ingest shards, score bins, stored batches) is this
+    * body; pinning `counts` is the caller's. */
+  def psiOfCounts(counts: DataFrame, axis: String, nName: String): DataFrame = {
     val contrib = ((col("ppm") - col("prev_ppm")) / lit(1e6)) *
       log(greatest(col("ppm"), lit(1L)).cast("double") /
         greatest(col("prev_ppm"), lit(1L)).cast("double"))
-    windowMixDrift(events, windowMs)
-      .groupBy("window_start_ms")
+    mixDriftOfCounts(counts)
+      .groupBy(col("window_start_ms").as(axis))
       // boundary-stable fixed-point sum (r16): sf0.1 surfaced windows
       // whose exact psi sits ON the 4 dp half boundary, where
       // round(sum(round(c,6)),4) let the engines' summation order
       // pick the side — see FixedPoint.sum6Round4
       .agg(FixedPoint.sum6Round4(contrib).as("psi"),
-        count(lit(1)).cast("int").as("n_types"))
+        count(lit(1)).cast("int").as(nName))
   }
 
   def windowPsiSql(windowMs: Long = 60000L): String =

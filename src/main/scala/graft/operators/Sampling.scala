@@ -162,9 +162,26 @@ object Sampling {
     * passes run over that tiny frame; docs join broadcast(keep_n). */
   def temperatureMixture(docs: DataFrame, stratum: String = "lang",
                          seed: Int = 11): DataFrame = {
+    val keepN = isqrtQuotas(
+      docs.groupBy(col(stratum)).agg(count(lit(1)).as("n")), stratum, "keep_n")
+    val wRank = Window.partitionBy(col(stratum))
+      .orderBy(idHash(seed), col("doc_id"))
+    docs.select(col(stratum), col("doc_id"))
+      .join(broadcast(keepN), stratum)
+      .withColumn("rk", row_number().over(wRank).cast("long"))
+      .filter(col("rk") <= col("keep_n"))
+      .select(col(stratum), col("doc_id"), col("rk"), col("keep_n"))
+  }
+
+  /** α = ½ stratum quotas over a (stratum, n) table: weight isqrt(n)
+    * (floor(sqrt) plus the ±1 integer correction), share ppm of the
+    * weight total, and the largest scale t at which every stratum's
+    * share fits its n — quota (t·ppm) div 10⁶ under `quota`. */
+  private def isqrtQuotas(counts: DataFrame, stratum: String,
+                          quota: String): DataFrame = {
     val wAll = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
-    val keepN = docs.groupBy(col(stratum)).agg(count(lit(1)).as("n"))
+    counts
       .withColumn("s0", expr("cast(floor(sqrt(cast(n as double))) as bigint)"))
       .withColumn("w", expr(
         "case when s0*s0 > n then s0-1 " +
@@ -176,14 +193,7 @@ object Sampling {
       // vs oracle crash). Same clamp CorpusStats uses for idf floors.
       .withColumn("ppm", expr("greatest((1000000 * w) div sw, 1L)"))
       .withColumn("t", min(expr("(n * 1000000) div ppm")).over(wAll))
-      .select(col(stratum), expr("(t * ppm) div 1000000").as("keep_n"))
-    val wRank = Window.partitionBy(col(stratum))
-      .orderBy(idHash(seed), col("doc_id"))
-    docs.select(col(stratum), col("doc_id"))
-      .join(broadcast(keepN), stratum)
-      .withColumn("rk", row_number().over(wRank).cast("long"))
-      .filter(col("rk") <= col("keep_n"))
-      .select(col(stratum), col("doc_id"), col("rk"), col("keep_n"))
+      .select(col(stratum), expr("(t * ppm) div 1000000").as(quota))
   }
 
   def temperatureMixtureSql(stratum: String = "lang",
@@ -256,21 +266,12 @@ object Sampling {
     val toks = graft.text.Bpe.encode(docs, merges)
       .select(col("doc_id"), col("n_bpe_tokens").cast("long").as("tok"))
     val dt = docs.select(col(stratum), col("doc_id")).join(toks, "doc_id")
-    val wAll = Window.rowsBetween(Window.unboundedPreceding,
-      Window.unboundedFollowing)
-    val budgets = dt.groupBy(col(stratum)).agg(sum(col("tok")).as("n"))
-      // a stratum of only zero-token docs has n=0 but a ppm floor of 1,
-      // which would drive t — and thus EVERY stratum's budget — to 0;
-      // exclude it before the min (nothing to sample there anyway)
-      .filter(col("n") > 0)
-      .withColumn("s0", expr("cast(floor(sqrt(cast(n as double))) as bigint)"))
-      .withColumn("w", expr(
-        "case when s0*s0 > n then s0-1 " +
-          "when (s0+1)*(s0+1) <= n then s0+1 else s0 end"))
-      .withColumn("sw", sum(col("w")).over(wAll))
-      .withColumn("ppm", expr("greatest((1000000 * w) div sw, 1L)"))
-      .withColumn("t", min(expr("(n * 1000000) div ppm")).over(wAll))
-      .select(col(stratum), expr("(t * ppm) div 1000000").as("budget_tok"))
+    val budgets = isqrtQuotas(
+      dt.groupBy(col(stratum)).agg(sum(col("tok")).as("n"))
+        // a stratum of only zero-token docs has n=0 but a ppm floor of
+        // 1, which would drive t — and thus EVERY stratum's budget — to
+        // 0; exclude it before the min (nothing to sample there anyway)
+        .filter(col("n") > 0), stratum, "budget_tok")
     val wCum = Window.partitionBy(col(stratum))
       .orderBy(idHash(seed), col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

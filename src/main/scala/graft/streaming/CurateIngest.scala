@@ -61,11 +61,8 @@ object CurateIngest {
     * quality/language gate. Pure map-side. */
   def gateShard(shard: DataFrame, minQualityPm: Long = 600,
                 langs: Seq[String] = Seq("en", "de")): DataFrame =
-    graft.Tables.spread(shard)
-      .withColumn("quality_pm", TextAnalysis.qualityExpr)
-      .withColumn("lang_pred", TextAnalysis.langPred)
-      .filter(col("quality_pm") >= minQualityPm &&
-        col("lang_pred").isin(langs: _*))
+    TextAnalysis.scoreDocs(shard)
+      .filter(TextAnalysis.passesGate(minQualityPm, langs))
       .withColumn("fingerprint", md5(col("text")))
 
   /** [[gateShard]] plus the GOPHER repetition gate — the Dolma/FineWeb
@@ -76,18 +73,21 @@ object CurateIngest {
     * BEFORE any dedup store work is spent on it. The signals add one
     * exploded-gram pass over the SHARD only — the store is never
     * touched; the batch funnel twin is
-    * [[graft.text.Curate.curateGopherAudit]] (verdict `repetitious`). */
+    * [[graft.text.Curate.curateGopherAudit]] (verdict `repetitious`).
+    *
+    * Input contract: `shard` should be PINNED (a checkpointed or stored
+    * frame). It is read by two branches — the gate and the repetition
+    * signals — so an unpinned pipeline runs twice, and the signals are
+    * computed for gate-rejected docs too. That is the deliberate shape:
+    * the repetition signals are a narrow per-doc fold (zero shuffle
+    * since r13) and gopher_pass is per-doc, so intersecting with the
+    * gate gives the same set either way, while the r16 shape paid a
+    * localCheckpoint barrier per shard just to score survivors only
+    * (the loops are measured job-latency-bound, r17). Every production
+    * caller ([[Funnel.step]] with [[Funnel.full]]) hands it the
+    * checkpointed scrubbed shard. */
   def gateShardGopher(shard: DataFrame, minQualityPm: Long = 600,
                       langs: Seq[String] = Seq("en", "de")): DataFrame =
-    // signals straight over the INPUT shard, not over a pinned gated
-    // frame: the repetition signals are a narrow per-doc fold (zero
-    // shuffle since r13) and gopher_pass is per-doc, so intersecting
-    // with the gate gives the same set whether signals are computed
-    // for rejected docs or not — while the r16 shape paid a
-    // localCheckpoint barrier per shard just to score survivors only
-    // (the loops are measured job-latency-bound, and every production
-    // caller hands this a checkpointed scrubbed shard, so the two
-    // branches below re-read a pin, not a pipeline; r17).
     gateShard(shard, minQualityPm, langs)
       .join(graft.text.Repetition.repetitionSignals(
           shard.select(col("doc_id"), col("text")))
@@ -101,8 +101,7 @@ object CurateIngest {
   def gateFromSignals(signals: DataFrame, minQualityPm: Long = 600,
                       langs: Seq[String] = Seq("en", "de")): DataFrame =
     signals
-      .filter(col("quality_pm") >= minQualityPm &&
-        col("lang_pred").isin(langs: _*))
+      .filter(TextAnalysis.passesGate(minQualityPm, langs))
       .withColumn("fingerprint", md5(col("text")))
 
   /** The whole id-ordered ingestion as one deterministic loop — the
@@ -167,9 +166,9 @@ object CurateIngest {
     // the bench gram set (raw text, the curateFull contract) is pinned
     // on the first shard, after the loop's shard-count guard
     lazy val funnel = Funnel.full(
-      graft.dedup.Dedup.shingles(
+      graft.dedup.Dedup.benchGrams(
           docs.filter(col("doc_id") < benchMaxId && col("doc_id") < maxId), n)
-        .select(col("sh")).distinct().localCheckpoint(),
+        .localCheckpoint(),
       minQualityPm, langs, minEstJaccard, n, benchMaxId, maxContamPm,
       gopherGate, anonymize)
     ShardLoop.run(docs, shardSize, maxId,
@@ -178,22 +177,6 @@ object CurateIngest {
     }.select(col("doc_id"), col("lang_pred"), col("quality_pm"),
       col("n_chars"))
   }
-
-  /** Stage 5 of the full funnel, shard-local: ids of this shard's
-    * survivors whose distinct char n-gram overlap with the static
-    * benchmark gram set reaches `maxContamPm` per-mille
-    * ([[graft.text.Curate.curateFull]]'s gate over one shard). */
-  private[streaming] def contaminatedIds(kept: DataFrame,
-                                         scrubbed: DataFrame,
-                                         c: Contamination): DataFrame =
-    graft.dedup.Dedup.shingles(
-        kept.join(scrubbed.select(col("doc_id"), col("text")), "doc_id"), c.n)
-      .filter(col("doc_id") >= c.benchMaxId)
-      .join(broadcast(c.bench.withColumn("__hit", lit(1))), Seq("sh"), "left")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tot"), count(col("__hit")).as("n_shared"))
-      .filter(col("n_shared") * lit(1000L) >= col("n_tot") * lit(c.maxContamPm))
-      .select("doc_id")
 
   // ------------------------------------------------ disk-backed stream
 
@@ -358,27 +341,19 @@ object CurateIngest {
     * is the data-quality regression an ingestion pipeline must catch
     * before the shard trains anything. Quality-gated but NOT
     * language-gated (the mix is what's being measured). Reuses
-    * [[graft.operators.Drift.mixDriftOfCounts]] with shard_id as the
+    * [[graft.operators.Drift.psiOfCounts]] with shard_id as the
     * window axis — the count table is #shards·#langs rows, and
     * everything after the one groupBy is post-aggregate arithmetic. */
   def shardMixDrift(docs: DataFrame, shardSize: Long = 150,
                     maxId: Long = 600,
                     minQualityPm: Long = 600): DataFrame = {
-    val counts = graft.Tables.spread(docs.filter(col("doc_id") < maxId))
-      .withColumn("quality_pm", TextAnalysis.qualityExpr)
-      .withColumn("lang_pred", TextAnalysis.langPred)
+    val counts = TextAnalysis.scoreDocs(docs.filter(col("doc_id") < maxId))
       .filter(col("quality_pm") >= minQualityPm)
       .groupBy(expr(s"doc_id div $shardSize").as("window_start_ms"),
         col("lang_pred").as("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
-    val contrib = ((col("ppm") - col("prev_ppm")) / lit(1e6)) *
-      log(greatest(col("ppm"), lit(1L)).cast("double") /
-        greatest(col("prev_ppm"), lit(1L)).cast("double"))
-    graft.operators.Drift.mixDriftOfCounts(counts)
-      .groupBy(col("window_start_ms").as("shard_id"))
-      .agg(graft.operators.FixedPoint.sum6Round4(contrib).as("psi"),
-        count(lit(1)).cast("int").as("n_langs"))
+    graft.operators.Drift.psiOfCounts(counts, "shard_id", "n_langs")
   }
 
   /** DuckDB twin: the windowMixDrift dense-grid/ppm/lag chain with
@@ -436,7 +411,7 @@ object CurateIngest {
     * order is cut into `nBins` ntile bins (deterministic total order:
     * score, then doc_id), per-(shard, bin) counts feed the same dense
     * ppm grid + lag machinery as [[shardMixDrift]]
-    * ([[graft.operators.Drift.mixDriftOfCounts]]), and each shard
+    * ([[graft.operators.Drift.psiOfCounts]]), and each shard
     * reports one PSI against its predecessor.
     *
     * Scale shape: everything after scoring is post-aggregate
@@ -454,13 +429,7 @@ object CurateIngest {
         col("bin").cast("string").as("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
-    val contrib = ((col("ppm") - col("prev_ppm")) / lit(1e6)) *
-      log(greatest(col("ppm"), lit(1L)).cast("double") /
-        greatest(col("prev_ppm"), lit(1L)).cast("double"))
-    graft.operators.Drift.mixDriftOfCounts(counts)
-      .groupBy(col("window_start_ms").as("shard_id"))
-      .agg(graft.operators.FixedPoint.sum6Round4(contrib).as("psi"),
-        count(lit(1)).cast("int").as("n_bins"))
+    graft.operators.Drift.psiOfCounts(counts, "shard_id", "n_bins")
   }
 
   /** [[qualityScoreDrift]]'s PRODUCTION binning: decile boundaries
@@ -492,13 +461,7 @@ object CurateIngest {
         bin.cast("string").as("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .localCheckpoint()
-    val contrib = ((col("ppm") - col("prev_ppm")) / lit(1e6)) *
-      log(greatest(col("ppm"), lit(1L)).cast("double") /
-        greatest(col("prev_ppm"), lit(1L)).cast("double"))
-    graft.operators.Drift.mixDriftOfCounts(counts)
-      .groupBy(col("window_start_ms").as("shard_id"))
-      .agg(graft.operators.FixedPoint.sum6Round4(contrib).as("psi"),
-        count(lit(1)).cast("int").as("n_bins"))
+    graft.operators.Drift.psiOfCounts(counts, "shard_id", "n_bins")
   }
 
   /** DuckDB twin: [[graft.text.QualityModel.nbQualitySql]] as the

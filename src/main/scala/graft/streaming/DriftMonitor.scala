@@ -254,10 +254,9 @@ object DriftMonitor {
   }
 
   /** PSI of each batch against its predecessor on one axis, straight
-    * from the store: (batch_id, psi, n_keys) — the
-    * [[graft.operators.Drift.mixDriftOfCounts]] dense-grid/lag chain
-    * with batch_id as the window, [[CurateIngest.shardMixDrift]]'s
-    * exact arithmetic. On the score axis the chain runs WITHIN each
+    * from the store: (batch_id, psi, n_keys) —
+    * [[graft.operators.Drift.psiOfCounts]] with batch_id as the window,
+    * the body [[CurateIngest.shardMixDrift]] also runs. On the score axis the chain runs WITHIN each
     * scorer generation (a batch is only compared to a predecessor
     * binned under the same frozen scorer — cross-generation deltas
     * measure the re-freeze, not the data). */
@@ -268,14 +267,8 @@ object DriftMonitor {
       .filter(col("axis") === axis && col("batch_id") >= 0)
       .select(col("batch_id").as("window_start_ms"),
         col("key").as("event_type"), col("cnt"))
-    val contrib = ((col("ppm") - col("prev_ppm")) / lit(1e6)) *
-      log(greatest(col("ppm"), lit(1L)).cast("double") /
-        greatest(col("prev_ppm"), lit(1L)).cast("double"))
     def chain(c: DataFrame): DataFrame =
-      graft.operators.Drift.mixDriftOfCounts(c)
-        .groupBy(col("window_start_ms").as("batch_id"))
-        .agg(graft.operators.FixedPoint.sum6Round4(contrib).as("psi"),
-          count(lit(1)).cast("int").as("n_keys"))
+      graft.operators.Drift.psiOfCounts(c, "batch_id", "n_keys")
     if (axis != ScoreAxis) chain(counts.localCheckpoint())
     else {
       // batches lacking a gen row (pre-generation stores) are gen 0

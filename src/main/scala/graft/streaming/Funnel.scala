@@ -9,11 +9,11 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Clusters
 
 /** Stage 5 of the full funnel: the STATIC external benchmark gram set
-  * (one `sh` column of char `n`-gram hashes; compute it once from the
-  * raw benchmark docs and pin it — a real benchmark never arrives on the
+  * ([[graft.dedup.Dedup.benchGrams]]; compute it once from the raw
+  * benchmark docs and pin it — a real benchmark never arrives on the
   * stream). A survivor whose distinct n-gram overlap with it reaches
-  * `maxContamPm` per-mille drops; bench stand-ins (id < `benchMaxId`)
-  * pass through on their merits. */
+  * `maxContamPm` per-mille drops ([[graft.dedup.Dedup.contaminatedIds]]);
+  * bench stand-ins (id < `benchMaxId`) pass through on their merits. */
 private[streaming] final case class Contamination(bench: DataFrame, n: Int,
                                                   benchMaxId: Long,
                                                   maxContamPm: Long)
@@ -181,9 +181,8 @@ object Funnel {
       if (!funnel.scrub) (arriving, ListMap.empty[Store, DataFrame])
       else {
         val (scrubbed, novel) = scrub(arriving, stores(Store.Gram))
-        (scrubbed.select(col("doc_id"), col("text_clean").as("text"),
-            length(col("text_clean")).cast("long").as("n_chars"))
-          .localCheckpoint(), ListMap[Store, DataFrame](Store.Gram -> novel))
+        (graft.dedup.SpanScrub.scrubbedDocs(scrubbed).localCheckpoint(),
+          ListMap[Store, DataFrame](Store.Gram -> novel))
       }
     val gated = funnel.gate(input).localCheckpoint()
     val throughExact =
@@ -205,7 +204,9 @@ object Funnel {
     }
     ShardOut(funnel.contamination.fold(kept) { c => () =>
       val k = kept()
-      k.join(CurateIngest.contaminatedIds(k, input, c), Seq("doc_id"),
+      k.join(graft.dedup.Dedup.contaminatedIds(
+          k.join(input.select(col("doc_id"), col("text")), "doc_id"),
+          c.bench, c.n, c.benchMaxId, c.maxContamPm), Seq("doc_id"),
         "left_anti")
     }, appends)
   }

@@ -38,12 +38,8 @@ object Curate {
     * unchanged). */
   def curateDocs(docs: DataFrame, minQualityPm: Long = 600,
                  langs: Seq[String] = Seq("en", "de")): DataFrame = {
-    val scored = graft.Tables.spread(docs)
-      .withColumn("quality_pm", TextAnalysis.qualityExpr)
-      .withColumn("lang_pred", TextAnalysis.langPred)
-    val gated = scored
-      .filter(col("quality_pm") >= minQualityPm &&
-        col("lang_pred").isin(langs: _*))
+    val scored = TextAnalysis.scoreDocs(docs)
+    val gated = scored.filter(TextAnalysis.passesGate(minQualityPm, langs))
     // exact dedup as keep-min-doc_id per md5 via a min-struct HASH
     // AGGREGATE instead of the previous row_number window partitioned
     // by md5(text): same single exchange, but no sort of the text
@@ -309,19 +305,15 @@ object Curate {
     * exact wire reachable. */
   def curateScrubbed(docs: DataFrame, minQualityPm: Long = 600,
                      langs: Seq[String] = Seq("en", "de")): DataFrame =
-    curate(graft.dedup.SpanScrub.spanScrubFp(docs)
-      .select(col("doc_id"), col("text_clean").as("text"),
-        length(col("text_clean")).cast("long").as("n_chars")),
-      minQualityPm, langs)
+    curate(graft.dedup.SpanScrub.scrubbedDocs(
+      graft.dedup.SpanScrub.spanScrubFp(docs)), minQualityPm, langs)
 
   /** [[curateScrubbed]] on the exact-substring scrub wire — the
     * oracle-twin wire, kept reachable for A/B and parity work. */
   def curateScrubbedExact(docs: DataFrame, minQualityPm: Long = 600,
                           langs: Seq[String] = Seq("en", "de")): DataFrame =
-    curate(graft.dedup.SpanScrub.spanScrub(docs)
-      .select(col("doc_id"), col("text_clean").as("text"),
-        length(col("text_clean")).cast("long").as("n_chars")),
-      minQualityPm, langs)
+    curate(graft.dedup.SpanScrub.scrubbedDocs(
+      graft.dedup.SpanScrub.spanScrub(docs)), minQualityPm, langs)
 
   def curateScrubbedSql(minQualityPm: Long = 600,
                         langs: Seq[String] = Seq("en", "de")): String =
@@ -397,36 +389,17 @@ object Curate {
       graft.dedup.SpanScrub.spanScrub(anonDocs(docs, anonymize)), docs,
       minQualityPm, langs, n, benchMaxId, maxContamPm)
 
-  /** The fp-wire funnel under its r11 name — since the r12 default
-    * flip this IS [[curateFull]]; the alias keeps q_curate_full_fp
-    * (the original parity pin against the EXACT-substring oracle
-    * [[curateFullSql]]) stable across rounds. */
-  def curateFullFp(docs: DataFrame, minQualityPm: Long = 600,
-                   langs: Seq[String] = Seq("en", "de"),
-                   n: Int = 8, benchMaxId: Long = 20,
-                   maxContamPm: Long = 800): DataFrame =
-    curateFull(docs, minQualityPm, langs, n, benchMaxId, maxContamPm)
-
   /** Stages 1-5 of the full recipe, downstream of either scrub
     * variant's (doc_id, …, text_clean) output. */
   private def fullFromScrubbed(scrub: DataFrame, docs: DataFrame,
                                minQualityPm: Long, langs: Seq[String],
                                n: Int, benchMaxId: Long,
                                maxContamPm: Long): DataFrame = {
-    val scrubbed = scrub
-      .select(col("doc_id"), col("text_clean").as("text"),
-        length(col("text_clean")).cast("long").as("n_chars"))
-    val kept = curateDocs(scrubbed, minQualityPm, langs)
-    val bench = graft.dedup.Dedup.shingles(
-        docs.filter(col("doc_id") < benchMaxId), n)
-      .select(col("sh")).distinct()
-    val contaminated = graft.dedup.Dedup.shingles(kept, n)
-      .filter(col("doc_id") >= benchMaxId)
-      .join(broadcast(bench.withColumn("__hit", lit(1))), Seq("sh"), "left")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tot"), count(col("__hit")).as("n_shared"))
-      .filter(col("n_shared") * lit(1000L) >= col("n_tot") * lit(maxContamPm))
-      .select("doc_id")
+    val kept = curateDocs(graft.dedup.SpanScrub.scrubbedDocs(scrub),
+      minQualityPm, langs)
+    val contaminated = graft.dedup.Dedup.contaminatedIds(kept,
+      graft.dedup.Dedup.benchGrams(docs.filter(col("doc_id") < benchMaxId), n),
+      n, benchMaxId, maxContamPm)
     kept.join(contaminated, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang_pred"), col("quality_pm"),
         col("n_chars"))
@@ -517,12 +490,23 @@ object Curate {
     * verdict table is one row per input doc — the same cardinality
     * every downstream funnel aggregate needs anyway. */
   def curateAudit(docs: DataFrame, minQualityPm: Long = 600,
-                  langs: Seq[String] = Seq("en", "de")): DataFrame = {
-    val scored = graft.Tables.spread(docs)
-      .withColumn("quality_pm", TextAnalysis.qualityExpr)
-      .withColumn("lang_pred", TextAnalysis.langPred)
-      .withColumn("__gated", col("quality_pm") >= minQualityPm &&
-        col("lang_pred").isin(langs: _*))
+                  langs: Seq[String] = Seq("en", "de")): DataFrame =
+    audit(docs, minQualityPm, langs, None, None)
+
+  /** The one audit body behind [[curateAudit]], [[curateGopherAudit]]
+    * and [[curateFullAudit]]: `rep` (doc_id, gopher_pass) adds the
+    * Gopher gate and its `repetitious` verdict; `contaminated` maps the
+    * would-be survivors to contaminated ids and adds the
+    * `contaminated` verdict after `near_dup`. */
+  private def audit(docs: DataFrame, minQualityPm: Long, langs: Seq[String],
+                    rep: Option[DataFrame],
+                    contaminated: Option[DataFrame => DataFrame]): DataFrame = {
+    val gate = TextAnalysis.passesGate(minQualityPm, langs)
+    val scored = rep match {
+      case None => TextAnalysis.scoreDocs(docs).withColumn("__gated", gate)
+      case Some(r) => TextAnalysis.scoreDocs(docs).join(r, Seq("doc_id"))
+        .withColumn("__gated", gate && col("gopher_pass") === 1)
+    }
     val wMd5 = Window.partitionBy(col("__gated"), md5(col("text")))
       .orderBy(col("doc_id"))
     // stage boundary as in curateDocs: the ranked corpus is consumed
@@ -533,13 +517,23 @@ object Curate {
       .select(col("doc_id"), col("text"), col("n_chars"), col("quality_pm"))
     val drops = graft.dedup.Clusters.dropsBest(exact)
       .withColumn("__near_drop", lit(true))
-    ranked.join(drops, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("quality_pm") < minQualityPm, "low_quality")
-          .when(!col("lang_pred").isin(langs: _*), "bad_lang")
-          .when(col("__rn") > 1, "exact_dup")
-          .when(col("__near_drop") === true, "near_dup")
-          .otherwise("kept").as("verdict"),
+    // contamination over the would-be survivors only
+    val contam = contaminated.map(ids => ids(
+        exact.join(drops.select(col("doc_id")), Seq("doc_id"), "left_anti"))
+      .withColumn("__contam", lit(true)))
+    val stages = Seq(
+      Some((col("quality_pm") < minQualityPm) -> "low_quality"),
+      Some(!col("lang_pred").isin(langs: _*) -> "bad_lang"),
+      rep.map(_ => (col("gopher_pass") === 0) -> "repetitious"),
+      Some((col("__rn") > 1) -> "exact_dup"),
+      Some((col("__near_drop") === true) -> "near_dup"),
+      contam.map(_ => (col("__contam") === true) -> "contaminated")).flatten
+    val verdict = stages.tail.foldLeft(when(stages.head._1, stages.head._2)) {
+      case (v, (cond, label)) => v.when(cond, label)
+    }
+    contam.foldLeft(ranked.join(drops, Seq("doc_id"), "left"))(
+        _.join(_, Seq("doc_id"), "left"))
+      .select(col("doc_id"), verdict.otherwise("kept").as("verdict"),
         col("quality_pm"), col("lang_pred"))
   }
 
@@ -561,33 +555,10 @@ object Curate {
     * doc_id-keyed at input cardinality; everything downstream is
     * [[curateAudit]]'s audited plan. */
   def curateGopherAudit(docs: DataFrame, minQualityPm: Long = 600,
-                        langs: Seq[String] = Seq("en", "de")): DataFrame = {
-    val rep = Repetition.repetitionSignals(docs)
-      .select(col("doc_id"), col("gopher_pass"))
-    val scored = graft.Tables.spread(docs)
-      .withColumn("quality_pm", TextAnalysis.qualityExpr)
-      .withColumn("lang_pred", TextAnalysis.langPred)
-      .join(rep, Seq("doc_id"))
-      .withColumn("__gated", col("quality_pm") >= minQualityPm &&
-        col("lang_pred").isin(langs: _*) && col("gopher_pass") === 1)
-    val wMd5 = Window.partitionBy(col("__gated"), md5(col("text")))
-      .orderBy(col("doc_id"))
-    val ranked = scored.withColumn("__rn", row_number().over(wMd5))
-      .localCheckpoint()
-    val exact = ranked.filter(col("__gated") && col("__rn") === 1)
-      .select(col("doc_id"), col("text"), col("n_chars"), col("quality_pm"))
-    val drops = graft.dedup.Clusters.dropsBest(exact)
-      .withColumn("__near_drop", lit(true))
-    ranked.join(drops, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("quality_pm") < minQualityPm, "low_quality")
-          .when(!col("lang_pred").isin(langs: _*), "bad_lang")
-          .when(col("gopher_pass") === 0, "repetitious")
-          .when(col("__rn") > 1, "exact_dup")
-          .when(col("__near_drop") === true, "near_dup")
-          .otherwise("kept").as("verdict"),
-        col("quality_pm"), col("lang_pred"))
-  }
+                        langs: Seq[String] = Seq("en", "de")): DataFrame =
+    audit(docs, minQualityPm, langs,
+      Some(Repetition.repetitionSignals(docs)
+        .select(col("doc_id"), col("gopher_pass"))), None)
 
   /** DuckDB twin of [[curateGopherAudit]]:
     * [[Repetition.repetitionSignalsSql]] composed as the `rep` CTE of
@@ -652,48 +623,13 @@ object Curate {
   def curateFullAudit(docs: DataFrame, minQualityPm: Long = 600,
                       langs: Seq[String] = Seq("en", "de"),
                       n: Int = 8, benchMaxId: Long = 20,
-                      maxContamPm: Long = 800): DataFrame = {
-    val scrubbed = graft.dedup.SpanScrub.spanScrubFp(docs)
-      .select(col("doc_id"), col("text_clean").as("text"),
-        length(col("text_clean")).cast("long").as("n_chars"))
-    val scored = graft.Tables.spread(scrubbed)
-      .withColumn("quality_pm", TextAnalysis.qualityExpr)
-      .withColumn("lang_pred", TextAnalysis.langPred)
-      .withColumn("__gated", col("quality_pm") >= minQualityPm &&
-        col("lang_pred").isin(langs: _*))
-    val wMd5 = Window.partitionBy(col("__gated"), md5(col("text")))
-      .orderBy(col("doc_id"))
-    val ranked = scored.withColumn("__rn", row_number().over(wMd5))
-      .localCheckpoint()
-    val exact = ranked.filter(col("__gated") && col("__rn") === 1)
-      .select(col("doc_id"), col("text"), col("n_chars"), col("quality_pm"))
-    val drops = graft.dedup.Clusters.dropsBest(exact)
-      .withColumn("__near_drop", lit(true))
-    // contamination over the would-be survivors only, bench from RAW
-    // text (curateFull's contract)
-    val kept0 = exact.join(drops.select(col("doc_id")), Seq("doc_id"),
-      "left_anti")
-    val bench = graft.dedup.Dedup.shingles(
-        docs.filter(col("doc_id") < benchMaxId), n)
-      .select(col("sh")).distinct()
-    val contaminated = graft.dedup.Dedup.shingles(kept0, n)
-      .filter(col("doc_id") >= benchMaxId)
-      .join(broadcast(bench.withColumn("__hit", lit(1))), Seq("sh"), "left")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tot"), count(col("__hit")).as("n_shared"))
-      .filter(col("n_shared") * lit(1000L) >= col("n_tot") * lit(maxContamPm))
-      .select(col("doc_id")).withColumn("__contam", lit(true))
-    ranked.join(drops, Seq("doc_id"), "left")
-      .join(contaminated, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("quality_pm") < minQualityPm, "low_quality")
-          .when(!col("lang_pred").isin(langs: _*), "bad_lang")
-          .when(col("__rn") > 1, "exact_dup")
-          .when(col("__near_drop") === true, "near_dup")
-          .when(col("__contam") === true, "contaminated")
-          .otherwise("kept").as("verdict"),
-        col("quality_pm"), col("lang_pred"))
-  }
+                      maxContamPm: Long = 800): DataFrame =
+    // bench from RAW text (curateFull's contract)
+    audit(graft.dedup.SpanScrub.scrubbedDocs(
+        graft.dedup.SpanScrub.spanScrubFp(docs)), minQualityPm, langs, None,
+      Some(kept0 => graft.dedup.Dedup.contaminatedIds(kept0,
+        graft.dedup.Dedup.benchGrams(docs.filter(col("doc_id") < benchMaxId), n),
+        n, benchMaxId, maxContamPm)))
 
   /** DuckDB twin of [[curateFullAudit]]: the curateFullSql CTE chain's
     * scrub/score/rank/drops/contamination stages with the verdict CASE

@@ -86,22 +86,7 @@ object Hybrid {
           (col("q_nrm") * col("nrm")), 4).as("cos_sim"))
       .withColumn("rk", row_number().over(wc)).filter(col("rk") <= nCand)
       .select(col("query_id"), col("doc_id"), col("rk").as("cos_rk"))
-    // ---- RRF fusion as union + groupBy: no join node at all (a full
-    // outer can't broadcast), ≤ 2 contributions/doc — the sum of two
-    // doubles is order-independent, and the shape generalizes to any
-    // number of towers
-    val wf = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf_score").desc, col("doc_id"))
-    bmList.select(col("query_id"), col("doc_id"), col("bm25_rk").as("rk"),
-        lit(true).as("is_bm"))
-      .unionByName(cosList.select(col("query_id"), col("doc_id"),
-        col("cos_rk").as("rk"), lit(false).as("is_bm")))
-      .groupBy("query_id", "doc_id")
-      .agg(round(sum(lit(1.0) / (lit(rrfK) + col("rk"))), 6).as("rrf_score"),
-        max(when(col("is_bm"), col("rk"))).cast("int").as("bm25_rk"),
-        max(when(!col("is_bm"), col("rk"))).cast("int").as("cos_rk"))
-      .withColumn("rank", row_number().over(wf))
-      .filter(col("rank") <= k)
+    fuse(bmList, cosList, rrfK, k)
   }
 
   /** [[rrfSearch]] over MAINTAINED index artifacts — the production
@@ -155,8 +140,10 @@ object Hybrid {
     fuse(bmList, cosList, rrfK, k)
   }
 
-  /** The shared RRF tail (union + groupBy — no join node; ≤ 2
-    * contributions per doc). */
+  /** The shared RRF tail: union + groupBy, no join node at all (a full
+    * outer can't broadcast), ≤ 2 contributions per doc — the sum of two
+    * doubles is order-independent, and the shape generalizes to any
+    * number of towers. */
   private def fuse(bmList: DataFrame, cosList: DataFrame,
                    rrfK: Int, k: Int): DataFrame = {
     val wf = Window.partitionBy(col("query_id"))
@@ -192,30 +179,29 @@ object Hybrid {
     // tower's artifact pins are themselves independent jobs (guide
     // §2.6; r17 — measured ~1.7 s of tower-build wall overlapped at
     // sf0.1, identical artifacts by construction).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext = graft.Engine.blockingPool
-    val fSp = Future {
-      val sp0 = SparseIndex.append(
-        SparseIndex.build(docs.filter(col("doc_id") < splitId)),
-        docs.filter(col("doc_id") >= splitId))
-      val Seq(p, d, st) = graft.Engine.inParallel(
-        () => sp0.postings.localCheckpoint(),
-        () => sp0.df.localCheckpoint(),
-        () => sp0.stats.localCheckpoint())
-      sp0.copy(postings = p, df = d, stats = st)
+    val fan = new graft.Engine.FanOut(docs.sparkSession.sparkContext)
+    val (sp, dn) = fan.run {
+      val fSp = fan.submit { () =>
+        val sp0 = SparseIndex.append(
+          SparseIndex.build(docs.filter(col("doc_id") < splitId)),
+          docs.filter(col("doc_id") >= splitId))
+        val Seq(p, d, st) = graft.Engine.inParallel(
+          () => sp0.postings.localCheckpoint(),
+          () => sp0.df.localCheckpoint(),
+          () => sp0.stats.localCheckpoint())
+        sp0.copy(postings = p, df = d, stats = st)
+      }
+      val fDn = fan.submit { () =>
+        val dn0 = graft.ann.IncrementalIndex.append(
+          graft.ann.IncrementalIndex.build(embs.filter(col("vec_id") < splitId)),
+          embs.filter(col("vec_id") >= splitId))
+        val Seq(c, ce) = graft.Engine.inParallel(
+          () => dn0.codes.localCheckpoint(),
+          () => dn0.cells.localCheckpoint())
+        dn0.copy(codes = c, cells = ce)
+      }
+      (fan.await(fSp), fan.await(fDn))
     }
-    val fDn = Future {
-      val dn0 = graft.ann.IncrementalIndex.append(
-        graft.ann.IncrementalIndex.build(embs.filter(col("vec_id") < splitId)),
-        embs.filter(col("vec_id") >= splitId))
-      val Seq(c, ce) = graft.Engine.inParallel(
-        () => dn0.codes.localCheckpoint(),
-        () => dn0.cells.localCheckpoint())
-      dn0.copy(codes = c, cells = ce)
-    }
-    val sp = Await.result(fSp, Duration.Inf)
-    val dn = Await.result(fDn, Duration.Inf)
     rrfSearchIndexed(embs, sp, dn, qMaxId, mTerms, nCand, rrfK, k,
       nprobe, refine)
   }

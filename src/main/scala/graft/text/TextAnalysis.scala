@@ -74,6 +74,19 @@ object TextAnalysis {
       regexp_count(col("text"), lit("\\b(the|a)\\b")).cast("long"),
       length(col("text")).cast("long"))
 
+  /** The curation scoring stage: every input column plus `quality_pm`
+    * and `lang_pred`, map-side. Each funnel — batch, audit, ingest —
+    * scores through this one body. */
+  private[graft] def scoreDocs(docs: DataFrame): DataFrame =
+    spread(docs)
+      .withColumn("quality_pm", qualityExpr)
+      .withColumn("lang_pred", langPred)
+
+  /** The quality/language gate over scored rows: quality_pm ≥ the floor
+    * AND lang_pred in the allowed set. */
+  private[graft] def passesGate(minQualityPm: Long, langs: Seq[String]): Column =
+    col("quality_pm") >= minQualityPm && col("lang_pred").isin(langs: _*)
+
   def qualityScore(docs: DataFrame): DataFrame =
     spread(docs).select(col("doc_id"), qualityExpr.as("quality_pm"))
 

@@ -139,7 +139,7 @@ class CurateSpec extends AnyFunSuite {
     // would cut a span the exact key keeps and show up here)
     val base = Tables.documents(spark, "/root/testdata/sf0.001")
     val exact = Curate.curateFullExact(base).orderBy("doc_id").collect()
-    val fp = Curate.curateFullFp(base).orderBy("doc_id").collect()
+    val fp = Curate.curateFull(base).orderBy("doc_id").collect()
     assert(exact.nonEmpty)
     assert(fp.toSeq == exact.toSeq)
   }

@@ -33,6 +33,19 @@ class DriftProjSpec extends AnyFunSuite {
       math.abs(v._4 - 6.561182) < 1e-6, v.toString)
   }
 
+  test("psiOfCounts: 3-window grid, a vanished key scores against the 1-ppm clamp") {
+    // w0: a=3 b=1 (750k/250k ppm); w1: a=2, b absent (1M/0); w2: a=1 b=1
+    val counts = Seq((0L, "a", 3L), (0L, "b", 1L), (1L, "a", 2L),
+        (2L, "a", 1L), (2L, "b", 1L))
+      .toDF("window_start_ms", "event_type", "cnt")
+    val got = Drift.psiOfCounts(counts, "batch_id", "n_keys")
+      .orderBy("batch_id").as[(Long, Double, Int)].collect().toSeq
+    // w1: 0.25·ln(4/3) + 0.25·ln(250000/1) = 0.071921 + 3.107304
+    // w2: 0.5·ln 2 + 0.5·ln(500000/1)      = 0.346574 + 6.561182
+    // w0 has no predecessor, so no row
+    assert(got == Seq((1L, 3.1792, 2), (2L, 6.9078, 2)), got.toString)
+  }
+
   test("drift: rates shift fully between halves") {
     // min=1000 max=9000 → mid=5000; A all early, B all late
     val d = Drift.eventTypeDrift(events(

@@ -121,6 +121,21 @@ class MultimodalCodecSpec extends AnyFunSuite {
     assert(pairs == Set((1L, 2L)), s"expected only the planted pair: $pairs")
   }
 
+  test("hammingPairs: maxHamming bits in distinct bands pair, maxHamming + 1 do not") {
+    import spark.implicits._
+    val f0 = 0x2b5a3c96e1d7f08L // 63-bit pattern
+    def flip(bits: Int*): Long = bits.foldLeft(f0)((h, b) => h ^ (1L << b))
+    def pairs(other: Long): Set[(Long, Long, Int)] =
+      Multimodal.hammingPairs(Seq((1L, f0), (2L, other)).toDF("doc_id", "fp"),
+          "fp", 63, maxHamming = 6, nBands = 7)
+        .as[(Long, Long, Int)].collect().toSet
+    // 7 bands of 9 bits: one flipped bit in each of bands 0-5, band 6
+    // intact — the pigeonhole case at the radius
+    assert(pairs(flip(0, 9, 18, 27, 36, 45)) == Set((1L, 2L, 6)))
+    // 7 bits, band 6 still intact: a band candidate the gate rejects
+    assert(pairs(flip(0, 1, 9, 18, 27, 36, 45)).isEmpty)
+  }
+
   test("extractMeta routes real images to the header codec, other bytes to FakeCodec") {
     import spark.implicits._
     val png = encode(rgb(64, 32), "png")
