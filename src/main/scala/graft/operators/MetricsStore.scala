@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Read API over the stored metric tables that [[graft.streaming.Pipelines.runAll]]
   * writes — the relational replacement for the reference's cache-service
@@ -40,6 +41,21 @@ class MetricsStore(spark: SparkSession, path: String,
     table("session_metrics", Seq("start_ms", "user_id"))
   def performanceMetrics: DataFrame =
     table("performance_metrics", Seq("window_start_ms", "category"))
+
+  /** The rows micro-batch `batchId` stored in `table`: its
+    * `batch_id=<id>` partition under every `p_date`, as
+    * [[graft.streaming.Pipelines.writeStorageBatch]] lands them, read with
+    * `schema` when given (no inference) and without the partition
+    * columns. None when the batch stored no rows: an empty batch writes
+    * no partition. */
+  def batchRows(table: String, batchId: Long,
+                schema: Option[StructType] = None): Option[DataFrame] = {
+    val glob = new org.apache.hadoop.fs.Path(s"$path/$table/p_date=*/batch_id=$batchId")
+    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dirs = Option(fs.globStatus(glob)).toSeq.flatten.map(_.getPath.toString)
+    if (dirs.isEmpty) None
+    else Some(schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dirs: _*))
+  }
 
   /** Newest-N event windows as pivoted wide rows (the reference's
     * GET /metrics/event/windows?limit=N). */
@@ -153,9 +169,11 @@ class MetricsStore(spark: SparkSession, path: String,
 
   /** The per-trigger progress table written by
     * [[graft.streaming.MetricsListener]] — one row per (query, trigger)
-    * with rates, durations, watermark and state-store size. */
+    * with rates, durations, watermark and state-store size. Reads with
+    * `mergeSchema`: tables landed before the per-phase columns existed
+    * read with those columns null. */
   def streamingProgress(metricsPath: String): DataFrame =
-    spark.read.parquet(metricsPath)
+    spark.read.option("mergeSchema", "true").parquet(metricsPath)
 
   /** Watermark lag per query, newest trigger first: how far each
     * query's event-time watermark trails the trigger wall-clock — THE

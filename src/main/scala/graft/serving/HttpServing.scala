@@ -2,9 +2,18 @@ package graft.serving
 
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
-import java.util.concurrent.atomic.AtomicReference
+import java.util.concurrent.{ArrayBlockingQueue, BlockingQueue, LinkedBlockingQueue,
+  ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicReference}
+
+import scala.collection.immutable.TreeMap
+import scala.util.control.NonFatal
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_json}
+import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.MetricsStore
 
@@ -14,22 +23,32 @@ import graft.operators.MetricsStore
   * row from the round-3 verdict.
   *
   * Architecture matches the reference, not a Spark-job-per-request
-  * anti-pattern: the reference serves READS from Redis (a precomputed
-  * snapshot the stream keeps warm), so this server serves reads from an
-  * in-memory snapshot refreshed from [[MetricsStore]] — bounded collects
-  * (newest-N windows, single-row overview), exactly the rows the
-  * reference's zrevrange/hash reads return. HTTP requests never touch
-  * Spark; `refresh()` is the analog of the cache-sink consumer applying
-  * a batch, and a foreground-batch listener can drive it per
-  * micro-batch.
+  * anti-pattern: the reference serves READS from Redis, state its cache
+  * consumer applies each metric message to as it arrives, so this server
+  * serves reads from an in-memory snapshot. HTTP requests never touch
+  * Spark.
+  *
+  * The two windows routes are push-fed: [[attachAutoRefresh]] merges each
+  * committed micro-batch of `event_metrics` / `performance_metrics` into
+  * two bounded maps (newest `maxWindows` entries, keyed by window /
+  * (window, category)), reading only that batch's `batch_id=N`
+  * partitions — the cache-sink apply. A merge replaces keys, never adds
+  * to them: append mode emits each (window, key) row once and every row
+  * of a window in one batch, and a replayed batch id rewrites the same
+  * partitions, so merging a batch again changes nothing (Structured
+  * Streaming's idempotent-sink contract). `refresh()` is the cold path:
+  * it seeds both maps from the whole store (first event after start, a
+  * query's termination, a failed merge) and recomputes overview, drift
+  * and alerts, which every stored event batch re-derives on a coalesced
+  * background refresh.
   *
   * Zero dependencies: `com.sun.net.httpserver` is public JDK API, and
-  * row→JSON reuses Spark's own `toJSON` writer (schema-faithful,
-  * no hand-rolled encoder).
+  * row→JSON is Spark's own JSON writer (schema-faithful, no hand-rolled
+  * encoder).
   *
   * Routes (reference parity):
   *   GET /healthz                          → {"status":"ok"}
-  *   GET /readyz                           → 503 until the first refresh
+  *   GET /readyz                           → 503 until event windows exist
   *   GET /metrics/event/latest             → newest pivoted window object
   *   GET /metrics/event/windows?limit=N    → {"windows":[...]}
   *   GET /metrics/performance/windows?limit=N → {"windows":[...]}
@@ -43,48 +62,152 @@ private final case class Snapshot(eventWindows: Vector[String],
                                   perfWindows: Vector[String],
                                   overview: Option[String],
                                   drift: Vector[String],
-                                  alerts: Vector[String])
+                                  alerts: Vector[String]) {
+  def ready: Boolean = eventWindows.nonEmpty
+}
+
+private object MetricsHttpServer {
+  val EventTable = "event_metrics"
+  val PerfTable = "performance_metrics"
+  /** The partition columns [[graft.streaming.Pipelines.writeStorageBatch]]
+    * adds: storage layout, not part of a served row. */
+  val StorageColumns = Set("p_date", "batch_id")
+  val log: org.slf4j.Logger = org.slf4j.LoggerFactory.getLogger(classOf[MetricsHttpServer])
+
+  def ownColumns(schema: StructType): StructType =
+    StructType(schema.fields.filterNot(f => StorageColumns(f.name)))
+
+  /** Each row of `df` as (its key columns, its JSON object). */
+  def jsonByKey(df: DataFrame, keys: String*): Array[(Row, String)] =
+    df.select(keys.map(col) :+ to_json(struct(df.columns.map(col).toIndexedSeq: _*)): _*)
+      .collect().map(r => (Row.fromSeq(keys.indices.map(r.get)), r.getString(keys.length)))
+
+  /** A table that does not exist yet, or holds no files yet, reads as
+    * empty; every other read failure is a fault. */
+  def notWrittenYet(e: AnalysisException): Boolean =
+    e.getCondition == "PATH_NOT_FOUND" || e.getCondition == "UNABLE_TO_INFER_SCHEMA"
+
+  def daemonPool(name: String, queue: BlockingQueue[Runnable]): ThreadPoolExecutor =
+    new ThreadPoolExecutor(1, 1, 0L, TimeUnit.MILLISECONDS, queue,
+      (r: Runnable) => { val t = new Thread(r, name); t.setDaemon(true); t },
+      new ThreadPoolExecutor.DiscardPolicy)
+}
 
 class MetricsHttpServer(store: MetricsStore, port: Int = 0,
                         maxWindows: Int = 120,
                         alertThresholdPpm: Long = 200000L) {
+  import MetricsHttpServer._
 
-  private val snap = new AtomicReference[Option[Snapshot]](None)
+  private val snap = new AtomicReference(Snapshot(Vector.empty, Vector.empty, None,
+    Vector.empty, Vector.empty))
   @volatile private var server: HttpServer = _
 
-  /** Re-read the metric tables into the serving snapshot. Bounded:
-    * newest `maxWindows` pivoted event windows (the store's retention
-    * cap), the same for performance rows, one overview row.
-    *
-    * Each table loads independently: during topology startup the sinks
-    * commit at different times (the event sink's first batch can land
-    * before the performance sink's), so a missing table contributes an
-    * empty section rather than failing the whole refresh — the next
-    * batch's refresh fills it in. Ready once event windows exist. */
+  // The windows state: newest first, at most `maxWindows` entries each.
+  // Only `seedWindows` and `mergeBatch` touch it, under `windowsLock`.
+  private val windowsLock = new Object
+  private var eventWins = TreeMap.empty[Long, String](Ordering.Long.reverse)
+  private var perfRows = TreeMap.empty[(Long, String), String](
+    Ordering.Tuple2(Ordering.Long.reverse, Ordering.String))
+  // each table's own columns, captured by its first read: merges read
+  // their batch with it and pay no schema inference
+  private val schemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
+  @volatile private var seeded = false
+  private val failures = new AtomicLong
+
+  /** Store reads that failed for a reason other than "table not written
+    * yet" since the server was built. Each is logged at WARN; the
+    * snapshot keeps serving what it held before. */
+  def refreshFailures: Long = failures.get
+
+  /** `rows`, or `empty` when its table is not written yet. Any other
+    * failure is logged and counted, and reads as None so the caller keeps
+    * what it serves. */
+  private def read[A](what: String, empty: => A)(rows: => A): Option[A] =
+    try Some(rows) catch {
+      case e: AnalysisException if notWrittenYet(e) => Some(empty)
+      case NonFatal(e) =>
+        failures.incrementAndGet()
+        log.warn(s"metrics snapshot: reading $what failed; still serving the previous $what", e)
+        None
+    }
+
+  /** The cold path: re-read the stored tables into the serving snapshot.
+    * Seeds the two windows maps (newest `maxWindows` pivoted event
+    * windows, the same for performance rows), then recomputes overview,
+    * drift and alerts. A table not written yet contributes an empty
+    * section (during topology startup the sinks commit at different
+    * times); any other failure is counted in [[refreshFailures]] and
+    * leaves that section as it was. Ready once event windows exist. */
   def refresh(): Unit = {
-    def safe(rows: => Vector[String]): Vector[String] =
-      try rows catch { case _: Exception => Vector.empty }
-    val ev = safe(store.windows(maxWindows).toJSON.collect().toVector)
-    val perf = safe(store.performanceMetrics
-      .orderBy(org.apache.spark.sql.functions.col("window_start_ms").desc,
-        org.apache.spark.sql.functions.col("category"))
-      .limit(maxWindows).toJSON.collect().toVector)
-    val ov = safe(store.overview.toJSON.collect().toVector).headOption
+    seedWindows()
+    refreshDerived()
+  }
+
+  private def seedWindows(): Unit = windowsLock.synchronized {
+    val ev = read("event windows", Array.empty[(Row, String)])(
+      jsonByKey(store.windows(maxWindows), "window_start_ms"))
+    if (!schemas.contains(EventTable))
+      read("event_metrics schema", ())(schemas(EventTable) = ownColumns(store.eventMetrics.schema))
+    val perf = read("performance windows", Array.empty[(Row, String)]) {
+      val t = store.performanceMetrics
+      val own = ownColumns(t.schema)
+      schemas(PerfTable) = own
+      jsonByKey(t.select(own.fieldNames.toIndexedSeq.map(col): _*)
+        .orderBy(col("window_start_ms").desc, col("category")).limit(maxWindows),
+        "window_start_ms", "category")
+    }
+    ev.foreach(rows => eventWins = eventWins.empty ++ rows.map { case (k, j) => k.getLong(0) -> j })
+    perf.foreach(rows => perfRows = perfRows.empty ++ rows.map(perfEntry))
+    publishWindows()
+    seeded = ev.isDefined && perf.isDefined
+  }
+
+  private def perfEntry(kj: (Row, String)): ((Long, String), String) =
+    (kj._1.getLong(0), kj._1.getString(1)) -> kj._2
+
+  /** Merge micro-batch `batchId` of `table` into its windows map. Returns
+    * whether the batch stored any rows (an empty batch writes no
+    * partition and changes nothing). */
+  private def mergeBatch(table: String, batchId: Long): Boolean = windowsLock.synchronized {
+    store.batchRows(table, batchId, schemas.get(table)) match {
+      case None => false
+      case Some(rows) =>
+        schemas.getOrElseUpdate(table, ownColumns(rows.schema))
+        if (table == EventTable)
+          eventWins = (eventWins ++ jsonByKey(graft.operators.Serving.pivotEventCounts(rows),
+            "window_start_ms").map { case (k, j) => k.getLong(0) -> j }).take(maxWindows)
+        else
+          perfRows = (perfRows ++ jsonByKey(rows, "window_start_ms", "category")
+            .map(perfEntry)).take(maxWindows)
+        publishWindows()
+        true
+    }
+  }
+
+  private def publishWindows(): Unit = {
+    val ev = eventWins.values.toVector
+    val perf = perfRows.values.toVector
+    snap.updateAndGet(_.copy(eventWindows = ev, perfWindows = perf))
+  }
+
+  /** Overview, drift and alerts: re-derived from the whole store. */
+  private def refreshDerived(): Unit = {
+    val ov = read("overview", Option.empty[String])(
+      store.overview.toJSON.collect().headOption)
     // drift-on-read over the stored table, computed ONCE per refresh:
     // the alerts view is a filter of the same drift table, and without
     // the materialization every refresh would run the whole pipeline
     // (scan, dense grid, two windows) twice
-    val driftAndAlerts = try {
+    val driftAndAlerts = read("mix drift", (Vector.empty[String], Vector.empty[String])) {
       val d = store.mixDrift.localCheckpoint()
-      val ord = Seq(
-        org.apache.spark.sql.functions.col("window_start_ms").desc,
-        org.apache.spark.sql.functions.col("event_type").asc)
+      val ord = Seq(col("window_start_ms").desc, col("event_type").asc)
       (d.orderBy(ord: _*).limit(maxWindows).toJSON.collect().toVector,
         graft.operators.Drift.mixDriftAlerts(d, alertThresholdPpm)
           .orderBy(ord: _*).limit(maxWindows).toJSON.collect().toVector)
-    } catch { case _: Exception => (Vector.empty[String], Vector.empty[String]) }
-    val (drift, alerts) = driftAndAlerts
-    if (ev.nonEmpty) snap.set(Some(Snapshot(ev, perf, ov, drift, alerts)))
+    }
+    snap.updateAndGet(s => s.copy(overview = ov.getOrElse(s.overview),
+      drift = driftAndAlerts.fold(s.drift)(_._1),
+      alerts = driftAndAlerts.fold(s.alerts)(_._2)))
   }
 
   private def respond(x: HttpExchange, code: Int, body: String): Unit = {
@@ -124,103 +247,117 @@ class MetricsHttpServer(store: MetricsStore, port: Int = 0,
         respond(x, 405, """{"error":"method not allowed"}""")
       } else h(x)
 
+  /** A route that serves from the snapshot once it is ready, 503 before. */
+  private def route(s: HttpServer, path: String)(body: (Snapshot, HttpExchange) => String): Unit =
+    s.createContext(path, exact(path) { x =>
+      val sn = snap.get()
+      if (sn.ready) respond(x, 200, body(sn, x)) else respond(x, 503, "{}")
+    })
+
   /** Start and return the bound port (`port=0` picks a free one). */
   def start(): Int = {
     val s = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
     s.createContext("/healthz", exact("/healthz") { x =>
       respond(x, 200, """{"status":"ok"}""") })
-    s.createContext("/readyz", exact("/readyz") { x => snap.get() match {
-      case Some(_) => respond(x, 200, """{"status":"ready"}""")
-      case None    => respond(x, 503, """{"status":"not ready"}""")
-    }})
-    s.createContext("/metrics/event/latest", exact("/metrics/event/latest") { x => snap.get() match {
-      case Some(sn) => respond(x, 200, sn.eventWindows.headOption.getOrElse("{}"))
-      case None     => respond(x, 503, "{}")
-    }})
-    s.createContext("/metrics/event/windows", exact("/metrics/event/windows") { x => snap.get() match {
-      case Some(sn) => respond(x, 200, windowsJson(sn.eventWindows, limitParam(x, 20)))
-      case None     => respond(x, 503, "{}")
-    }})
-    s.createContext("/metrics/performance/windows", exact("/metrics/performance/windows") { x => snap.get() match {
-      case Some(sn) => respond(x, 200, windowsJson(sn.perfWindows, limitParam(x, 20)))
-      case None     => respond(x, 503, "{}")
-    }})
-    s.createContext("/metrics/drift", exact("/metrics/drift") { x => snap.get() match {
-      case Some(sn) => respond(x, 200,
-        sn.drift.take(limitParam(x, 20)).mkString("{\"drift\":[", ",", "]}"))
-      case None => respond(x, 503, "{}")
-    }})
-    s.createContext("/metrics/alerts", exact("/metrics/alerts") { x => snap.get() match {
-      case Some(sn) => respond(x, 200,
-        sn.alerts.take(limitParam(x, 20)).mkString("{\"alerts\":[", ",", "]}"))
-      case None => respond(x, 503, "{}")
-    }})
-    s.createContext("/metrics/overview", exact("/metrics/overview") { x => snap.get() match {
-      case Some(sn) =>
-        val ev = sn.eventWindows.headOption.getOrElse("{}")
-        val ovPerf = sn.overview.getOrElse("{}")
-        respond(x, 200, s"""{"event_latest":$ev,"performance_latest":$ovPerf}""")
-      case None => respond(x, 503, "{}")
-    }})
+    s.createContext("/readyz", exact("/readyz") { x =>
+      if (snap.get().ready) respond(x, 200, """{"status":"ready"}""")
+      else respond(x, 503, """{"status":"not ready"}""")
+    })
+    route(s, "/metrics/event/latest")((sn, _) => sn.eventWindows.head)
+    route(s, "/metrics/event/windows")((sn, x) =>
+      windowsJson(sn.eventWindows, limitParam(x, 20)))
+    route(s, "/metrics/performance/windows")((sn, x) =>
+      windowsJson(sn.perfWindows, limitParam(x, 20)))
+    route(s, "/metrics/drift")((sn, x) =>
+      sn.drift.take(limitParam(x, 20)).mkString("{\"drift\":[", ",", "]}"))
+    route(s, "/metrics/alerts")((sn, x) =>
+      sn.alerts.take(limitParam(x, 20)).mkString("{\"alerts\":[", ",", "]}"))
+    route(s, "/metrics/overview") { (sn, _) =>
+      val ovPerf = sn.overview.getOrElse("{}")
+      s"""{"event_latest":${sn.eventWindows.head},"performance_latest":$ovPerf}"""
+    }
     s.setExecutor(null) // serve on the dispatch thread: snapshot reads only
     s.start()
     server = s
     server.getAddress.getPort
   }
 
-  def stop(): Unit = if (server != null) server.stop(0)
+  def stop(): Unit = {
+    if (server != null) server.stop(0)
+    applier.shutdown()
+    deriver.shutdown()
+  }
 
-  // -- live refresh: the cache-apply analog ----------------------------
-  // One refresh thread with room for ONE pending refresh; a submit while
-  // one is pending is dropped. `refresh()` always rebuilds from the
-  // current table state, so the pending refresh (which starts after every
-  // dropped request arrived) serves them all: last-write-wins, and a
-  // burst of progress events costs at most two refreshes.
-  private lazy val refresher = new java.util.concurrent.ThreadPoolExecutor(
-    1, 1, 0L, java.util.concurrent.TimeUnit.MILLISECONDS,
-    new java.util.concurrent.ArrayBlockingQueue[Runnable](1),
-    (r: Runnable) => {
-      val t = new Thread(r, "metrics-http-refresh"); t.setDaemon(true); t
-    },
-    new java.util.concurrent.ThreadPoolExecutor.DiscardPolicy)
+  // -- live apply: the cache-consumer analog ----------------------------
+  // `applier` runs the windows merges in batch order, one at a time, and
+  // never drops one. `deriver` re-derives overview, drift and alerts with
+  // room for ONE pending run; a submit while one is pending is dropped,
+  // since the pending run (which starts after every dropped request
+  // arrived) reads the store as they would: a burst of stored batches
+  // costs at most two runs, and none of them holds up a merge.
+  private val applier = daemonPool("metrics-http-apply", new LinkedBlockingQueue[Runnable])
+  private val deriver = daemonPool("metrics-http-refresh", new ArrayBlockingQueue[Runnable](1))
+  private val reseedPending = new AtomicBoolean
 
-  /** Attach a listener that refreshes the snapshot after every
-    * micro-batch of `queryName` — the reference's stream→Redis apply
-    * loop, expressed as progress-driven snapshot rebuilds. No-data
+  private def submitDerived(): Unit = deriver.execute(() => refreshDerived())
+
+  /** Batch `batchId` of `table` was committed: merge it (a cold seed
+    * instead if the maps are not seeded yet, or if the merge fails). Once
+    * an event batch stored rows, re-derive the rest — as the full refresh
+    * always did, per event batch: a trigger's performance batch usually
+    * lands before its event batch, and one landing after is derived at
+    * the next. What the listener runs on the apply thread; specs call it
+    * directly. */
+  private[graft] def applyCommitted(table: String, batchId: Long): Unit = {
+    val derive =
+      if (!seeded) { seedWindows(); true }
+      else try mergeBatch(table, batchId) && table == EventTable catch {
+        case NonFatal(e) =>
+          failures.incrementAndGet()
+          log.warn(s"metrics snapshot: merging $table batch $batchId failed; re-reading the store", e)
+          schemas.remove(table)
+          seedWindows()
+          true
+      }
+    if (derive) submitDerived()
+  }
+
+  /** A cold re-seed on the apply thread, coalesced: one waiting at a time
+    * serves every request made before it starts. */
+  private def submitReseed(): Unit =
+    if (reseedPending.compareAndSet(false, true)) applier.execute { () =>
+      reseedPending.set(false)
+      seedWindows()
+      submitDerived()
+    }
+
+  /** Attach a listener that feeds the snapshot from every committed
+    * micro-batch: batch N of `queryName` (which writes `event_metrics`)
+    * and of `performance_metrics` is merged into its windows map. No-data
     * batches count too: in append mode they are where the watermark
-    * closes windows. The refresh runs on the dedicated refresh thread
-    * (never on the listener bus: refresh is bounded Spark work, and a
-    * slow refresh must drop behind, not stall every query's progress
-    * events); requests arriving during a refresh coalesce into one. */
-  def attachAutoRefresh(spark: org.apache.spark.sql.SparkSession,
-                        queryName: String = "event_metrics")
-  : org.apache.spark.sql.streaming.StreamingQueryListener = {
-    import org.apache.spark.sql.streaming.StreamingQueryListener
+    * closes windows. Merges run on the server's own apply thread, never
+    * on the listener bus, so a slow merge cannot stall any query's
+    * progress events. A query's termination triggers a cold re-seed
+    * (coalesced): with a run-to-complete trigger (AvailableNow) it is the
+    * point where every table is fully committed. */
+  def attachAutoRefresh(spark: SparkSession,
+                        queryName: String = EventTable): StreamingQueryListener = {
     val l = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        if (e.progress.name == queryName) submitRefresh()
-      // also refresh when any query terminates: with a run-to-complete
-      // trigger (AvailableNow) the single progress event can race the
-      // sink's very first commit — the empty-dir read is swallowed and
-      // no later batch would retry; at termination the tables are
-      // fully committed. (QueryTerminatedEvent carries no name, so no
-      // filter — the refresh is bounded either way.)
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        submitRefresh()
-      private def submitRefresh(): Unit =
-        refresher.execute(() =>
-          try refresh()
-          catch { case _: Throwable => () }) // table mid-write: a later event refreshes
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        e.progress.name match {
+          case `queryName` => applier.execute(() => applyCommitted(EventTable, e.progress.batchId))
+          case PerfTable => applier.execute(() => applyCommitted(PerfTable, e.progress.batchId))
+          case _ => ()
+        }
+      // QueryTerminatedEvent carries no name, so no filter
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        submitReseed()
     }
     spark.streams.addListener(l)
     l
   }
 
-  def detachAutoRefresh(spark: org.apache.spark.sql.SparkSession,
-                        l: org.apache.spark.sql.streaming.StreamingQueryListener): Unit =
+  def detachAutoRefresh(spark: SparkSession, l: StreamingQueryListener): Unit =
     spark.streams.removeListener(l)
 }

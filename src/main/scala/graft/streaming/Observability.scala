@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   * growth, neither of which is visible from the output tables — they
   * only exist in trigger progress, so losing them means flying blind.
   *
-  * One row per (query, trigger): input volume/rates, trigger duration,
-  * event-time watermark, state rows/bytes. Rows buffer in memory and
+  * One row per (query, trigger): input volume/rates, trigger duration and
+  * its phases, event-time watermark, state rows/bytes. Rows buffer in memory and
   * flush as a parquet append every `flushEvery` events (and on query
   * termination), so the write amplification is one small file per
   * `flushEvery` triggers — metrics volume, not data volume; compact
@@ -26,6 +26,17 @@ import org.apache.spark.sql.types._
   * [[MetricsStore.watermarkLag]].
   */
 object Observability {
+
+  /** The trigger phases of `StreamingQueryProgress.durationMs` kept as
+    * columns, (durationMs key, column): where a trigger's time went.
+    * A phase the trigger did not run is null. */
+  val phases: Seq[(String, String)] = Seq(
+    "latestOffset" -> "latest_offset_ms",
+    "getBatch" -> "get_batch_ms",
+    "queryPlanning" -> "query_planning_ms",
+    "addBatch" -> "add_batch_ms",
+    "walCommit" -> "wal_commit_ms",
+    "commitOffsets" -> "commit_offsets_ms")
 
   val progressSchema: StructType = StructType(Seq(
     StructField("query_name", StringType),
@@ -38,7 +49,8 @@ object Observability {
     StructField("trigger_ms", LongType),
     StructField("watermark_ms", LongType, nullable = true),
     StructField("state_rows", LongType),
-    StructField("state_bytes", LongType)))
+    StructField("state_bytes", LongType)) ++
+    phases.map { case (_, c) => StructField(c, LongType, nullable = true) })
 
   /** Attach a fresh listener writing to `path`; caller detaches via
     * [[detach]] (which also flushes the tail buffer). */
@@ -80,7 +92,7 @@ class MetricsListener(spark: SparkSession, path: String, flushEvery: Int)
   override def onQueryProgress(
       e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = e.progress
-    val row = Row(
+    val row = Row.fromSeq(Seq(
       Option(p.name).getOrElse(p.id.toString),
       p.runId.toString,
       p.batchId,
@@ -91,7 +103,8 @@ class MetricsListener(spark: SparkSession, path: String, flushEvery: Int)
       Long.box(p.durationMs.getOrDefault("triggerExecution", 0L)),
       isoMs(Option(p.eventTime).map(_.get("watermark")).orNull),
       p.stateOperators.map(_.numRowsTotal).sum,
-      p.stateOperators.map(_.memoryUsedBytes).sum)
+      p.stateOperators.map(_.memoryUsedBytes).sum) ++
+      Observability.phases.map { case (k, _) => p.durationMs.get(k) })
     val doFlush = buf.synchronized {
       buf.add(row)
       buf.size >= flushEvery

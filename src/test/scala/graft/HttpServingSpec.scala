@@ -176,4 +176,192 @@ class HttpServingSpec extends AnyFunSuite {
       q.stop()
     }
   }
+
+  // -- push-fed windows -------------------------------------------------
+
+  /** Events file `k` of a synthetic feed: 150 s of the four served types
+    * from 2024-01-01, one event every 500 ms. The file source globs on the
+    * file name, so the single part file is moved into place (file 0 at
+    * the source root, where the stream reads its schema). */
+  private def landEvents(src: java.nio.file.Path, k: Int): Unit = {
+    import spark.implicits._
+    val types = Seq("view", "click", "purchase", "signup")
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli + k * 150000L
+    val tmp = java.nio.file.Files.createTempDirectory("graft_http_ev").resolve("out")
+    (0 until 300).map { i =>
+      (k * 1000L + i, new java.sql.Timestamp(t0 + i * 500L), (i * 7 + k) % 13L,
+        types((i + k) % types.size), (i * 31 + k) % 97 * 1.5)
+    }.toDF("event_id", "ts", "user_id", "event_type", "value")
+      .coalesce(1).write.parquet(tmp.toString)
+    val part = java.nio.file.Files.list(tmp)
+      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+    val dest = if (k == 0) src.resolve("events.parquet") else src.resolve(s"k=$k/events.parquet")
+    java.nio.file.Files.createDirectories(dest.getParent)
+    java.nio.file.Files.move(part, dest)
+  }
+
+  private val windowRoutes =
+    Seq("/metrics/event/windows?limit=999", "/metrics/performance/windows?limit=999")
+
+  /** Both windows bodies of a fresh server's cold `refresh()` over `path`. */
+  private def coldBodies(path: String, maxWindows: Int): Seq[String] = {
+    val cold = new MetricsHttpServer(new MetricsStore(spark, path), maxWindows = maxWindows)
+    val port = cold.start()
+    try { cold.refresh(); windowRoutes.map(get(port, _)._2) } finally cold.stop()
+  }
+
+  test("served performance rows carry only the table's own columns") {
+    val server = new MetricsHttpServer(new MetricsStore(spark, storePath))
+    val port = server.start()
+    try {
+      server.refresh()
+      val (c, perf) = get(port, "/metrics/performance/windows?limit=120")
+      assert(c == 200 && perf.contains("\"avg_value\""))
+      assert(!perf.contains("p_date") && !perf.contains("batch_id"), perf.take(300))
+    } finally server.stop()
+  }
+
+  test("a failing store read is counted and the previous windows stay served") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_http_broken").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(storePath), new java.io.File(dir))
+    val server = new MetricsHttpServer(new MetricsStore(spark, dir))
+    val port = server.start()
+    try {
+      server.refresh()
+      assert(server.refreshFailures == 0L)
+      val before = get(port, "/metrics/event/windows?limit=120")
+      assert(before._1 == 200)
+      val date = new java.io.File(s"$dir/event_metrics").list().filter(_.startsWith("p_date=")).min
+      val junk = java.nio.file.Paths.get(s"$dir/event_metrics/$date/batch_id=999/part-00000-junk.parquet")
+      java.nio.file.Files.createDirectories(junk.getParent)
+      java.nio.file.Files.write(junk, "not a parquet file".getBytes("UTF-8"))
+      // the merge of the broken batch fails, and so does its cold fallback
+      server.applyCommitted("event_metrics", 999L)
+      val afterMerge = server.refreshFailures
+      assert(afterMerge >= 2L)
+      assert(get(port, "/metrics/event/windows?limit=120") == before)
+      server.refresh()
+      assert(server.refreshFailures > afterMerge)
+      assert(get(port, "/metrics/event/windows?limit=120") == before)
+    } finally server.stop()
+  }
+
+  test("a missing store is not a failure") {
+    val server = new MetricsHttpServer(new MetricsStore(spark, "/nonexistent-metrics-store"))
+    val empty = java.nio.file.Files.createTempDirectory("graft_http_empty").toString
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$empty/event_metrics"))
+    val emptyServer = new MetricsHttpServer(new MetricsStore(spark, empty))
+    try {
+      server.refresh()
+      emptyServer.refresh()
+      emptyServer.applyCommitted("event_metrics", 0L)
+      assert(server.refreshFailures == 0L && emptyServer.refreshFailures == 0L)
+    } finally { server.stop(); emptyServer.stop() }
+  }
+
+  test("push-fed windows equal a cold refresh after every batch, on replay and on restart") {
+    val src = java.nio.file.Files.createTempDirectory("graft_http_src")
+    val full = java.nio.file.Files.createTempDirectory("graft_http_full").toString
+    // several landed files, each run to completion: (table, batch id) in commit order
+    val batches = (0 until 5).flatMap { k =>
+      landEvents(src, k)
+      val qs = graft.streaming.Pipelines.runAll(spark, src.toString, full)
+      qs.foreach(_.awaitTermination(120000))
+      Seq("event_metrics", "performance_metrics").flatMap { t =>
+        qs.find(_.name == t).get.recentProgress.map(p => t -> p.batchId).distinct
+      }
+    }
+    assert(batches.map(_._1).toSet == Set("event_metrics", "performance_metrics"))
+    // `grown` holds exactly what the store held after each commit: batch
+    // N's partitions are copied in, then the servers apply batch N
+    val grown = java.nio.file.Files.createTempDirectory("graft_http_grown").toString
+    def commit(table: String, id: Long): Unit =
+      new java.io.File(s"$full/$table").listFiles().filter(_.getName.startsWith("p_date="))
+        .map(d => new java.io.File(d, s"batch_id=$id")).filter(_.isDirectory).foreach { d =>
+          org.apache.commons.io.FileUtils.copyDirectory(d,
+            new java.io.File(s"$grown/$table/${d.getParentFile.getName}/${d.getName}"))
+        }
+    val maxWindows = 5 // fewer than the feed's windows: merges evict
+    val pushed = new MetricsHttpServer(new MetricsStore(spark, grown), maxWindows = maxWindows)
+    var restarted: Option[MetricsHttpServer] = None
+    val servers = () => Seq(pushed) ++ restarted
+    val ports = scala.collection.mutable.Map(pushed -> pushed.start())
+    try {
+      batches.zipWithIndex.foreach { case ((table, id), i) =>
+        commit(table, id)
+        // a new server over a store that already holds data: its first
+        // event seeds it
+        if (i == batches.size / 2) {
+          val s = new MetricsHttpServer(new MetricsStore(spark, grown), maxWindows = maxWindows)
+          ports(s) = s.start()
+          restarted = Some(s)
+        }
+        val cold = coldBodies(grown, maxWindows)
+        for (replay <- 0 to 1; s <- servers()) {
+          s.applyCommitted(table, id)
+          val bodies = windowRoutes.map(get(ports(s), _)._2)
+          assert(bodies == cold, s"$table batch $id (replay $replay)")
+        }
+      }
+      // an old batch id merged again changes nothing either
+      val (t0, id0) = batches.head
+      servers().foreach { s =>
+        s.applyCommitted(t0, id0)
+        assert(windowRoutes.map(get(ports(s), _)._2) == coldBodies(grown, maxWindows))
+        assert(s.refreshFailures == 0L)
+      }
+      val perf = get(ports(pushed), "/metrics/performance/windows?limit=999")._2
+      assert(perf.contains("\"category\"") && !perf.contains("p_date") && !perf.contains("batch_id"))
+      assert(get(ports(pushed), "/metrics/event/windows?limit=999")._2
+        .split("window_start_ms").length - 1 == maxWindows)
+    } finally servers().foreach(_.stop())
+  }
+
+  test("after the cold refresh, further batches' windows are served without a store-wide read") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.streaming.Trigger
+    val src = java.nio.file.Files.createTempDirectory("graft_http_live_src")
+    val out = java.nio.file.Files.createTempDirectory("graft_http_live_out").toString
+    landEvents(src, 0)
+    val windowsCalls = new AtomicInteger
+    val store = new MetricsStore(spark, out) {
+      override def windows(limit: Int): org.apache.spark.sql.DataFrame = {
+        windowsCalls.incrementAndGet()
+        super.windows(limit)
+      }
+    }
+    val server = new MetricsHttpServer(store)
+    val port = server.start()
+    val listener = server.attachAutoRefresh(spark)
+    val qs = graft.streaming.Pipelines.runAll(spark, src.toString, out,
+      Trigger.ProcessingTime("500 milliseconds"))
+    /** The newest served window start, once it is newer than `than`. */
+    def newestAfter(than: Long): Long = {
+      val deadline = System.currentTimeMillis() + 60000
+      var newest = than
+      while (newest <= than && System.currentTimeMillis() < deadline) {
+        val (c, body) = get(port, "/metrics/event/windows?limit=1")
+        if (c == 200) newest = "\"window_start_ms\":(\\d+)".r
+          .findFirstMatchIn(body).map(_.group(1).toLong).getOrElse(than)
+        if (newest <= than) Thread.sleep(100)
+      }
+      assert(newest > than, s"no window newer than $than was served")
+      newest
+    }
+    try {
+      var newest = newestAfter(Long.MinValue)
+      val K = 3
+      (1 to K).foreach { k =>
+        landEvents(src, k)
+        newest = newestAfter(newest)
+      }
+      assert(windowsCalls.get == 1,
+        s"store.windows ran ${windowsCalls.get} times for the cold refresh and $K merged files")
+      assert(server.refreshFailures == 0L)
+    } finally {
+      qs.foreach(_.stop())
+      server.detachAutoRefresh(spark, listener)
+      server.stop()
+    }
+  }
 }

@@ -56,6 +56,35 @@ class ObservabilitySpec extends AnyFunSuite {
     // state-store telemetry exists (windowed aggs hold state)
     assert(progress.filter(col("state_rows") > 0L).count() > 0L,
       "windowed aggregations must report state rows")
+
+    // every trigger phase is kept: a data batch ran each one
+    val dataBatches = progress.filter(col("num_input_rows") > 0L).collect()
+    assert(dataBatches.nonEmpty)
+    for (r <- dataBatches; (_, c) <- Observability.phases)
+      assert(!r.isNullAt(r.fieldIndex(c)),
+        s"$c is null for ${r.getAs[String]("query_name")} batch ${r.getAs[Long]("batch_id")}")
+  }
+
+  test("a progress table landed before the phase columns still reads") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_obs_old").toString + "/_progress"
+    // the eleven columns of the earlier schema, then a row of the current one
+    Seq(("event_metrics", "r0", 0L, 1000L, 5L, 1.0, 2.0, 30L, 0L, 4L, 64L))
+      .toDF("query_name", "run_id", "batch_id", "ts_ms", "num_input_rows", "input_rps",
+        "processed_rps", "trigger_ms", "watermark_ms", "state_rows", "state_bytes")
+      .write.parquet(path)
+    val row = org.apache.spark.sql.Row.fromSeq(
+      Seq("event_metrics", "r0", 1L, 2000L, 5L, 1.0, 2.0, 30L, 500L, 4L, 64L) ++
+        Observability.phases.map(_ => 3L))
+    spark.createDataFrame(java.util.List.of(row), Observability.progressSchema)
+      .write.mode("append").parquet(path)
+    val progress = new MetricsStore(spark, path).streamingProgress(path)
+      .orderBy("batch_id").collect()
+    assert(progress.length == 2)
+    for ((_, c) <- Observability.phases) {
+      assert(progress(0).isNullAt(progress(0).fieldIndex(c)))
+      assert(progress(1).getAs[Long](c) == 3L)
+    }
   }
 
   test("injected mix shift raises exactly the expected alert rows") {
