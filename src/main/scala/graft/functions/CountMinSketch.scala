@@ -135,32 +135,13 @@ case class CmSketchAgg(child: Expression,
     copy(child = c.head)
 }
 
-/** `cm_merge(sketch)`: sketches → merged sketch. */
-case class CmMergeAgg(child: Expression,
-                      mutableAggBufferOffset: Int = 0,
-                      inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Byte]] {
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "cm_merge"
-  override def createAggregationBuffer(): Array[Byte] = CMS.empty()
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) CMS.merge(buf, v.asInstanceOf[Array[Byte]])
-    buf
-  }
-  override def merge(buf: Array[Byte], other: Array[Byte]): Array[Byte] =
-    CMS.merge(buf, other)
-  override def eval(buf: Array[Byte]): Any = buf
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-  override def withNewMutableAggBufferOffset(offset: Int): CmMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): CmMergeAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+/** Count-Min as a [[SketchMergeAgg]] family (`cm_merge`): the counter
+  * bytes are the buffer. */
+object CmsFamily extends SketchFamily[Array[Byte]]("cm_merge") {
+  def empty(): Array[Byte] = CMS.empty()
+  def merge(into: Array[Byte], other: Array[Byte]): Array[Byte] = CMS.merge(into, other)
+  def toBytes(b: Array[Byte]): Array[Byte] = b
+  def fromBytes(bytes: Array[Byte]): Array[Byte] = bytes
 }
 
 /** `cm_estimate(sketch, item)`: point-frequency estimate (≥ true). */
@@ -192,7 +173,7 @@ object CmsFunctions {
       CmSketchAgg(GraftColumnBridge.toExpr(c)).toAggregateExpression())
   def cm_merge(c: Column): Column =
     GraftColumnBridge.toColumn(
-      CmMergeAgg(GraftColumnBridge.toExpr(c)).toAggregateExpression())
+      SketchMergeAgg(GraftColumnBridge.toExpr(c), CmsFamily).toAggregateExpression())
   def cm_estimate(sketch: Column, item: Column): Column =
     GraftColumnBridge.toColumn(CmEstimate(
       GraftColumnBridge.toExpr(sketch), GraftColumnBridge.toExpr(item)))

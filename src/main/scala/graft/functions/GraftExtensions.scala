@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -20,87 +20,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("dot_product_f"),
-      new ExpressionInfo(classOf[DotProductF].getName, "dot_product_f"),
-      (children: Seq[Expression]) => DotProductF(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("hll_sketch"),
-      new ExpressionInfo(classOf[HllSketchAgg].getName, "hll_sketch"),
-      (children: Seq[Expression]) => HllSketchAgg(children.head).toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("hll_merge"),
-      new ExpressionInfo(classOf[HllMergeAgg].getName, "hll_merge"),
-      (children: Seq[Expression]) => HllMergeAgg(children.head).toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("hll_estimate"),
-      new ExpressionInfo(classOf[HllEstimate].getName, "hll_estimate"),
-      (children: Seq[Expression]) => HllEstimate(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("dot_product_i"),
-      new ExpressionInfo(classOf[DotProductI].getName, "dot_product_i"),
-      (children: Seq[Expression]) => DotProductI(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("quantize_codes"),
-      new ExpressionInfo(classOf[QuantizeCodes].getName, "quantize_codes"),
-      (children: Seq[Expression]) => QuantizeCodes(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("cm_sketch"),
-      new ExpressionInfo(classOf[CmSketchAgg].getName, "cm_sketch"),
-      (children: Seq[Expression]) => CmSketchAgg(children.head).toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("cm_merge"),
-      new ExpressionInfo(classOf[CmMergeAgg].getName, "cm_merge"),
-      (children: Seq[Expression]) => CmMergeAgg(children.head).toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("cm_estimate"),
-      new ExpressionInfo(classOf[CmEstimate].getName, "cm_estimate"),
-      (children: Seq[Expression]) => CmEstimate(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("cm_inner"),
-      new ExpressionInfo(classOf[CmInnerProduct].getName, "cm_inner"),
-      (children: Seq[Expression]) => CmInnerProduct(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("q_sketch"),
-      new ExpressionInfo(classOf[QSketchAgg].getName, "q_sketch"),
-      (children: Seq[Expression]) =>
-        QSketchAgg(children(0), children(1)).toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("q_sketch_merge"),
-      new ExpressionInfo(classOf[QSketchMergeAgg].getName, "q_sketch_merge"),
-      (children: Seq[Expression]) => QSketchMergeAgg(children.head).toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("q_sketch_quantile"),
-      new ExpressionInfo(classOf[QSketchQuantile].getName, "q_sketch_quantile"),
-      (children: Seq[Expression]) => QSketchQuantile(children(0), children(1))))
-    // oracle-replicable (md5-hash) sketch variants — see ReplicableHash
-    ext.injectFunction((
-      new FunctionIdentifier("hll_sketch_r"),
-      new ExpressionInfo(classOf[HllSketchAgg].getName, "hll_sketch_r"),
-      (children: Seq[Expression]) =>
-        HllSketchAgg(children.head, replicable = true).toAggregateExpression()))
-    ext.injectFunction((
-      new FunctionIdentifier("q_sketch_r"),
-      new ExpressionInfo(classOf[QSketchAgg].getName, "q_sketch_r"),
-      (children: Seq[Expression]) =>
-        QSketchAgg(children(0), children(1), replicable = true).toAggregateExpression()))
-    // one-pass text expressions (constants must be SQL literals)
-    ext.injectFunction((
-      new FunctionIdentifier("char_shingles"),
-      new ExpressionInfo(classOf[CharShingles].getName, "char_shingles"),
-      (children: Seq[Expression]) =>
-        CharShingles(children(0), GraftExtensions.intArg(children(1)))))
-    ext.injectFunction((
-      new FunctionIdentifier("winnow_fps"),
-      new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
-      (children: Seq[Expression]) => WinnowFps(children(0),
-        GraftExtensions.intArg(children(1)), GraftExtensions.intArg(children(2)),
-        GraftExtensions.longArg(children(3)), GraftExtensions.longArg(children(4)))))
-    ext.injectFunction((
-      new FunctionIdentifier("gram_fps"),
-      new ExpressionInfo(classOf[GramFps].getName, "gram_fps"),
-      (children: Seq[Expression]) =>
-        GramFps(children(0), GraftExtensions.intArg(children(1)))))
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
     // opt-in approx mode: COUNT(DISTINCT) -> HLL++ under
     // spark.graft.approxDistinct=true (no query-code changes)
     ext.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite())
@@ -114,59 +37,53 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Late registration for an already-built session (extensions only
-    * apply at builder time). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    org.apache.spark.sql.GraftColumnBridge.registerFunction(
-      spark, "dot_product_f", children => DotProductF(children(0), children(1)))
-
-  /** Register every graft SQL function on an already-built session. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    import org.apache.spark.sql.GraftColumnBridge.registerFunction
-    register(spark)
-    registerFunction(spark, "dot_product_i",
-      c => DotProductI(c(0), c(1)))
-    registerFunction(spark, "quantize_codes", c => QuantizeCodes(c.head))
-    registerFunction(spark, "cm_sketch",
-      c => CmSketchAgg(c.head).toAggregateExpression())
-    registerFunction(spark, "cm_merge",
-      c => CmMergeAgg(c.head).toAggregateExpression())
-    registerFunction(spark, "cm_estimate", c => CmEstimate(c(0), c(1)))
-    registerFunction(spark, "cm_inner", c => CmInnerProduct(c(0), c(1)))
-    registerFunction(spark, "hll_sketch",
-      c => HllSketchAgg(c.head).toAggregateExpression())
-    registerFunction(spark, "hll_merge",
-      c => HllMergeAgg(c.head).toAggregateExpression())
-    registerFunction(spark, "hll_estimate", c => HllEstimate(c.head))
-    registerFunction(spark, "q_sketch",
-      c => QSketchAgg(c(0), c(1)).toAggregateExpression())
-    registerFunction(spark, "q_sketch_merge",
-      c => QSketchMergeAgg(c.head).toAggregateExpression())
-    registerFunction(spark, "q_sketch_quantile",
-      c => QSketchQuantile(c(0), c(1)))
-    registerFunction(spark, "hll_sketch_r",
-      c => HllSketchAgg(c.head, replicable = true).toAggregateExpression())
-    registerFunction(spark, "q_sketch_r",
-      c => QSketchAgg(c(0), c(1), replicable = true).toAggregateExpression())
-    registerFunction(spark, "char_shingles",
-      c => CharShingles(c(0), intArg(c(1))))
-    registerFunction(spark, "winnow_fps",
-      c => WinnowFps(c(0), intArg(c(1)), intArg(c(2)),
-        longArg(c(3)), longArg(c(4))))
-    registerFunction(spark, "gram_fps",
-      c => GramFps(c(0), intArg(c(1))))
+  /** Every graft SQL function as (name, expression class, builder): the
+    * one table both the builder-time extension and [[registerAll]] walk. */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("dot_product_f", classOf[DotProductF], c => DotProductF(c(0), c(1))),
+    ("dot_product_i", classOf[DotProductI], c => DotProductI(c(0), c(1))),
+    ("quantize_codes", classOf[QuantizeCodes], c => QuantizeCodes(c.head)),
+    ("hll_sketch", classOf[HllSketchAgg], c => HllSketchAgg(c.head).toAggregateExpression()),
+    ("hll_merge", classOf[SketchMergeAgg[_]],
+      c => SketchMergeAgg(c.head, HllFamily).toAggregateExpression()),
+    ("hll_estimate", classOf[HllEstimate], c => HllEstimate(c.head)),
+    ("cm_sketch", classOf[CmSketchAgg], c => CmSketchAgg(c.head).toAggregateExpression()),
+    ("cm_merge", classOf[SketchMergeAgg[_]],
+      c => SketchMergeAgg(c.head, CmsFamily).toAggregateExpression()),
+    ("cm_estimate", classOf[CmEstimate], c => CmEstimate(c(0), c(1))),
+    ("cm_inner", classOf[CmInnerProduct], c => CmInnerProduct(c(0), c(1))),
+    ("q_sketch", classOf[QSketchAgg], c => QSketchAgg(c(0), c(1)).toAggregateExpression()),
+    ("q_sketch_merge", classOf[SketchMergeAgg[_]],
+      c => SketchMergeAgg(c.head, QSketchFamily).toAggregateExpression()),
+    ("q_sketch_quantile", classOf[QSketchQuantile], c => QSketchQuantile(c(0), c(1))),
+    // oracle-replicable (md5-hash) sketch variants — see ReplicableHash
+    ("hll_sketch_r", classOf[HllSketchAgg],
+      c => HllSketchAgg(c.head, replicable = true).toAggregateExpression()),
+    ("q_sketch_r", classOf[QSketchAgg],
+      c => QSketchAgg(c(0), c(1), replicable = true).toAggregateExpression()),
+    // one-pass text expressions (constants must be SQL literals)
+    ("char_shingles", classOf[CharShingles], c => CharShingles(c(0), intArg(c(1)))),
+    ("winnow_fps", classOf[WinnowFps],
+      c => WinnowFps(c(0), intArg(c(1)), intArg(c(2)), longArg(c(3)), longArg(c(4)))),
+    ("gram_fps", classOf[GramFps], c => GramFps(c(0), intArg(c(1)))),
     // minhash_sigs(text, n): the dedup family's signature constants
     // are fixed engine-wide, so SQL callers only pick the shingle width
-    registerFunction(spark, "minhash_sigs",
+    ("minhash_sigs", classOf[MinhashSigs],
       c => MinhashSigs(c(0), intArg(c(1)), 257L, 263L,
         graft.dedup.Dedup.polyP, graft.dedup.Dedup.hashP,
-        (0 until graft.dedup.Dedup.numHashes).map(graft.dedup.Dedup.hashConsts)))
-  }
+        (0 until graft.dedup.Dedup.numHashes).map(graft.dedup.Dedup.hashConsts))))
+
+  /** Register every graft SQL function on an already-built session
+    * (extensions only apply at builder time). */
+  def registerAll(spark: SparkSession): Unit =
+    functions.foreach { case (name, _, builder) =>
+      org.apache.spark.sql.GraftColumnBridge.registerFunction(spark, name, builder)
+    }
 
   /** Constant argument extraction for SQL-registered expressions whose
     * parameters are plan-time constants (literal-folded at resolution). */
-  private def intArg(e: org.apache.spark.sql.catalyst.expressions.Expression): Int =
+  private def intArg(e: Expression): Int =
     e.eval().asInstanceOf[Number].intValue
-  private def longArg(e: org.apache.spark.sql.catalyst.expressions.Expression): Long =
+  private def longArg(e: Expression): Long =
     e.eval().asInstanceOf[Number].longValue
 }

@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * query and a full-table scan:
   *
   *  - [[HllSketchAgg]]  (`hll_sketch(col)`):   values → sketch bytes
-  *  - [[HllMergeAgg]]   (`hll_merge(sketch)`): sketches → merged sketch
+  *  - [[SketchMergeAgg]] over [[HllFamily]] (`hll_merge(sketch)`):
+  *    sketches → merged sketch
   *  - [[HllEstimate]]   (`hll_estimate(sketch)`): sketch → distinct count
   *
   * Standard HLL (Flajolet et al.): 2^p byte registers over xxhash64,
@@ -136,37 +137,12 @@ case class HllSketchAgg(child: Expression,
     copy(child = c.head)
 }
 
-case class HllMergeAgg(child: Expression,
-                       mutableAggBufferOffset: Int = 0,
-                       inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Byte]] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "hll_merge"
-
-  override def createAggregationBuffer(): Array[Byte] = Hll.emptySketch()
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) Hll.merge(buf, v.asInstanceOf[Array[Byte]])
-    buf
-  }
-
-  override def merge(buf: Array[Byte], other: Array[Byte]): Array[Byte] =
-    Hll.merge(buf, other)
-
-  override def eval(buf: Array[Byte]): Any = buf
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def withNewMutableAggBufferOffset(offset: Int): HllMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): HllMergeAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+/** HLL as a [[SketchMergeAgg]] family: the register bytes are the buffer. */
+object HllFamily extends SketchFamily[Array[Byte]]("hll_merge") {
+  def empty(): Array[Byte] = Hll.emptySketch()
+  def merge(into: Array[Byte], other: Array[Byte]): Array[Byte] = Hll.merge(into, other)
+  def toBytes(b: Array[Byte]): Array[Byte] = b
+  def fromBytes(bytes: Array[Byte]): Array[Byte] = bytes
 }
 
 /** Sketch bytes → estimated distinct count. */
@@ -191,7 +167,7 @@ object HllFunctions {
         .toAggregateExpression())
   def hll_merge(c: Column): Column =
     GraftColumnBridge.toColumn(
-      HllMergeAgg(GraftColumnBridge.toExpr(c)).toAggregateExpression())
+      SketchMergeAgg(GraftColumnBridge.toExpr(c), HllFamily).toAggregateExpression())
   def hll_estimate(c: Column): Column =
     GraftColumnBridge.toColumn(HllEstimate(GraftColumnBridge.toExpr(c)))
 }

@@ -30,7 +30,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType}
   * centroids drift with merge order.
   *
   *  - [[QSketchAgg]]    (`q_sketch(value, rowkey)`): rows → sketch
-  *  - [[QSketchMergeAgg]] (`q_sketch_merge(sk)`):    sketches → sketch
+  *  - [[SketchMergeAgg]] over [[QSketchFamily]] (`q_sketch_merge(sk)`):
+  *    sketches → sketch
   *  - [[QSketchQuantile]] (`q_sketch_quantile(sk, p)`): sketch → value
   *
   * Serialized form: 1 hash-mode byte, then n × 16-byte little-endian
@@ -180,38 +181,13 @@ case class QSketchAgg(child: Expression, keyChild: Expression,
     copy(child = c(0), keyChild = c(1))
 }
 
-/** sketches → merged sketch. */
-case class QSketchMergeAgg(child: Expression,
-                           mutableAggBufferOffset: Int = 0,
-                           inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[QSketch.Buf] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "q_sketch_merge"
-
-  override def createAggregationBuffer(): QSketch.Buf = QSketch.empty()
-
-  override def update(buf: QSketch.Buf, input: InternalRow): QSketch.Buf = {
-    val v = child.eval(input)
-    if (v != null) QSketch.merge(buf, QSketch.deserialize(v.asInstanceOf[Array[Byte]]))
-    buf
-  }
-
-  override def merge(buf: QSketch.Buf, other: QSketch.Buf): QSketch.Buf =
-    QSketch.merge(buf, other)
-
-  override def eval(buf: QSketch.Buf): Any = QSketch.serialize(buf)
-  override def serialize(buf: QSketch.Buf): Array[Byte] = QSketch.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): QSketch.Buf = QSketch.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): QSketchMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): QSketchMergeAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+/** The KMV quantile sketch as a [[SketchMergeAgg]] family
+  * (`q_sketch_merge`). */
+object QSketchFamily extends SketchFamily[QSketch.Buf]("q_sketch_merge") {
+  def empty(): QSketch.Buf = QSketch.empty()
+  def merge(into: QSketch.Buf, other: QSketch.Buf): QSketch.Buf = QSketch.merge(into, other)
+  def toBytes(b: QSketch.Buf): Array[Byte] = QSketch.serialize(b)
+  def fromBytes(bytes: Array[Byte]): QSketch.Buf = QSketch.deserialize(bytes)
 }
 
 /** (sketch, p) → estimated p-quantile of the sketched distribution. */
@@ -238,7 +214,7 @@ object QSketchFunctions {
         GraftColumnBridge.toExpr(rowKey), replicable = true).toAggregateExpression())
   def q_sketch_merge(c: Column): Column =
     GraftColumnBridge.toColumn(
-      QSketchMergeAgg(GraftColumnBridge.toExpr(c)).toAggregateExpression())
+      SketchMergeAgg(GraftColumnBridge.toExpr(c), QSketchFamily).toAggregateExpression())
   def q_sketch_quantile(sk: Column, p: Column): Column =
     GraftColumnBridge.toColumn(
       QSketchQuantile(GraftColumnBridge.toExpr(sk), GraftColumnBridge.toExpr(p)))

@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   * all estimate from the same ~2 kB state.
   *
   *  - [[ThetaSketchAgg]] (`theta_sketch(col)`): values → sketch
-  *  - [[ThetaMergeAgg]]  (`theta_merge(sk)`):   sketches → union sketch
+  *  - [[SketchMergeAgg]] over [[ThetaFamily]] (`theta_merge(sk)`):
+  *    sketches → union sketch
   *  - [[ThetaEstimate]]  (`theta_estimate(sk)`): sketch → distinct est
   *  - [[ThetaSetEstimate]] (`theta_intersect_est` / `theta_anotb_est`):
   *    two sketches → intersection / difference estimate
@@ -213,39 +214,12 @@ case class ThetaSketchAgg(child: Expression,
     copy(child = c.head)
 }
 
-case class ThetaMergeAgg(child: Expression,
-                         mutableAggBufferOffset: Int = 0,
-                         inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Theta.Buf] {
-
-  override def children: Seq[Expression] = Seq(child)
-  override def nullable: Boolean = false
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "theta_merge"
-
-  override def createAggregationBuffer(): Theta.Buf = Theta.empty()
-
-  override def update(buf: Theta.Buf, input: InternalRow): Theta.Buf = {
-    val v = child.eval(input)
-    if (v != null)
-      Theta.merge(buf, Theta.deserialize(v.asInstanceOf[Array[Byte]]))
-    buf
-  }
-
-  override def merge(buf: Theta.Buf, other: Theta.Buf): Theta.Buf =
-    Theta.merge(buf, other)
-
-  override def eval(buf: Theta.Buf): Any = Theta.serialize(buf)
-  override def serialize(buf: Theta.Buf): Array[Byte] = Theta.serialize(buf)
-  override def deserialize(bytes: Array[Byte]): Theta.Buf =
-    Theta.deserialize(bytes)
-
-  override def withNewMutableAggBufferOffset(offset: Int): ThetaMergeAgg =
-    copy(mutableAggBufferOffset = offset)
-  override def withNewInputAggBufferOffset(offset: Int): ThetaMergeAgg =
-    copy(inputAggBufferOffset = offset)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(child = c.head)
+/** Theta as a [[SketchMergeAgg]] family (`theta_merge`, the union). */
+object ThetaFamily extends SketchFamily[Theta.Buf]("theta_merge") {
+  def empty(): Theta.Buf = Theta.empty()
+  def merge(into: Theta.Buf, other: Theta.Buf): Theta.Buf = Theta.merge(into, other)
+  def toBytes(b: Theta.Buf): Array[Byte] = Theta.serialize(b)
+  def fromBytes(bytes: Array[Byte]): Theta.Buf = Theta.deserialize(bytes)
 }
 
 /** Sketch bytes → distinct estimate. */
@@ -293,7 +267,7 @@ object ThetaFunctions {
         .toAggregateExpression())
   def theta_merge(c: Column): Column =
     GraftColumnBridge.toColumn(
-      ThetaMergeAgg(GraftColumnBridge.toExpr(c)).toAggregateExpression())
+      SketchMergeAgg(GraftColumnBridge.toExpr(c), ThetaFamily).toAggregateExpression())
   def theta_estimate(c: Column): Column =
     GraftColumnBridge.toColumn(ThetaEstimate(GraftColumnBridge.toExpr(c)))
   def theta_union_est(a: Column, b: Column): Column =

@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   *    group, the same state the reference's exact distinct holds.
   *    [[aggregateApprox]] is the bounded-state variant (HLL++, mergeable
   *    partials).
-  *  - Window bounds are emitted as epoch millis so batch results
-  *    hash-compare cleanly against the DuckDB oracle.
+  *  - The window shape is [[Windows.windowed]]: bounds emitted as epoch
+  *    millis so batch results hash-compare cleanly against the DuckDB
+  *    oracle.
   */
 object EventAggregator {
   /** Allowed-type filter set; reference keeps 4 of its event types
@@ -53,16 +54,7 @@ object EventAggregator {
   private def byWindowAndType(events: DataFrame, timeCol: String,
                               windowDuration: String, allowed: Seq[String],
                               userCount: Column): DataFrame =
-    events
-      .filter(col("event_type").isin(allowed: _*))
-      .groupBy(window(col(timeCol), windowDuration), col("event_type"))
-      .agg(
-        count(col("event_type")).as("event_count"),
-        userCount.as("user_count"))
-      .select(
-        unix_millis(col("window.start")).as("window_start_ms"),
-        unix_millis(col("window.end")).as("window_end_ms"),
-        col("event_type"),
-        col("event_count"),
-        col("user_count"))
+    Windows.windowed(events.filter(col("event_type").isin(allowed: _*)),
+      timeCol, windowDuration, "event_type")(
+      count(col("event_type")).as("event_count"), userCount.as("user_count"))
 }

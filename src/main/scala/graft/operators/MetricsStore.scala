@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -19,28 +19,17 @@ import org.apache.spark.sql.types.StructType
   * access pattern the reference gets from its Redis zset index, without
   * a second store to keep consistent.
   */
-class MetricsStore(spark: SparkSession, path: String,
-                   atLeastOnceReads: Boolean = false) {
+class MetricsStore(spark: SparkSession, path: String) {
 
-  /** `atLeastOnceReads=true` applies consume-side idempotence
-    * ([[graft.streaming.Idempotence.dedupOnRead]], last-batch-wins) to
-    * every table read — for stores landed by a plain-append
-    * at-least-once writer (e.g. a downstream Kafka-topic consumer)
-    * instead of [[graft.streaming.Pipelines.writeStorageBatch]]'s
-    * batch-id overwrite, whose tables are exactly-once already and
-    * read dedup-free by default. */
-  private def table(name: String, keys: Seq[String]): DataFrame = {
-    val t = spark.read.parquet(s"$path/$name")
-    if (atLeastOnceReads) graft.streaming.Idempotence.dedupOnRead(t, keys)
-    else t
-  }
+  /** Tables read dedup-free: [[graft.streaming.Pipelines.writeStorageBatch]]'s
+    * batch-id overwrite makes them exactly-once already. A store landed
+    * by a plain-append at-least-once writer is read through
+    * [[graft.streaming.Idempotence.dedupOnRead]] instead. */
+  private def table(name: String): DataFrame = spark.read.parquet(s"$path/$name")
 
-  def eventMetrics: DataFrame =
-    table("event_metrics", Seq("window_start_ms", "event_type"))
-  def sessionMetrics: DataFrame =
-    table("session_metrics", Seq("start_ms", "user_id"))
-  def performanceMetrics: DataFrame =
-    table("performance_metrics", Seq("window_start_ms", "category"))
+  def eventMetrics: DataFrame = table("event_metrics")
+  def sessionMetrics: DataFrame = table("session_metrics")
+  def performanceMetrics: DataFrame = table("performance_metrics")
 
   /** The rows micro-batch `batchId` stored in `table`: its
     * `batch_id=<id>` partition under every `p_date`, as
@@ -90,11 +79,6 @@ class MetricsStore(spark: SparkSession, path: String,
   def driftAlerts(thresholdPpm: Long = 200000L): DataFrame =
     Drift.mixDriftAlerts(mixDrift, thresholdPpm)
 
-  /** Cross-window distinct users from the sketch table written by
-    * [[graft.streaming.Pipelines.startSketchSink]]: merge the stored HLL
-    * sketches over any (time range × type set) and estimate — a
-    * metadata-table read, never a rescan of raw events. Window bounds in
-    * epoch millis; `types` empty = all types. */
   /** Sketch rows for a (time range × type set) read — the shared scan
     * every cross-window sketch query starts from (partition-pruned by
     * the window filter). */
@@ -105,14 +89,30 @@ class MetricsStore(spark: SparkSession, path: String,
     if (types.isEmpty) base else base.filter(col("event_type").isin(types: _*))
   }
 
+  /** Merge `sketchCol` over a (time range × type set) and read one value
+    * off the merged sketch with `estimate`; `none` when nothing merged —
+    * the one body of every single-sketch `*Across` read. */
+  private def estimateAcross[T](sketchPath: String, fromMs: Long, toMs: Long,
+                                types: Seq[String], sketchCol: String,
+                                merge: Column => Column,
+                                estimate: Column => Column, none: T): T = {
+    val out = sketchRows(sketchPath, fromMs, toMs, types)
+      .agg(merge(col(sketchCol)).as("msk"))
+      .select(estimate(col("msk")).as("est"))
+      .collect()
+    if (out.isEmpty || out.head.isNullAt(0)) none else out.head.getAs[T](0)
+  }
+
+  /** Cross-window distinct users from the sketch table written by
+    * [[graft.streaming.Pipelines.startSketchSink]]: merge the stored HLL
+    * sketches over any (time range × type set) and estimate — a
+    * metadata-table read, never a rescan of raw events. Window bounds in
+    * epoch millis; `types` empty = all types. */
   def distinctUsersAcross(sketchPath: String, fromMs: Long, toMs: Long,
                           types: Seq[String] = Nil): Long = {
     import graft.functions.HllFunctions._
-    val out = sketchRows(sketchPath, fromMs, toMs, types)
-      .agg(hll_merge(col("user_sketch")).as("msk"))
-      .select(hll_estimate(col("msk")).as("est"))
-      .collect()
-    if (out.isEmpty || out.head.isNullAt(0)) 0L else out.head.getLong(0)
+    estimateAcross(sketchPath, fromMs, toMs, types, "user_sketch",
+      hll_merge, hll_estimate, 0L)
   }
 
   /** Sketch-store compaction: merge the per-window sketch rows that
@@ -220,11 +220,8 @@ class MetricsStore(spark: SparkSession, path: String,
   def userEventsAcross(sketchPath: String, fromMs: Long, toMs: Long,
                        userId: Long, types: Seq[String] = Nil): Long = {
     import graft.functions.CmsFunctions._
-    val out = sketchRows(sketchPath, fromMs, toMs, types)
-      .agg(cm_merge(col("user_cms")).as("msk"))
-      .select(cm_estimate(col("msk"), lit(userId)).as("est"))
-      .collect()
-    if (out.isEmpty || out.head.isNullAt(0)) 0L else out.head.getLong(0)
+    estimateAcross(sketchPath, fromMs, toMs, types, "user_cms",
+      cm_merge, cm_estimate(_, lit(userId)), 0L)
   }
 
   /** Cross-window value quantile from the stored KMV sketches: the
@@ -234,11 +231,8 @@ class MetricsStore(spark: SparkSession, path: String,
   def valueQuantileAcross(sketchPath: String, fromMs: Long, toMs: Long,
                           p: Double, types: Seq[String] = Nil): Double = {
     import graft.functions.QSketchFunctions._
-    val out = sketchRows(sketchPath, fromMs, toMs, types)
-      .agg(q_sketch_merge(col("value_sketch")).as("msk"))
-      .select(q_sketch_quantile(col("msk"), lit(p)).as("q"))
-      .collect()
-    if (out.isEmpty || out.head.isNullAt(0)) Double.NaN else out.head.getDouble(0)
+    estimateAcross(sketchPath, fromMs, toMs, types, "value_sketch",
+      q_sketch_merge, q_sketch_quantile(_, lit(p)), Double.NaN)
   }
 
   /** Retention trim (repository.py:111-115, newest 120 windows): rewrite

@@ -67,17 +67,8 @@ object PerformanceTracker {
                                   windowDuration: String, valueCol: String,
                                   category: Column,
                                   p95: Column): DataFrame =
-    events
-      .filter(col(valueCol).isNotNull)
-      .withColumn("category", category)
-      .groupBy(window(col(timeCol), windowDuration), col("category"))
-      .agg(
-        exactAvg(col(valueCol)).as("avg_value"),
-        p95.as("p95_value"))
-      .select(
-        unix_millis(col("window.start")).as("window_start_ms"),
-        unix_millis(col("window.end")).as("window_end_ms"),
-        col("category"),
-        col("avg_value"),
-        col("p95_value"))
+    Windows.windowed(
+      events.filter(col(valueCol).isNotNull).withColumn("category", category),
+      timeCol, windowDuration, "category")(
+      exactAvg(col(valueCol)).as("avg_value"), p95.as("p95_value"))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Hopping (sliding) windows and time-series anomaly scoring over the
@@ -11,6 +11,23 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
 
+  /** The windowed metric shape every event-time metric table shares:
+    * group by (`window(timeCol, duration[, slide])`, `key`), compute
+    * `aggs`, and emit `window_start_ms`, `window_end_ms` (epoch millis,
+    * so results hash-compare against the DuckDB oracle), `key`, then
+    * the aggregates in order. Tumbling without `slide`. The same body
+    * runs as a batch query and as a streaming append aggregate behind a
+    * watermark. */
+  def windowed(events: DataFrame, timeCol: String, duration: String,
+               key: String, slide: Option[String] = None)(aggs: Column*): DataFrame = {
+    val g = events
+      .groupBy(window(col(timeCol), duration, slide.getOrElse(duration)), col(key))
+      .agg(aggs.head, aggs.tail: _*)
+    g.select(unix_millis(col("window.start")).as("window_start_ms") +:
+      unix_millis(col("window.end")).as("window_end_ms") +:
+      g.columns.toSeq.tail.map(col): _*)
+  }
+
   /** Event counts per hopping window (length `winMs`, slide `slideMs`,
     * epoch-aligned like Spark's `window()`): each event lands in
     * winMs/slideMs overlapping windows. Spark plans this as one Expand
@@ -19,13 +36,8 @@ object Windows {
     * window-per-event multiplier. */
   def hoppingCounts(events: DataFrame, winSec: Int = 600,
                     slideSec: Int = 300): DataFrame =
-    events
-      .groupBy(window(col("ts"), s"$winSec seconds", s"$slideSec seconds"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(unix_millis(col("window.start")).as("window_start_ms"),
-        unix_millis(col("window.end")).as("window_end_ms"),
-        col("event_type"), col("n"))
+    windowed(events, "ts", s"$winSec seconds", "event_type",
+      Some(s"$slideSec seconds"))(count(lit(1)).as("n"))
 
   /** Oracle: enumerate each event's covering window indices k where
     * k·slide ≤ t < k·slide + win; for win = 2·slide that is exactly

@@ -332,21 +332,20 @@ class MetricsHttpServer(store: MetricsStore, port: Int = 0,
     }
 
   /** Attach a listener that feeds the snapshot from every committed
-    * micro-batch: batch N of `queryName` (which writes `event_metrics`)
-    * and of `performance_metrics` is merged into its windows map. No-data
+    * micro-batch: batch N of the `event_metrics` and
+    * `performance_metrics` queries is merged into its windows map. No-data
     * batches count too: in append mode they are where the watermark
     * closes windows. Merges run on the server's own apply thread, never
     * on the listener bus, so a slow merge cannot stall any query's
     * progress events. A query's termination triggers a cold re-seed
     * (coalesced): with a run-to-complete trigger (AvailableNow) it is the
     * point where every table is fully committed. */
-  def attachAutoRefresh(spark: SparkSession,
-                        queryName: String = EventTable): StreamingQueryListener = {
+  def attachAutoRefresh(spark: SparkSession): StreamingQueryListener = {
     val l = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
         e.progress.name match {
-          case `queryName` => applier.execute(() => applyCommitted(EventTable, e.progress.batchId))
+          case EventTable => applier.execute(() => applyCommitted(EventTable, e.progress.batchId))
           case PerfTable => applier.execute(() => applyCommitted(PerfTable, e.progress.batchId))
           case _ => ()
         }

@@ -16,7 +16,7 @@ import graft.operators.PageRank
   * ([[PageRank.weightedPairs]] over the batch), the delta lands in its
   * own `batch_id=` partition with overwrite semantics (a crash-replayed
   * batch rewrites exactly its own partition — the
-  * [[Pipelines.writeStorageBatch]] contract), and the refresh sums the
+  * [[Stores.writeBatch]] contract), and the refresh sums the
   * partitions per pair. Summed deltas equal the batch aggregate over
   * the cumulative raw stream exactly, so the refreshed ranks are
   * BIT-EQUAL to [[PageRank.supplierRank]] run on everything seen so far
@@ -29,9 +29,9 @@ import graft.operators.PageRank
   * pair table every batch PageRank run reads. The rank iteration
   * itself keeps [[PageRank.iterate]]'s hybrid broadcast/shuffle gate.
   * Delta partitions accumulate one per batch; fold them into a single
-  * `batch_id=-1` part with [[compactEdgeState]] (the
-  * [[Pipelines.compactStorageDate]] move) when the directory count,
-  * not the byte count, becomes the read bottleneck.
+  * `batch_id=-1` part with [[compactEdgeState]] ([[Stores.writeCompacted]],
+  * shared with date compaction) when the directory count, not the byte
+  * count, becomes the read bottleneck.
   */
 object GraphRank {
 
@@ -54,12 +54,8 @@ object GraphRank {
   /** Fold all delta partitions into a single batch_id=-1 part.
     * Idempotent (re-running rewrites the same content); run it only
     * for quiesced state a replay can't touch, like date compaction. */
-  def compactEdgeState(spark: SparkSession, statePath: String): Unit = {
-    val folded = edgeState(spark, statePath)
-      .withColumn("batch_id", lit(-1L))
-      .localCheckpoint() // materialize BEFORE overwriting the input dirs
-    folded.write.mode("overwrite").partitionBy("batch_id").parquet(statePath)
-  }
+  def compactEdgeState(spark: SparkSession, statePath: String): Unit =
+    Stores.writeCompacted(edgeState(spark, statePath), statePath)
 
   /** Ranks over everything seen so far — [[PageRank.rankFromPairs]] on
     * the accumulated aggregate, so bit-equal to the batch engine. */

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.operators.{EventAggregator, PerformanceTracker, SessionTracker}
+import graft.operators.{EventAggregator, PerformanceTracker, SessionTracker, Windows}
 
 /** Streaming topology: the Spark analog of the reference's
   * JobCoordinator (services/processing/src/core/job_coordinator.py:11-86).
@@ -88,22 +88,16 @@ object Pipelines {
     * existing data, no key comparison, O(batch) work at any table size.
     * Within a batch, append-mode windowed output is already unique per
     * (window, keys), so partition-level idempotence IS row-level
-    * exactly-once. */
+    * exactly-once. `timeCol` (epoch millis) derives `p_date`; the write
+    * is [[Stores.writeBatch]], one file per (p_date, batch_id). Rows land
+    * unsorted: Spark's planned write sorts on the partition columns and
+    * drops any sort beneath it, so only [[compactStorageDate]]'s part is
+    * sorted. */
   def writeStorageBatch(batch: DataFrame, batchId: Long, path: String,
-                        sortKey: Seq[String]): Unit = {
-    val tsCol = sortKey.head
-    batch
-      .withColumn("p_date", to_date(timestamp_millis(col(tsCol))))
-      .withColumn("batch_id", lit(batchId))
-      .repartition(col("p_date"))
-      .sortWithinPartitions(sortKey.map(col): _*)
-      .write.mode("overwrite")
-      // per-writer scope, not session conf: concurrent callers sharing a
-      // session must never race a set/restore of the global mode (a write
-      // observing STATIC would truncate the whole sink table)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("p_date", "batch_id").parquet(path)
-  }
+                        timeCol: String): Unit =
+    Stores.writeBatch(
+      batch.withColumn("p_date", to_date(timestamp_millis(col(timeCol)))),
+      batchId, path, partitionBy = Seq("p_date"))
 
   /** Background part-merge for the storage sink — the ClickHouse
     * MergeTree analog the reference gets for free from its storage
@@ -125,12 +119,9 @@ object Pipelines {
                          date: java.time.LocalDate,
                          sortKey: Seq[String]): Unit = {
     val datePath = s"$tablePath/p_date=$date"
-    val part = spark.read.parquet(datePath) // batch_id=* subdirs
+    Stores.writeCompacted(spark.read.parquet(datePath) // batch_id=* subdirs
       .drop("batch_id")
-      .withColumn("batch_id", lit(-1L))
-      .sortWithinPartitions(sortKey.map(col): _*)
-      .localCheckpoint() // materialize BEFORE overwriting the input dirs
-    part.write.mode("overwrite").partitionBy("batch_id").parquet(datePath)
+      .sortWithinPartitions(sortKey.map(col): _*), datePath)
   }
 
   /** Processing-time mode (P11/W5): the reference's non-production runs
@@ -175,23 +166,18 @@ object Pipelines {
     // questions HLL cannot answer) — so distinct/frequency/percentile/
     // overlap questions across ANY window span are metric-table
     // merges, never raw rescans
-    val agg = events.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(count(col("event_type")).as("event_count"),
-        hll_sketch_r(col("user_id")).as("user_sketch"),
-        cm_sketch(col("user_id")).as("user_cms"),
-        q_sketch_r(col("value"), col("event_id")).as("value_sketch"),
-        theta_sketch_r(col("user_id")).as("user_theta"))
-      .select(
-        unix_millis(col("window.start")).as("window_start_ms"),
-        unix_millis(col("window.end")).as("window_end_ms"),
-        col("event_type"), col("event_count"), col("user_sketch"),
-        col("user_cms"), col("value_sketch"), col("user_theta"))
+    val agg = Windows.windowed(events.withWatermark("ts", watermark),
+      "ts", windowDur, "event_type")(
+      count(col("event_type")).as("event_count"),
+      hll_sketch_r(col("user_id")).as("user_sketch"),
+      cm_sketch(col("user_id")).as("user_cms"),
+      q_sketch_r(col("value"), col("event_id")).as("value_sketch"),
+      theta_sketch_r(col("user_id")).as("user_theta"))
     agg.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        writeStorageBatch(batch, batchId, path, Seq("window_start_ms", "event_type"))
+        writeStorageBatch(batch, batchId, path, "window_start_ms")
       }
       .start()
   }
@@ -232,14 +218,10 @@ object Pipelines {
   def idleSafeMetrics(merged: DataFrame,
                       watermark: String = "10 seconds",
                       windowDur: String = "60 seconds"): DataFrame =
-    merged.withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), windowDur), col("event_type"))
-      .agg(count(col("event_type")).as("event_count"),
-        approx_count_distinct(col("user_id")).as("user_count"))
-      .select(
-        unix_millis(col("window.start")).as("window_start_ms"),
-        unix_millis(col("window.end")).as("window_end_ms"),
-        col("event_type"), col("event_count"), col("user_count"))
+    Windows.windowed(merged.withWatermark("ts", watermark),
+      "ts", windowDur, "event_type")(
+      count(col("event_type")).as("event_count"),
+      approx_count_distinct(col("user_id")).as("user_count"))
 
   /** Stream-stream interval join (purchase attribution): each purchase
     * matched to the same user's views in the preceding `windowSec`
@@ -334,17 +316,17 @@ object Pipelines {
              trigger: Trigger = Trigger.AvailableNow()): Seq[StreamingQuery] = {
     val src = eventsFileStream(spark, srcDir)
     Seq(
-      ("event_metrics", eventMetrics(src), Seq("window_start_ms", "event_type")),
-      ("session_metrics", sessionMetrics(src), Seq("start_ms", "user_id")),
-      ("performance_metrics", perfMetrics(src), Seq("window_start_ms", "category")),
-    ).map { case (name, df, key) =>
+      ("event_metrics", eventMetrics(src), "window_start_ms"),
+      ("session_metrics", sessionMetrics(src), "start_ms"),
+      ("performance_metrics", perfMetrics(src), "window_start_ms"),
+    ).map { case (name, df, timeCol) =>
       df.writeStream
         .queryName(name) // names flow into progress telemetry (Observability)
         .outputMode("append")
         .option("checkpointLocation", s"$outDir/_chk/$name")
         .trigger(trigger)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          writeStorageBatch(batch, batchId, s"$outDir/$name", key)
+          writeStorageBatch(batch, batchId, s"$outDir/$name", timeCol)
         }
         .start()
     }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Shared read discipline for the batch_id-partitioned state stores
@@ -30,15 +30,32 @@ private[streaming] object Stores {
     else spark.read.schema(schema).parquet(path)
   }
 
-  /** Land `df` as the `batch_id = batchId` partition of `path` with
-    * dynamic overwrite: every other partition is untouched and a
-    * crash-replayed batch rewrites exactly its own partition — the
-    * idempotence contract of every batch-partitioned store. */
-  def writeBatch(df: DataFrame, batchId: Long, path: String): Unit =
-    df.withColumn("batch_id", lit(batchId))
+  /** Land `df` as the `batch_id = batchId` partition of `path` (below
+    * its `partitionBy` directories, if any, one shuffle partition each)
+    * with dynamic overwrite: every other partition is untouched and a
+    * crash-replayed batch rewrites exactly its own partitions — the
+    * idempotence contract of every batch-partitioned store and of the
+    * storage sink. The mode is per writer, not session conf: concurrent
+    * callers sharing a session must never race a set/restore of the
+    * global mode (a write observing STATIC would truncate the table). */
+  def writeBatch(df: DataFrame, batchId: Long, path: String,
+                 partitionBy: Seq[String] = Nil): Unit = {
+    val withId = df.withColumn("batch_id", lit(batchId))
+    (if (partitionBy.isEmpty) withId else withId.repartition(partitionBy.map(col): _*))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(path)
+      .partitionBy(partitionBy :+ "batch_id": _*).parquet(path)
+  }
+
+  /** Fold `df` into the single `batch_id=-1` part of `path` by a static
+    * overwrite of `path`, materializing `df` first (it usually reads
+    * `path` itself). Idempotent; run it only on state a replayed batch
+    * cannot touch. */
+  def writeCompacted(df: DataFrame, path: String): Unit = {
+    val part = df.withColumn("batch_id", lit(-1L))
+      .localCheckpoint() // materialize BEFORE overwriting the input dirs
+    part.write.mode("overwrite").partitionBy("batch_id").parquet(path)
+  }
 
   /** Batch-id partition directories of `path` with `0 <= id < upToBatch`
     * (non-numeric or sentinel dirs untouched), oldest first. */

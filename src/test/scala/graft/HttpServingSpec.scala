@@ -143,8 +143,8 @@ class HttpServingSpec extends AnyFunSuite {
       }
     }
     val server = new MetricsHttpServer(store)
-    val qName = "refresh_burst"
-    val listener = server.attachAutoRefresh(spark, qName)
+    val qName = "event_metrics"
+    val listener = server.attachAutoRefresh(spark)
     // registered after the server's listener, so the bus has handed it
     // every event this one has seen
     val progressSeen = new AtomicInteger

@@ -38,8 +38,9 @@ class MetricsStoreSpec extends AnyFunSuite {
       (61000L, "purchase", 1L, 1L, 7L))
       .toDF("window_start_ms", "event_type", "event_count", "user_count", "batch_id")
       .write.parquet(s"$dir/event_metrics")
-    val deduped = new MetricsStore(spark, dir, atLeastOnceReads = true)
-      .eventMetrics.orderBy("window_start_ms", "event_type")
+    val deduped = graft.streaming.Idempotence.dedupOnRead(
+        new MetricsStore(spark, dir).eventMetrics, Seq("window_start_ms", "event_type"))
+      .orderBy("window_start_ms", "event_type")
       .select("window_start_ms", "event_type", "event_count", "batch_id")
       .as[(Long, String, Long, Long)].collect().toSeq
     assert(deduped == Seq((1000L, "view", 4L, 8L), (61000L, "purchase", 1L, 7L)))

@@ -6,12 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators._
 
 object SparkTestSession {
-  // the tuned library session shape (Engine) so specs exercise exactly
-  // what the driver mains run — withExtensions kept for the builder-time
-  // registration path (Engine also sets spark.sql.extensions)
-  lazy val spark: SparkSession = Engine.sessionBuilder(cores = 4)
-    .withExtensions(new graft.functions.GraftExtensions)
-    .getOrCreate()
+  // the tuned library session shape (Engine, whose spark.sql.extensions
+  // injects GraftExtensions once) so specs plan exactly like the mains
+  lazy val spark: SparkSession = Engine.sessionBuilder(cores = 4).getOrCreate()
 }
 
 class OperatorSpec extends AnyFunSuite {

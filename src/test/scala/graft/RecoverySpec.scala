@@ -47,23 +47,23 @@ class RecoverySpec extends AnyFunSuite {
 
   test("replayed micro-batch leaves the storage table unchanged (idempotent sink)") {
     val path = java.nio.file.Files.createTempDirectory("graft_idem").toString + "/t"
-    val key = Seq("window_start_ms", "event_type")
+    val timeCol = "window_start_ms"
     val base = 1714867200000L
     val b0 = Seq((base, "view", 5L), (base + 60000L, "click", 3L))
       .toDF("window_start_ms", "event_type", "event_count")
-    graft.streaming.Pipelines.writeStorageBatch(b0, 7L, path, key)
+    graft.streaming.Pipelines.writeStorageBatch(b0, 7L, path, timeCol)
     val once = spark.read.parquet(path).collect().toSet
     assert(once.size == 2)
     // crash between parquet commit and checkpoint commit → Spark calls
     // foreachBatch AGAIN with the same batchId and the same data; the
     // dynamic partition overwrite must make that a no-op
-    graft.streaming.Pipelines.writeStorageBatch(b0, 7L, path, key)
+    graft.streaming.Pipelines.writeStorageBatch(b0, 7L, path, timeCol)
     assert(spark.read.parquet(path).collect().toSet == once,
       "replay of the same batch id duplicated rows")
     // a NEW batch id appends alongside, never clobbers
     val b1 = Seq((base + 120000L, "view", 9L))
       .toDF("window_start_ms", "event_type", "event_count")
-    graft.streaming.Pipelines.writeStorageBatch(b1, 8L, path, key)
+    graft.streaming.Pipelines.writeStorageBatch(b1, 8L, path, timeCol)
     val after = spark.read.parquet(path)
     assert(after.count() == 3)
     assert(after.select($"window_start_ms", $"event_type", $"event_count")
@@ -78,11 +78,11 @@ class RecoverySpec extends AnyFunSuite {
     val day2 = base + 86400000L
     // three micro-batches: two land on day 1, one on day 2
     Pipelines.writeStorageBatch(Seq((base, "view", 5L), (base + 60000L, "click", 3L))
-      .toDF("window_start_ms", "event_type", "event_count"), 1L, path, key)
+      .toDF("window_start_ms", "event_type", "event_count"), 1L, path, key.head)
     Pipelines.writeStorageBatch(Seq((base + 120000L, "view", 2L))
-      .toDF("window_start_ms", "event_type", "event_count"), 2L, path, key)
+      .toDF("window_start_ms", "event_type", "event_count"), 2L, path, key.head)
     Pipelines.writeStorageBatch(Seq((day2, "view", 7L))
-      .toDF("window_start_ms", "event_type", "event_count"), 3L, path, key)
+      .toDF("window_start_ms", "event_type", "event_count"), 3L, path, key.head)
     def data = spark.read.parquet(path)
       .select($"window_start_ms", $"event_type", $"event_count")
     def batchDirs(date: String) =

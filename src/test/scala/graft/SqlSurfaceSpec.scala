@@ -48,4 +48,21 @@ class SqlSurfaceSpec extends AnyFunSuite {
       .head().getSeq[Long](0)
     assert(mh.size == graft.dedup.Dedup.numHashes && mh.forall(_ >= 0L))
   }
+
+  test("every graft SQL function resolves on a fresh session without late registration") {
+    val expected = Seq("dot_product_f", "dot_product_i", "quantize_codes",
+      "hll_sketch", "hll_merge", "hll_estimate", "cm_sketch", "cm_merge",
+      "cm_estimate", "cm_inner", "q_sketch", "q_sketch_merge",
+      "q_sketch_quantile", "hll_sketch_r", "q_sketch_r", "char_shingles",
+      "winnow_fps", "gram_fps", "minhash_sigs")
+    assert(graft.functions.GraftExtensions.functions.map(_._1).sorted == expected.sorted)
+    // a new session shares the builder's extensions but none of the
+    // suite session's late registrations (registerViews, registerAll)
+    val fresh = spark.newSession()
+    val missing = expected.filterNot(n => fresh.catalog.functionExists(n))
+    assert(missing.isEmpty, s"not registered at session build: $missing")
+    val mh = fresh.sql("SELECT minhash_sigs('the quick brown fox', 4) AS s")
+      .head().getSeq[Long](0)
+    assert(mh.size == graft.dedup.Dedup.numHashes)
+  }
 }

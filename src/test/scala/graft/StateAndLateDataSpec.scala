@@ -89,7 +89,7 @@ class StateAndLateDataSpec extends AnyFunSuite {
   test("dot_product_f is SQL-callable after registration") {
     // getOrCreate() reuses the suite session, so builder-time extensions
     // don't apply here; use the late-registration path instead
-    graft.functions.GraftExtensions.register(spark)
+    graft.functions.GraftExtensions.registerAll(spark)
     val got = spark.sql(
       "SELECT dot_product_f(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
