@@ -33,6 +33,17 @@ import org.apache.spark.sql.SparkSession
   *  - UTC: all oracle comparisons and window math assume it.
   *  - graft extensions: SQL functions + TopK strategy + the opt-in
   *    rewrite rules, available from any session built here.
+  *  - one watermark per streaming batch (`statefulOperator.allowMultiple`
+  *    off): Spark's default drops late rows in batch N+1 by batch N's
+  *    watermark (SPARK-40925) but evicts by N+1's, so a window evicted in
+  *    N+1 could still take rows in N+1 and is not final before Spark
+  *    emits it. Off, both use N+1's watermark, and every window that
+  *    batch N's progress closes is final after N: the serving snapshot
+  *    publishes it from query state then, one trigger before its row is
+  *    stored ([[graft.serving.MetricsHttpServer]]). Every graft streaming
+  *    query has at most one stateful operator, which is all the setting
+  *    allows; it is not stored in the checkpoint, so it also holds for a
+  *    resumed query.
   */
 object Engine {
   def sessionBuilder(cores: Int): SparkSession.Builder =
@@ -48,6 +59,12 @@ object Engine {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      .config(MultipleStatefulOperators, "false")
+
+  /** Whether a streaming batch may run several stateful operators, each
+    * dropping late rows by the previous batch's watermark; off on every
+    * session built here (see above). */
+  val MultipleStatefulOperators = "spark.sql.streaming.statefulOperator.allowMultiple"
 
   /** Cores from the driver contract's env var, else `default`. */
   def envCores(default: Int): Int =

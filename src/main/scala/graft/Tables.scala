@@ -80,14 +80,19 @@ object Tables {
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Pure-SQL surface: register every corpus table as a temp view (and
-    * graft's SQL functions on the session), so thriftserver/notebook
-    * clients run `spark.sql("SELECT … FROM lineitem …")` with zero
-    * DataFrame code. `events` keeps its nanos→micros conversion. */
+    * graft's SQL functions, on a session built without the extension
+    * that injects them), so thriftserver/notebook clients run
+    * `spark.sql("SELECT … FROM lineitem …")` with zero DataFrame code.
+    * `events` keeps its nanos→micros conversion. */
   def registerViews(spark: SparkSession, dir: String): Unit = {
     names.foreach {
       case "events" => events(spark, dir).createOrReplaceTempView("events")
       case n        => load(spark, dir, n).createOrReplaceTempView(n)
     }
-    graft.functions.GraftExtensions.registerAll(spark)
+    // registering over the injected functions would only log a
+    // "replaced" warning for each of them
+    val fns = graft.functions.GraftExtensions.functions
+    if (!fns.forall { case (name, _, _) => spark.catalog.functionExists(name) })
+      graft.functions.GraftExtensions.registerAll(spark)
   }
 }

@@ -46,6 +46,29 @@ class MetricsStore(spark: SparkSession, path: String) {
     else Some(schema.fold(spark.read)(s => spark.read.schema(s)).parquet(dirs: _*))
   }
 
+  /** The `event_metrics` windows that batch `batchId` made final, read
+    * from the query's own state after that batch rather than from the
+    * store the next batch writes: every (window, type) key still in
+    * state whose window ends at or before `closedByMs`, the watermark the
+    * next batch evicts and drops late rows with. With one watermark per
+    * batch ([[graft.Engine.MultipleStatefulOperators]] off) no row can
+    * reach such a key again, so each row equals the one the next batch
+    * appends; with several (Spark's default) nothing is final before it
+    * is stored, and this is None. Same columns as the stored table:
+    * `event_count` is the count buffer and `user_count` the size of the
+    * `collect_set` buffer, which state keeps serialized as an UnsafeRow
+    * holding one array. */
+  def closedEventWindows(batchId: Long, closedByMs: Long): Option[DataFrame] =
+    if (spark.conf.get(graft.Engine.MultipleStatefulOperators, "true") != "false") None
+    else Some(spark.read.format("statestore").option("batchId", batchId)
+      .load(graft.streaming.Pipelines.checkpointDir(path, "event_metrics"))
+      .filter(col("key.window.end") <= timestamp_millis(lit(closedByMs)))
+      .select(unix_millis(col("key.window.start")).as("window_start_ms"),
+        unix_millis(col("key.window.end")).as("window_end_ms"),
+        col("key.event_type").as("event_type"),
+        col("value.count").as("event_count"),
+        MetricsStore.setSize(col("value.buf")).as("user_count")))
+
   /** Newest-N event windows as pivoted wide rows (the reference's
     * GET /metrics/event/windows?limit=N). */
   def windows(limit: Int = 20): DataFrame = {
@@ -246,5 +269,17 @@ class MetricsStore(spark: SparkSession, path: String) {
       .agg(min(col("window_start_ms")).as("cutoff"))
     eventMetrics.join(broadcast(cutoff),
       col("window_start_ms") >= col("cutoff")).drop("cutoff")
+  }
+}
+
+object MetricsStore {
+  /** Element count of a serialized `collect_set` buffer; nullable, like
+    * every column read back from the store. */
+  private val setSize = udf { (buf: Array[Byte]) =>
+    Option(buf).map { b =>
+      val row = new org.apache.spark.sql.catalyst.expressions.UnsafeRow(1)
+      row.pointTo(b, b.length)
+      Long.box(row.getArray(0).numElements().toLong)
+    }.orNull
   }
 }

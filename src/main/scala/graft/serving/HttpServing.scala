@@ -12,7 +12,7 @@ import scala.util.control.NonFatal
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, struct, to_json}
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.MetricsStore
@@ -36,11 +36,29 @@ import graft.operators.MetricsStore
   * to them: append mode emits each (window, key) row once and every row
   * of a window in one batch, and a replayed batch id rewrites the same
   * partitions, so merging a batch again changes nothing (Structured
-  * Streaming's idempotent-sink contract). `refresh()` is the cold path:
-  * it seeds both maps from the whole store (first event after start, a
-  * query's termination, a failed merge) and recomputes overview, drift
-  * and alerts, which every stored event batch re-derives on a coalesced
-  * background refresh.
+  * Streaming's idempotent-sink contract). Each table has its own apply
+  * thread, which runs that table's merges in batch order and drops none;
+  * a merge runs its Spark read outside the map's lock and takes the lock
+  * only to swap, so an event merge never waits behind a performance one.
+  *
+  * Event windows are published one trigger early. Append mode stores a
+  * window in the batch after the one whose data closed it: batch N's
+  * progress moves the watermark to W(N+1) = max(W(N), max event time of
+  * N − delay), and only batch N+1 evicts the windows ending at or before
+  * it. On a session built by [[graft.Engine]] batch N+1 also drops every
+  * row older than W(N+1) as late, so those windows are final once N
+  * commits: the event apply reads them from the query's state then
+  * ([[MetricsStore.closedEventWindows]]) and merges them through the
+  * same pivot and JSON body, and batch N+1's stored rows replace them
+  * with identical JSON. One limit: a restarted query resumes from the
+  * watermark in its offset log, W(N), so rows already late for W(N+1)
+  * can still revise a window published early; the stored-batch merge
+  * then serves the stored row. The performance table is store-fed only.
+  *
+  * `refresh()` is the cold path, store-only: it seeds both maps from the
+  * whole store (first batch after start, a query's termination, a failed
+  * merge) and recomputes overview, drift and alerts, which every stored
+  * event batch re-derives on a coalesced background refresh.
   *
   * Zero dependencies: `com.sun.net.httpserver` is public JDK API, and
   * row→JSON is Spark's own JSON writer (schema-faithful, no hand-rolled
@@ -66,7 +84,7 @@ private final case class Snapshot(eventWindows: Vector[String],
   def ready: Boolean = eventWindows.nonEmpty
 }
 
-private object MetricsHttpServer {
+private[graft] object MetricsHttpServer {
   val EventTable = "event_metrics"
   val PerfTable = "performance_metrics"
   /** The partition columns [[graft.streaming.Pipelines.writeStorageBatch]]
@@ -87,6 +105,19 @@ private object MetricsHttpServer {
   def notWrittenYet(e: AnalysisException): Boolean =
     e.getCondition == "PATH_NOT_FOUND" || e.getCondition == "UNABLE_TO_INFER_SCHEMA"
 
+  /** The watermark batch N+1 evicts and drops late rows with, from batch
+    * N's progress: its watermark W(N) and its newest event time. */
+  def closingWatermarkMs(watermarkMs: Long, maxEventMs: Long): Long =
+    math.max(watermarkMs, maxEventMs - graft.streaming.Pipelines.WatermarkDelayMs)
+
+  /** Batch `p`'s (watermark, newest event time), when it read rows under
+    * a watermark. */
+  def eventTime(p: StreamingQueryProgress): Option[(Long, Long)] = {
+    val ms = (k: String) => Option(p.eventTime).flatMap(m => Option(m.get(k)))
+      .map(java.time.Instant.parse(_).toEpochMilli)
+    ms("watermark").zip(ms("max"))
+  }
+
   def daemonPool(name: String, queue: BlockingQueue[Runnable]): ThreadPoolExecutor =
     new ThreadPoolExecutor(1, 1, 0L, TimeUnit.MILLISECONDS, queue,
       (r: Runnable) => { val t = new Thread(r, name); t.setDaemon(true); t },
@@ -102,16 +133,8 @@ class MetricsHttpServer(store: MetricsStore, port: Int = 0,
     Vector.empty, Vector.empty))
   @volatile private var server: HttpServer = _
 
-  // The windows state: newest first, at most `maxWindows` entries each.
-  // Only `seedWindows` and `mergeBatch` touch it, under `windowsLock`.
-  private val windowsLock = new Object
-  private var eventWins = TreeMap.empty[Long, String](Ordering.Long.reverse)
-  private var perfRows = TreeMap.empty[(Long, String), String](
-    Ordering.Tuple2(Ordering.Long.reverse, Ordering.String))
-  // each table's own columns, captured by its first read: merges read
-  // their batch with it and pay no schema inference
-  private val schemas = scala.collection.concurrent.TrieMap.empty[String, StructType]
   @volatile private var seeded = false
+  private val seedLock = new Object
   private val failures = new AtomicLong
 
   /** Store reads that failed for a reason other than "table not written
@@ -139,56 +162,97 @@ class MetricsHttpServer(store: MetricsStore, port: Int = 0,
     * times); any other failure is counted in [[refreshFailures]] and
     * leaves that section as it was. Ready once event windows exist. */
   def refresh(): Unit = {
-    seedWindows()
+    seedAll()
     refreshDerived()
   }
 
-  private def seedWindows(): Unit = windowsLock.synchronized {
-    val ev = read("event windows", Array.empty[(Row, String)])(
-      jsonByKey(store.windows(maxWindows), "window_start_ms"))
-    if (!schemas.contains(EventTable))
-      read("event_metrics schema", ())(schemas(EventTable) = ownColumns(store.eventMetrics.schema))
-    val perf = read("performance windows", Array.empty[(Row, String)]) {
+  /** Seed both maps, so a server's first batch of either table serves
+    * both. */
+  private def seedAll(): Unit = seeded = feeds.map(_.seed()).forall(identity)
+
+  /** Seed both maps unless they are seeded; whether this call did. The
+    * tables' first batches arrive together on their own threads, and
+    * one seed serves both. */
+  private def firstSeed(): Boolean =
+    !seeded && seedLock.synchronized { !seeded && { seedAll(); true } }
+
+  /** One table's push-fed windows: newest first, at most `maxWindows`
+    * entries, keyed by `keys` (a one-key table keys by window alone).
+    * Its `applier` runs the table's merges in batch order, one at a
+    * time, and never drops one. A merge runs its Spark read outside the
+    * map's lock and takes the lock only to swap the map into its field
+    * of the snapshot. A seed holds the lock across its read, so a merge
+    * that read its (committed) batch before a seed swaps after it, never
+    * under it. */
+  private final class Feed(val table: String, keys: Seq[String],
+                           stored: () => DataFrame, cold: () => DataFrame,
+                           served: DataFrame => DataFrame,
+                           publish: (Snapshot, Vector[String]) => Snapshot) {
+    val applier = daemonPool(s"metrics-http-apply-$table", new LinkedBlockingQueue[Runnable])
+    private val lock = new Object
+    private var rows = TreeMap.empty[(Long, String), String](
+      Ordering.Tuple2(Ordering.Long.reverse, Ordering.String))
+    // the table's own columns, captured by its first read: merges read
+    // their batch with it and pay no schema inference
+    @volatile private var schema = Option.empty[StructType]
+
+    private def entries(df: DataFrame): Array[((Long, String), String)] =
+      jsonByKey(df, keys: _*).map { case (k, j) =>
+        (k.getLong(0), if (keys.size > 1) k.getString(1) else "") -> j }
+
+    private def swap(next: TreeMap[(Long, String), String]): Unit = {
+      rows = next.take(maxWindows)
+      val v = rows.values.toVector
+      snap.updateAndGet(publish(_, v))
+    }
+
+    /** Re-read the map from the whole store; whether the read succeeded. */
+    def seed(): Boolean = lock.synchronized {
+      val got = read(s"$table windows", Array.empty[((Long, String), String)])(entries(cold()))
+      if (schema.isEmpty) read(s"$table schema", ()) { schema = Some(ownColumns(stored().schema)) }
+      got.foreach(e => swap(rows.empty ++ e))
+      got.isDefined
+    }
+
+    /** Replace the keys of these table-shaped rows. */
+    def merge(df: DataFrame): Unit = {
+      val e = entries(served(df))
+      lock.synchronized(swap(rows ++ e))
+    }
+
+    /** Merge micro-batch `batchId`'s stored rows. Returns whether it
+      * stored any (an empty batch writes no partition and changes
+      * nothing). A failed merge is counted and falls back to a seed. */
+    def mergeBatch(batchId: Long): Boolean =
+      try store.batchRows(table, batchId, schema) match {
+        case None => false
+        case Some(df) =>
+          if (schema.isEmpty) schema = Some(ownColumns(df.schema))
+          merge(df)
+          true
+      } catch {
+        case NonFatal(e) =>
+          failures.incrementAndGet()
+          log.warn(s"metrics snapshot: merging $table batch $batchId failed; re-reading the store", e)
+          schema = None
+          seed()
+          true
+      }
+  }
+
+  private val events = new Feed(EventTable, Seq("window_start_ms"),
+    () => store.eventMetrics, () => store.windows(maxWindows),
+    graft.operators.Serving.pivotEventCounts(_), (s, v) => s.copy(eventWindows = v))
+  private val perf = new Feed(PerfTable, Seq("window_start_ms", "category"),
+    () => store.performanceMetrics,
+    { () =>
       val t = store.performanceMetrics
-      val own = ownColumns(t.schema)
-      schemas(PerfTable) = own
-      jsonByKey(t.select(own.fieldNames.toIndexedSeq.map(col): _*)
-        .orderBy(col("window_start_ms").desc, col("category")).limit(maxWindows),
-        "window_start_ms", "category")
-    }
-    ev.foreach(rows => eventWins = eventWins.empty ++ rows.map { case (k, j) => k.getLong(0) -> j })
-    perf.foreach(rows => perfRows = perfRows.empty ++ rows.map(perfEntry))
-    publishWindows()
-    seeded = ev.isDefined && perf.isDefined
-  }
-
-  private def perfEntry(kj: (Row, String)): ((Long, String), String) =
-    (kj._1.getLong(0), kj._1.getString(1)) -> kj._2
-
-  /** Merge micro-batch `batchId` of `table` into its windows map. Returns
-    * whether the batch stored any rows (an empty batch writes no
-    * partition and changes nothing). */
-  private def mergeBatch(table: String, batchId: Long): Boolean = windowsLock.synchronized {
-    store.batchRows(table, batchId, schemas.get(table)) match {
-      case None => false
-      case Some(rows) =>
-        schemas.getOrElseUpdate(table, ownColumns(rows.schema))
-        if (table == EventTable)
-          eventWins = (eventWins ++ jsonByKey(graft.operators.Serving.pivotEventCounts(rows),
-            "window_start_ms").map { case (k, j) => k.getLong(0) -> j }).take(maxWindows)
-        else
-          perfRows = (perfRows ++ jsonByKey(rows, "window_start_ms", "category")
-            .map(perfEntry)).take(maxWindows)
-        publishWindows()
-        true
-    }
-  }
-
-  private def publishWindows(): Unit = {
-    val ev = eventWins.values.toVector
-    val perf = perfRows.values.toVector
-    snap.updateAndGet(_.copy(eventWindows = ev, perfWindows = perf))
-  }
+      t.select(ownColumns(t.schema).fieldNames.toIndexedSeq.map(col): _*)
+        .orderBy(col("window_start_ms").desc, col("category")).limit(maxWindows)
+    },
+    identity, (s, v) => s.copy(perfWindows = v))
+  private val feeds = Seq(events, perf)
+  private def feed(table: String): Feed = if (table == EventTable) events else perf
 
   /** Overview, drift and alerts: re-derived from the whole store. */
   private def refreshDerived(): Unit = {
@@ -284,60 +348,63 @@ class MetricsHttpServer(store: MetricsStore, port: Int = 0,
 
   def stop(): Unit = {
     if (server != null) server.stop(0)
-    applier.shutdown()
+    feeds.foreach(_.applier.shutdown())
     deriver.shutdown()
   }
 
   // -- live apply: the cache-consumer analog ----------------------------
-  // `applier` runs the windows merges in batch order, one at a time, and
-  // never drops one. `deriver` re-derives overview, drift and alerts with
-  // room for ONE pending run; a submit while one is pending is dropped,
-  // since the pending run (which starts after every dropped request
-  // arrived) reads the store as they would: a burst of stored batches
-  // costs at most two runs, and none of them holds up a merge.
-  private val applier = daemonPool("metrics-http-apply", new LinkedBlockingQueue[Runnable])
+  // Each table's `applier` runs its merges in batch order, one at a time,
+  // and never drops one. `deriver` re-derives overview, drift and alerts
+  // with room for ONE pending run; a submit while one is pending is
+  // dropped, since the pending run (which starts after every dropped
+  // request arrived) reads the store as they would: a burst of stored
+  // batches costs at most two runs, and none of them holds up a merge.
   private val deriver = daemonPool("metrics-http-refresh", new ArrayBlockingQueue[Runnable](1))
   private val reseedPending = new AtomicBoolean
 
   private def submitDerived(): Unit = deriver.execute(() => refreshDerived())
 
-  /** Batch `batchId` of `table` was committed: merge it (a cold seed
-    * instead if the maps are not seeded yet, or if the merge fails). Once
-    * an event batch stored rows, re-derive the rest — as the full refresh
-    * always did, per event batch: a trigger's performance batch usually
-    * lands before its event batch, and one landing after is derived at
-    * the next. What the listener runs on the apply thread; specs call it
-    * directly. */
-  private[graft] def applyCommitted(table: String, batchId: Long): Unit = {
-    val derive =
-      if (!seeded) { seedWindows(); true }
-      else try mergeBatch(table, batchId) && table == EventTable catch {
-        case NonFatal(e) =>
-          failures.incrementAndGet()
-          log.warn(s"metrics snapshot: merging $table batch $batchId failed; re-reading the store", e)
-          schemas.remove(table)
-          seedWindows()
-          true
-      }
-    if (derive) submitDerived()
-  }
-
-  /** A cold re-seed on the apply thread, coalesced: one waiting at a time
-    * serves every request made before it starts. */
+  /** A cold re-seed, coalesced: one waiting at a time serves every
+    * request made before it starts. */
   private def submitReseed(): Unit =
-    if (reseedPending.compareAndSet(false, true)) applier.execute { () =>
+    if (reseedPending.compareAndSet(false, true)) events.applier.execute { () =>
       reseedPending.set(false)
-      seedWindows()
+      seedAll()
       submitDerived()
     }
 
+  /** Batch `batchId` of `table` was committed: merge its stored rows (a
+    * cold seed of both maps instead if they are not seeded yet; of the
+    * table's own map if the merge fails). For `event_metrics`,
+    * `eventTime` is the batch's (watermark, newest event time): the
+    * windows it closed are then merged from query state as well. Once a
+    * seed ran or an event batch stored rows, re-derive the rest — as the
+    * full refresh always did, per event batch: a trigger's performance
+    * batch usually lands before its event batch, and one landing after
+    * is derived at the next. What the listener runs on the table's apply
+    * thread; specs call it directly. */
+  private[graft] def applyCommitted(table: String, batchId: Long,
+                                    eventTime: Option[(Long, Long)] = None): Unit = {
+    val derive = firstSeed() || feed(table).mergeBatch(batchId) && table == EventTable
+    if (table == EventTable) eventTime.foreach { case (wm, maxEv) =>
+      val closedBy = closingWatermarkMs(wm, maxEv)
+      // every key ending at or before wm was evicted by this batch, so
+      // only a moved watermark closes anything
+      if (closedBy > wm)
+        read(s"event windows closed by batch $batchId", ())(
+          store.closedEventWindows(batchId, closedBy).foreach(events.merge))
+    }
+    if (derive) submitDerived()
+  }
+
   /** Attach a listener that feeds the snapshot from every committed
     * micro-batch: batch N of the `event_metrics` and
-    * `performance_metrics` queries is merged into its windows map. No-data
-    * batches count too: in append mode they are where the watermark
-    * closes windows. Merges run on the server's own apply thread, never
-    * on the listener bus, so a slow merge cannot stall any query's
-    * progress events. A query's termination triggers a cold re-seed
+    * `performance_metrics` queries is merged into its windows map, and
+    * the event windows N closed are merged from state. No-data batches
+    * count too: in append mode they are where the watermark closes
+    * windows. Merges run on the table's own apply thread, never on the
+    * listener bus, so a slow merge cannot stall any query's progress
+    * events. A query's termination triggers a cold re-seed
     * (coalesced): with a run-to-complete trigger (AvailableNow) it is the
     * point where every table is fully committed. */
   def attachAutoRefresh(spark: SparkSession): StreamingQueryListener = {
@@ -345,8 +412,9 @@ class MetricsHttpServer(store: MetricsStore, port: Int = 0,
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
         e.progress.name match {
-          case EventTable => applier.execute(() => applyCommitted(EventTable, e.progress.batchId))
-          case PerfTable => applier.execute(() => applyCommitted(PerfTable, e.progress.batchId))
+          case t @ (EventTable | PerfTable) =>
+            val p = e.progress
+            feed(t).applier.execute(() => applyCommitted(t, p.batchId, eventTime(p)))
           case _ => ()
         }
       // QueryTerminatedEvent carries no name, so no filter

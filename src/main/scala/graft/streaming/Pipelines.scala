@@ -49,10 +49,19 @@ object Pipelines {
     }
   }
 
+  /** How far behind the newest event time each [[runAll]] query's
+    * watermark trails: a row older than that is late. */
+  val WatermarkDelayMs = 10000L
+  private val watermarkDelay = s"$WatermarkDelayMs milliseconds"
+
+  /** Where [[runAll]] keeps query `name`'s checkpoint (offsets, commits
+    * and state) under its output directory `outDir`. */
+  def checkpointDir(outDir: String, name: String): String = s"$outDir/_chk/$name"
+
   /** Exact distinct-user counts: the batch [[EventAggregator.aggregate]]
     * behind a watermark. */
   def eventMetrics(events: DataFrame,
-                   watermark: String = "10 seconds",
+                   watermark: String = watermarkDelay,
                    windowMs: Long = 60000L): DataFrame =
     EventAggregator.aggregate(events.withWatermark("ts", watermark),
       windowDuration = s"$windowMs milliseconds")
@@ -66,12 +75,12 @@ object Pipelines {
       events.withWatermark("ts", watermark), windowDuration = window)
 
   def sessionMetrics(events: DataFrame,
-                     watermark: String = "10 seconds",
+                     watermark: String = watermarkDelay,
                      gap: String = "1800 seconds"): DataFrame =
     SessionTracker.sessions(events.withWatermark("ts", watermark), gap = gap)
 
   def perfMetrics(events: DataFrame,
-                  watermark: String = "10 seconds",
+                  watermark: String = watermarkDelay,
                   window: String = "300 seconds"): DataFrame =
     PerformanceTracker.metrics(
       events.withWatermark("ts", watermark), windowDuration = window)
@@ -323,7 +332,7 @@ object Pipelines {
       df.writeStream
         .queryName(name) // names flow into progress telemetry (Observability)
         .outputMode("append")
-        .option("checkpointLocation", s"$outDir/_chk/$name")
+        .option("checkpointLocation", checkpointDir(outDir, name))
         .trigger(trigger)
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           writeStorageBatch(batch, batchId, s"$outDir/$name", timeCol)

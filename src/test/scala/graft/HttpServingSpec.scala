@@ -259,22 +259,31 @@ class HttpServingSpec extends AnyFunSuite {
     } finally { server.stop(); emptyServer.stop() }
   }
 
+  // restated for early publication: after each batch the servers equal a
+  // cold refresh of the store once the batch that stores what it closed
+  // is stored too (test name kept so its id is stable)
   test("push-fed windows equal a cold refresh after every batch, on replay and on restart") {
+    import graft.serving.MetricsHttpServer.{closingWatermarkMs, eventTime}
     val src = java.nio.file.Files.createTempDirectory("graft_http_src")
     val full = java.nio.file.Files.createTempDirectory("graft_http_full").toString
-    // several landed files, each run to completion: (table, batch id) in commit order
+    // several landed files, each run to completion: (table, batch id, its
+    // (watermark, newest event time)) in commit order
     val batches = (0 until 5).flatMap { k =>
       landEvents(src, k)
       val qs = graft.streaming.Pipelines.runAll(spark, src.toString, full)
       qs.foreach(_.awaitTermination(120000))
       Seq("event_metrics", "performance_metrics").flatMap { t =>
-        qs.find(_.name == t).get.recentProgress.map(p => t -> p.batchId).distinct
+        qs.find(_.name == t).get.recentProgress.map(p => (t, p.batchId, eventTime(p))).distinct
       }
     }
     assert(batches.map(_._1).toSet == Set("event_metrics", "performance_metrics"))
     // `grown` holds exactly what the store held after each commit: batch
-    // N's partitions are copied in, then the servers apply batch N
+    // N's partitions are copied in, then the servers apply batch N. The
+    // checkpoint (state) is the finished one: a state read of batch N
+    // sees the state N committed, whatever came after.
     val grown = java.nio.file.Files.createTempDirectory("graft_http_grown").toString
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$full/_chk"),
+      new java.io.File(s"$grown/_chk"))
     def commit(table: String, id: Long): Unit =
       new java.io.File(s"$full/$table").listFiles().filter(_.getName.startsWith("p_date="))
         .map(d => new java.io.File(d, s"batch_id=$id")).filter(_.isDirectory).foreach { d =>
@@ -286,8 +295,9 @@ class HttpServingSpec extends AnyFunSuite {
     var restarted: Option[MetricsHttpServer] = None
     val servers = () => Seq(pushed) ++ restarted
     val ports = scala.collection.mutable.Map(pushed -> pushed.start())
+    var early = 0
     try {
-      batches.zipWithIndex.foreach { case ((table, id), i) =>
+      batches.zipWithIndex.foreach { case ((table, id, et), i) =>
         commit(table, id)
         // a new server over a store that already holds data: its first
         // event seeds it
@@ -296,17 +306,26 @@ class HttpServingSpec extends AnyFunSuite {
           ports(s) = s.start()
           restarted = Some(s)
         }
+        // an event batch that moved the watermark publishes the windows it
+        // closed before the next batch stores them: the servers must then
+        // equal the store once that closing batch is stored too
+        val closes = table == "event_metrics" &&
+          et.exists { case (wm, maxEv) => closingWatermarkMs(wm, maxEv) > wm }
+        val storedOnly = if (closes) coldBodies(grown, maxWindows) else Nil
+        if (closes) commit(table, id + 1)
         val cold = coldBodies(grown, maxWindows)
+        if (closes && storedOnly != cold) early += 1
         for (replay <- 0 to 1; s <- servers()) {
-          s.applyCommitted(table, id)
+          s.applyCommitted(table, id, et)
           val bodies = windowRoutes.map(get(ports(s), _)._2)
           assert(bodies == cold, s"$table batch $id (replay $replay)")
         }
       }
+      assert(early > 0, "no batch published a window before its closing batch was stored")
       // an old batch id merged again changes nothing either
-      val (t0, id0) = batches.head
+      val (t0, id0, et0) = batches.head
       servers().foreach { s =>
-        s.applyCommitted(t0, id0)
+        s.applyCommitted(t0, id0, et0)
         assert(windowRoutes.map(get(ports(s), _)._2) == coldBodies(grown, maxWindows))
         assert(s.refreshFailures == 0L)
       }
@@ -315,6 +334,56 @@ class HttpServingSpec extends AnyFunSuite {
       assert(get(ports(pushed), "/metrics/event/windows?limit=999")._2
         .split("window_start_ms").length - 1 == maxWindows)
     } finally servers().foreach(_.stop())
+  }
+
+  test("with the server attached to a running topology, every window is served with " +
+    "one JSON body, the one its stored batch gives") {
+    import org.apache.spark.sql.streaming.Trigger
+    val src = java.nio.file.Files.createTempDirectory("graft_http_early_src")
+    val out = java.nio.file.Files.createTempDirectory("graft_http_early_out").toString
+    landEvents(src, 0)
+    val server = new MetricsHttpServer(new MetricsStore(spark, out))
+    val port = server.start()
+    val listener = server.attachAutoRefresh(spark)
+    val qs = graft.streaming.Pipelines.runAll(spark, src.toString, out,
+      Trigger.ProcessingTime("500 milliseconds"))
+    // every body each window was served with, polled while files land
+    val seen = scala.collection.mutable.Map.empty[Long, Set[String]]
+    val window = "\\{\"window_start_ms\":(\\d+)[^}]*\\}".r
+    def poll(): Unit = {
+      val (c, body) = get(port, "/metrics/event/windows?limit=120")
+      if (c == 200) window.findAllMatchIn(body).foreach { m =>
+        val w = m.group(1).toLong
+        seen(w) = seen.getOrElse(w, Set.empty[String]) + m.matched
+      }
+    }
+    def pollUntil(done: => Boolean): Unit = {
+      val deadline = System.currentTimeMillis() + 60000
+      while (!done && System.currentTimeMillis() < deadline) { poll(); Thread.sleep(20) }
+    }
+    try {
+      pollUntil(seen.nonEmpty)
+      (1 to 3).foreach { k =>
+        val before = seen.size
+        landEvents(src, k)
+        pollUntil(seen.size > before + 1)
+      }
+    } finally {
+      qs.foreach(_.stop())
+      server.detachAutoRefresh(spark, listener)
+      server.stop()
+    }
+    assert(server.refreshFailures == 0L)
+    val stored = new MetricsStore(spark, out)
+    val json = stored.windows(120).toJSON.collect()
+      .map(j => window.findFirstMatchIn(j).get).map(m => m.group(1).toLong -> m.matched).toMap
+    assert(seen.size > 4, seen.keys)
+    seen.foreach { case (w, bodies) =>
+      assert(bodies.size == 1, s"window $w was served as $bodies")
+      // the newest windows may still wait for their closing batch
+      json.get(w).foreach(j => assert(bodies.head == j, s"window $w"))
+    }
+    assert(seen.keys.count(json.contains) >= 4)
   }
 
   test("after the cold refresh, further batches' windows are served without a store-wide read") {
